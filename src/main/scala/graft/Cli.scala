@@ -368,7 +368,12 @@ object Cli {
           require(!isLongShape(dtype),
             "--bucketed-store is the horizontal (matrix dtype) merge path; " +
               s"$dtype merges vertically and needs no row-key store")
-          val buckets = m.get("--buckets").flatMap(_.headOption).map(_.toInt).getOrElse(32)
+          // Init-time only (store.json keeps it): one bucket per shuffle
+          // slot makes each store write one task wave. The store is only
+          // merged, never probed, so it skips the probe-granularity
+          // floor of XenaOps.defaultBucketedStoreBuckets.
+          val buckets = m.get("--buckets").flatMap(_.headOption).map(_.toInt)
+            .getOrElse(spark.sessionState.conf.numShufflePartitions)
           val acc =
             if (!graft.io.BucketedStore.exists(dir)) {
               require(files.nonEmpty, "initializing a bucketed store needs -f <files...>")
@@ -1979,6 +1984,8 @@ object Cli {
            |  etl-batch  -t <dtypes...|all> -r <root> -o <out-dir> [-p <projects...|all>] [--not-datatype <d...>] [--not-projects <p...>] [--resume] [--delete-raw] [-j N|--parallel N] [-c <cohort>]
            |             (quarantines failures to <root>/unfinished.json + etl_<ts>.err; --resume re-attempts exactly those)
            |  merge-xena -f <files...> -t <dtype> -o <out-matrix>
+           |  merge-xena --bucketed-store <dir> [--buckets N] -t <dtype> [-f <files...>] [-o <out-matrix>]
+           |             (incremental merge into a persistent store; --buckets is fixed at init, default the session's shuffle partitions)
            |  metadata   -t <dtype> -p <matrix-path> [-c <cohort>]
            |  xena-eql   <matrix-a> <matrix-b>
            |  gdc-check-new <release-tsv-url-or-path>   (summary TSV on stdout)

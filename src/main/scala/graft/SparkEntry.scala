@@ -389,7 +389,10 @@ object SparkEntry {
   // the same files with DuckDB read_csv/read_json.
   // ---------------------------------------------------------------
 
-  private val FixtureDir = "/root/repo/fixtures"
+  // Resolved from the working directory (the checkout root), made
+  // absolute so the DuckDB oracle SQL reads the same files.
+  private val FixtureDir =
+    java.nio.file.Paths.get("fixtures").toAbsolutePath.normalize.toString
 
   /** DuckDB expression mirroring GdcTransforms.sampleIdFromFile (S3):
     * basename prefix before `.<uuid>`. */

@@ -1,9 +1,10 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 import graft.ops.XenaOps
 
@@ -20,9 +21,16 @@ import graft.ops.XenaOps
   * [[graft.ops.XenaOps.writeBucketed]]); only the NEW matrices (one
   * cohort, orders of magnitude smaller) shuffle.
   *
-  * Store layout under `dir`:
-  *  - `store.json` — rowKey, bucket count, current version (the
-  *    commit point, swapped atomically via temp + rename);
+  * Store layout under `dir` (resolved to an absolute path first, so
+  * the table LOCATION and `store.json` never split between the
+  * warehouse and the working directory):
+  *  - `store.json` — the commit point, swapped atomically via temp +
+  *    rename. Fields: `rowKey`; `buckets`, fixed at init; `version`,
+  *    the current k; `schema`, acc_v<k>'s schema DDL (taken from the
+  *    catalog entry the commit just wrote, so a later open declares
+  *    the table with no footer-inference job). A store.json without
+  *    `schema` (older format) still opens by inferring the schema
+  *    from the parquet footers; its next commit adds the field;
   *  - `acc_v<k>/` — version k's bucketed parquet files.
   *
   * Crash contract: data for the next version is fully written before
@@ -32,29 +40,38 @@ import graft.ops.XenaOps
   */
 object BucketedStore {
 
-  case class Meta(rowKey: String, buckets: Int, version: Int)
+  case class Meta(rowKey: String, buckets: Int, version: Int, schemaDdl: Option[String])
 
-  private def metaPath(dir: String): Path = Paths.get(dir, "store.json")
+  private val json = new ObjectMapper()
+
+  private def abs(dir: String): Path = Paths.get(dir).toAbsolutePath.normalize
+
+  private def metaPath(dir: String): Path = abs(dir).resolve("store.json")
 
   private def accTable(version: Int): String = s"graft_bucketed_acc_v$version"
 
   private def accPath(dir: String, version: Int): String =
-    Paths.get(dir, s"acc_v$version").toString
+    abs(dir).resolve(s"acc_v$version").toString
 
   def exists(dir: String): Boolean = Files.exists(metaPath(dir))
 
   def readMeta(dir: String): Meta = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Files.readString(metaPath(dir)))
+    val node = json.readTree(Files.readString(metaPath(dir)))
     Meta(node.get("rowKey").asText, node.get("buckets").asInt,
-      node.get("version").asInt)
+      node.get("version").asInt, Option(node.get("schema")).map(_.asText))
   }
 
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    val body =
-      s"""{"rowKey": ${com.fasterxml.jackson.databind.node.TextNode.valueOf(m.rowKey).toString}, "buckets": ${m.buckets}, "version": ${m.version}}"""
-    val tmp = Paths.get(dir, "store.json.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+  /** Commit `version`: its schema DDL comes from the catalog entry
+    * [[XenaOps.writeBucketed]] just registered (metadata only, no job). */
+  private def commit(spark: SparkSession, dir: String,
+      rowKey: String, buckets: Int, version: Int): Unit = {
+    val schema = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(accTable(version))).schema
+    val node = json.createObjectNode()
+      .put("rowKey", rowKey).put("buckets", buckets).put("version", version)
+      .put("schema", schema.toDDL)
+    val tmp = abs(dir).resolve("store.json.tmp")
+    Files.write(tmp, json.writeValueAsBytes(node))
     Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
@@ -63,8 +80,8 @@ object BucketedStore {
     * this session's catalog, restoring the exchange-free merge plan). */
   def accumulated(spark: SparkSession, dir: String): DataFrame = {
     val m = readMeta(dir)
-    XenaOps.declareBucketedTable(
-      spark, accTable(m.version), accPath(dir, m.version), m.rowKey, m.buckets)
+    XenaOps.declareBucketedTable(spark, accTable(m.version),
+      accPath(dir, m.version), m.rowKey, m.buckets, schemaDdl = m.schemaDdl)
     spark.table(accTable(m.version))
   }
 
@@ -72,17 +89,17 @@ object BucketedStore {
   def init(spark: SparkSession, dir: String, first: DataFrame,
       rowKey: String, buckets: Int): Unit = {
     require(!exists(dir), s"bucketed store already initialized at $dir")
-    Files.createDirectories(Paths.get(dir))
+    Files.createDirectories(abs(dir))
     XenaOps.writeBucketed(first, accTable(1), rowKey, buckets,
       path = Some(accPath(dir, 1)))
-    writeMeta(dir, Meta(rowKey, buckets, 1))
+    commit(spark, dir, rowKey, buckets, 1)
   }
 
   /** Merge new matrices into the store: pairwise full-outer joins
     * where the accumulated side never shuffles or sorts, then commit
     * the result as the next bucketed version (the ONE shuffle this
     * operation pays, priming the next run's free side). Returns the
-    * new accumulated matrix.
+    * new accumulated matrix: the table the commit just registered.
     */
   def merge(spark: SparkSession, dir: String, newDfs: Seq[DataFrame]): DataFrame = {
     require(newDfs.nonEmpty, "bucketed-store merge needs at least one new matrix")
@@ -92,14 +109,14 @@ object BucketedStore {
     val next = m.version + 1
     XenaOps.writeBucketed(merged, accTable(next), m.rowKey, m.buckets,
       path = Some(accPath(dir, next)))
-    writeMeta(dir, Meta(m.rowKey, m.buckets, next))
+    commit(spark, dir, m.rowKey, m.buckets, next)
     // Sweep superseded and orphaned versions (crash leftovers) AFTER
     // the commit point moved.
-    Files.list(Paths.get(dir)).forEach { p =>
+    Files.list(abs(dir)).forEach { p =>
       val n = p.getFileName.toString
       if (n.startsWith("acc_v") && n.stripPrefix("acc_v").toIntOption.exists(_ != next))
         org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
     }
-    accumulated(spark, dir)
+    spark.table(accTable(next))
   }
 }

@@ -1257,6 +1257,20 @@ class DomainSpec extends SparkSpecBase {
     assert(graft.ops.XenaOps.canonicalEqual(
       graft.io.XenaTsv.read(spark, s"$tmp/export.tsv"),
       graft.io.XenaTsv.read(spark, s"$tmp/oneshot.tsv")))
+    // A RELATIVE store dir resolves to one place: the table data and
+    // store.json both land under it, so a second invocation re-attaches.
+    val relStore = s"target/graft_cli_bstore_rel_${System.nanoTime}"
+    try {
+      assert(graft.Cli.run(Array("merge-xena", "--bucketed-store", relStore,
+        "-f", m0, "-f", m1, "-t", "methylation450")) == 0)
+      assert(graft.Cli.run(Array("merge-xena", "--bucketed-store", relStore,
+        "-f", m2, "-t", "methylation450", "-o", s"$tmp/rel.tsv")) == 0)
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(relStore, "acc_v3")),
+        "relative store dir split the table data from store.json")
+      assert(graft.ops.XenaOps.canonicalEqual(
+        graft.io.XenaTsv.read(spark, s"$tmp/rel.tsv"),
+        graft.io.XenaTsv.read(spark, s"$tmp/oneshot.tsv")))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(relStore))
     // A long-shape dtype must refuse the store (vertical merges have
     // no row-key store semantics).
     val rc = try graft.Cli.run(Array("merge-xena", "--bucketed-store", store,

@@ -278,6 +278,70 @@ class PlanShapeSpec extends SparkSpecBase {
       "superseded store version must be swept after commit")
   }
 
+  test("bucketed store: store.json carries the schema, so an open starts no Spark job") {
+    import spark.implicits._
+    import graft.io.BucketedStore
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft_bstore_nojob").toString
+    val m1 = (1 to 40).map(i => (s"p$i", i * 1.0)).toDF("probe", "sA")
+    BucketedStore.init(spark, dir, m1, "probe", 4)
+    // The committed DDL is the one footer inference would produce.
+    assert(BucketedStore.readMeta(dir).schemaDdl ==
+      Some(spark.read.parquet(s"$dir/acc_v1").schema.toDDL))
+    // Listener events arrive asynchronously but in order: fence the
+    // open between two marker jobs and count the jobs in between.
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("open-fence-start")
+      val acc = BucketedStore.accumulated(spark, dir)
+      marker("open-fence-end")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains("open-fence-end") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      val between = started.asScala.toSeq
+        .dropWhile(_ != "open-fence-start").drop(1).takeWhile(_ != "open-fence-end")
+      assert(started.contains("open-fence-end"), "marker job never reached the listener")
+      assert(between.isEmpty, s"opening the store ran ${between.size} Spark job(s)")
+      assert(acc.columns.toSeq == Seq("probe", "sA"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("bucketed store: a store.json without schema (older format) re-attaches and gains it on commit") {
+    import spark.implicits._
+    import graft.io.BucketedStore
+    val dir = java.nio.file.Files.createTempDirectory("graft_bstore_legacy").toString
+    val m1 = (1 to 50).map(i => (s"p$i", i * 1.0)).toDF("probe", "sA")
+    BucketedStore.init(spark, dir, m1, "probe", 4)
+    // Rewrite store.json in the older layout: rowKey, buckets, version.
+    val meta = java.nio.file.Paths.get(dir, "store.json")
+    java.nio.file.Files.writeString(meta,
+      """{"rowKey": "probe", "buckets": 4, "version": 1}""")
+    assert(BucketedStore.readMeta(dir).schemaDdl.isEmpty)
+    assert(graft.ops.XenaOps.canonicalEqual(BucketedStore.accumulated(spark, dir), m1))
+    val m2 = (25 to 75).map(i => (s"p$i", i * 2.0)).toDF("probe", "sB")
+    val after = BucketedStore.merge(spark, dir, Seq(m2))
+    assert(graft.ops.XenaOps.canonicalEqual(
+      after, graft.ops.XenaOps.mergeHorizontal(Seq(m1, m2), "probe")))
+    val committed = BucketedStore.readMeta(dir)
+    assert(committed.version == 2)
+    assert(committed.schemaDdl ==
+      Some(spark.read.parquet(s"$dir/acc_v2").schema.toDDL),
+      s"commit did not add the schema field: ${java.nio.file.Files.readString(meta)}")
+    assert(graft.ops.XenaOps.canonicalEqual(BucketedStore.accumulated(spark, dir), after))
+  }
+
   test("q45: IVF probe join broadcasts the probe table, no cartesian") {
     val p = plan("q45_ivf_ann_topk")
     assert(!p.contains("CartesianProduct"), p.take(2000))
