@@ -437,10 +437,11 @@ object SparkEntry {
     graft.transform.GdcTransforms.survivalMatrix(
       s, s"$FixtureDir/survival/survival.tsv", s"$FixtureDir/survival/case_samples.json")
 
-  /** The nested-JSON clinical pipeline (E3): explode chains (V4),
-    * collect-list formatting (A1/A2/P18), lenient min-age (P13), 4
-    * broadcast left joins (J1), sample fan-out (J2), field drop (P4),
-    * reverse-dotted rename (P3). */
+  /** The nested-JSON clinical pipeline (E3) as one scan → project →
+    * samples explode: row-local formatting of each case's repeated
+    * fields (V4, A1/A2/P18), lenient min-age (P13), sample fan-out
+    * (J2), field drop (P4), reverse-dotted rename (P3); no shuffle or
+    * join. */
   def q35Clinical(s: SparkSession, dir: String): DataFrame =
     graft.transform.Clinical.clinicalMatrix(s, s"$FixtureDir/clinical/cases.json")
 

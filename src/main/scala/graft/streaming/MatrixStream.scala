@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import graft.model.DTypes.{RawReadConfig, SampleColumnsMatrix}
 import graft.transform.GdcTransforms
 
@@ -28,12 +28,11 @@ import graft.transform.GdcTransforms
 object MatrixStream {
 
   /** Explicit schema for the streaming CSV source (file streams cannot
-    * infer): positional string columns learned from one driver-side
-    * batch read of the files already in the landing directory.
+    * infer): positional string columns read on the driver from the
+    * files already in the landing directory ([[GdcTransforms.rawSchema]]).
     */
   def rawSchema(spark: SparkSession, dir: String, cfg: RawReadConfig): StructType =
-    StructType(GdcTransforms.readRawFull(spark, dir, cfg)
-      .columns.map(n => StructField(n, StringType)))
+    GdcTransforms.rawSchema(spark, dir, cfg)
 
   /** `readStream` twin of [[GdcTransforms.readRaw]]: same sep/header/
     * comment options, same positional `usecols` projection, same
@@ -45,14 +44,7 @@ object MatrixStream {
       dir: String,
       cfg: RawReadConfig,
       schema: StructType): DataFrame = {
-    val reader = spark.readStream
-      .option("sep", "\t")
-      .option("header", cfg.header.toString)
-    val withComment = cfg.commentPrefix match {
-      case Some(c) => reader.option("comment", c)
-      case None    => reader
-    }
-    val raw = withComment.schema(schema).csv(dir)
+    val raw = spark.readStream.options(GdcTransforms.rawReadOptions(cfg)).schema(schema).csv(dir)
     val cols = cfg.usecols.map(i => org.apache.spark.sql.functions.col(raw.columns(i)))
     raw.select(cols :+ GdcTransforms.sampleIdFromFile.as("__sample"): _*)
   }

@@ -8,21 +8,29 @@ import org.apache.spark.sql.types._
   * hardest dataflow): GDC cases JSON → flat per-sample clinicalMatrix.
   *
   * Re-expresses `gdc.get_samples_clinical` (`gdc.py:462-612`) +
-  * `GDCPhenoset.transform` (`xena_dataset.py:1378-1415`):
-  *  - explode chains over `annotations`, `diagnoses`,
-  *    `diagnoses.pathology_details`, `diagnoses.treatments` (V4/S5)
-  *  - per-column collect-list with canonical rendering
-  *    (`format_multiple_data`, `gdc.py:156-173`): values null-filled
-  *    to '', collected, sorted, '; '-joined; singleton lists collapse
-  *    to the scalar automatically; all-empty groups render ''
-  *    (A1/A2/P18)
-  *  - derived `age_at_earliest_diagnosis[_in_years]` = min over
-  *    per-case ages with lenient parsing (P13: `try_cast`, unparseable
+  * `GDCPhenoset.transform` (`xena_dataset.py:1378-1415`) as one scan
+  * → project → `explode(samples)`: every aggregate the reference
+  * computes by exploding a repeated field and re-joining on case id is
+  * a per-row higher-order function over the case's own arrays
+  * (Dremel-style within-record aggregation), so the plan has no
+  * shuffle, broadcast or join:
+  *  - multi-value cells (`format_multiple_data`, `gdc.py:156-173`):
+  *    values null-filled to '', sorted, '; '-joined; singleton lists
+  *    collapse to the scalar; all-empty lists render '' (A1/A2/P18);
+  *    a null or empty array gives null (the case has no such rows)
+  *  - `diagnoses.pathology_details` / `diagnoses.treatments` flattened
+  *    across the case's diagnoses (V4/S5)
+  *  - derived `age_at_earliest_diagnosis[_in_years]` = min over the
+  *    case's ages with lenient parsing (P13: `try_cast`, unparseable
   *    ages ignored; a case with no parseable age gets null)
-  *  - 4 successive left joins on case id (J1), then samples explode +
-  *    inner join (J2) fanning case rows out to sample rows
+  *  - samples explode fanning case rows out to sample rows (J2);
+  *    cases without samples drop out
   *  - drop of GDC bookkeeping fields (P4, `gdc.py:102-154`)
   *  - reverse-dotted column rename (P3, `xena_dataset.py:1397-1402`)
+  *
+  * Contract: each case `id` is present and occurs once in the input —
+  * the GDC `cases` endpoint's key (the case UUID). Under it the matrix
+  * equals the reference's group-by-id-and-join formulation row for row.
   *
   * Schema note: arrays are declared explicitly (ArrayType everywhere)
   * rather than inferred — the reference burns ~60 LoC renormalizing
@@ -65,12 +73,13 @@ object Clinical {
     * schema). */
   val droppedFields: Seq[String] = Seq("state", "created_datetime")
 
-  /** `format_multiple_data`: canonical multi-value cell rendering. */
-  private def formatMulti(c: Column): Column = {
-    val vals = collect_list(coalesce(c.cast("string"), lit("")))
-    val sorted = array_sort(vals)
-    when(forall(sorted, v => v === ""), lit(""))
-      .otherwise(array_join(sorted, "; "))
+  /** `format_multiple_data` over one case's array of structs:
+    * canonical multi-value rendering of `field`; null when the array
+    * is null or empty. */
+  private def formatMulti(arr: Column, field: String): Column = {
+    val sorted = array_sort(transform(arr, e => coalesce(e.getField(field).cast("string"), lit(""))))
+    when(size(arr) > 0,
+      when(forall(sorted, v => v === ""), lit("")).otherwise(array_join(sorted, "; ")))
   }
 
   /** Reverse dotted column names: `a.b.c` -> `c.b.a` (P3). */
@@ -79,8 +88,14 @@ object Clinical {
 
   def clinicalMatrix(spark: SparkSession, casesJson: String): DataFrame = {
     val cases = spark.read.schema(casesSchema).json(casesJson)
+    val annotations = col("annotations")
+    val diagnoses = col("diagnoses")
+    // A nested array across all of the case's diagnoses.
+    def perDiagnosis(field: String): Column =
+      flatten(transform(diagnoses, d => coalesce(d.getField(field), array())))
+    val minAge = array_min(transform(diagnoses, d => d.getField("age_at_diagnosis").try_cast("double")))
 
-    val base = cases.select(
+    val perCase = cases.select(
       col("id"),
       col("submitter_id"),
       col("disease_type"),
@@ -89,62 +104,28 @@ object Clinical {
       col("project.project_id").as("project.project_id"),
       col("demographic.gender").as("demographic.gender"),
       col("demographic.vital_status").as("demographic.vital_status"),
-      col("demographic.year_of_birth").as("demographic.year_of_birth"))
+      col("demographic.year_of_birth").as("demographic.year_of_birth"),
+      formatMulti(annotations, "category").as("annotations.category"),
+      formatMulti(annotations, "classification").as("annotations.classification"),
+      formatMulti(diagnoses, "age_at_diagnosis").as("diagnoses.age_at_diagnosis"),
+      formatMulti(diagnoses, "tumor_grade").as("diagnoses.tumor_grade"),
+      round(minAge, 6).as("xena_derived.diagnoses.age_at_earliest_diagnosis"),
+      round(minAge / 365.0, 6).as("xena_derived.diagnoses.age_at_earliest_diagnosis_in_years"),
+      formatMulti(perDiagnosis("pathology_details"), "lymph_nodes_tested")
+        .as("diagnoses.pathology_details.lymph_nodes_tested"),
+      formatMulti(perDiagnosis("treatments"), "therapeutic_agents")
+        .as("diagnoses.treatments.therapeutic_agents"),
+      formatMulti(perDiagnosis("treatments"), "treatment_type")
+        .as("diagnoses.treatments.treatment_type"),
+      explode(col("samples")).as("s"))
 
-    val annotations = cases
-      .select(col("id"), explode(col("annotations")).as("a"))
-      .groupBy(col("id"))
-      .agg(
-        formatMulti(col("a.category")).as("annotations.category"),
-        formatMulti(col("a.classification")).as("annotations.classification"))
+    val caseCols = perCase.columns.filter(_ != "s").map(c => col(s"`$c`"))
+    val rows = perCase.select(caseCols.toSeq ++ Seq(
+      col("s.submitter_id").as("samples.submitter_id"),
+      col("s.sample_type").as("samples.sample_type"),
+      col("s.tissue_type").as("samples.tissue_type")): _*)
 
-    val diagRows = cases.select(col("id"), explode(col("diagnoses")).as("d"))
-
-    val diagnoses = diagRows
-      .groupBy(col("id"))
-      .agg(
-        formatMulti(col("d.age_at_diagnosis")).as("diagnoses.age_at_diagnosis"),
-        formatMulti(col("d.tumor_grade")).as("diagnoses.tumor_grade"),
-        min(expr("try_cast(d.age_at_diagnosis AS DOUBLE)"))
-          .as("xena_derived.diagnoses.age_at_earliest_diagnosis"))
-      .withColumn(
-        "xena_derived.diagnoses.age_at_earliest_diagnosis_in_years",
-        round(col("`xena_derived.diagnoses.age_at_earliest_diagnosis`") / 365.0, 6))
-      .withColumn(
-        "xena_derived.diagnoses.age_at_earliest_diagnosis",
-        round(col("`xena_derived.diagnoses.age_at_earliest_diagnosis`"), 6))
-
-    val pathology = diagRows
-      .select(col("id"), explode(col("d.pathology_details")).as("p"))
-      .groupBy(col("id"))
-      .agg(formatMulti(col("p.lymph_nodes_tested"))
-        .as("diagnoses.pathology_details.lymph_nodes_tested"))
-
-    val treatments = diagRows
-      .select(col("id"), explode(col("d.treatments")).as("t"))
-      .groupBy(col("id"))
-      .agg(
-        formatMulti(col("t.therapeutic_agents")).as("diagnoses.treatments.therapeutic_agents"),
-        formatMulti(col("t.treatment_type")).as("diagnoses.treatments.treatment_type"))
-
-    val samples = cases
-      .select(col("id"), explode(col("samples")).as("s"))
-      .select(
-        col("id"),
-        col("s.submitter_id").as("samples.submitter_id"),
-        col("s.sample_type").as("samples.sample_type"),
-        col("s.tissue_type").as("samples.tissue_type"))
-
-    // Per-project sub-frames are case-count sized — broadcast left
-    // joins; the sample fan-out is the only row-multiplying join.
-    val joined = base
-      .join(broadcast(annotations), Seq("id"), "left")
-      .join(broadcast(diagnoses), Seq("id"), "left")
-      .join(broadcast(pathology), Seq("id"), "left")
-      .join(broadcast(treatments), Seq("id"), "left")
-      .join(samples, Seq("id"), "inner")
-
-    val kept = joined.drop(droppedFields: _*)
+    val kept = rows.drop(droppedFields: _*)
     reverseDotted(kept)
       .withColumnRenamed("submitter_id.samples", "sample")
   }

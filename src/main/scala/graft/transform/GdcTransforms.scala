@@ -1,6 +1,9 @@
 package graft.transform
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -54,26 +57,55 @@ object GdcTransforms {
       regexp_extract(input_file_name(), "[^/]+$", 0),
       s"^(.+?)\\.$UuidRe", 1)
 
+  /** CSV reader options of a raw dtype scan — shared by the batch scan,
+    * [[rawSchema]] and the streaming twin
+    * ([[graft.streaming.MatrixStream.readRawStream]]). */
+  private[graft] def rawReadOptions(cfg: RawReadConfig): Map[String, String] =
+    Map("sep" -> "\t", "header" -> cfg.header.toString, "inferSchema" -> "false") ++
+      cfg.commentPrefix.map("comment" -> _)
+
+  /** The unprojected scan of a dtype directory (all columns, string
+    * typed) under the driver-derived [[rawSchema]], so building it
+    * starts no Spark job. */
+  private[graft] def readRawFull(spark: SparkSession, dir: String, cfg: RawReadConfig): DataFrame =
+    spark.read.options(rawReadOptions(cfg)).schema(rawSchema(spark, dir, cfg)).csv(dir)
+
+  /** The all-string schema Spark's CSV header path would infer for a
+    * dtype directory, read on the driver instead of by a probe job:
+    * the first data line of the first data file (by name; hidden `.`
+    * and `_` files skipped) through the Hadoop FS API, via Spark's own
+    * helpers — `readHeaderLine` (codec from `CompressionCodecFactory`,
+    * empty and comment lines skipped) and `makeSafeHeader` (`_c<i>`
+    * without a header; with one, an empty name becomes `_c<i>` and a
+    * duplicate gets its index appended). Files of one dtype share one
+    * layout; the scan applies this schema positionally to each.
+    * A directory with no data line fails here, naming the directory.
+    */
+  def rawSchema(spark: SparkSession, dir: String, cfg: RawReadConfig): StructType = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val opts = new CSVOptions(rawReadOptions(cfg), false, conf.sessionLocalTimeZone)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(hadoopConf)
+    require(fs.exists(p), s"raw directory not found: $dir")
+    val files = fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
+      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+      .sortBy(_.getName)
+    val firstLine = files.iterator
+      .flatMap(f => CSVUtils.readHeaderLine(f, opts, hadoopConf))
+      .nextOption()
+      .getOrElse(throw new IllegalArgumentException(
+        s"no data line in raw directory $dir (empty, or only comment lines or hidden files)"))
+    val names = CSVUtils.makeSafeHeader(
+      new CsvParser(opts.asParserSettings).parseLine(firstLine), conf.caseSensitiveAnalysis, opts)
+    StructType(names.toSeq.map(StructField(_, StringType)))
+  }
+
   /** S1/S2/P1: registry-driven raw scan. One scan over all files of a
     * dtype directory; positional `usecols` projection; per-line
     * comment filtering (correct across files, unlike row-skipping).
     * All columns come back as strings — callers cast (P8).
     */
-  /** The unprojected scan of a dtype directory (all columns, string
-    * typed) — shared by [[readRaw]] and the streaming source's schema
-    * derivation ([[graft.streaming.MatrixStream.rawSchema]]). */
-  private[graft] def readRawFull(spark: SparkSession, dir: String, cfg: RawReadConfig): DataFrame = {
-    val reader = spark.read
-      .option("sep", "\t")
-      .option("header", cfg.header.toString)
-      .option("inferSchema", "false")
-    val withComment = cfg.commentPrefix match {
-      case Some(c) => reader.option("comment", c)
-      case None    => reader
-    }
-    withComment.csv(dir)
-  }
-
   def readRaw(spark: SparkSession, dir: String, cfg: RawReadConfig): DataFrame = {
     val raw = readRawFull(spark, dir, cfg)
     val cols = cfg.usecols.map(i => col(raw.columns(i)))

@@ -1627,6 +1627,158 @@ class DomainSpec extends SparkSpecBase {
       "a fully-recovered ledger must delete unfinished.json")
   }
 
+  test("CLI etl-batch: an empty, comment-only or hidden-only raw dir quarantines naming the dir") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_cli_nodata")
+    val raw = tmp.resolve("raw")
+    val empty = Files.createDirectories(raw.resolve("p_empty/star_counts"))
+    val comments = Files.createDirectories(raw.resolve("p_comment/star_counts"))
+    Files.writeString(comments.resolve(
+      "SAMP-01A.1a2b3c4d-0001-4001-8001-aaaaaaaa0001.rna_seq.augmented_star_gene_counts.tsv"),
+      "# gene-model: GENCODE v36\n\n# no data rows\n")
+    val hidden = Files.createDirectories(raw.resolve("p_hidden/star_counts"))
+    val star = Paths.get("fixtures/star_counts").toFile.listFiles.head.toPath
+    Files.copy(star, hidden.resolve("." + star.getFileName))
+    Files.copy(star, hidden.resolve("_" + star.getFileName))
+    val out = new java.io.ByteArrayOutputStream()
+    val rc = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+      graft.Cli.run(Array("etl-batch", "-t", "star_counts",
+        "-p", "p_empty", "p_comment", "p_hidden", "-r", raw.toString, "-o", tmp.resolve("out").toString))
+    }
+    assert(rc == 1, "a raw dir with no data line must quarantine")
+    val log = out.toString("UTF-8")
+    for ((p, dir) <- Seq("p_empty" -> empty, "p_comment" -> comments, "p_hidden" -> hidden))
+      assert(s"\\[etl-batch\\] $p/star_counts: QUARANTINED \\(.*\\Q$dir\\E.*\\)".r
+        .findFirstIn(log).isDefined, s"$p: no QUARANTINED line naming $dir in:\n$log")
+    assert(Files.readString(raw.resolve("unfinished.json")) ==
+      """{"p_empty": ["star_counts"], "p_comment": ["star_counts"], "p_hidden": ["star_counts"]}""")
+  }
+
+  test("rawSchema: the driver-read schema equals Spark's CSV header inference") {
+    import java.nio.file.Files
+    import graft.model.DTypes.{MafVector, RawReadConfig, SampleColumnsMatrix, SegmentMatrix}
+    def cfgOf(dtype: String): RawReadConfig = DTypes.registry(dtype).strategy match {
+      case s: SampleColumnsMatrix => s.read
+      case s: SegmentMatrix => RawReadConfig(s.usecols, header = true, None, "sample")
+      case MafVector => RawReadConfig(Nil, header = true, Some("#"), "sample")
+      case other => fail(s"$dtype: $other has no raw files")
+    }
+    def sparkSchema(dir: String, cfg: RawReadConfig) =
+      spark.read.options(GdcTransforms.rawReadOptions(cfg)).csv(dir).schema
+    // STAR's `# gene-model` line, the gzip MAF's `#version` banner,
+    // headerless methylation, and the plain-header dtypes.
+    val fixtures = Seq("star_counts", "somaticmutation_wxs", "methylation450", "mirna",
+      "mirna_isoform", "protein", "gene-level_ascat-ngs", "segment_cnv_DNAcopy",
+      "segment_cnv_ascat-ngs")
+    for (d <- fixtures) {
+      val dir = s"fixtures/$d"
+      assert(GdcTransforms.rawSchema(spark, dir, cfgOf(d)) == sparkSchema(dir, cfgOf(d)), d)
+    }
+    // An empty header name, a duplicate and a case-only duplicate,
+    // behind an empty line and a comment; a hidden file sorting first
+    // carries a different header that neither side may read.
+    val tmp = Files.createTempDirectory("graft_header")
+    Files.writeString(tmp.resolve("_SUCCESS"), "zz\tyy\n")
+    Files.writeString(tmp.resolve("a.tsv"), "\n# banner\nid\t\tv\tid\tV\tw\nx\t1\t2\t3\t4\t5\n")
+    for (cfg <- Seq(
+        RawReadConfig(Nil, header = true, Some("#"), "id"),
+        RawReadConfig(Nil, header = false, Some("#"), "id"))) {
+      val got = GdcTransforms.rawSchema(spark, tmp.toString, cfg)
+      assert(got == sparkSchema(tmp.toString, cfg), s"header=${cfg.header}")
+      if (cfg.header) assert(got.fieldNames.toSeq == Seq("id0", "_c1", "v2", "id3", "V4", "w"))
+    }
+  }
+
+  /** The explode / groupBy / broadcast-join formulation of the
+    * clinical matrix, kept only as the reference for the row-local
+    * `Clinical.clinicalMatrix`. */
+  private def clinicalByJoins(casesJson: String): org.apache.spark.sql.DataFrame = {
+    import graft.transform.Clinical
+    def formatMulti(c: org.apache.spark.sql.Column) = {
+      val sorted = array_sort(collect_list(coalesce(c.cast("string"), lit(""))))
+      when(forall(sorted, v => v === ""), lit("")).otherwise(array_join(sorted, "; "))
+    }
+    val cases = spark.read.schema(Clinical.casesSchema).json(casesJson)
+    val base = cases.select(col("id"), col("submitter_id"), col("disease_type"),
+      col("state"), col("created_datetime"),
+      col("project.project_id").as("project.project_id"),
+      col("demographic.gender").as("demographic.gender"),
+      col("demographic.vital_status").as("demographic.vital_status"),
+      col("demographic.year_of_birth").as("demographic.year_of_birth"))
+    val annotations = cases.select(col("id"), explode(col("annotations")).as("a"))
+      .groupBy(col("id")).agg(
+        formatMulti(col("a.category")).as("annotations.category"),
+        formatMulti(col("a.classification")).as("annotations.classification"))
+    val diagRows = cases.select(col("id"), explode(col("diagnoses")).as("d"))
+    val age = "xena_derived.diagnoses.age_at_earliest_diagnosis"
+    val diagnoses = diagRows.groupBy(col("id")).agg(
+        formatMulti(col("d.age_at_diagnosis")).as("diagnoses.age_at_diagnosis"),
+        formatMulti(col("d.tumor_grade")).as("diagnoses.tumor_grade"),
+        min(expr("try_cast(d.age_at_diagnosis AS DOUBLE)")).as(age))
+      .withColumn(s"${age}_in_years", round(col(s"`$age`") / 365.0, 6))
+      .withColumn(age, round(col(s"`$age`"), 6))
+    val pathology = diagRows.select(col("id"), explode(col("d.pathology_details")).as("p"))
+      .groupBy(col("id")).agg(formatMulti(col("p.lymph_nodes_tested"))
+        .as("diagnoses.pathology_details.lymph_nodes_tested"))
+    val treatments = diagRows.select(col("id"), explode(col("d.treatments")).as("t"))
+      .groupBy(col("id")).agg(
+        formatMulti(col("t.therapeutic_agents")).as("diagnoses.treatments.therapeutic_agents"),
+        formatMulti(col("t.treatment_type")).as("diagnoses.treatments.treatment_type"))
+    val samples = cases.select(col("id"), explode(col("samples")).as("s")).select(col("id"),
+      col("s.submitter_id").as("samples.submitter_id"),
+      col("s.sample_type").as("samples.sample_type"),
+      col("s.tissue_type").as("samples.tissue_type"))
+    val joined = base
+      .join(broadcast(annotations), Seq("id"), "left")
+      .join(broadcast(diagnoses), Seq("id"), "left")
+      .join(broadcast(pathology), Seq("id"), "left")
+      .join(broadcast(treatments), Seq("id"), "left")
+      .join(samples, Seq("id"), "inner")
+    Clinical.reverseDotted(joined.drop(Clinical.droppedFields: _*))
+      .withColumnRenamed("submitter_id.samples", "sample")
+  }
+
+  test("clinicalMatrix (row-local) == the explode/groupBy/join reference") {
+    import graft.transform.Clinical
+    val tmp = java.nio.file.Files.createTempDirectory("graft_clinical")
+    val smp = """"samples": [{"submitter_id": "S-%s", "sample_type": "Primary Tumor", "tissue_type": "Tumor"}]"""
+    val lines = Seq(
+      // null and empty annotations / diagnoses
+      s"""{"id": "c1", "submitter_id": "P1", ${smp.format("c1")}}""",
+      s"""{"id": "c2", "annotations": [], "diagnoses": [], ${smp.format("c2")}}""",
+      // null array elements, null nested arrays, an unparseable age,
+      // an all-empty annotation list
+      s"""{"id": "c3", "annotations": [null, {"category": null, "classification": ""}],
+         |"diagnoses": [null, {"age_at_diagnosis": "n/a", "tumor_grade": null,
+         |"pathology_details": null, "treatments": [null]}], ${smp.format("c3")}}""".stripMargin,
+      // several diagnoses: min age across them, nested values flattened
+      s"""{"id": "c4", "state": "released", "project": {"project_id": "TCGA-YY"},
+         |"demographic": {"gender": "male", "vital_status": "Dead", "year_of_birth": 1950},
+         |"annotations": [{"category": "b", "classification": "x"}, {"category": "a"}],
+         |"diagnoses": [
+         |{"age_at_diagnosis": "300", "tumor_grade": "G2", "pathology_details": [{"lymph_nodes_tested": "4"}],
+         | "treatments": [{"therapeutic_agents": "Z", "treatment_type": "Chemo"}]},
+         |{"age_at_diagnosis": "100.5", "tumor_grade": "G1", "pathology_details": [],
+         | "treatments": [{"therapeutic_agents": null, "treatment_type": "Radiation"}, null]},
+         |{"age_at_diagnosis": "zz", "pathology_details": [{"lymph_nodes_tested": null}, {"lymph_nodes_tested": "1"}]}],
+         |"samples": [{"submitter_id": "S-c4a", "sample_type": "Primary Tumor", "tissue_type": "Tumor"},
+         |{"submitter_id": "S-c4b", "sample_type": "Blood Derived Normal", "tissue_type": "Normal"}, null]}""".stripMargin,
+      // all-null ages
+      s"""{"id": "c5", "diagnoses": [{"age_at_diagnosis": null}, {"tumor_grade": "G3"}], ${smp.format("c5")}}""",
+      // no samples: the case drops out
+      """{"id": "c6", "diagnoses": [{"age_at_diagnosis": "5"}]}""",
+      """{"id": "c7", "samples": []}""")
+    java.nio.file.Files.writeString(tmp.resolve("cases.json"),
+      lines.map(_.replace("\n", " ")).mkString("", "\n", "\n"))
+    for (path <- Seq("fixtures/clinical/cases.json", tmp.resolve("cases.json").toString)) {
+      val got = Clinical.clinicalMatrix(spark, path)
+      val want = clinicalByJoins(path)
+      assert(got.columns.toSeq == want.columns.toSeq, path)
+      assert(got.count() == want.count() && got.count() > 0, path)
+      assert(XenaOps.canonicalEqual(got, want), s"$path: row-local clinical matrix differs")
+    }
+  }
+
   test("writeSharded: globally-ordered shards cat-merge to the single-file matrix") {
     import spark.implicits._
     val df = (1 to 97)

@@ -10,6 +10,37 @@ class PlanShapeSpec extends SparkSpecBase {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
+  /** `body`'s result and the descriptions of the Spark jobs it starts.
+    * Listener events arrive asynchronously but in order: fence `body`
+    * between two marker jobs and keep the jobs in between. */
+  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("fence-start")
+      val result = body
+      marker("fence-end")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains("fence-end") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(started.contains("fence-end"), "marker job never reached the listener")
+      (result, started.asScala.toSeq
+        .dropWhile(_ != "fence-start").drop(1).takeWhile(_ != "fence-end"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("q104: weighted sample keeps the WindowGroupLimit pushdown, one exchange") {
     // The operator's 100-TB contract (Sampling.weightedSample): group
     // cardinality is tiny (sources), so the rank filter MUST push a
@@ -281,41 +312,15 @@ class PlanShapeSpec extends SparkSpecBase {
   test("bucketed store: store.json carries the schema, so an open starts no Spark job") {
     import spark.implicits._
     import graft.io.BucketedStore
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = java.nio.file.Files.createTempDirectory("graft_bstore_nojob").toString
     val m1 = (1 to 40).map(i => (s"p$i", i * 1.0)).toDF("probe", "sA")
     BucketedStore.init(spark, dir, m1, "probe", 4)
     // The committed DDL is the one footer inference would produce.
     assert(BucketedStore.readMeta(dir).schemaDdl ==
       Some(spark.read.parquet(s"$dir/acc_v1").schema.toDDL))
-    // Listener events arrive asynchronously but in order: fence the
-    // open between two marker jobs and count the jobs in between.
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        started.add(Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("open-fence-start")
-      val acc = BucketedStore.accumulated(spark, dir)
-      marker("open-fence-end")
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.contains("open-fence-end") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      import scala.jdk.CollectionConverters._
-      val between = started.asScala.toSeq
-        .dropWhile(_ != "open-fence-start").drop(1).takeWhile(_ != "open-fence-end")
-      assert(started.contains("open-fence-end"), "marker job never reached the listener")
-      assert(between.isEmpty, s"opening the store ran ${between.size} Spark job(s)")
-      assert(acc.columns.toSeq == Seq("probe", "sA"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (acc, jobs) = jobsDuring(BucketedStore.accumulated(spark, dir))
+    assert(jobs.isEmpty, s"opening the store ran ${jobs.size} Spark job(s)")
+    assert(acc.columns.toSeq == Seq("probe", "sA"))
   }
 
   test("bucketed store: a store.json without schema (older format) re-attaches and gains it on commit") {
@@ -785,5 +790,25 @@ class PlanShapeSpec extends SparkSpecBase {
       "bracket cumsum collapsed to a single-partition window:\n" + p.take(2000))
     assert("""windowspecdefinition\(pid""".r.findFirstIn(p).isDefined,
       "bracket cumsum window lost its range-bucket partitioning key:\n" + p.take(2000))
+  }
+
+  test("clinical: one scan, project and samples explode; no exchange, broadcast or join") {
+    // Every per-case aggregate is a higher-order function over the
+    // case's own arrays, so nothing re-groups or re-joins on case id.
+    val p = plan("q35_clinical")
+    assert(p.contains("Generate explode"), "samples fan-out lost:\n" + p)
+    assert(!p.contains("Exchange") && !p.contains("Join"),
+      "clinical matrix shuffles, broadcasts or joins:\n" + p)
+  }
+
+  test("raw dtype transforms start no Spark job before their action") {
+    // The raw-file schema is read on the driver, so building the plan
+    // of any raw dtype (header + comment, gzip + banner, headerless,
+    // segment) runs no CSV probe job.
+    for (d <- Seq("star_counts", "somaticmutation_wxs", "methylation450", "segment_cnv_DNAcopy")) {
+      val (df, jobs) = jobsDuring(graft.transform.GdcTransforms.transform(spark, d, s"fixtures/$d"))
+      assert(jobs.isEmpty, s"$d: building the transform ran ${jobs.size} Spark job(s)")
+      assert(df.count() > 0, s"$d: transform has no rows")
+    }
   }
 }
