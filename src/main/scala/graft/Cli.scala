@@ -1013,7 +1013,8 @@ object Cli {
 
     case "drift-stream" :: rest =>
       // Streaming distribution-drift monitor: per micro-batch, one
-      // KL-vs-frozen-LM-store row per group appends to the ledger.
+      // KL-vs-frozen-LM-store row per group lands at
+      // ledger/batch=<id> (overwrite - replay idempotent).
       val m = opts(rest)
       val in = one(m, "-i", "--input")
       val store = one(m, "-s", "--store")
@@ -1175,8 +1176,8 @@ object Cli {
       // reference corpus's registers; --growth reports per-language
       // estimated vocabulary before/after an arriving batch without
       // folding; --ingest folds the batch in (register-wise max,
-      // replay-idempotent); --stream appends a growth ledger per
-      // micro-batch and folds each batch after reporting.
+      // replay-idempotent); --stream writes a growth ledger per
+      // micro-batch at batch=<id> and folds each batch after reporting.
       val m = opts(rest)
       val in = one(m, "-i", "--input")
       val store = one(m, "-s", "--store")
@@ -1197,7 +1198,7 @@ object Cli {
         val q = graft.streaming.HllStream.maintain(
           spark, in, store, out, ckpt, schema, langCol, textCol)
         q.awaitTermination()
-        println(s"vocabulary-growth ledger appended to $out")
+        println(s"vocabulary-growth ledger written to $out")
       } else {
         val out = one(m, "-o", "--output")
         graft.ops.HllStore.growth(spark, store, spark.read.parquet(in), langCol, textCol)
@@ -1211,7 +1212,7 @@ object Cli {
       // corpus's token occurrences into a d x w counter matrix;
       // --surge reports an arriving batch's top-k tokens with exact
       // batch counts, frozen CMS reference estimates and surge ratios
-      // (the template/spam alarm); --stream appends the surge report
+      // (the template/spam alarm); --stream writes the surge report
       // per micro-batch at batch=<id> (overwrite, replay-idempotent).
       val m = opts(rest)
       val in = one(m, "-i", "--input")
@@ -1465,8 +1466,8 @@ object Cli {
       // --create fits exact quantile cut-points on a reference column
       // and freezes them with the reference bin counts; the default
       // mode bins an arriving batch under the FROZEN cuts and reports
-      // per-bin shares + PSI terms; --stream appends the same report
-      // per micro-batch.
+      // per-bin shares + PSI terms; --stream writes the same report
+      // per micro-batch at batch=<id> (overwrite, replay-idempotent).
       val m = opts(rest)
       val in = one(m, "-i", "--input")
       val store = one(m, "-s", "--store")
@@ -1485,7 +1486,7 @@ object Cli {
         val q = graft.streaming.PsiStream.maintain(
           spark, in, store, out, ckpt, schema, valueCol)
         q.awaitTermination()
-        println(s"PSI ledger appended to $out")
+        println(s"PSI ledger written to $out")
       } else {
         val out = one(m, "-o", "--output")
         graft.ops.PsiStore.psi(spark, store, spark.read.parquet(in), valueCol)

@@ -1359,12 +1359,12 @@ object ScaleSmoke {
     // (b) per-wave monitor ledgers == the batch operators on that wave
     waves.zipWithIndex.foreach { case (w, i) =>
       val tokLed = spark.read.parquet(s"$csDir/led_tok")
-        .filter(col("batch") === i).drop("batch")
+        .filter(col("batch").cast("long") === i).drop("batch")
       assert(rowSet(tokLed) ==
         rowSet(graft.ops.TokStore.fertilityDrift(spark, s"$csDir/tok", w)),
         s"tok ledger batch $i diverged")
       val lmLed = spark.read.parquet(s"$csDir/led_lm")
-        .filter(col("batch") === i).drop("batch")
+        .filter(col("batch").cast("long") === i).drop("batch")
       assert(rowSet(lmLed) ==
         rowSet(graft.streaming.StreamDrift.batchDrift(spark, s"$csDir/lm", w, "source")),
         s"lm ledger batch $i diverged")
@@ -1372,7 +1372,7 @@ object ScaleSmoke {
         rowSet(graft.ops.PsiStore.psi(spark, s"$csDir/psi", w, "n_chars")),
         s"psi ledger batch $i diverged")
       val lidLed = spark.read.parquet(s"$csDir/led_lid")
-        .filter(col("batch") === i).drop("batch")
+        .filter(col("batch").cast("long") === i).drop("batch")
       assert(rowSet(lidLed) ==
         rowSet(graft.ops.LangIdStore.mixDrift(spark, s"$csDir/lid", w)),
         s"langid ledger batch $i diverged")

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.StoreMeta
 import graft.ops.XenaOps
 
 /** Incremental NEAR-dup linkage against a persisted MinHash band
@@ -36,7 +37,7 @@ object BandStore {
 
   /** Sign `reference` and persist its band table at `path`, bucketed
     * by `bkey`, with the signature parameters in a `_band_store.json`
-    * sidecar so a later session can [[attach]] without knowing them
+    * sidecar (written by [[graft.io.StoreMeta]]) so a later session can [[attach]] without knowing them
     * (mismatched parameters would produce disjoint buckets and
     * silently link nothing). Returns the table name.
     *
@@ -59,23 +60,17 @@ object BandStore {
       buckets: Int = 0): String = {
     val nb = if (buckets > 0) buckets
       else XenaOps.defaultBucketedStoreBuckets(spark)
-    val table = tableFor(path)
+    val table = StoreMeta.tableName("band_store", path)
     val bandRows = Dedup.cappedBandTable(
       reference, idCol, textCol, n, numHashes, bands, maxBucketSize)
       .select(bkey.as("bkey"), col("doc_id"))
     XenaOps.writeBucketed(bandRows, table, "bkey", nb, Some(s"$path/bands"))
-    val p = new org.apache.hadoop.fs.Path(s"$path/_band_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
     // maxBucketSize persists WITH the signature parameters: a capped
     // store (retuneIfSkewed's rebuild) must be distinguishable from an
     // uncapped one at attach time, or a later createAt-style rebuild
     // and every append would silently drop the cap.
-    try os.write(
-      (s"""{"n": $n, "numHashes": $numHashes, "bands": $bands, """ +
-        s""""buckets": $nb, "maxBucketSize": $maxBucketSize}""")
-        .getBytes("UTF-8"))
-    finally os.close()
+    StoreMeta.write(spark, s"$path/_band_store.json", "n" -> n, "numHashes" -> numHashes,
+      "bands" -> bands, "buckets" -> nb, "maxBucketSize" -> maxBucketSize)
     table
   }
 
@@ -85,17 +80,10 @@ object BandStore {
     * (n, numHashes, bands, buckets, maxBucketSize) — the cap defaults
     * to Long.MaxValue for stores written before it was persisted. */
   def attach(spark: SparkSession, path: String): (String, (Int, Int, Int, Int, Long)) = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_band_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(k: String): Int = (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"malformed _band_store.json at $path: $json"))
-    val cap = """"maxBucketSize"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(Long.MaxValue)
-    val params = (field("n"), field("numHashes"), field("bands"), field("buckets"), cap)
-    val table = tableFor(path)
+    val m = StoreMeta.read(spark, s"$path/_band_store.json")
+    val params = (m.int("n"), m.int("numHashes"), m.int("bands"), m.int("buckets"),
+      m.optLong("maxBucketSize").getOrElse(Long.MaxValue))
+    val table = StoreMeta.tableName("band_store", path)
     XenaOps.declareBucketedTable(spark, table, s"$path/bands", "bkey", params._4)
     (table, params)
   }
@@ -241,7 +229,7 @@ object BandStore {
         f"candidate mass $perDoc%.2f pairs/doc <= $maxCandPairsPerDoc%.2f " +
           f"(max bucket $maxb): left untouched"
     val decision = RetuneDecision(perDoc, maxb, breached, reason)
-    writeRetuneLog(spark, s"$path/retune.json",
+    StoreMeta.writeText(spark, s"$path/retune.json",
       s"""{"cand_pairs_per_doc":$perDoc,"max_bucket":$maxb,""" +
         s""""max_cand_pairs_per_doc":$maxCandPairsPerDoc,""" +
         s""""capped_bucket_size":$cappedBucketSize,"retuned":$breached,""" +
@@ -249,17 +237,4 @@ object BandStore {
     decision
   }
 
-  private[dedup] def writeRetuneLog(
-      spark: SparkSession, at: String, json: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(at)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(json.getBytes("UTF-8")) finally os.close()
-  }
-
-  private def tableFor(path: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(path.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"band_store_$hex"
-  }
 }

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.io.StoreMeta
 import graft.ops.{Parallelism, XenaOps}
 
 /** Incremental exact-dedup against a persisted fingerprint store —
@@ -98,7 +99,8 @@ object FingerprintStore {
   }
 
   /** [[create]] keyed by location: table name derived from the path,
-    * bucket count persisted in a `_fp_store.json` sidecar so a LATER
+    * bucket count persisted in a `_fp_store.json` sidecar (written by
+    * [[graft.io.StoreMeta]]) so a LATER
     * session (or the CLI) can [[attach]] without knowing the creation
     * parameters. Returns the table name. */
   def createAt(
@@ -110,21 +112,16 @@ object FingerprintStore {
       buckets: Int = 0): String = {
     val nb = if (buckets > 0) buckets
       else XenaOps.defaultBucketedStoreBuckets(spark)
-    val table = tableFor(path)
+    val table = StoreMeta.tableName("fp_store", path)
     create(docs, idCol, textCol, table, s"$path/fp", nb)
     // schema DDL persisted for the empty-store bootstrap: a store
     // created over ZERO rows (streaming curation starting from
     // nothing) writes no data file, so a later attach has nothing to
-    // infer from. toDDL uses backticks, never double quotes — safe to
-    // embed in the JSON verbatim.
+    // infer from.
     val ddl = docs
       .select(col(idCol).as("keep_id"), storeFp(textCol).as("fp"))
       .select(col("fp"), col("keep_id")).schema.toDDL
-    val p = new org.apache.hadoop.fs.Path(s"$path/_fp_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(s"""{"buckets": $nb, "schema": "$ddl"}""".getBytes("UTF-8"))
-    finally os.close()
+    StoreMeta.write(spark, s"$path/_fp_store.json", "buckets" -> nb, "schema" -> ddl)
     table
   }
 
@@ -134,25 +131,12 @@ object FingerprintStore {
     * anti-join plan. Returns (table name, bucket count) — the bucket
     * count feeds [[append]] so appended files keep the store's spec. */
   def attach(spark: SparkSession, path: String): (String, Int) = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_fp_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val buckets = """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"malformed _fp_store.json at $path: $json"))
-    // absent in pre-schema sidecars: fall back to file inference
-    val schemaDdl = """"schema"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json)
-      .map(_.group(1))
-    val table = tableFor(path)
-    XenaOps.declareBucketedTable(spark, table, s"$path/fp", "fp", buckets, schemaDdl)
+    val m = StoreMeta.read(spark, s"$path/_fp_store.json")
+    val buckets = m.int("buckets")
+    val table = StoreMeta.tableName("fp_store", path)
+    // schema is absent in pre-schema sidecars: fall back to file inference
+    XenaOps.declareBucketedTable(spark, table, s"$path/fp", "fp", buckets, m.optString("schema"))
     (table, buckets)
-  }
-
-  private def tableFor(path: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(path.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"fp_store_$hex"
   }
 
   /** Record `accepted` rows' fingerprints in the store (same bucket

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.StoreMeta
 import graft.ops.XenaOps
 
 /** Persisted band store for PACKED long signatures — the
@@ -84,7 +85,8 @@ object SigBandStore {
 
   /** Sign-and-persist: write `sigs` (one (`idCol`, `sigCol`) row per
     * item) as a band table at `path`, bucketed by `bkey`, with the
-    * banding parameters in a `_sig_band_store.json` sidecar so a
+    * banding parameters in a `_sig_band_store.json` sidecar (written
+    * by [[graft.io.StoreMeta]]) so a
     * later session can [[attach]] without knowing them. Returns the
     * table name. Size `buckets` >= the cluster's shuffle width or
     * the planner disables the bucketed scan (same contract as the
@@ -103,31 +105,21 @@ object SigBandStore {
     validate(sigBits, bands)
     val nb = if (buckets > 0) buckets
       else XenaOps.defaultBucketedStoreBuckets(spark)
-    val table = tableFor(path)
+    val table = StoreMeta.tableName("sig_band_store", path)
     XenaOps.writeBucketed(
       exactRows(sigs, idCol, sigCol, sigBits, bands),
       table, "bkey", nb, Some(s"$path/bands"))
-    val p = new org.apache.hadoop.fs.Path(s"$path/_sig_band_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(
-      s"""{"sigBits": $sigBits, "bands": $bands, "buckets": $nb}""".getBytes("UTF-8"))
-    finally os.close()
+    StoreMeta.write(spark, s"$path/_sig_band_store.json",
+      "sigBits" -> sigBits, "bands" -> bands, "buckets" -> nb)
     table
   }
 
   /** Re-attach a store written by [[createAt]] in a fresh session.
     * Returns the table name and (sigBits, bands, buckets). */
   def attach(spark: SparkSession, path: String): (String, (Int, Int, Int)) = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_sig_band_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(k: String): Int = (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"malformed _sig_band_store.json at $path: $json"))
-    val params = (field("sigBits"), field("bands"), field("buckets"))
-    val table = tableFor(path)
+    val m = StoreMeta.read(spark, s"$path/_sig_band_store.json")
+    val params = (m.int("sigBits"), m.int("bands"), m.int("buckets"))
+    val table = StoreMeta.tableName("sig_band_store", path)
     // fixed store schema passed explicitly: an empty store (created
     // over zero blobs — the streaming bootstrap) has no file to infer
     XenaOps.declareBucketedTable(spark, table, s"$path/bands", "bkey", params._3,
@@ -243,17 +235,11 @@ object SigBandStore {
         f"candidate mass $perItem%.2f pairs/item <= $maxCandPairsPerItem%.2f " +
           f"(max bucket $maxb): left untouched"
     val decision = RetuneDecision(perItem, maxb, breached, reason)
-    BandStore.writeRetuneLog(spark, s"$path/retune.json",
+    StoreMeta.writeText(spark, s"$path/retune.json",
       s"""{"cand_pairs_per_item":$perItem,"max_bucket":$maxb,""" +
         s""""max_cand_pairs_per_item":$maxCandPairsPerItem,""" +
         s""""bands":$bands,"new_bands":$newBands,"retuned":$breached,""" +
         s""""reason":${graft.io.JsonUtil.quote(reason)}}""")
     decision
-  }
-
-  private def tableFor(path: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(path.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"sig_band_store_$hex"
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.io.StoreMeta
 
 /** Frozen Count-Min-Sketch store + heavy-hitter SURGE alarm — the
   * persisted twin of the q89 CMS heavy-hitters pass, completing the
@@ -47,7 +48,8 @@ object CmsStore {
       .groupBy("tok").agg(count(lit(1)).as("c"))
 
   /** Fit the d×w counter matrix on `reference` and persist it at
-    * `path` (`counters` parquet + a `_cms_store.json` sidecar with
+    * `path` (`counters` parquet + a `_cms_store.json` sidecar, written
+    * by [[graft.io.StoreMeta]], with
     * the geometry, so a later session can [[attach]] without knowing
     * it — mismatched d/w would probe buckets the fit never wrote). */
   def createAt(
@@ -66,22 +68,13 @@ object CmsStore {
       .groupBy("row", "bucket")
       .agg(sum("c").cast("long").as("cnt"))
     rows.coalesce(1).write.mode("overwrite").parquet(s"$path/counters")
-    val p = new org.apache.hadoop.fs.Path(s"$path/_cms_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(s"""{"d": $d, "w": $w}""".getBytes("UTF-8")) finally os.close()
+    StoreMeta.write(spark, s"$path/_cms_store.json", "d" -> d, "w" -> w)
   }
 
   /** Re-attach a persisted store: (counters, (d, w)). */
   def attach(spark: SparkSession, path: String): (DataFrame, (Int, Int)) = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_cms_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(k: String): Int = (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"malformed _cms_store.json at $path: $json"))
-    (spark.read.parquet(s"$path/counters"), (field("d"), field("w")))
+    val m = StoreMeta.read(spark, s"$path/_cms_store.json")
+    (spark.read.parquet(s"$path/counters"), (m.int("d"), m.int("w")))
   }
 
   /** CMS estimate of the REFERENCE occurrence count for each row of

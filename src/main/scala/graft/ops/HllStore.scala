@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.{HllEstimate, HllSketchAgg, Md5Prefix64, TextFunctions}
+import graft.io.StoreMeta
 
 /** Persisted per-language HLL registers — incremental vocabulary
   * GROWTH monitoring, the distinct-count member of the
@@ -27,7 +28,7 @@ import graft.functions.{HllEstimate, HllSketchAgg, Md5Prefix64, TextFunctions}
   * materializes.
   *
   * Layout under `path`: `regs` — (lang, sketch binary); and
-  * `_hll_store.json` — p.
+  * `_hll_store.json` — p (written by [[graft.io.StoreMeta]]).
   *
   * [[growth]] output: (lang, est_before, est_after, est_growth) per
   * language present in EITHER the store or the batch; a language
@@ -45,11 +46,7 @@ object HllStore {
       p: Int = 12): Unit = {
     sketchOf(docs, langCol, textCol, p)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/regs")
-    val jp = new org.apache.hadoop.fs.Path(s"$path/_hll_store.json")
-    val fs = jp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(jp, true)
-    try os.write(s"""{"p": $p}""".getBytes("UTF-8"))
-    finally os.close()
+    StoreMeta.write(spark, s"$path/_hll_store.json", "p" -> p)
   }
 
   private def sketchOf(docs: DataFrame, langCol: String, textCol: String, p: Int): DataFrame =
@@ -60,16 +57,9 @@ object HllStore {
       .groupBy(col("lang"))
       .agg(HllSketchAgg.hllSketch(Md5Prefix64(col("tok")), p).as("sketch"))
 
-  def attach(spark: SparkSession, path: String): (DataFrame, Int) = {
-    val jp = new org.apache.hadoop.fs.Path(s"$path/_hll_store.json")
-    val fs = jp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(jp)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val p2 = """"p"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"malformed _hll_store.json at $path: $json"))
-    (spark.read.parquet(s"$path/regs"), p2)
-  }
+  def attach(spark: SparkSession, path: String): (DataFrame, Int) =
+    (spark.read.parquet(s"$path/regs"),
+      StoreMeta.read(spark, s"$path/_hll_store.json").int("p"))
 
   /** Vocabulary growth of an arriving batch against the stored
     * registers: per language, the stored estimate, the estimate after

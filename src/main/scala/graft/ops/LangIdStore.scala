@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.StoreMeta
+
 /** Persisted FROZEN language-ID model: fit the Cavnar–Trenkle
   * profiles ONCE on a labeled snapshot ([[LangId.langProfiles]]),
   * persist them, classify arriving batches forever after — the
@@ -17,7 +19,7 @@ import org.apache.spark.sql.functions._
   *   - `mix` — the snapshot's TRUE label composition (lang,
   *     train_share): the reference point the mix-drift monitor
   *     compares arriving PREDICTED composition against.
-  *   - `_langid_store.json` — topM.
+  *   - `_langid_store.json` — topM (written by [[graft.io.StoreMeta]]).
   *
   * [[mixDrift]] is the feed-composition alarm: per trained language,
   * the arriving batch's predicted share vs the snapshot's labeled
@@ -60,24 +62,13 @@ object LangIdStore {
           .as("train_share"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/mix")
-    val p = new org.apache.hadoop.fs.Path(s"$path/_langid_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(s"""{"topM": $topM}""".getBytes("UTF-8"))
-    finally os.close()
+    StoreMeta.write(spark, s"$path/_langid_store.json", "topM" -> topM)
   }
 
   /** (profiles frame, topM) in a fresh session. */
-  def attach(spark: SparkSession, path: String): (DataFrame, Int) = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_langid_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val topM = """"topM"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"malformed _langid_store.json at $path: $json"))
-    (spark.read.parquet(s"$path/profiles"), topM)
-  }
+  def attach(spark: SparkSession, path: String): (DataFrame, Int) =
+    (spark.read.parquet(s"$path/profiles"),
+      StoreMeta.read(spark, s"$path/_langid_store.json").int("topM"))
 
   /** Classify a batch under the FROZEN profiles: (doc_id, pred_lang,
     * distance), O(batch). */

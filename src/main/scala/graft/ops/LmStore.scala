@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.io.StoreMeta
 
 /** Persisted FROZEN unigram LM: fit once on a reference corpus, score
   * arriving batches forever after without re-reading the corpus — the
@@ -16,8 +17,9 @@ import graft.functions.TextFunctions
   * Layout: `$path/vocab` — the (tok, cnt) table bucketed by `tok`, so
   * the scoring join probes it exchange-free (the store side never
   * reshuffles; same contract as the fingerprint/band/posting stores)
-  * — plus `_lm_store.json` (total token count, bucket count, schema
-  * DDL for the empty-store bootstrap).
+  * — plus `_lm_store.json`, written by [[graft.io.StoreMeta]] (total
+  * token count, bucket count, schema DDL for the empty-store
+  * bootstrap).
   *
   * Scoring semantics: identical expression tree to `unigramLogprob`
   * (fixed-point accumulation, 6dp rounding) with the frozen (cnt,
@@ -41,7 +43,7 @@ object LmStore {
     // 0 = session-derived ([[XenaOps.defaultStoreBuckets]]); probes
     // re-attach from the catalog/sidecar, so create-time only.
     val nb = if (buckets > 0) buckets else XenaOps.defaultStoreBuckets(spark)
-    val table = tableFor(path)
+    val table = StoreMeta.tableName("lm_store", path)
     val vocab = Parallelism.ensure(docs)
       .filter(col("text").isNotNull)
       .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
@@ -51,30 +53,18 @@ object LmStore {
     // store instead of keeping the aggregate alive for two consumers
     val total = spark.table(table)
       .agg(coalesce(sum(col("cnt")), lit(0L)).cast("long")).head().getLong(0)
-    val p = new org.apache.hadoop.fs.Path(s"$path/_lm_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(
-      s"""{"total": $total, "buckets": $nb, "schema": "`tok` STRING,`cnt` BIGINT"}"""
-        .getBytes("UTF-8"))
-    finally os.close()
+    StoreMeta.write(spark, s"$path/_lm_store.json",
+      "total" -> total, "buckets" -> nb, "schema" -> "`tok` STRING,`cnt` BIGINT")
     table
   }
 
   /** Re-attach in a fresh session: (table, total token count). */
   def attach(spark: SparkSession, path: String): (String, Long) = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_lm_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def num(k: String): Long = (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(sys.error(s"malformed _lm_store.json at $path: $json"))
-    val schemaDdl = """"schema"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-    val table = tableFor(path)
+    val m = StoreMeta.read(spark, s"$path/_lm_store.json")
+    val table = StoreMeta.tableName("lm_store", path)
     XenaOps.declareBucketedTable(spark, table, s"$path/vocab", "tok",
-      num("buckets").toInt, schemaDdl)
-    (table, num("total"))
+      m.int("buckets"), m.optString("schema"))
+    (table, m.long("total"))
   }
 
   /** Score a batch under the frozen LM at `path`. */
@@ -138,10 +128,4 @@ object LmStore {
         when(col("n_tokens") > 0L,
           round(col("n_oov").cast("double") / col("n_tokens").cast("double"), 6))
           .as("oov_rate"))
-
-  private def tableFor(path: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(path.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"lm_store_$hex"
-  }
 }

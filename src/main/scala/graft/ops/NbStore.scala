@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TermCounts, TextFunctions}
+import graft.io.StoreMeta
 
 /** Persisted FROZEN Naive Bayes model: fit the class-conditional
   * unigram histograms once on a labeled reference corpus, score
@@ -19,7 +20,8 @@ import graft.functions.{TermCounts, TextFunctions}
   * Layout: `$path/model` — the (tok, pos, neg) count table bucketed
   * by `tok`, so the scoring join probes it exchange-free (the store
   * side never reshuffles; the fingerprint/band/posting/LM store
-  * contract) — plus `_nb_store.json` carrying the five scalars the
+  * contract) — plus `_nb_store.json` (written by
+  * [[graft.io.StoreMeta]]) carrying the five scalars the
   * score expression needs (class token totals, vocab size, class doc
   * counts for the prior) and the schema DDL for re-attach.
   *
@@ -47,7 +49,7 @@ object NbStore {
     // 0 = session-derived ([[XenaOps.defaultStoreBuckets]]); probes
     // re-attach from the catalog/sidecar, so create-time only.
     val nb = if (buckets > 0) buckets else XenaOps.defaultStoreBuckets(spark)
-    val table = tableFor(path)
+    val table = StoreMeta.tableName("nb_store", path)
     // Row-local per-doc counts ([[TermCounts]] — the naiveBayesLogOdds
     // recipe): no corpus exchange for the row-unique (doc, is_seed) key.
     val pd = Parallelism.ensure(docs)
@@ -74,32 +76,20 @@ object NbStore {
     val (npos, nneg) = (d.getLong(0), d.getLong(1))
     require(npos > 0L && nneg > 0L,
       s"NbStore.createAt: both classes must be non-empty (seed docs $npos, rest $nneg)")
-    val p = new org.apache.hadoop.fs.Path(s"$path/_nb_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(
-      (s"""{"tpos": $tpos, "tneg": $tneg, "v": $v, "npos": $npos, "nneg": $nneg, """ +
-        s""""buckets": $nb, "schema": "`tok` STRING,`pos` BIGINT,`neg` BIGINT"}""")
-        .getBytes("UTF-8"))
-    finally os.close()
+    StoreMeta.write(spark, s"$path/_nb_store.json",
+      "tpos" -> tpos, "tneg" -> tneg, "v" -> v, "npos" -> npos, "nneg" -> nneg,
+      "buckets" -> nb, "schema" -> "`tok` STRING,`pos` BIGINT,`neg` BIGINT")
     table
   }
 
   /** Re-attach in a fresh session:
     * (table, tpos, tneg, v, npos, nneg). */
   def attach(spark: SparkSession, path: String): (String, Long, Long, Long, Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_nb_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def num(k: String): Long = (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(sys.error(s"malformed _nb_store.json at $path: $json"))
-    val schemaDdl = """"schema"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-    val table = tableFor(path)
+    val m = StoreMeta.read(spark, s"$path/_nb_store.json")
+    val table = StoreMeta.tableName("nb_store", path)
     XenaOps.declareBucketedTable(spark, table, s"$path/model", "tok",
-      num("buckets").toInt, schemaDdl)
-    (table, num("tpos"), num("tneg"), num("v"), num("npos"), num("nneg"))
+      m.int("buckets"), m.optString("schema"))
+    (table, m.long("tpos"), m.long("tneg"), m.long("v"), m.long("npos"), m.long("nneg"))
   }
 
   /** Score a batch under the frozen model at `path`. */
@@ -133,11 +123,5 @@ object NbStore {
       .select(col("doc_id"), col("n_tokens"), col("n_oov"),
         round(raw, 6).as("log_odds"),
         (raw > 0).cast("int").as("predicted"))
-  }
-
-  private def tableFor(path: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(path.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"nb_store_$hex"
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Md5Prefix64
+import graft.io.StoreMeta
 
 /** Persisted BM25 posting store — the production shape of repeated
   * retrieval over a stable (or growing) corpus: the corpus is
@@ -18,7 +19,8 @@ import graft.functions.Md5Prefix64
   * own batch tag — `postings/batch=<tag>/tb=*`,
   * `dfreq/batch=<tag>/tb=*` (that batch's df DELTAS), and
   * `stats/<tag>.json` (that batch's exact (n_docs, total_dl)
-  * counters) — all with OVERWRITE semantics on the tag. A
+  * counters; `store.json` and the stats files are written by
+  * [[graft.io.StoreMeta]]) — all with OVERWRITE semantics on the tag. A
   * crash-retried ingest therefore replaces its own output and can
   * never double-count: exactly-once without a transactional sink,
   * the [[graft.streaming.PackStream]] recipe. Derived state that
@@ -57,24 +59,6 @@ object PostingStore {
     org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
-  private def writeText(spark: SparkSession, path: String, body: String): Unit = {
-    val f = fs(spark, path)
-    // temp-then-rename: a stats file is either absent or complete,
-    // never a torn read for a concurrent retrieve.
-    val tmp = new org.apache.hadoop.fs.Path(path + "._tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    f.delete(new org.apache.hadoop.fs.Path(path), false)
-    if (!f.rename(tmp, new org.apache.hadoop.fs.Path(path)))
-      sys.error(s"rename failed for $path")
-  }
-
-  private def readText(spark: SparkSession, path: String): String = {
-    val in = fs(spark, path).open(new org.apache.hadoop.fs.Path(path))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
   /** Ledger-wide metadata: bucket count from `store.json`, counters
     * summed over every COMMITTED batch's stats file (driver-side; one
     * small file per ingest), plus the committed tag set itself — the
@@ -83,20 +67,12 @@ object PostingStore {
     * must scan only `batch IN committed` or it would score a racing
     * append's postings with missing df deltas and stale counters. */
   private def readMeta(spark: SparkSession, path: String): (Long, Long, Int, Seq[String]) = {
-    val nBuckets = {
-      val s = readText(spark, s"$path/store.json")
-      "\"n_buckets\":(\\d+)".r.findFirstMatchIn(s)
-        .getOrElse(sys.error(s"malformed $path/store.json: $s")).group(1).toInt
-    }
-    val f = fs(spark, path)
-    val statFiles = f.globStatus(new org.apache.hadoop.fs.Path(s"$path/stats/*.json"))
-    var nDocs = 0L
-    var totalDl = 0L
-    statFiles.foreach { st =>
-      val s = readText(spark, st.getPath.toString)
-      nDocs += "\"n_docs\":(\\d+)".r.findFirstMatchIn(s).get.group(1).toLong
-      totalDl += "\"total_dl\":(\\d+)".r.findFirstMatchIn(s).get.group(1).toLong
-    }
+    val nBuckets = StoreMeta.read(spark, s"$path/store.json").int("n_buckets")
+    val statFiles =
+      fs(spark, path).globStatus(new org.apache.hadoop.fs.Path(s"$path/stats/*.json"))
+    val stats = statFiles.map(st => StoreMeta.read(spark, st.getPath.toString))
+    val nDocs = stats.map(_.long("n_docs")).sum
+    val totalDl = stats.map(_.long("total_dl")).sum
     val tags = statFiles.map(_.getPath.getName.stripSuffix(".json")).toSeq
     (nDocs, totalDl, nBuckets, tags)
   }
@@ -134,8 +110,8 @@ object PostingStore {
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl").cast("long")), lit(0L)).as("total_dl"))
       .collect()(0)
-    writeText(spark, s"$path/stats/$tag.json",
-      s"""{"n_docs":${st.getLong(0)},"total_dl":${st.getLong(1)}}""")
+    StoreMeta.write(spark, s"$path/stats/$tag.json",
+      "n_docs" -> st.getLong(0), "total_dl" -> st.getLong(1))
   }
 
   /** Create the store at `path` from `corpus` (doc_id, text) as the
@@ -154,7 +130,7 @@ object PostingStore {
     Seq("postings", "dfreq", "stats", "norms").foreach { d =>
       f.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true)
     }
-    writeText(spark, s"$path/store.json", s"""{"n_buckets":$nb}""")
+    StoreMeta.write(spark, s"$path/store.json", "n_buckets" -> nb)
     writeBatch(corpus, path, "base", nb)
   }
 
@@ -286,9 +262,8 @@ object PostingStore {
         postings.select("doc_id", "term", "tf"), dfreq,
         withStats = _.withColumn("n_docs", lit(nDocs))),
       normsTableFor(path), "doc_id", nBuckets, Some(s"$path/norms/data"))
-    writeText(spark, s"$path/norms/_norms.json",
-      s"""{"buckets":$nBuckets,"schema":"`doc_id` BIGINT,`dnorm` DOUBLE",""" +
-        s""""tags":[${committed.sorted.map("\"" + _ + "\"").mkString(",")}]}""")
+    StoreMeta.write(spark, s"$path/norms/_norms.json", "buckets" -> nBuckets,
+      "schema" -> "`doc_id` BIGINT,`dnorm` DOUBLE", "tags" -> committed.sorted)
   }
 
   /** TF-IDF cosine top-`k` of `queries` (q_id, text) against the
@@ -319,22 +294,17 @@ object PostingStore {
       k: Int = 10,
       maxTermDf: Long = Long.MaxValue): DataFrame = {
     val (nDocs, _, nBuckets, committed) = readMeta(spark, path)
-    val normsJson = {
+    val norms = {
       val p = s"$path/norms/_norms.json"
       if (!fs(spark, path).exists(new org.apache.hadoop.fs.Path(p)))
         sys.error(s"no frozen norms at $path/norms — run freezeNorms after the " +
           "ledger settles; tf-idf document norms depend on every term's global " +
           "df and cannot be derived per-batch.")
-      readText(spark, p)
+      StoreMeta.read(spark, p)
     }
-    val normTags = "\"([A-Za-z0-9_-]+)\"".r.findAllMatchIn(
-      "\"tags\":\\[([^\\]]*)\\]".r.findFirstMatchIn(normsJson)
-        .getOrElse(sys.error(s"malformed _norms.json at $path: $normsJson")).group(1))
-      .map(_.group(1)).toSeq
-    val normBuckets = "\"buckets\":(\\d+)".r.findFirstMatchIn(normsJson)
-      .getOrElse(sys.error(s"malformed _norms.json at $path: $normsJson"))
-      .group(1).toInt
-    val normSchema = "\"schema\":\"([^\"]*)\"".r.findFirstMatchIn(normsJson).map(_.group(1))
+    val normTags = norms.strings("tags")
+    val normBuckets = norms.int("buckets")
+    val normSchema = norms.optString("schema")
     require(normTags == committed.sorted,
       s"frozen norms at $path cover batches [${normTags.mkString(",")}] but the " +
         s"ledger has committed [${committed.sorted.mkString(",")}] — the vector " +

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.StoreMeta
+
 /** Persisted FROZEN score-distribution reference for PSI monitoring —
   * the Population Stability Index, the standard production drift
   * metric for model scores and numeric quality features (Siddiqi,
@@ -28,7 +30,8 @@ import org.apache.spark.sql.functions._
   *   - `cuts` — (q, value), the frozen boundaries (bins = cuts+1 rows
   *     of driver-bounded size);
   *   - `ref` — (bin, n_ref) the snapshot's bin counts;
-  *   - `_psi_store.json` — snapshot row count for introspection.
+  *   - `_psi_store.json` — snapshot row count for introspection
+  *     (written by [[graft.io.StoreMeta]]).
   *
   * Scale shape: fitting costs the exactQuantiles passes over the
   * snapshot (once, ever); monitoring is one narrow binning projection
@@ -66,11 +69,8 @@ object PsiStore {
     binned(vals, "v", cutVals)
       .groupBy(col("bin")).agg(count(lit(1)).as("n_ref"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/ref")
-    val p = new org.apache.hadoop.fs.Path(s"$path/_psi_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(s"""{"n_ref": $total, "bins": ${cutVals.size + 1}}""".getBytes("UTF-8"))
-    finally os.close()
+    StoreMeta.write(spark, s"$path/_psi_store.json",
+      "n_ref" -> total, "bins" -> (cutVals.size + 1))
   }
 
   /** bin(v) = number of frozen cuts strictly below v (ties go LOW). */

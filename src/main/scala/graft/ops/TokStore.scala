@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.io.StoreMeta
 import graft.ops.Quality.BpeMerge
 
 /** Persisted FROZEN BPE tokenizer: train the merge table once on a
@@ -26,7 +27,7 @@ import graft.ops.Quality.BpeMerge
   *     compares arrivals against.
   *   - `_tok_store.json` — merge count actually trained (may be fewer
   *     than requested when the vocab exhausts) for cheap
-  *     introspection.
+  *     introspection (written by [[graft.io.StoreMeta]]).
   *
   * Encoding semantics are [[Quality.bpeEncode]]'s, with the FROZEN
   * merge list: on the training corpus itself, `encode` reproduces
@@ -58,11 +59,7 @@ object TokStore {
       .write.mode("overwrite").parquet(s"$path/merges")
     perLangFertility(staged, merges)
       .write.mode("overwrite").parquet(s"$path/fertility")
-    val p = new org.apache.hadoop.fs.Path(s"$path/_tok_store.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(s"""{"n_merges": ${merges.size}}""".getBytes("UTF-8"))
-    finally os.close()
+    StoreMeta.write(spark, s"$path/_tok_store.json", "n_merges" -> merges.size)
     merges
   }
 

@@ -57,15 +57,10 @@ object AnnIndexStream {
     val storeSchema = spark.read.parquet(s"$indexPath/vectors").schema
     val schema = org.apache.spark.sql.types.StructType(
       storeSchema.fields.filter(f => f.name == meta.idCol || f.name == meta.vecCol))
-    assigned(spark.readStream.schema(schema).parquet(landingDir), meta)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("cell")
-          .parquet(s"$indexPath/vectors")
-      }
-      .start()
+    LedgerStream.start(assigned(spark.readStream.schema(schema).parquet(landingDir), meta),
+        checkpointDir, trigger) { (batch, _) =>
+      batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/vectors")
+    }
   }
 
   /** The shared (batch == stream) assignment stage: quantize and
@@ -101,15 +96,10 @@ object AnnIndexStream {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField(meta.vecCol,
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
-    assignedPq(spark.readStream.schema(schema).parquet(landingDir), meta)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("cell")
-          .parquet(s"$indexPath/codes")
-      }
-      .start()
+    LedgerStream.start(assignedPq(spark.readStream.schema(schema).parquet(landingDir), meta),
+        checkpointDir, trigger) { (batch, _) =>
+      batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/codes")
+    }
   }
 
   /** The shared (batch == stream) IVF-PQ assignment stage: coarse

@@ -60,12 +60,8 @@ object ClusterSampleStream {
       schema: org.apache.spark.sql.types.StructType,
       k: Int,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(spark, batch, indexPath, storeDir, k)
-      }
-      .start()
+    LedgerStream.start(spark.readStream.schema(schema).parquet(landingDir),
+        checkpointDir, trigger) { (batch, _) =>
+      mergeBatch(spark, batch, indexPath, storeDir, k)
+    }
 }

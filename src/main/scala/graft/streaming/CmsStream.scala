@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.CmsStore
@@ -26,14 +26,7 @@ object CmsStream {
       k: Int = 20,
       textCol: String = "text",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        CmsStore.surge(spark, storePath, batch, k, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    LedgerStream.maintain(spark.readStream.schema(schema).parquet(landingDir),
+        outDir, checkpointDir, trigger)(
+      CmsStore.surge(spark, storePath, _, k, textCol))
 }

@@ -59,13 +59,7 @@ object EvalStream {
       schema: org.apache.spark.sql.types.StructType,
       labelCol: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchEval(spark, storePath, batch, labelCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    LedgerStream.maintain(spark.readStream.schema(schema).parquet(landingDir),
+        outDir, checkpointDir, trigger)(
+      batchEval(spark, storePath, _, labelCol))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.HllStore
@@ -9,10 +8,11 @@ import graft.ops.HllStore
 /** Streaming vocabulary-growth monitor over the persisted HLL
   * registers ([[HllStore]]): per micro-batch, report each language's
   * estimated vocabulary before/after the batch ([[HllStore.growth]]),
-  * append the report to the ledger, then FOLD the batch's registers
-  * into the store ([[HllStore.ingest]]) so the next batch's "before"
-  * includes this one — a truly incremental distinct-count state no
-  * exact counter can keep without holding the full token set.
+  * write the report to the ledger's `batch=<id>`, then FOLD the
+  * batch's registers into the store ([[HllStore.ingest]]) so the next
+  * batch's "before" includes this one — a truly incremental
+  * distinct-count state no exact counter can keep without holding the
+  * full token set.
   *
   * Crash semantics: the fold is register-wise max — replaying a batch
   * is a no-op on the STORE, which therefore always equals the
@@ -38,26 +38,21 @@ object HllStream {
       langCol: String = "lang",
       textCol: String = "text",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // One store read + one batch sketch per micro-batch. The
-        // ledger partition is written BEFORE the fold commits (the
-        // reportSink hook): a crash BETWEEN the two replays the batch
-        // against the unmodified store, so the rewritten ledger row
-        // carries the same growth numbers. This NARROWS the ~0-growth
-        // replay window, it does not eliminate it — a crash after the
-        // fold commits but before the streaming offset does still
-        // replays the batch against the already-folded store and
-        // overwrites this batch's ledger row with ~0 growth (the
-        // store itself stays exact either way; HllStoreSpec pins the
-        // between-the-two-writes replay).
-        HllStore.growthAndIngest(spark, storePath, batch, langCol, textCol,
-          reportSink =
-            _.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"))
-        ()
-      }
-      .start()
+    LedgerStream.start(spark.readStream.schema(schema).parquet(landingDir),
+        checkpointDir, trigger) { (batch, batchId) =>
+      // One store read + one batch sketch per micro-batch. The
+      // ledger partition is written BEFORE the fold commits (the
+      // reportSink hook): a crash BETWEEN the two replays the batch
+      // against the unmodified store, so the rewritten ledger row
+      // carries the same growth numbers. This NARROWS the ~0-growth
+      // replay window, it does not eliminate it — a crash after the
+      // fold commits but before the streaming offset does still
+      // replays the batch against the already-folded store and
+      // overwrites this batch's ledger row with ~0 growth (the
+      // store itself stays exact either way; HllStoreSpec pins the
+      // between-the-two-writes replay).
+      HllStore.growthAndIngest(spark, storePath, batch, langCol, textCol,
+        reportSink = _.write.mode("overwrite")
+          .parquet(LedgerStream.ledgerPath(outDir, batchId)))
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.LangIdStore
@@ -22,9 +21,9 @@ import graft.ops.LangIdStore
   */
 object LangIdStream {
 
-  /** Monitor parquet landings: per micro-batch, append one mix-drift
-    * row per trained language (tagged with the batch id) to
-    * `outDir`. */
+  /** Monitor parquet landings: per micro-batch, write one mix-drift
+    * row per trained language to `$outDir/batch=<id>` (overwrite —
+    * replay idempotent). */
   def maintain(
       spark: SparkSession,
       landingDir: String,
@@ -36,15 +35,8 @@ object LangIdStream {
     val (profiles, topM) = LangIdStore.attach(spark, storePath)
     val prof = profiles.localCheckpoint(false)
     val ref = spark.read.parquet(s"$storePath/mix").localCheckpoint(false)
-    spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        LangIdStore.mixDriftFrom(prof, topM, ref, batch)
-          .withColumn("batch", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    LedgerStream.maintain(spark.readStream.schema(schema).parquet(landingDir),
+        outDir, checkpointDir, trigger)(
+      LangIdStore.mixDriftFrom(prof, topM, ref, _))
   }
 }

@@ -53,14 +53,10 @@ object PackStream {
       window: Int = 50,
       stride: Int = 40,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(landingSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(batch, id, outDir, budget, window, stride)
-      }
-      .start()
+    LedgerStream.start(spark.readStream.schema(landingSchema).parquet(landingDir),
+        checkpointDir, trigger) { (batch, id) =>
+      processBatch(batch, id, outDir, budget, window, stride)
+    }
 
   /** One micro-batch: chunk, continue the cumsum from this batch's
     * start offset, overwrite `data/batch=<id>`, then commit the

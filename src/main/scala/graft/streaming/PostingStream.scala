@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -57,12 +57,8 @@ object PostingStream {
       storePath: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(landingSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PostingStore.append(batch.select("doc_id", "text"), storePath, s"s$batchId")
-      }
-      .start()
+    LedgerStream.start(spark.readStream.schema(landingSchema).parquet(landingDir),
+        checkpointDir, trigger) { (batch, batchId) =>
+      PostingStore.append(batch.select("doc_id", "text"), storePath, s"s$batchId")
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.PsiStore
@@ -23,8 +22,10 @@ import graft.ops.PsiStore
   */
 object PsiStream {
 
-  /** Monitor parquet landings: per micro-batch, append one PSI row
-    * per frozen bin (tagged with the batch id) to `outDir`. */
+  /** Monitor parquet landings: per micro-batch, write one PSI row
+    * per frozen bin to `$outDir/batch=<id>` (overwrite — a doubled
+    * ledger would double the per-batch PSI sum and fire a false
+    * population-shift alarm). */
   def maintain(
       spark: SparkSession,
       landingDir: String,
@@ -34,19 +35,7 @@ object PsiStream {
       schema: org.apache.spark.sql.types.StructType,
       valueCol: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Per-batch partition OVERWRITE (the EvalStream/HllStream
-        // idempotency shape): an at-least-once replay rewrites the
-        // same batch=<id> rows instead of appending a duplicate set —
-        // a doubled ledger would double the per-batch PSI sum and
-        // fire a false population-shift alarm.
-        PsiStore.psi(spark, storePath, batch, valueCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    LedgerStream.maintain(spark.readStream.schema(schema).parquet(landingDir),
+        outDir, checkpointDir, trigger)(
+      PsiStore.psi(spark, storePath, _, valueCol))
 }

@@ -59,28 +59,25 @@ object SigStream {
       bCol: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val (table, (sigBits, bands, buckets)) = SigBandStore.attach(spark, storePath)
-    spark.readStream.format("binaryFile").schema(binarySchema).load(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one decode+sign per blob, consumed by three stages
-        val sigs = sign(batch.select(col("path"), col("content")))
-          .localCheckpoint(false)
-        val cross = SigBandStore.linkNew(spark, table, sigs, "name", "sig",
-            maxDist = maxHamming, sigBits = sigBits, bands = bands)
-          .select(least(col("id_a"), col("id_b")).as(aCol),
-            greatest(col("id_a"), col("id_b")).as(bCol), col("hamming"))
-          .filter(col(aCol) =!= col(bCol)) // re-delivered blob self-link
-        val within = Dedup.bandedHammingPairs(sigs, "name", "sig",
-            sigBits = sigBits, bands = bands, maxDist = maxHamming)
-          .select(col("id_a").as(aCol), col("id_b").as(bCol), col("hamming"))
-        cross.unionByName(within).distinct()
-          .write.mode("append").parquet(pairsDir)
-        SigBandStore.append(spark, table, sigs, "name", "sig",
-          sigBits = sigBits, bands = bands, buckets = buckets)
-      }
-      .start()
+    LedgerStream.start(
+        spark.readStream.format("binaryFile").schema(binarySchema).load(landingDir),
+        checkpointDir, trigger) { (batch, _) =>
+      // one decode+sign per blob, consumed by three stages
+      val sigs = sign(batch.select(col("path"), col("content")))
+        .localCheckpoint(false)
+      val cross = SigBandStore.linkNew(spark, table, sigs, "name", "sig",
+          maxDist = maxHamming, sigBits = sigBits, bands = bands)
+        .select(least(col("id_a"), col("id_b")).as(aCol),
+          greatest(col("id_a"), col("id_b")).as(bCol), col("hamming"))
+        .filter(col(aCol) =!= col(bCol)) // re-delivered blob self-link
+      val within = Dedup.bandedHammingPairs(sigs, "name", "sig",
+          sigBits = sigBits, bands = bands, maxDist = maxHamming)
+        .select(col("id_a").as(aCol), col("id_b").as(bCol), col("hamming"))
+      cross.unionByName(within).distinct()
+        .write.mode("append").parquet(pairsDir)
+      SigBandStore.append(spark, table, sigs, "name", "sig",
+        sigBits = sigBits, bands = bands, buckets = buckets)
+    }
   }
 }
 

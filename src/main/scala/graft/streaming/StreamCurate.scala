@@ -33,7 +33,8 @@ import graft.functions.TextFunctions
   * `curate-pipeline`), not per-arrival.
   *
   * Ledger lines land as one JSON file per batch under
-  * `$outDir/_ledger/` (arrived / gated / clean / accepted counts) —
+  * `$outDir/_ledger/` (arrived / gated / clean / accepted counts,
+  * written by [[graft.io.StoreMeta]]) —
   * the same audit trail the batch verb ships, incrementally.
   *
   * Crash/retry semantics, same trade as [[SigStream]]: source
@@ -66,38 +67,30 @@ object StreamCurate {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val (table, buckets) = FingerprintStore.attach(spark, fpStorePath)
     val benchStatic = bench.select(col("doc_id"), col("text")).localCheckpoint(false)
-    spark.readStream.schema(docSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val arrived = batch.localCheckpoint(false)
-        val gated = arrived
-          .filter(col("text").isNotNull)
-          .withColumn("quality", TextFunctions.qualityScore(col("text")))
-          .withColumn("n_tokens", TextFunctions.tokenCount(col("text")).cast("long"))
-          .filter(col("quality") >= minQuality &&
-            col("n_tokens").between(minTokens, maxTokens))
-          .localCheckpoint(false)
-        val clean = StreamDecontam.sharedGramCount(
-            gated, benchStatic, "text", n = decontamN)
-          .filter(col("shared_grams") === 0L)
-          .drop("shared_grams")
-          .localCheckpoint(false)
-        val accepted = FingerprintStore.dedupeNew(
-            spark, table, clean, "doc_id", "text")
-          .localCheckpoint(false)
-        accepted.write.mode("append").parquet(s"$outDir/corpus")
-        FingerprintStore.append(spark, table, accepted, "doc_id", "text", buckets)
-        val line =
-          s"""{"batch": $batchId, "arrived": ${arrived.count()}, "gated": ${gated.count()},
-             | "clean": ${clean.count()}, "accepted": ${accepted.count()}}""".stripMargin
-            .replace("\n", "")
-        val p = new org.apache.hadoop.fs.Path(s"$outDir/_ledger/batch_$batchId.json")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val os = fs.create(p, true) // overwrite: retried batch rewrites its line
-        try os.write((line + "\n").getBytes("UTF-8")) finally os.close()
-      }
-      .start()
+    LedgerStream.start(spark.readStream.schema(docSchema).parquet(landingDir),
+        checkpointDir, trigger) { (batch, batchId) =>
+      val arrived = batch.localCheckpoint(false)
+      val gated = arrived
+        .filter(col("text").isNotNull)
+        .withColumn("quality", TextFunctions.qualityScore(col("text")))
+        .withColumn("n_tokens", TextFunctions.tokenCount(col("text")).cast("long"))
+        .filter(col("quality") >= minQuality &&
+          col("n_tokens").between(minTokens, maxTokens))
+        .localCheckpoint(false)
+      val clean = StreamDecontam.sharedGramCount(
+          gated, benchStatic, "text", n = decontamN)
+        .filter(col("shared_grams") === 0L)
+        .drop("shared_grams")
+        .localCheckpoint(false)
+      val accepted = FingerprintStore.dedupeNew(
+          spark, table, clean, "doc_id", "text")
+        .localCheckpoint(false)
+      accepted.write.mode("append").parquet(s"$outDir/corpus")
+      FingerprintStore.append(spark, table, accepted, "doc_id", "text", buckets)
+      // overwrite: a retried batch rewrites its line
+      graft.io.StoreMeta.write(spark, s"$outDir/_ledger/batch_$batchId.json",
+        "batch" -> batchId, "arrived" -> arrived.count(), "gated" -> gated.count(),
+        "clean" -> clean.count(), "accepted" -> accepted.count())
+    }
   }
 }

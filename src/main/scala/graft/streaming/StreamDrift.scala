@@ -74,9 +74,9 @@ object StreamDrift {
           round(Quality.fromFixedPoint9(sum(col("k9"))), 6)).as("kl"))
   }
 
-  /** Monitor parquet landings: per micro-batch, append one drift row
-    * per group (tagged with the batch id) to `$outDir` — the ledger a
-    * pipeline dashboard tails. */
+  /** Monitor parquet landings: per micro-batch, write one drift row
+    * per group to `$outDir/batch=<id>` (overwrite — replay
+    * idempotent) — the ledger a pipeline dashboard tails. */
   def maintain(
       spark: SparkSession,
       landingDir: String,
@@ -86,14 +86,7 @@ object StreamDrift {
       schema: org.apache.spark.sql.types.StructType,
       groupCol: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchDrift(spark, storePath, batch, groupCol)
-          .withColumn("batch", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    LedgerStream.maintain(spark.readStream.schema(schema).parquet(landingDir),
+        outDir, checkpointDir, trigger)(
+      batchDrift(spark, storePath, _, groupCol))
 }

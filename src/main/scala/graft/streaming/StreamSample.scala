@@ -114,12 +114,8 @@ object StreamSample {
       weight: Column,
       k: Int,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch, storeDir, idCol, groupCol, weight, k)
-      }
-      .start()
+    LedgerStream.start(spark.readStream.schema(schema).parquet(landingDir),
+        checkpointDir, trigger) { (batch, _) =>
+      mergeBatch(batch, storeDir, idCol, groupCol, weight, k)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.TokStore
@@ -22,8 +21,9 @@ import graft.ops.TokStore
   */
 object TokStream {
 
-  /** Monitor parquet landings: per micro-batch, append one drift row
-    * per language (tagged with the batch id) to `outDir`. */
+  /** Monitor parquet landings: per micro-batch, write one drift row
+    * per language to `$outDir/batch=<id>` (overwrite — replay
+    * idempotent). */
   def maintain(
       spark: SparkSession,
       landingDir: String,
@@ -34,15 +34,8 @@ object TokStream {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val merges = TokStore.attach(spark, storePath)
     val ref = spark.read.parquet(s"$storePath/fertility").localCheckpoint(false)
-    spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TokStore.driftAgainst(TokStore.perLangFertility(batch, merges), ref)
-          .withColumn("batch", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    LedgerStream.maintain(spark.readStream.schema(schema).parquet(landingDir),
+        outDir, checkpointDir, trigger)(
+      batch => TokStore.driftAgainst(TokStore.perLangFertility(batch, merges), ref))
   }
 }

@@ -2011,4 +2011,123 @@ class DomainSpec extends SparkSpecBase {
       ("clip_1.wav", "clip_1_dup.wav", 1L),
       ("clip_2.wav", "clip_2_dup.wav", 1L)), pairs.toString)
   }
+
+  // ---- store sidecars (graft.io.StoreMeta) ----------------------------
+
+  /** Replace a sidecar as an external writer would: its stale Hadoop
+    * `.crc` goes too (object stores keep none), so the read sees the
+    * content and not a checksum mismatch. */
+  private def putSidecar(file: String, content: String): Unit = {
+    val f = java.nio.file.Paths.get(file)
+    java.nio.file.Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    java.nio.file.Files.write(f, content.getBytes("UTF-8"))
+  }
+
+  test("store sidecars: a truncated store sidecar or torn posting stats file " +
+    "fails naming the file") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sidecar_strict").toString
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").filter(col("doc_id") % 10 === 0)
+    def failsNaming(file: String)(attach: => Any): Unit = {
+      val e = intercept[RuntimeException](attach)
+      assert(e.getMessage.startsWith("malformed ") && e.getMessage.contains(file), e.getMessage)
+    }
+    // truncated after "buckets": attaching must not fall back to an
+    // uncapped band store
+    graft.dedup.BandStore.createAt(spark, docs, "doc_id", "text", s"$tmp/band",
+      maxBucketSize = 8L, buckets = 4)
+    putSidecar(s"$tmp/band/_band_store.json", """{"n": 2, "numHashes": 64, "bands": 16, "buckets": 4""")
+    failsNaming(s"$tmp/band/_band_store.json")(graft.dedup.BandStore.attach(spark, s"$tmp/band"))
+    // truncated after "buckets": no silent schema-inference fallback
+    graft.ops.LmStore.createAt(spark, docs, s"$tmp/lm", buckets = 4)
+    putSidecar(s"$tmp/lm/_lm_store.json", """{"total": 10, "buckets": 4""")
+    failsNaming(s"$tmp/lm/_lm_store.json")(graft.ops.LmStore.attach(spark, s"$tmp/lm"))
+    // a parsed document without a required field
+    graft.ops.HllStore.createAt(spark, docs, s"$tmp/hll", p = 10)
+    putSidecar(s"$tmp/hll/_hll_store.json", """{"q": 10}""")
+    failsNaming(s"$tmp/hll/_hll_store.json")(graft.ops.HllStore.attach(spark, s"$tmp/hll"))
+    // a torn posting stats file
+    graft.ops.PostingStore.create(docs, s"$tmp/posting", nBuckets = 4)
+    putSidecar(s"$tmp/posting/stats/base.json", """{"n_docs": 12, "tot""")
+    failsNaming(s"$tmp/posting/stats/base.json")(graft.ops.PostingStore.retrieve(spark,
+      s"$tmp/posting", docs.select(col("doc_id").as("q_id"), col("text")).limit(2)))
+  }
+
+  test("store sidecars: the spaced hand-written format and older sidecars " +
+    "attach as before, for all 10 stores") {
+    import spark.implicits._
+    import graft.dedup.{BandStore, FingerprintStore, SigBandStore}
+    import graft.ops.{CmsStore, HllStore, LangIdStore, LmStore, NbStore, PsiStore, TokStore}
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sidecar_compat").toString
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    def schemaOf(table: String) = spark.table(table).schema
+
+    BandStore.createAt(spark, docs, "doc_id", "text", s"$tmp/band", maxBucketSize = 8L, buckets = 4)
+    val band = s"$tmp/band/_band_store.json"
+    putSidecar(band, """{"n": 2, "numHashes": 64, "bands": 16, "buckets": 4, "maxBucketSize": 8}""")
+    assert(BandStore.attach(spark, s"$tmp/band")._2 == ((2, 64, 16, 4, 8L)))
+    // written before the cap persisted: uncapped
+    putSidecar(band, """{"n": 2, "numHashes": 64, "bands": 16, "buckets": 4}""")
+    assert(BandStore.attach(spark, s"$tmp/band")._2 == ((2, 64, 16, 4, Long.MaxValue)))
+
+    SigBandStore.createAt(spark, (0 until 20).map(i => (s"s$i", i * 7919L)).toDF("name", "sig"),
+      "name", "sig", s"$tmp/sig", sigBits = 64, bands = 4, buckets = 4)
+    putSidecar(s"$tmp/sig/_sig_band_store.json", """{"sigBits": 64, "bands": 4, "buckets": 4}""")
+    assert(SigBandStore.attach(spark, s"$tmp/sig")._2 == ((64, 4, 4)))
+
+    // bucketed stores with a schema field: the spaced form and the
+    // older form without it (file inference) declare the same table
+    FingerprintStore.createAt(spark, docs, "doc_id", "text", s"$tmp/fp", buckets = 4)
+    val fpTable = FingerprintStore.attach(spark, s"$tmp/fp")._1
+    val fpSchema = schemaOf(fpTable)
+    for (sidecar <- Seq(s"""{"buckets": 4, "schema": "${fpSchema.toDDL}"}""", """{"buckets": 4}""")) {
+      putSidecar(s"$tmp/fp/_fp_store.json", sidecar)
+      assert(FingerprintStore.attach(spark, s"$tmp/fp") == ((fpTable, 4)), sidecar)
+      assert(schemaOf(fpTable) == fpSchema, sidecar)
+    }
+    LmStore.createAt(spark, docs, s"$tmp/lm", buckets = 4)
+    val lm = LmStore.attach(spark, s"$tmp/lm")
+    val lmSchema = schemaOf(lm._1)
+    for (sidecar <- Seq(
+        s"""{"total": ${lm._2}, "buckets": 4, "schema": "`tok` STRING,`cnt` BIGINT"}""",
+        s"""{"total": ${lm._2}, "buckets": 4}""")) {
+      putSidecar(s"$tmp/lm/_lm_store.json", sidecar)
+      assert(LmStore.attach(spark, s"$tmp/lm") == lm, sidecar)
+      assert(schemaOf(lm._1) == lmSchema, sidecar)
+    }
+    NbStore.createAt(spark, docs, col("lang") === "en", s"$tmp/nb", buckets = 4)
+    val nb = NbStore.attach(spark, s"$tmp/nb")
+    val nbSchema = schemaOf(nb._1)
+    val nbScalars = s""""tpos": ${nb._2}, "tneg": ${nb._3}, "v": ${nb._4}, """ +
+      s""""npos": ${nb._5}, "nneg": ${nb._6}, "buckets": 4"""
+    for (sidecar <- Seq(
+        s"""{$nbScalars, "schema": "`tok` STRING,`pos` BIGINT,`neg` BIGINT"}""",
+        s"""{$nbScalars}""")) {
+      putSidecar(s"$tmp/nb/_nb_store.json", sidecar)
+      assert(NbStore.attach(spark, s"$tmp/nb") == nb, sidecar)
+      assert(schemaOf(nb._1) == nbSchema, sidecar)
+    }
+
+    CmsStore.createAt(spark, docs, s"$tmp/cms", d = 4, w = 64)
+    putSidecar(s"$tmp/cms/_cms_store.json", """{"d": 4, "w": 64}""")
+    assert(CmsStore.attach(spark, s"$tmp/cms")._2 == ((4, 64)))
+    HllStore.createAt(spark, docs, s"$tmp/hll", p = 10)
+    putSidecar(s"$tmp/hll/_hll_store.json", """{"p": 10}""")
+    assert(HllStore.attach(spark, s"$tmp/hll")._2 == 10)
+    LangIdStore.createAt(spark, docs, s"$tmp/lid", topM = 16)
+    putSidecar(s"$tmp/lid/_langid_store.json", """{"topM": 16}""")
+    assert(LangIdStore.attach(spark, s"$tmp/lid")._2 == 16)
+
+    // introspection-only sidecars: attach never reads them, the
+    // reader still parses the spaced form
+    val merges = TokStore.createAt(spark, docs, s"$tmp/tok", nMerges = 2)
+    putSidecar(s"$tmp/tok/_tok_store.json", s"""{"n_merges": ${merges.size}}""")
+    assert(graft.io.StoreMeta.read(spark, s"$tmp/tok/_tok_store.json").int("n_merges") ==
+      merges.size)
+    assert(TokStore.attach(spark, s"$tmp/tok") == merges)
+    PsiStore.createAt(spark, docs, "n_chars", s"$tmp/psi")
+    putSidecar(s"$tmp/psi/_psi_store.json", """{"n_ref": 500, "bins": 5}""")
+    val psi = graft.io.StoreMeta.read(spark, s"$tmp/psi/_psi_store.json")
+    assert(psi.long("n_ref") == 500L && psi.int("bins") == 5)
+    assert(PsiStore.attach(spark, s"$tmp/psi")._1.size == 4)
+  }
 }

@@ -1274,4 +1274,56 @@ class StreamingSpec extends SparkSpecBase {
     assert(row(s"$tmp/led/batch=1") == b1,
       "replaying a batch disturbed its ledger row")
   }
+
+  test("monitor ledgers: a replayed batch id rewrites its ledger rows, never duplicates them " +
+    "(StreamDrift, TokStream, LangIdStream)") {
+    import java.io.File
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.ops.{LangIdStore, LmStore, TokStore}
+    import graft.streaming.{LangIdStream, StreamDrift, TokStream}
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text", "source", "lang")
+    val ref = docs.filter(col("doc_id") % 25 === 0)
+    val arriving = docs.filter(col("doc_id") % 25 =!= 0)
+    // (name, create the frozen store at a path, start the monitor over
+    // (landing, store, ledger, checkpoint))
+    val monitors: Seq[(String, String => Unit, (String, String, String, String) => StreamingQuery)] =
+      Seq(
+        ("StreamDrift", LmStore.createAt(spark, ref, _),
+          StreamDrift.maintain(spark, _, _, _, _, arriving.schema, "source")),
+        ("TokStream", TokStore.createAt(spark, ref, _, nMerges = 3),
+          TokStream.maintain(spark, _, _, _, _, arriving.schema)),
+        ("LangIdStream", LangIdStore.createAt(spark, ref, _, topM = 64),
+          LangIdStream.maintain(spark, _, _, _, _, arriving.schema)))
+    for ((name, create, start) <- monitors) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_ledger_replay").toString
+      create(s"$tmp/store")
+      arriving.coalesce(1).write.parquet(s"$tmp/in")
+      def land(): Unit = {
+        val q = start(s"$tmp/in", s"$tmp/store", s"$tmp/ledger", s"$tmp/ckpt")
+        try q.processAllAvailable() finally q.stop()
+      }
+      def ledger() = {
+        val l = spark.read.parquet(s"$tmp/ledger")
+          .withColumn("batch", col("batch").cast("long"))
+        (l.count(), l.collect().map(_.toSeq).toSet)
+      }
+      land()
+      val before = ledger()
+      assert(before._1 > 0L, s"$name wrote no ledger rows")
+      // Forget the last commit: the restarted query finds its offsets
+      // logged but uncommitted and re-runs that batch id, as after a
+      // crash between the sink write and the commit.
+      val commits = new File(s"$tmp/ckpt/commits")
+      val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      val commit = new File(commits, last.toString)
+      assert(commit.delete())
+      new File(commits, s".$last.crc").delete()
+      land()
+      assert(commit.exists(), s"$name did not re-run batch $last")
+      val after = ledger()
+      assert(after._1 == before._1,
+        s"$name: replaying batch $last changed the ledger row count ${before._1} -> ${after._1}")
+      assert(after._2 == before._2, s"$name: replaying batch $last changed the ledger rows")
+    }
+  }
 }
