@@ -172,7 +172,7 @@ object Cli {
       date = java.time.LocalDate.now(java.time.ZoneOffset.UTC)
         .format(java.time.format.DateTimeFormatter.ofPattern("MM-dd-yyyy")))
     val vars = XenaMetadata.dtypeVariables.get(dtype).map(_(vars0)).getOrElse(vars0)
-    XenaMetadata.write(out, DTypes.registry(dtype).metadataKind, vars)
+    XenaMetadata.write(out, DTypes.registry(dtype).metadataKind, vars, spark.sessionState.newHadoopConf())
   }
 
   /** Long-shape dtypes merge vertically; matrix dtypes horizontally
@@ -355,7 +355,8 @@ object Cli {
       val files = m.getOrElse("-f", m.getOrElse("--files", Nil))
       val dtype = one(m, "-t", "--datatype")
       val spark = session()
-      val dfs = files.map(f => XenaTsv.read(spark, f, None))
+      // Typed from the registry: no inference job per input file.
+      val dfs = files.map(f => XenaTsv.readTyped(spark, f, DTypes.matrixSchema(dtype, _)))
       m.get("--bucketed-store").flatMap(_.headOption) match {
         // Incremental assembly against a persistent bucketed store:
         // the accumulated pan-cancer matrix stays bucketed+sorted on

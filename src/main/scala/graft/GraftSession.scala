@@ -43,6 +43,9 @@ object GraftSession {
       // at worst, trivial against executor heap.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
+      // The `file:` filesystem without Hadoop's per-file chmod/readlink
+      // process forks (graft.io.LocalFs; FileSystem and FileContext).
+      .config(graft.io.LocalFs.sparkConf)
 
   def local(): SparkSession = builder().getOrCreate()
 }

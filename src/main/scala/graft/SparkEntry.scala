@@ -395,7 +395,10 @@ object SparkEntry {
     java.nio.file.Paths.get("fixtures").toAbsolutePath.normalize.toString
 
   /** DuckDB expression mirroring GdcTransforms.sampleIdFromFile (S3):
-    * basename prefix before `.<uuid>`. */
+    * file name prefix before `.<uuid>`. DuckDB's `filename` is the
+    * plain local path, so the basename is cut here and nothing is
+    * decoded; Spark's side reads the scan's URL-escaped
+    * `_metadata.file_name` and decodes it. */
   private val SampleFromFilename: String =
     "regexp_extract(regexp_extract(filename, '[^/]+$', 0), " +
       "'^(.+?)\\.[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}', 1)"

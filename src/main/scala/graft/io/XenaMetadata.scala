@@ -153,11 +153,21 @@ object XenaMetadata {
     * reference's sink contract (`xena_dataset.py:719-723`). Hadoop FS
     * API: the metadata sink must accept every URI the matrix sink
     * does (hdfs://, s3a://, file:) — a java.nio write would treat a
-    * remote URI as a local relative path. */
-  def write(matrixPath: String, metadataKind: String, v: Vars): String = {
+    * remote URI as a local relative path.
+    *
+    * @param hadoopConf the session's Hadoop conf when there is a session
+    *   (`spark.sessionState.newHadoopConf()`), so the sidecar sees the
+    *   same `spark.hadoop.*` options (credentials, filesystem impls) as
+    *   the matrix sink beside it; the session-less `metadata` verb uses
+    *   a plain `Configuration`. */
+  def write(
+      matrixPath: String,
+      metadataKind: String,
+      v: Vars,
+      hadoopConf: org.apache.hadoop.conf.Configuration = new org.apache.hadoop.conf.Configuration()): String = {
     val out = matrixPath + ".json"
     val p = new org.apache.hadoop.fs.Path(out)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     val os = fs.create(p, true)
     try os.write(render(metadataKind, v).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally os.close()

@@ -1,6 +1,9 @@
 package graft.io
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -24,19 +27,53 @@ object XenaTsv {
     * access and fail with UNRESOLVED_COLUMN. */
   private def quoted(n: String): String = "`" + n.replace("`", "``") + "`"
 
+  private val ReadOptions = Map("sep" -> "\t", "header" -> "true", "nullValue" -> "")
+
   /** Read a TSV directory/file. Explicit schema preferred (no inference
     * pass); nulls are empty fields, matching the reference's NaN→empty
     * rendering.
     */
   def read(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame = {
-    val base = spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("nullValue", "")
+    val base = spark.read.options(ReadOptions)
     schema match {
       case Some(s) => base.schema(s).csv(path)
       case None    => base.option("inferSchema", "true").csv(path)
     }
+  }
+
+  /** Read a matrix under the schema `schemaOf` gives its header
+    * ([[headerNames]], read on the driver), so building the scan starts
+    * no Spark job; where `schemaOf` cannot decide (None) or the path
+    * has no data line, [[read]]'s two inference jobs run instead.
+    */
+  def readTyped(
+      spark: SparkSession,
+      path: String,
+      schemaOf: Seq[String] => Option[StructType]): DataFrame =
+    read(spark, path, headerNames(spark, path, ReadOptions).flatMap(schemaOf))
+
+  /** The column names Spark's CSV reader would give `path` under
+    * `options`, read on the driver instead of by a probe job: the first
+    * data line of the first data file (by name; hidden `.` and `_` files
+    * skipped) through the Hadoop FS API, via Spark's own helpers —
+    * `readHeaderLine` (codec from `CompressionCodecFactory`, empty and
+    * comment lines skipped) and `makeSafeHeader` (`_c<i>` without a
+    * header; with one, an empty name becomes `_c<i>` and a duplicate
+    * gets its index appended). None when no file has a data line.
+    */
+  def headerNames(spark: SparkSession, path: String, options: Map[String, String]): Option[Seq[String]] = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val opts = new CSVOptions(options, false, conf.sessionLocalTimeZone)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(hadoopConf).listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
+      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+      .sortBy(_.getName)
+    files.iterator
+      .flatMap(f => CSVUtils.readHeaderLine(f, opts, hadoopConf))
+      .nextOption()
+      .map(line => CSVUtils.makeSafeHeader(
+        new CsvParser(opts.asParserSettings).parseLine(line), conf.caseSensitiveAnalysis, opts).toSeq)
   }
 
   /** Read with positional column projection + rename, the reference's

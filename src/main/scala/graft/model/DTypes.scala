@@ -1,5 +1,7 @@
 package graft.model
 
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
+
 /** The engine catalog (SURVEY §2 X1/X4): every GDC data type the
   * reference ETL supports, with its GDC query filter, filename prefix
   * field, raw-file reader configuration and transform strategy.
@@ -184,6 +186,38 @@ object DTypes {
       "survival", SurvivalMatrix, Map.empty,
       strategy = SurvivalPipeline, metadataKind = "survival"),
   ).map(c => c.name -> c).toMap
+
+  /** Column types of the long shapes' matrices, by name: the types
+    * `GdcTransforms.segmentMatrix` (Start, End, value) and
+    * `GdcTransforms.mafVector` (start, end, dna_vaf) give them; every
+    * other long-shape column is a string. */
+  private val longShapeTypes: Map[String, DataType] = Map(
+    "Start" -> LongType, "End" -> LongType, "value" -> DoubleType,
+    "start" -> LongType, "end" -> LongType, "dna_vaf" -> DoubleType)
+
+  /** The schema of a dtype's Xena matrix as the ETL writes it, for the
+    * matrix's header (its column names in order), so reading a matrix
+    * back needs no type inference:
+    *  - genomicMatrix: the row key is a string and every cell a double,
+    *    or a string where the strategy fills nulls with a literal (the
+    *    gene-level CNV `NA`);
+    *  - genomicSegment / mutationVector: each column typed as the
+    *    transform outputs it ([[longShapeTypes]]).
+    * None for the clinical and survival matrices: their columns come
+    * from GDC API documents, not from the registry, so a reader infers
+    * them.
+    */
+  def matrixSchema(dtype: String, header: Seq[String]): Option[StructType] = {
+    val c = registry(dtype)
+    (c.kind, c.strategy) match {
+      case (GenomicMatrix, s: SampleColumnsMatrix) =>
+        val cell = if (s.fillNa.isDefined) StringType else DoubleType
+        Some(StructType(StructField(header.head, StringType) +: header.tail.map(StructField(_, cell))))
+      case (GenomicSegment | MutationVector, _) =>
+        Some(StructType(header.map(n => StructField(n, longShapeTypes.getOrElse(n, StringType)))))
+      case _ => None
+    }
+  }
 
   /** Dtypes whose downloads need tumor/normal pairing logic
     * (`constants.py:123-134` `duplicated_dtype`). */

@@ -1,9 +1,6 @@
 package graft.transform
 
-import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,7 +12,7 @@ import graft.ops.XenaOps
   *
   * The reference loops file-by-file appending pandas columns
   * (`xena_dataset.py:165-243`); here every dtype is ONE multi-file
-  * scan — the sample id is derived from `input_file_name()` (S3,
+  * scan — the sample id is derived from each file's name (S3,
   * `xena_dataset.py:196-198`), replicate averaging is a hash
   * aggregate with map-side combine (A3), and the wide matrix is a
   * single pivot (V1). At 100 TB this is a scan + two shuffles; no
@@ -51,11 +48,25 @@ object GdcTransforms {
   val UuidRe: String =
     "[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}"
 
-  /** S3: sample id = basename prefix before `.<uuid>`. */
+  /** S3: sample id = file name prefix before `.<uuid>`.
+    *
+    * Read from the scan's per-file `_metadata.file_name` (a constant of
+    * each file, resolved by both the batch and the streaming file
+    * source), not from the full `input_file_name()` path, which took a
+    * second per-row regex to cut the basename and is nondeterministic
+    * to the optimizer. The scan gives the name URL-escaped (`TCGA A1`
+    * arrives as `TCGA%20A1`, `%` as `%25`), so the extracted prefix is
+    * percent-decoded to the name the file listing
+    * ([[listSampleIds]]) sees. `url_decode` is form decoding, which
+    * would turn a literal `+` (never escaped in a path) into a space,
+    * so `+` is escaped first. The `.<uuid>` boundary is found on the
+    * escaped name: escaping never touches `.`, `-` or hex digits, and
+    * an escape's `%` is not a hex digit, so the match is the same
+    * prefix as on the decoded name.
+    */
   def sampleIdFromFile: Column =
-    regexp_extract(
-      regexp_extract(input_file_name(), "[^/]+$", 0),
-      s"^(.+?)\\.$UuidRe", 1)
+    url_decode(replace(
+      regexp_extract(col("_metadata.file_name"), s"^(.+?)\\.$UuidRe", 1), lit("+"), lit("%2B")))
 
   /** CSV reader options of a raw dtype scan — shared by the batch scan,
     * [[rawSchema]] and the streaming twin
@@ -71,34 +82,18 @@ object GdcTransforms {
     spark.read.options(rawReadOptions(cfg)).schema(rawSchema(spark, dir, cfg)).csv(dir)
 
   /** The all-string schema Spark's CSV header path would infer for a
-    * dtype directory, read on the driver instead of by a probe job:
-    * the first data line of the first data file (by name; hidden `.`
-    * and `_` files skipped) through the Hadoop FS API, via Spark's own
-    * helpers — `readHeaderLine` (codec from `CompressionCodecFactory`,
-    * empty and comment lines skipped) and `makeSafeHeader` (`_c<i>`
-    * without a header; with one, an empty name becomes `_c<i>` and a
-    * duplicate gets its index appended). Files of one dtype share one
+    * dtype directory, read on the driver instead of by a probe job
+    * ([[graft.io.XenaTsv.headerNames]]). Files of one dtype share one
     * layout; the scan applies this schema positionally to each.
     * A directory with no data line fails here, naming the directory.
     */
   def rawSchema(spark: SparkSession, dir: String, cfg: RawReadConfig): StructType = {
-    val conf = spark.sessionState.conf
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val opts = new CSVOptions(rawReadOptions(cfg), false, conf.sessionLocalTimeZone)
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(hadoopConf)
-    require(fs.exists(p), s"raw directory not found: $dir")
-    val files = fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
-      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
-      .sortBy(_.getName)
-    val firstLine = files.iterator
-      .flatMap(f => CSVUtils.readHeaderLine(f, opts, hadoopConf))
-      .nextOption()
-      .getOrElse(throw new IllegalArgumentException(
+    require(p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p), s"raw directory not found: $dir")
+    val names = graft.io.XenaTsv.headerNames(spark, dir, rawReadOptions(cfg)).getOrElse(
+      throw new IllegalArgumentException(
         s"no data line in raw directory $dir (empty, or only comment lines or hidden files)"))
-    val names = CSVUtils.makeSafeHeader(
-      new CsvParser(opts.asParserSettings).parseLine(firstLine), conf.caseSensitiveAnalysis, opts)
-    StructType(names.toSeq.map(StructField(_, StringType)))
+    StructType(names.map(StructField(_, StringType)))
   }
 
   /** S1/S2/P1: registry-driven raw scan. One scan over all files of a
@@ -262,8 +257,9 @@ object GdcTransforms {
     * for remote URIs, which dropped every sample column downstream);
     * a missing directory fails loud. The extraction pattern is the
     * SAME `<sample>.<uuid>` regex as the executor-side
-    * [[sampleIdFromFile]] — the two must never desynchronize, or
-    * sentinel/pivot sample sets diverge from the scanned values.
+    * [[sampleIdFromFile]], on the decoded name that side decodes to —
+    * the two must never desynchronize, or sentinel/pivot sample sets
+    * diverge from the scanned values.
     */
   def listSampleIds(spark: SparkSession, dir: String): Seq[String] = {
     val sampleRe = s"^(.+?)\\.$UuidRe".r

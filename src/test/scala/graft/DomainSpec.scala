@@ -2130,4 +2130,149 @@ class DomainSpec extends SparkSpecBase {
     assert(psi.long("n_ref") == 500L && psi.int("bins") == 5)
     assert(PsiStore.attach(spark, s"$tmp/psi")._1.size == 4)
   }
+
+  test("sample ids: a space, % and + in raw file names survive sampleColumnsMatrix and mafVector") {
+    import java.nio.file.{Files, Paths}
+    // The scan URL-escapes a file name (`TCGA A1` -> `TCGA%20A1`) while
+    // the listing does not; undecoded, the pivot column was all null and
+    // mafVector added a sentinel row for a sample that has mutations.
+    val renames = Map("SAMP-01A" -> "TCGA A1", "SAMP-02A" -> "P%C+D")
+    def renamedCopy(dtype: String): String = {
+      val dir = Files.createTempDirectory(s"graft_sid_$dtype")
+      Files.list(Paths.get(s"fixtures/$dtype")).forEach { f =>
+        val n = f.getFileName.toString
+        val (sid, rest) = n.splitAt(n.indexOf('.'))
+        Files.copy(f, dir.resolve(renames.getOrElse(sid, sid) + rest))
+      }
+      dir.toString
+    }
+    val star = GdcTransforms.transform(spark, "star_counts", renamedCopy("star_counts"))
+    val starRef = GdcTransforms.transform(spark, "star_counts", "fixtures/star_counts")
+    assert(star.columns.toSeq == Seq("Ensembl_ID", "P%C+D", "SAMP-11A", "TCGA A1"))
+    assert(XenaOps.canonicalEqual(star,
+      starRef.select(starRef.columns.map(c => col(s"`$c`").as(renames.getOrElse(c, c))): _*)))
+    for (c <- renames.values) assert(star.filter(col(s"`$c`").isNotNull).count() > 0, c)
+
+    val maf = GdcTransforms.mafVector(spark, renamedCopy("somaticmutation_wxs"))
+    val mafRef = GdcTransforms.mafVector(spark, "fixtures/somaticmutation_wxs")
+    val renamed = udf((s: String) => renames.getOrElse(s, s))
+    assert(XenaOps.canonicalEqual(maf, mafRef.withColumn("sample", renamed(col("sample")))))
+    assert(maf.filter(col("start") === -1).count() == mafRef.filter(col("start") === -1).count())
+  }
+
+  test("matrixSchema types each dtype's matrix as its transform writes it") {
+    for (d <- Seq("star_counts", "methylation450", "gene-level_ascat-ngs", "segment_cnv_DNAcopy",
+        "somaticmutation_wxs")) {
+      val df = GdcTransforms.transform(spark, d, s"fixtures/$d")
+      val declared = DTypes.matrixSchema(d, df.columns.toSeq).getOrElse(fail(s"$d: no schema"))
+      assert(declared.map(f => f.name -> f.dataType) == df.schema.map(f => f.name -> f.dataType), d)
+    }
+    assert(DTypes.matrixSchema("clinical", Seq("sample", "x")).isEmpty)
+    assert(DTypes.matrixSchema("survival", Seq("sample", "OS")).isEmpty)
+  }
+
+  test("CLI merge-xena: typed reads write what the inference path writes (fixtures, gen.py matrices, bucketed store)") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val tmp = Files.createTempDirectory("graft_typed_merge")
+    def lines(dir: String): Seq[String] = new String(partBytes(dir), "UTF-8").split("\n").toSeq
+    def sameBytes(a: String, b: String, clue: String): Unit = {
+      val (x, y) = (partBytes(a), partBytes(b))
+      if (!(x sameElements y)) {
+        val (lx, ly) = (lines(a), lines(b))
+        val diff = lx.zipAll(ly, "<none>", "<none>").zipWithIndex.filter { case ((l, r), _) => l != r }
+        fail(s"$clue: ${diff.size} lines differ, first: ${diff.take(3).mkString("; ")}")
+      }
+    }
+    def partBytes(dir: String): Array[Byte] = {
+      val parts = Files.list(Paths.get(dir)).iterator.asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      assert(parts.size == 1, s"$dir: ${parts.size} part files")
+      Files.readAllBytes(parts.head)
+    }
+    val dtypes = Seq("star_counts", "methylation450", "mirna", "gene-level_ascat-ngs",
+      "segment_cnv_DNAcopy", "somaticmutation_wxs")
+    // Raw set 1: the fixtures split by sample into two projects.
+    val fixRaw = tmp.resolve("fixtures_raw")
+    for (d <- dtypes; f <- Files.list(Paths.get(s"fixtures/$d")).iterator.asScala) {
+      val proj = if (f.getFileName.toString.startsWith("SAMP-02A")) "PB" else "PA"
+      Files.createDirectories(fixRaw.resolve(s"$proj/$d"))
+      Files.copy(f, fixRaw.resolve(s"$proj/$d/${f.getFileName}"))
+    }
+    // Raw set 2: the benchmark generator's shapes (replicate vials, null
+    // copy numbers -> NA cells, an empty MAF -> sentinel rows).
+    val genRaw = tmp.resolve("gen")
+    val py = Seq("python3", "-c",
+      "import sys; sys.path.insert(0, 'perfbench'); import gen; " +
+        s"gen.gen_etl('$genRaw', 7, 2, 2, dtypes=${dtypes.mkString("['", "', '", "']")}, star_genes=300)")
+    assert(scala.sys.process.Process(py).! == 0, "perfbench/gen.py failed")
+    for ((raw, projects) <- Seq(fixRaw -> Seq("PA", "PB"), genRaw.resolve("raw") -> Seq("BENCH-P0", "BENCH-P1"))) {
+      val out = s"$raw-out"
+      assert(Cli.run((Seq("etl-batch", "-r", raw.toString, "-o", out, "-p") ++ projects ++
+        Seq("-t") ++ dtypes).toArray) == 0)
+      for (d <- dtypes) {
+        val files = projects.map(p => s"$out/$p/$d.tsv")
+        val long = Seq("segment_cnv_DNAcopy", "somaticmutation_wxs").contains(d)
+        val inferred = files.map(f => graft.io.XenaTsv.read(spark, f, None))
+        val key = inferred.head.columns.head
+        val ref = if (long) XenaOps.mergeVertical(inferred) else XenaOps.mergeHorizontal(inferred, key)
+        graft.io.XenaTsv.write(ref, s"$out/ref_$d.tsv", rowKey = Some(ref.columns.head))
+        assert(Cli.run((Seq("merge-xena", "-t", d, "-o", s"$out/merged_$d.tsv") ++
+          files.flatMap(f => Seq("-f", f))).toArray) == 0)
+        sameBytes(s"$out/merged_$d.tsv", s"$out/ref_$d.tsv", s"$raw $d")
+        if (!long) {
+          val buckets = spark.sessionState.conf.numShufflePartitions
+          graft.io.BucketedStore.init(spark, s"$out/refstore_$d", inferred.head, key, buckets)
+          val acc = graft.io.BucketedStore.merge(spark, s"$out/refstore_$d", inferred.tail)
+          graft.io.XenaTsv.write(acc, s"$out/refexport_$d.tsv", rowKey = Some(key))
+          assert(Cli.run((Seq("merge-xena", "--bucketed-store", s"$out/store_$d", "-t", d,
+            "-o", s"$out/export_$d.tsv") ++ files.flatMap(f => Seq("-f", f))).toArray) == 0)
+          // The same lines; their order follows the store's bucket-file
+          // listing, which differs between any two stores.
+          val (got, want) = (lines(s"$out/export_$d.tsv"), lines(s"$out/refexport_$d.tsv"))
+          assert(got.head == want.head && got.tail.sorted == want.tail.sorted, s"$raw $d bucketed store")
+        }
+      }
+    }
+    // Renderings typing changes, on a hand-written matrix: an integer
+    // cell is read as a double, so it comes back `1.0` where inference
+    // kept `1`; a non-numeric cell of a double-typed dtype comes back
+    // empty where inference kept the text (as a string column).
+    Files.createDirectories(tmp.resolve("ints"))
+    Files.writeString(tmp.resolve("ints/a.tsv"), "id\ts1\ng1\t1\ng2\t2\ng3\tNA\n")
+    Files.createDirectories(tmp.resolve("ints2"))
+    Files.writeString(tmp.resolve("ints2/a.tsv"), "id\ts2\ng1\t0.5\n")
+    assert(Cli.run(Array("merge-xena", "-t", "methylation450", "-f", s"$tmp/ints", "-f", s"$tmp/ints2",
+      "-o", s"$tmp/ints_merged.tsv")) == 0)
+    assert(new String(partBytes(s"$tmp/ints_merged.tsv"), "UTF-8").split("\n").toSet ==
+      Set("id\ts1\ts2", "g1\t1.0\t0.5", "g2\t2.0\t", "g3\t\t"))
+  }
+
+  test("metadata sidecar: written through the session's Hadoop conf; the session-less verb writes the same bytes") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_sidecar_conf")
+    // A filesystem scheme only the session's conf knows: the matrix sink
+    // resolved it, and the sidecar beside it used to fail on it. Uncached,
+    // so the sink's instance cannot stand in for the sidecar's lookup.
+    val schemeConf = Seq("fs.graftsidecar.impl" -> classOf[SidecarSchemeFs].getName,
+      "fs.graftsidecar.impl.disable.cache" -> "true")
+    schemeConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(Cli.run(Array("etl", "-t", "star_counts", "-r", "fixtures/star_counts",
+      "-o", s"graftsidecar://$tmp/star.tsv")) == 0)
+    finally schemeConf.foreach { case (k, _) => spark.conf.unset(k) }
+    val viaSession = Files.readAllBytes(Paths.get(s"$tmp/star.tsv.json"))
+    assert(Cli.run(Array("metadata", "-t", "star_counts", "-p", s"$tmp/plain.tsv")) == 0)
+    assert(Files.readAllBytes(Paths.get(s"$tmp/plain.tsv.json")) sameElements viaSession)
+    val date = java.time.LocalDate.now(java.time.ZoneOffset.UTC)
+      .format(java.time.format.DateTimeFormatter.ofPattern("MM-dd-yyyy"))
+    val vars = XenaMetadata.dtypeVariables("star_counts")(XenaMetadata.Vars("GDC star_counts", date))
+    assert(new String(viaSession, "UTF-8") == XenaMetadata.render("rna", vars))
+  }
+}
+
+/** The local filesystem under a scheme of its own, for a Hadoop conf
+  * option that only a session carries. */
+class SidecarSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftsidecar:///")
+  override def getScheme: String = "graftsidecar"
 }

@@ -811,4 +811,24 @@ class PlanShapeSpec extends SparkSpecBase {
       assert(df.count() > 0, s"$d: transform has no rows")
     }
   }
+
+
+  test("merge-xena: typed reads start no inference job; a two-file merge runs only its write's jobs") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_merge_jobs").toString
+    val files = Seq("sA", "sB").map { smp =>
+      graft.io.XenaTsv.write(Seq(("cg01", 0.5), ("cg02", 0.25)).toDF("Composite Element REF", smp),
+        s"$tmp/$smp.tsv", rowKey = Some("Composite Element REF"))
+      s"$tmp/$smp.tsv"
+    }
+    val (dfs, readJobs) = jobsDuring(files.map(f => graft.io.XenaTsv.readTyped(spark, f,
+      graft.model.DTypes.matrixSchema("methylation450", _))))
+    assert(readJobs.isEmpty, s"typed reads ran ${readJobs.size} Spark job(s)")
+    assert(dfs.forall(_.schema.last.dataType == org.apache.spark.sql.types.DoubleType))
+    // Inference ran two jobs per input file before the merge's own.
+    val (rc, mergeJobs) = jobsDuring(graft.Cli.run((Seq("merge-xena", "-t", "methylation450",
+      "-o", s"$tmp/merged.tsv") ++ files.flatMap(f => Seq("-f", f))).toArray))
+    assert(rc == 0)
+    assert(mergeJobs.size <= 3, s"merge-xena ran ${mergeJobs.size} jobs")
+  }
 }
