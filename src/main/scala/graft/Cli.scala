@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.gdc.{GdcCatalog, HttpTransport}
-import graft.io.{DownloadExecutor, XenaMetadata, XenaTsv}
+import graft.io.{BucketedTable, DownloadExecutor, XenaMetadata, XenaTsv}
 import graft.model.DTypes
 import graft.ops.XenaOps
 import graft.transform.{Clinical, GdcTransforms}
@@ -55,6 +55,11 @@ object Cli {
     keys.flatMap(k => m.getOrElse(k, Nil)).headOption.getOrElse(
       sys.error(s"missing required option ${keys.mkString("/")}"))
 
+  /** A store verb's `--buckets N`; absent = 0, the library's
+    * session-derived count. */
+  private def bucketsOpt(m: Map[String, List[String]]): Int =
+    m.get("--buckets").flatMap(_.headOption).map(_.toInt).getOrElse(0)
+
   /** Shared body of the modality signature-store verbs (`image-store`,
     * `audio-store`): the store layout, link/append dance and stream
     * maintenance are signature-generic ([[graft.dedup.SigBandStore]] /
@@ -75,10 +80,9 @@ object Cli {
     val spark = session()
     if (m.contains("--create")) {
       val bands = m.get("--bands").flatMap(_.headOption).map(_.toInt).getOrElse(4)
-      val buckets = m.get("--buckets").flatMap(_.headOption).map(_.toInt).getOrElse(64)
-      graft.dedup.SigBandStore.createAt(spark, sign(spark, in), "name", "sig", store,
-        sigBits = 64, bands = bands, buckets = buckets)
-      println(s"$modality signature store created at $store ($bands bands, $buckets buckets)")
+      val table = graft.dedup.SigBandStore.createAt(spark, sign(spark, in), "name", "sig", store,
+        sigBits = 64, bands = bands, buckets = bucketsOpt(m))
+      println(s"$modality signature store created at $store ($bands bands, ${BucketedTable.buckets(spark, table)} buckets)")
     } else if (m.contains("--stream")) {
       val out = one(m, "-o", "--output")
       val ckpt = m.get("--checkpoint").flatMap(_.headOption)
@@ -369,22 +373,21 @@ object Cli {
           require(!isLongShape(dtype),
             "--bucketed-store is the horizontal (matrix dtype) merge path; " +
               s"$dtype merges vertically and needs no row-key store")
-          // Init-time only (store.json keeps it): one bucket per shuffle
-          // slot makes each store write one task wave. The store is only
-          // merged, never probed, so it skips the probe-granularity
-          // floor of XenaOps.defaultBucketedStoreBuckets.
-          val buckets = m.get("--buckets").flatMap(_.headOption).map(_.toInt)
-            .getOrElse(spark.sessionState.conf.numShufflePartitions)
           val acc =
             if (!graft.io.BucketedStore.exists(dir)) {
               require(files.nonEmpty, "initializing a bucketed store needs -f <files...>")
-              graft.io.BucketedStore.init(spark, dir, dfs.head, dfs.head.columns.head, buckets)
+              graft.io.BucketedStore.init(spark, dir, dfs.head, dfs.head.columns.head, bucketsOpt(m))
               if (dfs.sizeIs > 1) graft.io.BucketedStore.merge(spark, dir, dfs.tail)
               else graft.io.BucketedStore.accumulated(spark, dir)
             } else if (files.nonEmpty) graft.io.BucketedStore.merge(spark, dir, dfs)
             else graft.io.BucketedStore.accumulated(spark, dir)
           m.get("-o").orElse(m.get("--output")).flatMap(_.headOption).foreach { out =>
-            XenaTsv.write(acc, out, rowKey = Some(acc.columns.head))
+            // Row-key order, as join_xena.sh's sort renders it (the scan
+            // follows the bucket files, which differ between two stores
+            // of the same rows), sorted inside the sink's single task.
+            val key = acc.columns.head
+            XenaTsv.write(acc.coalesce(1).sortWithinPartitions(acc.col(s"`$key`")), out,
+              rowKey = Some(key))
           }
           println(s"bucketed store $dir: v${graft.io.BucketedStore.readMeta(dir).version}, " +
             s"${acc.columns.length - 1} sample columns" +
@@ -572,8 +575,8 @@ object Cli {
       // labels) before curating — the pluggable lang source for
       // corpora whose labels aren't trusted. --lang-store <path>:
       // same relabeling from a FROZEN LangIdStore instead (fit paid
-      // at store creation — the production shape; StoreBench's
-      // curation_lang row measures the split). Default keeps the
+      // at store creation — the production shape; Bench's
+      // curation_lang store probe measures the split). Default keeps the
       // arriving labels (the q79 contract).
       if (m.contains("--ct-lang") && m.contains("--lang-store"))
         sys.error("pass either --ct-lang (in-run fit) or --lang-store " +
@@ -968,10 +971,10 @@ object Cli {
       val textCol = m.get("--text").flatMap(_.headOption).getOrElse("text")
       val spark = session()
       if (m.contains("--create")) {
-        val buckets = m.get("--buckets").flatMap(_.headOption).map(_.toInt).getOrElse(64)
         val docs = spark.read.parquet(in)
-        graft.dedup.FingerprintStore.createAt(spark, docs, idCol, textCol, store, buckets)
-        println(s"fingerprint store created at $store ($buckets buckets)")
+        val table = graft.dedup.FingerprintStore.createAt(spark, docs, idCol, textCol, store,
+          bucketsOpt(m))
+        println(s"fingerprint store created at $store (${BucketedTable.buckets(spark, table)} buckets)")
       } else {
         val out = one(m, "-o", "--output")
         val (table, buckets) = graft.dedup.FingerprintStore.attach(spark, store)
@@ -1122,9 +1125,8 @@ object Cli {
       val store = one(m, "-s", "--store")
       val spark = session()
       if (m.contains("--create")) {
-        val buckets = m.get("--buckets").flatMap(_.headOption).map(_.toInt).getOrElse(64)
-        graft.ops.LmStore.createAt(spark, spark.read.parquet(in), store, buckets)
-        println(s"unigram LM store created at $store ($buckets buckets)")
+        val table = graft.ops.LmStore.createAt(spark, spark.read.parquet(in), store, bucketsOpt(m))
+        println(s"unigram LM store created at $store (${BucketedTable.buckets(spark, table)} buckets)")
       } else if (m.contains("--oov")) {
         val out = one(m, "-o", "--output")
         val langCol = m.get("--lang").flatMap(_.headOption).getOrElse("lang")
@@ -1255,11 +1257,10 @@ object Cli {
       val spark = session()
       if (m.contains("--create")) {
         val seed = one(m, "--seed")
-        val buckets = m.get("--buckets").flatMap(_.headOption).map(_.toInt).getOrElse(64)
-        graft.ops.NbStore.createAt(
+        val table = graft.ops.NbStore.createAt(
           spark, spark.read.parquet(in),
-          org.apache.spark.sql.functions.expr(seed), store, buckets)
-        println(s"NB model store created at $store ($buckets buckets, seed: $seed)")
+          org.apache.spark.sql.functions.expr(seed), store, bucketsOpt(m))
+        println(s"NB model store created at $store (${BucketedTable.buckets(spark, table)} buckets, seed: $seed)")
       } else {
         val out = one(m, "-o", "--output")
         graft.ops.NbStore.score(spark, store, spark.read.parquet(in))
@@ -1649,8 +1650,7 @@ object Cli {
           .select(col(idCol).as("doc_id"), col(textCol).as("text"))
       }
       if (m.contains("--create")) {
-        val buckets = m.get("--buckets").flatMap(_.headOption).map(_.toInt).getOrElse(64)
-        graft.ops.PostingStore.create(docs, store, buckets)
+        graft.ops.PostingStore.create(docs, store, bucketsOpt(m))
         println(s"posting store created at $store")
       } else if (m.contains("--ingest")) {
         // --tag names this ingest's ledger entry: re-running with the
@@ -1757,11 +1757,10 @@ object Cli {
       if (m.contains("--create")) {
         val n = m.get("-n").orElse(m.get("--ngram")).flatMap(_.headOption)
           .map(_.toInt).getOrElse(2)
-        val buckets = m.get("--buckets").flatMap(_.headOption).map(_.toInt).getOrElse(64)
-        graft.dedup.BandStore.createAt(
+        val table = graft.dedup.BandStore.createAt(
           spark, spark.read.parquet(in), idCol, textCol, store,
-          n = n, numHashes = 64, bands = 16, buckets = buckets)
-        println(s"band store created at $store ($buckets buckets)")
+          n = n, numHashes = 64, bands = 16, buckets = bucketsOpt(m))
+        println(s"band store created at $store (${BucketedTable.buckets(spark, table)} buckets)")
       } else {
         val (table, (sn, snh, sb, sbk, scap)) = graft.dedup.BandStore.attach(spark, store)
         // appended rows honor the store's PERSISTED cap — a retuned
@@ -1987,7 +1986,7 @@ object Cli {
            |             (quarantines failures to <root>/unfinished.json + etl_<ts>.err; --resume re-attempts exactly those)
            |  merge-xena -f <files...> -t <dtype> -o <out-matrix>
            |  merge-xena --bucketed-store <dir> [--buckets N] -t <dtype> [-f <files...>] [-o <out-matrix>]
-           |             (incremental merge into a persistent store; --buckets is fixed at init, default the session's shuffle partitions)
+           |             (incremental merge into a persistent store; --buckets is fixed at init, default the session's shuffle partitions; -o writes rows in row-key order)
            |  metadata   -t <dtype> -p <matrix-path> [-c <cohort>]
            |  xena-eql   <matrix-a> <matrix-b>
            |  gdc-check-new <release-tsv-url-or-path>   (summary TSV on stdout)
@@ -1996,11 +1995,11 @@ object Cli {
            |  curate     -i <docs.parquet> -o <out.parquet> [--min-quality 0.5] [--id doc_id] [--text text]
            |  curate-pipeline -i <docs.parquet> -o <out-dir> [--bench <parquet>] [--ct-lang] [--lang-store <langid-store-path>] [--seed <sql-bool-expr>] [--min-quality 0.5] [--min-tokens 5] [--max-tokens 1000] [--jaccard 0.8] [--budget 10000]   (writes corpus/ + ledger.json; --seed adds measured per-stage quality + decontam_audit/; --lang-store relabels from a frozen langid-store instead of an in-run CT fit)
            |  curate-stream -i <landing-dir> -s <fp-store> --bench <parquet> -o <out-dir> --checkpoint <dir> [--min-quality 0.5]
-           |  lm-store   --create -i <docs.parquet> -s <store-dir> [--buckets 64] | --score -i <batch.parquet> -s <store-dir> -o <out.parquet> | --oov -i <batch.parquet> -s <store-dir> -o <out.parquet> [--lang lang]
+           |  lm-store   --create -i <docs.parquet> -s <store-dir> [--buckets N] | --score -i <batch.parquet> -s <store-dir> -o <out.parquet> | --oov -i <batch.parquet> -s <store-dir> -o <out.parquet> [--lang lang]
            |  corpus-diff --prev <a.parquet> --now <b.parquet> -o <out.parquet> [--id doc_id] [--text text] [--source source]
            |  vocab-size -i <docs.parquet> -o <out.parquet> [--group lang] [--p 12] [--text text]
            |  cms-store  --create -i <ref.parquet> -s <store-dir> [--d 4] [--w 1024] [--text text] | --surge -i <batch.parquet> -s <store-dir> -o <out.parquet> [-k 20] | --stream -i <landing-dir> -s <store-dir> -o <ledger-dir> --checkpoint <dir> [-k 20]
-           |  nb-store   --create -i <docs.parquet> -s <store-dir> --seed <sql-bool-expr> [--buckets 64] | --score -i <batch.parquet> -s <store-dir> -o <out.parquet>
+           |  nb-store   --create -i <docs.parquet> -s <store-dir> --seed <sql-bool-expr> [--buckets N] | --score -i <batch.parquet> -s <store-dir> -o <out.parquet>
            |  cluster-sample -i <emb.parquet> -o <out.parquet> [-k 8] [--nlist 24] [--dim 64] [--id vec_id] [--vec embedding] | --stream -i <landing-dir> --index <ivf-index> -o <store-dir> --checkpoint <dir> [-k 8]
            |  drift-stream -i <landing-dir> -s <lm-store> -o <ledger-dir> --checkpoint <dir> [--group source]
            |  eval-stream -i <labeled-landing-dir> -s <nb-store> -o <ledger-dir> --checkpoint <dir> [--label y]
@@ -2019,18 +2018,18 @@ object Cli {
            |  pack       -i <docs.parquet | landing-dir> -o <out> [--budget 512] [--window 50] [--stride 40] [--stream [--checkpoint <dir>]] [--id doc_id] [--text text]
            |  pack       --compact -o <streamed-pack-store> [--budget N]   (restore global order between maintenance windows; --budget only for stores predating the _budget pin)
            |  decontaminate -i <docs.parquet> -b <bench.parquet> -o <out.parquet> [-n 5] [--bloom] [--trim] [--id doc_id] [--text text]
-           |  fp-store   --create -i <docs.parquet> -s <store-dir> [--buckets 64] | --ingest -i <batch.parquet> -s <store-dir> -o <accepted.parquet>   [--id doc_id] [--text text]
+           |  fp-store   --create -i <docs.parquet> -s <store-dir> [--buckets N] | --ingest -i <batch.parquet> -s <store-dir> -o <accepted.parquet>   [--id doc_id] [--text text]
            |  semantic-dedup -i <embeddings.parquet> -o <out.parquet> [--nlist 24] [--threshold 0.4] [--dim 64] [--id vec_id] [--vec embedding]
            |  dup-windows -i <docs.parquet> -o <out.parquet> [--w 8] [--id doc_id] [--text text]
            |  dedup-trim -i <docs.parquet> -o <out.parquet> [--w 8] [--id doc_id] [--text text]
            |  quality    -i <docs.parquet> -o <out.parquet> [--mode heuristic|unigram-lm|bigram-lm|importance|novelty|buckets] [--target-where '<pred>'] [--buckets 64] [--n-buckets 3] [-n 3] [--id doc_id] [--text text]
            |  retrieve   -i <corpus.parquet> -o <out.parquet> (-q <queries.parquet> | --queries-where '<pred>') [-s <posting-store>] [--mode bm25|tfidf] [-k 10] [--max-term-df N] [--id doc_id] [--text text]   (--max-term-df: drop query terms with corpus df > N from scoring — the declared probe-cost cap; tf-idf keeps full-vocabulary norms and caps the dot probe only)
-           |  posting-store --create -i <corpus.parquet> -s <store-dir> [--buckets 64] | --ingest -i <new-docs.parquet> -s <store-dir> --tag <batch-tag> | --freeze-norms -s <store-dir>   [--id doc_id] [--text text]   (--freeze-norms: persist the tf-idf document norms of the committed ledger — required by retrieve --store --mode tfidf, refit after each ingest)
+           |  posting-store --create -i <corpus.parquet> -s <store-dir> [--buckets N] | --ingest -i <new-docs.parquet> -s <store-dir> --tag <batch-tag> | --freeze-norms -s <store-dir>   [--id doc_id] [--text text]   (--freeze-norms: persist the tf-idf document norms of the committed ledger — required by retrieve --store --mode tfidf, refit after each ingest)
            |  corpus-stats -i <docs.parquet> -o <out.parquet> [--mode hitters|pmi|drift] [--min-count 1000] [--window 3] [--min-pair 5] [-k 20] [--group source] [--text text]
            |  link       -i <batch.parquet> -r <reference.parquet> -o <out.parquet> [-s <band-store>] [-n 2] [--threshold 0.8] [--max-bucket 10000] [--id doc_id] [--text text]   (doc_a = reference, doc_b = batch)
-           |  band-store --create -i <reference.parquet> -s <store-dir> [-n 2] [--buckets 64] | --ingest -i <new-ref.parquet> -s <store-dir>   [--id doc_id] [--text text]
-           |  image-store --create -i <ppm-glob> -s <store-dir> [--bands 4] [--buckets 64] | --ingest -i <ppm-glob> -s <store-dir> -o <pairs.parquet> [--max-hamming 6] | --stream -i <landing-dir> -s <store-dir> -o <pairs-dir> --checkpoint <dir> [--max-hamming 6]
-           |  audio-store --create -i <wav-glob> -s <store-dir> [--bands 4] [--buckets 64] | --ingest -i <wav-glob> -s <store-dir> -o <pairs.parquet> [--max-hamming 4] | --stream -i <landing-dir> -s <store-dir> -o <pairs-dir> --checkpoint <dir> [--max-hamming 4]
+           |  band-store --create -i <reference.parquet> -s <store-dir> [-n 2] [--buckets N] | --ingest -i <new-ref.parquet> -s <store-dir>   [--id doc_id] [--text text]
+           |  image-store --create -i <ppm-glob> -s <store-dir> [--bands 4] [--buckets N] | --ingest -i <ppm-glob> -s <store-dir> -o <pairs.parquet> [--max-hamming 6] | --stream -i <landing-dir> -s <store-dir> -o <pairs-dir> --checkpoint <dir> [--max-hamming 6]
+           |  audio-store --create -i <wav-glob> -s <store-dir> [--bands 4] [--buckets N] | --ingest -i <wav-glob> -s <store-dir> -o <pairs.parquet> [--max-hamming 4] | --stream -i <landing-dir> -s <store-dir> -o <pairs-dir> --checkpoint <dir> [--max-hamming 4]
            |  classify   -i <embeddings.parquet> -o <out.parquet> --queries-where '<pred>' [-k 10] [--label label] [--id vec_id] [--vec embedding]
            |  negatives  -i <embeddings.parquet> -o <out.parquet> --anchors-where '<pred>' [-k 5] [--label label] [--id vec_id] [--vec embedding]
            |  ann        -i <embeddings.parquet> -o <out.parquet> [--mode brute|lsh|ivf|ivf-index|lsh-index|pq|pq-index|ivfpq-index] [--index <path>] [-k 10] [--dim 64] [--queries-where '<pred>'] [--mmr-lambda 0.5]

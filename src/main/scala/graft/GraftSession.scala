@@ -27,7 +27,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Bucketed scans only CLAIM their per-file sort order under this
       // flag, and even then only when every bucket is exactly one file
-      // (FileSourceScanExec checks) — which XenaOps.writeBucketed
+      // (FileSourceScanExec checks) — which graft.io.BucketedTable.write
       // guarantees by pre-repartitioning on the bucket key. Without it
       // every bucketed merge re-Sorts both sides, re-paying the cost
       // the bucketed writer exists to hoist out of the read path.

@@ -633,7 +633,7 @@ object SparkEntry {
     * with the language SOURCE pluggable — the column q49 fits in-query
     * and q136 reads from the frozen [[graft.ops.LangIdStore]]. One
     * body, so the two gate rows share one oracle by construction
-    * (and [[StoreBench]]'s `curation_lang` probe times exactly it). */
+    * (and [[Bench]]'s `curation_lang` store probe times exactly it). */
   private[graft] def curationReport(
       docs: DataFrame,
       langColumn: org.apache.spark.sql.Column): DataFrame = {
@@ -665,7 +665,7 @@ object SparkEntry {
     * classification projection ([[graft.ops.LangIdStore.langColumn]])
     * — the per-batch monitoring path pays O(batch) classification,
     * never the (lang, gram) corpus fit. Identical oracle to q49;
-    * StoreBench times the fit/probe split (`curation_lang`). */
+    * Bench times the fit/probe split (`curation_lang`). */
   def q136CurationStoreLang(s: SparkSession, dir: String): DataFrame = {
     val tmp = tempDirCleanedOnExit("graft_curation_lid_q")
     val docs = graft.ops.Parallelism.ensure(Tables.documents(s, dir))
@@ -1446,7 +1446,7 @@ object SparkEntry {
     * ([[graft.ops.PostingStore.retrieveTfidf]]). Bit-identical to
     * [[q98TfidfTopK]] by the shared-expression contract
     * ([[graft.ops.Retrieval.tfidfScoreTopK]] is one tree), so q98's
-    * oracle applies VERBATIM; StoreBench times the fit/probe split
+    * oracle applies VERBATIM; Bench times the fit/probe split
     * (`tfidf`). */
   def q141TfidfIndexed(s: SparkSession, dir: String): DataFrame = {
     val tmp = tempDirCleanedOnExit("graft_tfidf_store_q")

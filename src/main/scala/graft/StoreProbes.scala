@@ -5,16 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Tables
 
-/** The build/probe split of every persisted-store-backed gate query —
-  * ONE registry consumed by both measurement harnesses:
+/** The build/probe split of every persisted-store-backed gate query,
+  * measured by [[Bench]]'s store stage: each store's build timed once
+  * (`probe_build`, once-per-release work) and the monitoring probe
+  * alone per gate row (`probe_official`).
   *
-  *  - [[StoreBench]] (the standalone fit-vs-probe benchmark), and
-  *  - [[Bench]]'s `probe_official` stage (the headline bench's
-  *    store-row twin: stores pre-built untimed in warmup, the
-  *    monitoring probe alone measured per gate row).
-  *
-  * Sharing the registry is what makes the two artifacts reconcile by
-  * construction — same splits, same store parameters, same probe
+  * Same splits, same store parameters, same probe
   * bodies as the gate queries in [[SparkEntry]] (which keep fitting
   * their stores IN-QUERY so the DuckDB oracle can replay the fit; the
   * probe-only figures exist to report what a production deployment —

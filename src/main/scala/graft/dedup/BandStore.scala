@@ -3,8 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.StoreMeta
-import graft.ops.XenaOps
+import graft.io.{BucketedTable, StoreMeta}
 
 /** Incremental NEAR-dup linkage against a persisted MinHash band
   * store — the [[FingerprintStore]] sibling for fuzzy matching: a
@@ -35,6 +34,8 @@ object BandStore {
   private def bkey = graft.functions.Md5Prefix64(
     concat_ws("_", col("band"), col("bucket")))
 
+  private val layout = BucketedTable.Layout("band_store", "bands", "_band_store.json", "bkey")
+
   /** Sign `reference` and persist its band table at `path`, bucketed
     * by `bkey`, with the signature parameters in a `_band_store.json`
     * sidecar (written by [[graft.io.StoreMeta]]) so a later session can [[attach]] without knowing them
@@ -44,8 +45,8 @@ object BandStore {
     * Same bucket-count contract as the fingerprint store: size
     * `buckets` >= the cluster's shuffle width or the planner disables
     * the bucketed scan and reshuffles the store per batch. `buckets`
-    * 0 = session-derived ([[XenaOps.defaultBucketedStoreBuckets]] —
-    * that floor built in).
+    * 0 = session-derived ([[BucketedTable.defaultBuckets]], that
+    * floor built in).
     */
   def createAt(
       spark: SparkSession,
@@ -58,20 +59,15 @@ object BandStore {
       bands: Int = 16,
       maxBucketSize: Long = Long.MaxValue,
       buckets: Int = 0): String = {
-    val nb = if (buckets > 0) buckets
-      else XenaOps.defaultBucketedStoreBuckets(spark)
-    val table = StoreMeta.tableName("band_store", path)
     val bandRows = Dedup.cappedBandTable(
       reference, idCol, textCol, n, numHashes, bands, maxBucketSize)
       .select(bkey.as("bkey"), col("doc_id"))
-    XenaOps.writeBucketed(bandRows, table, "bkey", nb, Some(s"$path/bands"))
     // maxBucketSize persists WITH the signature parameters: a capped
     // store (retuneIfSkewed's rebuild) must be distinguishable from an
     // uncapped one at attach time, or a later createAt-style rebuild
     // and every append would silently drop the cap.
-    StoreMeta.write(spark, s"$path/_band_store.json", "n" -> n, "numHashes" -> numHashes,
-      "bands" -> bands, "buckets" -> nb, "maxBucketSize" -> maxBucketSize)
-    table
+    BucketedTable.createAt(spark, layout, path, bandRows, buckets)(_ => Seq(
+      "n" -> n, "numHashes" -> numHashes, "bands" -> bands, "maxBucketSize" -> maxBucketSize))
   }
 
   /** Re-attach a store written by [[createAt]] in a fresh session
@@ -80,12 +76,9 @@ object BandStore {
     * (n, numHashes, bands, buckets, maxBucketSize) — the cap defaults
     * to Long.MaxValue for stores written before it was persisted. */
   def attach(spark: SparkSession, path: String): (String, (Int, Int, Int, Int, Long)) = {
-    val m = StoreMeta.read(spark, s"$path/_band_store.json")
-    val params = (m.int("n"), m.int("numHashes"), m.int("bands"), m.int("buckets"),
-      m.optLong("maxBucketSize").getOrElse(Long.MaxValue))
-    val table = StoreMeta.tableName("band_store", path)
-    XenaOps.declareBucketedTable(spark, table, s"$path/bands", "bkey", params._4)
-    (table, params)
+    val (table, m) = BucketedTable.attach(spark, layout, path)
+    (table, (m.int("n"), m.int("numHashes"), m.int("bands"), m.int("buckets"),
+      m.optLong("maxBucketSize").getOrElse(Long.MaxValue)))
   }
 
   /** Link an arriving `batch` against the stored reference: every
@@ -158,15 +151,11 @@ object BandStore {
       numHashes: Int = 64,
       bands: Int = 16,
       maxBucketSize: Long = Long.MaxValue,
-      buckets: Int = 0): Unit = {
-    val nb = if (buckets > 0) buckets else XenaOps.catalogBuckets(spark, table)
-    Dedup.cappedBandTable(newDocs, idCol, textCol, n, numHashes, bands, maxBucketSize)
-      .select(bkey.as("bkey"), col("doc_id"))
-      .repartition(nb, col("bkey"))
-      .write.mode("append").format("parquet")
-      .bucketBy(nb, "bkey").sortBy("bkey")
-      .saveAsTable(table)
-  }
+      buckets: Int = 0): Unit =
+    BucketedTable.append(
+      Dedup.cappedBandTable(newDocs, idCol, textCol, n, numHashes, bands, maxBucketSize)
+        .select(bkey.as("bkey"), col("doc_id")),
+      table, "bkey", buckets)
 
   /** What [[retuneIfSkewed]] measured and decided — the same facts it
     * logs to `<path>/retune.json`. */

@@ -3,8 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.StoreMeta
-import graft.ops.XenaOps
+import graft.io.{BucketedTable, StoreMeta}
 
 /** Persisted band store for PACKED long signatures — the
   * [[BandStore]] sibling for signature-space near-dup (image aHash,
@@ -37,6 +36,13 @@ object SigBandStore {
   /** Join key: 60-bit hash of the (band, bucket) pair. */
   private def bkey = graft.functions.Md5Prefix64(
     concat_ws("_", col("band"), col("bucket")))
+
+  private val layout = BucketedTable.Layout("sig_band_store", "bands", "_sig_band_store.json", "bkey")
+
+  /** The table's schema for a sidecar written before the schema field:
+    * an empty store (created over zero blobs, the streaming bootstrap)
+    * has no file to infer it from. */
+  private val olderSchema = "`bkey` BIGINT,`id` STRING,`sig` BIGINT"
 
   private def bucketCol(sigCol: Column, b: Int, bandBits: Int): Column = {
     val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
@@ -91,8 +97,7 @@ object SigBandStore {
     * table name. Size `buckets` >= the cluster's shuffle width or
     * the planner disables the bucketed scan (same contract as the
     * other stores); 0 = session-derived
-    * ([[XenaOps.defaultBucketedStoreBuckets]] — that floor built
-    * in). */
+    * ([[BucketedTable.defaultBuckets]], that floor built in). */
   def createAt(
       spark: SparkSession,
       sigs: DataFrame,
@@ -103,28 +108,16 @@ object SigBandStore {
       bands: Int = 4,
       buckets: Int = 0): String = {
     validate(sigBits, bands)
-    val nb = if (buckets > 0) buckets
-      else XenaOps.defaultBucketedStoreBuckets(spark)
-    val table = StoreMeta.tableName("sig_band_store", path)
-    XenaOps.writeBucketed(
-      exactRows(sigs, idCol, sigCol, sigBits, bands),
-      table, "bkey", nb, Some(s"$path/bands"))
-    StoreMeta.write(spark, s"$path/_sig_band_store.json",
-      "sigBits" -> sigBits, "bands" -> bands, "buckets" -> nb)
-    table
+    BucketedTable.createAt(spark, layout, path,
+      exactRows(sigs, idCol, sigCol, sigBits, bands), buckets)(_ => Seq(
+      "sigBits" -> sigBits, "bands" -> bands))
   }
 
   /** Re-attach a store written by [[createAt]] in a fresh session.
     * Returns the table name and (sigBits, bands, buckets). */
   def attach(spark: SparkSession, path: String): (String, (Int, Int, Int)) = {
-    val m = StoreMeta.read(spark, s"$path/_sig_band_store.json")
-    val params = (m.int("sigBits"), m.int("bands"), m.int("buckets"))
-    val table = StoreMeta.tableName("sig_band_store", path)
-    // fixed store schema passed explicitly: an empty store (created
-    // over zero blobs — the streaming bootstrap) has no file to infer
-    XenaOps.declareBucketedTable(spark, table, s"$path/bands", "bkey", params._3,
-      Some("`bkey` BIGINT,`id` STRING,`sig` BIGINT"))
-    (table, params)
+    val (table, m) = BucketedTable.attach(spark, layout, path, Some(olderSchema))
+    (table, (m.int("sigBits"), m.int("bands"), m.int("buckets")))
   }
 
   /** Link an arriving `batch` of signatures against the store: every
@@ -173,12 +166,7 @@ object SigBandStore {
       bands: Int = 4,
       buckets: Int = 0): Unit = {
     validate(sigBits, bands)
-    val nb = if (buckets > 0) buckets else XenaOps.catalogBuckets(spark, table)
-    exactRows(newSigs, idCol, sigCol, sigBits, bands)
-      .repartition(nb, col("bkey"))
-      .write.mode("append").format("parquet")
-      .bucketBy(nb, "bkey").sortBy("bkey")
-      .saveAsTable(table)
+    BucketedTable.append(exactRows(newSigs, idCol, sigCol, sigBits, bands), table, "bkey", buckets)
   }
 
   /** What [[retuneIfSkewed]] measured and decided — logged to

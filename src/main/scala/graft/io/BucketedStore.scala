@@ -4,9 +4,6 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
-
-import graft.ops.XenaOps
 
 /** Persistent bucketed accumulator for INCREMENTAL pan-cancer
   * assembly (CLI `merge-xena --bucketed-store`).
@@ -17,8 +14,8 @@ import graft.ops.XenaOps
   * is the dominant volume, so the scale design keeps IT bucketed and
   * sorted on the row key between runs: each incremental merge is then
   * a sort-merge join where the accumulated side streams straight off
-  * its bucket files (no exchange, no sort — see
-  * [[graft.ops.XenaOps.writeBucketed]]); only the NEW matrices (one
+  * its bucket files (no exchange, no sort — see [[BucketedTable]]);
+  * only the NEW matrices (one
   * cohort, orders of magnitude smaller) shuffle.
   *
   * Store layout under `dir` (resolved to an absolute path first, so
@@ -62,14 +59,12 @@ object BucketedStore {
   }
 
   /** Commit `version`: its schema DDL comes from the catalog entry
-    * [[XenaOps.writeBucketed]] just registered (metadata only, no job). */
+    * [[BucketedTable.write]] just registered (metadata only, no job). */
   private def commit(spark: SparkSession, dir: String,
       rowKey: String, buckets: Int, version: Int): Unit = {
-    val schema = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(accTable(version))).schema
     val node = json.createObjectNode()
       .put("rowKey", rowKey).put("buckets", buckets).put("version", version)
-      .put("schema", schema.toDDL)
+      .put("schema", BucketedTable.schemaDdl(spark, accTable(version)))
     val tmp = abs(dir).resolve("store.json.tmp")
     Files.write(tmp, json.writeValueAsBytes(node))
     Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
@@ -80,20 +75,30 @@ object BucketedStore {
     * this session's catalog, restoring the exchange-free merge plan). */
   def accumulated(spark: SparkSession, dir: String): DataFrame = {
     val m = readMeta(dir)
-    XenaOps.declareBucketedTable(spark, accTable(m.version),
-      accPath(dir, m.version), m.rowKey, m.buckets, schemaDdl = m.schemaDdl)
+    BucketedTable.declare(spark, accTable(m.version),
+      accPath(dir, m.version), m.rowKey, m.buckets, m.schemaDdl)
     spark.table(accTable(m.version))
   }
 
-  /** Initialize the store from a first matrix. */
+  /** Initialize the store from a first matrix. `buckets` is fixed
+    * here for the store's life; 0 = the session's shuffle width
+    * ([[BucketedTable.shuffleWidth]]): the store is only merged, never
+    * probed, so one bucket per shuffle slot makes each write one task
+    * wave. */
   def init(spark: SparkSession, dir: String, first: DataFrame,
-      rowKey: String, buckets: Int): Unit = {
+      rowKey: String, buckets: Int = 0): Unit = {
     require(!exists(dir), s"bucketed store already initialized at $dir")
+    val nb = if (buckets > 0) buckets else BucketedTable.shuffleWidth(spark)
     Files.createDirectories(abs(dir))
-    XenaOps.writeBucketed(first, accTable(1), rowKey, buckets,
-      path = Some(accPath(dir, 1)))
-    commit(spark, dir, rowKey, buckets, 1)
+    BucketedTable.write(first, accTable(1), rowKey, nb, Some(accPath(dir, 1)))
+    commit(spark, dir, rowKey, nb, 1)
   }
+
+  /** [[merge]]'s plan: `acc` full-outer-joined with each new matrix
+    * on the row key. A bucketed side streams into its sort-merge join
+    * with no exchange and no sort (PlanShapeSpec pins it). */
+  private[graft] def mergeJoin(acc: DataFrame, newDfs: Seq[DataFrame], rowKey: String): DataFrame =
+    newDfs.foldLeft(acc)((a, df) => a.join(df, Seq(rowKey), "full_outer"))
 
   /** Merge new matrices into the store: pairwise full-outer joins
     * where the accumulated side never shuffles or sorts, then commit
@@ -104,11 +109,9 @@ object BucketedStore {
   def merge(spark: SparkSession, dir: String, newDfs: Seq[DataFrame]): DataFrame = {
     require(newDfs.nonEmpty, "bucketed-store merge needs at least one new matrix")
     val m = readMeta(dir)
-    val merged = newDfs.foldLeft(accumulated(spark, dir))(
-      (acc, df) => acc.join(df, Seq(m.rowKey), "full_outer"))
+    val merged = mergeJoin(accumulated(spark, dir), newDfs, m.rowKey)
     val next = m.version + 1
-    XenaOps.writeBucketed(merged, accTable(next), m.rowKey, m.buckets,
-      path = Some(accPath(dir, next)))
+    BucketedTable.write(merged, accTable(next), m.rowKey, m.buckets, Some(accPath(dir, next)))
     commit(spark, dir, m.rowKey, m.buckets, next)
     // Sweep superseded and orphaned versions (crash leftovers) AFTER
     // the commit point moved.

@@ -43,6 +43,16 @@ object LocalFs {
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
+  /** A plain Hadoop conf with both wrappers set, for a caller with no
+    * session: `new Configuration()` alone gets the service loader's
+    * `file:` (Hive's forking `ProxyLocalFileSystem` on this classpath),
+    * which the FileSystem cache then hands to later sessions too. */
+  def hadoopConf(): Configuration = {
+    val conf = new Configuration()
+    sparkConf.foreach { case (k, v) => conf.set(k.stripPrefix("spark.hadoop."), v) }
+    conf
+  }
+
   private val Bits: Seq[(Int, PosixFilePermission)] = {
     import PosixFilePermission._
     Seq(OWNER_READ, OWNER_WRITE, OWNER_EXECUTE, GROUP_READ, GROUP_WRITE, GROUP_EXECUTE,

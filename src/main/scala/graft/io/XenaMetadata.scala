@@ -159,12 +159,13 @@ object XenaMetadata {
     *   (`spark.sessionState.newHadoopConf()`), so the sidecar sees the
     *   same `spark.hadoop.*` options (credentials, filesystem impls) as
     *   the matrix sink beside it; the session-less `metadata` verb uses
-    *   a plain `Configuration`. */
+    *   a plain conf with the engine's `file:` filesystem
+    *   ([[LocalFs.hadoopConf]]). */
   def write(
       matrixPath: String,
       metadataKind: String,
       v: Vars,
-      hadoopConf: org.apache.hadoop.conf.Configuration = new org.apache.hadoop.conf.Configuration()): String = {
+      hadoopConf: org.apache.hadoop.conf.Configuration = LocalFs.hadoopConf()): String = {
     val out = matrixPath + ".json"
     val p = new org.apache.hadoop.fs.Path(out)
     val fs = p.getFileSystem(hadoopConf)

@@ -137,7 +137,7 @@ object Curation {
     * projection per batch and no batch's labels can move another
     * batch's. Same contract as [[withCtLang]] when the store was fit
     * on the same corpus (the q92-vs-q88 one-contract-two-plans
-    * precedent); StoreBench measures the split. */
+    * precedent); Bench measures the split. */
   def withStoreLang(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.io.StoreMeta
+import graft.io.BucketedTable
 
 /** Persisted FROZEN unigram LM: fit once on a reference corpus, score
   * arriving batches forever after without re-reading the corpus — the
@@ -17,9 +17,8 @@ import graft.io.StoreMeta
   * Layout: `$path/vocab` — the (tok, cnt) table bucketed by `tok`, so
   * the scoring join probes it exchange-free (the store side never
   * reshuffles; same contract as the fingerprint/band/posting stores)
-  * — plus `_lm_store.json`, written by [[graft.io.StoreMeta]] (total
-  * token count, bucket count, schema DDL for the empty-store
-  * bootstrap).
+  * — plus `_lm_store.json` ([[BucketedTable.createAt]]: total token
+  * count, bucket count, schema DDL for the empty-store bootstrap).
   *
   * Scoring semantics: identical expression tree to `unigramLogprob`
   * (fixed-point accumulation, 6dp rounding) with the frozen (cnt,
@@ -35,35 +34,27 @@ import graft.io.StoreMeta
   */
 object LmStore {
 
+  private val layout = BucketedTable.Layout("lm_store", "vocab", "_lm_store.json", "tok")
+
+  /** `buckets` 0 = session-derived ([[BucketedTable.defaultBuckets]]). */
   def createAt(
       spark: SparkSession,
       docs: DataFrame,
       path: String,
       buckets: Int = 0): String = {
-    // 0 = session-derived ([[XenaOps.defaultStoreBuckets]]); probes
-    // re-attach from the catalog/sidecar, so create-time only.
-    val nb = if (buckets > 0) buckets else XenaOps.defaultStoreBuckets(spark)
-    val table = StoreMeta.tableName("lm_store", path)
     val vocab = Parallelism.ensure(docs)
       .filter(col("text").isNotNull)
       .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-    XenaOps.writeBucketed(vocab, table, "tok", nb, Some(s"$path/vocab"))
     // total from the WRITTEN table: one pass over the |vocab|-bounded
     // store instead of keeping the aggregate alive for two consumers
-    val total = spark.table(table)
-      .agg(coalesce(sum(col("cnt")), lit(0L)).cast("long")).head().getLong(0)
-    StoreMeta.write(spark, s"$path/_lm_store.json",
-      "total" -> total, "buckets" -> nb, "schema" -> "`tok` STRING,`cnt` BIGINT")
-    table
+    BucketedTable.createAt(spark, layout, path, vocab, buckets)(table => Seq("total" ->
+      spark.table(table).agg(coalesce(sum(col("cnt")), lit(0L)).cast("long")).head().getLong(0)))
   }
 
   /** Re-attach in a fresh session: (table, total token count). */
   def attach(spark: SparkSession, path: String): (String, Long) = {
-    val m = StoreMeta.read(spark, s"$path/_lm_store.json")
-    val table = StoreMeta.tableName("lm_store", path)
-    XenaOps.declareBucketedTable(spark, table, s"$path/vocab", "tok",
-      m.int("buckets"), m.optString("schema"))
+    val (table, m) = BucketedTable.attach(spark, layout, path)
     (table, m.long("total"))
   }
 

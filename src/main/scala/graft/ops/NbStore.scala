@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TermCounts, TextFunctions}
-import graft.io.StoreMeta
+import graft.io.BucketedTable
 
 /** Persisted FROZEN Naive Bayes model: fit the class-conditional
   * unigram histograms once on a labeled reference corpus, score
@@ -20,10 +20,10 @@ import graft.io.StoreMeta
   * Layout: `$path/model` — the (tok, pos, neg) count table bucketed
   * by `tok`, so the scoring join probes it exchange-free (the store
   * side never reshuffles; the fingerprint/band/posting/LM store
-  * contract) — plus `_nb_store.json` (written by
-  * [[graft.io.StoreMeta]]) carrying the five scalars the
-  * score expression needs (class token totals, vocab size, class doc
-  * counts for the prior) and the schema DDL for re-attach.
+  * contract) — plus `_nb_store.json` ([[BucketedTable.createAt]])
+  * carrying the five scalars the score expression needs (class token
+  * totals, vocab size, class doc counts for the prior) and the schema
+  * DDL for re-attach.
   *
   * Scoring semantics: identical expression tree to
   * `naiveBayesLogOdds` with the frozen counts. Unlike the LM store,
@@ -40,16 +40,15 @@ import graft.io.StoreMeta
   */
 object NbStore {
 
+  private val layout = BucketedTable.Layout("nb_store", "model", "_nb_store.json", "tok")
+
+  /** `buckets` 0 = session-derived ([[BucketedTable.defaultBuckets]]). */
   def createAt(
       spark: SparkSession,
       docs: DataFrame,
       isSeed: Column,
       path: String,
       buckets: Int = 0): String = {
-    // 0 = session-derived ([[XenaOps.defaultStoreBuckets]]); probes
-    // re-attach from the catalog/sidecar, so create-time only.
-    val nb = if (buckets > 0) buckets else XenaOps.defaultStoreBuckets(spark)
-    val table = StoreMeta.tableName("nb_store", path)
     // Row-local per-doc counts ([[TermCounts]] — the naiveBayesLogOdds
     // recipe): no corpus exchange for the row-unique (doc, is_seed) key.
     val pd = Parallelism.ensure(docs)
@@ -62,33 +61,28 @@ object NbStore {
     val model = pd.groupBy("tok").agg(
       sum(when(col("is_seed"), col("cnt")).otherwise(0L)).as("pos"),
       sum(when(!col("is_seed"), col("cnt")).otherwise(0L)).as("neg"))
-    XenaOps.writeBucketed(model, table, "tok", nb, Some(s"$path/model"))
-    // totals from the WRITTEN table (one pass over the vocab-bounded
-    // store), doc counts from the checkpointed per-doc table
-    val t = spark.table(table).agg(
-      coalesce(sum(col("pos")), lit(0L)).cast("long"),
-      coalesce(sum(col("neg")), lit(0L)).cast("long"),
-      count(lit(1)).cast("long")).head()
-    val d = pd.select("doc_id", "is_seed").distinct().agg(
-      sum(when(col("is_seed"), 1L).otherwise(0L)).cast("long"),
-      sum(when(!col("is_seed"), 1L).otherwise(0L)).cast("long")).head()
-    val (tpos, tneg, v) = (t.getLong(0), t.getLong(1), t.getLong(2))
-    val (npos, nneg) = (d.getLong(0), d.getLong(1))
-    require(npos > 0L && nneg > 0L,
-      s"NbStore.createAt: both classes must be non-empty (seed docs $npos, rest $nneg)")
-    StoreMeta.write(spark, s"$path/_nb_store.json",
-      "tpos" -> tpos, "tneg" -> tneg, "v" -> v, "npos" -> npos, "nneg" -> nneg,
-      "buckets" -> nb, "schema" -> "`tok` STRING,`pos` BIGINT,`neg` BIGINT")
-    table
+    BucketedTable.createAt(spark, layout, path, model, buckets) { table =>
+      // totals from the WRITTEN table (one pass over the vocab-bounded
+      // store), doc counts from the checkpointed per-doc table
+      val t = spark.table(table).agg(
+        coalesce(sum(col("pos")), lit(0L)).cast("long"),
+        coalesce(sum(col("neg")), lit(0L)).cast("long"),
+        count(lit(1)).cast("long")).head()
+      val d = pd.select("doc_id", "is_seed").distinct().agg(
+        sum(when(col("is_seed"), 1L).otherwise(0L)).cast("long"),
+        sum(when(!col("is_seed"), 1L).otherwise(0L)).cast("long")).head()
+      val (npos, nneg) = (d.getLong(0), d.getLong(1))
+      require(npos > 0L && nneg > 0L,
+        s"NbStore.createAt: both classes must be non-empty (seed docs $npos, rest $nneg)")
+      Seq("tpos" -> t.getLong(0), "tneg" -> t.getLong(1), "v" -> t.getLong(2),
+        "npos" -> npos, "nneg" -> nneg)
+    }
   }
 
   /** Re-attach in a fresh session:
     * (table, tpos, tneg, v, npos, nneg). */
   def attach(spark: SparkSession, path: String): (String, Long, Long, Long, Long, Long) = {
-    val m = StoreMeta.read(spark, s"$path/_nb_store.json")
-    val table = StoreMeta.tableName("nb_store", path)
-    XenaOps.declareBucketedTable(spark, table, s"$path/model", "tok",
-      m.int("buckets"), m.optString("schema"))
+    val (table, m) = BucketedTable.attach(spark, layout, path)
     (table, m.long("tpos"), m.long("tneg"), m.long("v"), m.long("npos"), m.long("nneg"))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Md5Prefix64
-import graft.io.StoreMeta
+import graft.io.{BucketedTable, StoreMeta}
 
 /** Persisted BM25 posting store — the production shape of repeated
   * retrieval over a stable (or growing) corpus: the corpus is
@@ -121,11 +121,11 @@ object PostingStore {
     * trees behind for a later read to trip on. */
   def create(corpus: DataFrame, path: String, nBuckets: Int = 0): Unit = {
     val spark = corpus.sparkSession
-    // 0 = session-derived ([[XenaOps.defaultStoreBuckets]]): buckets
+    // 0 = session-derived ([[BucketedTable.defaultBuckets]]): buckets
     // are the store's write-parallelism parameter; every later probe/
     // append reads the count from store.json, so the choice is
     // create-time only.
-    val nb = if (nBuckets > 0) nBuckets else XenaOps.defaultStoreBuckets(spark)
+    val nb = if (nBuckets > 0) nBuckets else BucketedTable.defaultBuckets(spark)
     val f = fs(spark, path)
     Seq("postings", "dfreq", "stats", "norms").foreach { d =>
       f.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true)
@@ -228,17 +228,14 @@ object PostingStore {
       k = k, k1 = k1, b = b)
   }
 
-  private def normsTableFor(path: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(path.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"tfidf_norms_$hex"
-  }
+  private val normsLayout =
+    BucketedTable.Layout("tfidf_norms", "norms/data", "norms/_norms.json", "doc_id")
 
   /** Freeze the tf-idf document norms of the CURRENT committed ledger
     * — the fit side of the vector space ([[Retrieval.tfidfTopK]]'s
     * `dnorm` pass, ONE shared expression tree) — as a BUCKETED-BY-
     * doc_id table under `norms/data` (the [[LmStore]] persistence
-    * recipe: [[XenaOps.writeBucketed]], re-attached per session from
+    * recipe: [[BucketedTable.createAt]], re-attached per session from
     * the `norms/_norms.json` sidecar), so [[retrieveTfidf]]'s norm
     * attach never exchanges the corpus-sized side: only the match-
     * bounded score table shuffles to the bucket layout. This is what
@@ -257,13 +254,23 @@ object PostingStore {
     val dfreq = spark.read.parquet(s"$path/dfreq")
       .filter(col("batch").isin(committed: _*))
       .groupBy("term").agg(sum("df").cast("long").as("df"))
-    XenaOps.writeBucketed(
+    BucketedTable.createAt(spark, normsLayout, path,
       Retrieval.tfidfDocNorms(
         postings.select("doc_id", "term", "tf"), dfreq,
         withStats = _.withColumn("n_docs", lit(nDocs))),
-      normsTableFor(path), "doc_id", nBuckets, Some(s"$path/norms/data"))
-    StoreMeta.write(spark, s"$path/norms/_norms.json", "buckets" -> nBuckets,
-      "schema" -> "`doc_id` BIGINT,`dnorm` DOUBLE", "tags" -> committed.sorted)
+      nBuckets)(_ => Seq("tags" -> committed.sorted))
+  }
+
+  /** Re-attach the frozen norm table (bucketing lives in the catalog,
+    * not the files), so the corpus-sized norm side streams into the
+    * score join exchange- and sort-free. Returns the table name and
+    * the `norms/_norms.json` sidecar. */
+  private[graft] def attachNorms(spark: SparkSession, path: String): (String, StoreMeta.Sidecar) = {
+    if (!fs(spark, path).exists(new org.apache.hadoop.fs.Path(s"$path/${normsLayout.sidecar}")))
+      sys.error(s"no frozen norms at $path/norms — run freezeNorms after the " +
+        "ledger settles; tf-idf document norms depend on every term's global " +
+        "df and cannot be derived per-batch.")
+    BucketedTable.attach(spark, normsLayout, path)
   }
 
   /** TF-IDF cosine top-`k` of `queries` (q_id, text) against the
@@ -294,17 +301,9 @@ object PostingStore {
       k: Int = 10,
       maxTermDf: Long = Long.MaxValue): DataFrame = {
     val (nDocs, _, nBuckets, committed) = readMeta(spark, path)
-    val norms = {
-      val p = s"$path/norms/_norms.json"
-      if (!fs(spark, path).exists(new org.apache.hadoop.fs.Path(p)))
-        sys.error(s"no frozen norms at $path/norms — run freezeNorms after the " +
-          "ledger settles; tf-idf document norms depend on every term's global " +
-          "df and cannot be derived per-batch.")
-      StoreMeta.read(spark, p)
-    }
+    val (normsTable, norms) = attachNorms(spark, path)
     val normTags = norms.strings("tags")
     val normBuckets = norms.int("buckets")
-    val normSchema = norms.optString("schema")
     require(normTags == committed.sorted,
       s"frozen norms at $path cover batches [${normTags.mkString(",")}] but the " +
         s"ledger has committed [${committed.sorted.mkString(",")}] — the vector " +
@@ -329,15 +328,10 @@ object PostingStore {
       spark.read.parquet(s"$path/postings")
         .filter(col("batch").isin(committed: _*) && col("tb").isin(buckets: _*)),
       col("doc_id"), numPartitions = normBuckets)
-    // Re-attach the bucketed norm table (bucketing lives in the
-    // catalog, not the files): the corpus-sized norm side then
-    // streams into the score join exchange- and sort-free.
-    XenaOps.declareBucketedTable(spark, normsTableFor(path),
-      s"$path/norms/data", "doc_id", normBuckets, normSchema)
     Retrieval.tfidfScoreTopK(
       postings.select("doc_id", "term", "tf"),
       queries, dfreq,
-      dnorm = spark.table(normsTableFor(path)),
+      dnorm = spark.table(normsTable),
       withStats = _.withColumn("n_docs", lit(nDocs)),
       k = k, maxTermDf = maxTermDf)
   }

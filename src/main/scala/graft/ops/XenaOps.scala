@@ -283,126 +283,6 @@ object XenaOps {
     tmp.select(keep.map { case (c, i) => col(s"__c$i").as(c) }.toIndexedSeq: _*)
   }
 
-  /** Bucketed persistence for repeat-merge workloads. Pan-cancer
-    * assembly full-outer-joins many matrices on the same row key
-    * (J4/J5); written bucketed+sorted by that key, every subsequent
-    * merge is a sort-merge join with NO exchange and NO sort — the
-    * shuffle is paid once at write time instead of per merge. This is
-    * the 100-TB answer to the reference's repeated
-    * `join_xena.sh` sort|join passes.
-    */
-  /** Session-derived bucket count for stores CREATED in this session
-    * (callers may always pass their own): one bucket ≈ one write slot
-    * — [[writeBucketed]]'s own sizing contract ("write parallelism =
-    * bucket count; size buckets to the cluster's write slots") —
-    * clamped to [16, 64] so a small session doesn't pay 64 parquet-
-    * writer initializations per store table (measured ~300 ms of
-    * fixed per-task cost each at gate scale) and a large cluster
-    * keeps the probe-pruning granularity the stores were sized for.
-    * Create-time only: probes and appends read the count from the
-    * store's own sidecar/catalog entry, so layout stays internally
-    * consistent whatever session later opens the store. */
-  def defaultStoreBuckets(spark: org.apache.spark.sql.SparkSession): Int =
-    math.min(64, math.max(16, spark.sparkContext.defaultParallelism))
-
-  /** [[defaultStoreBuckets]] with the BUCKETED-SCAN floor: tables
-    * persisted via `bucketBy` (fingerprint/band/sig stores, the
-    * frozen-norm table) only keep their exchange-free join plan while
-    * the bucket count is >= the session's shuffle width — below it the
-    * planner's DisableUnnecessaryBucketedScan rule judges the scan as
-    * capping join parallelism and silently falls back to an unbucketed
-    * scan + full store reshuffle per batch (observed: 4 buckets vs 32
-    * shuffle partitions → "Bucketed: false (disabled by query
-    * planner)"). So the session-derived count for bucketBy stores is
-    * max(defaultStoreBuckets, shuffle partitions): on this harness 32
-    * (one write wave on 32 cores instead of two at the former fixed
-    * 64), on a cluster whose shuffle width is thousands it scales up
-    * with it — which is also the right probe granularity for a store
-    * that big. Create-time only, like [[defaultStoreBuckets]]. */
-  def defaultBucketedStoreBuckets(spark: org.apache.spark.sql.SparkSession): Int =
-    math.max(defaultStoreBuckets(spark),
-      spark.sessionState.conf.numShufflePartitions)
-
-  /** The registered table's own bucket count, from the session
-    * catalog — the append-path source of truth: appended files can
-    * never diverge from the store's persisted layout, whatever
-    * session (or bucket default) created it. */
-  def catalogBuckets(spark: org.apache.spark.sql.SparkSession, table: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(sys.error(s"table $table carries no bucket spec"))
-
-  def writeBucketed(
-      df: DataFrame, table: String, rowKey: String, buckets: Int,
-      path: Option[String] = None): Unit = {
-    // repartition by the bucket key FIRST: Spark's repartition hash is
-    // the same Murmur3-pmod the bucketing spec uses, so each task
-    // holds exactly one bucket and each bucket becomes exactly ONE
-    // file. Without it every upstream task writes a sliver of every
-    // bucket (tasks x buckets files), and — decisive for the merge
-    // plan — the scan trusts per-FILE sort order only when a bucket
-    // is a single file (SPARK-24528): multi-file buckets re-Sort on
-    // every merge, which is the cost this writer exists to hoist out
-    // of the read path. Write parallelism = bucket count; size
-    // `buckets` to the cluster's write slots (and to keep each bucket
-    // file near the HDFS/S3 block size at the expected data volume).
-    val w = df.repartition(buckets, col(rowKey))
-      .write.mode("overwrite")
-      .format("parquet")
-      .bucketBy(buckets, rowKey)
-      .sortBy(rowKey)
-    // With `path` the table is EXTERNAL: data lives at a caller-owned
-    // location that outlives this session's in-memory catalog, and
-    // [[declareBucketedTable]] can re-attach it later.
-    path.fold(w.saveAsTable(table))(p => w.option("path", p).saveAsTable(table))
-  }
-
-  /** Re-attach bucketed files written by [[writeBucketed]] (with a
-    * `path`) in a LATER session: the in-memory catalog forgets table
-    * metadata at session end, and bucketing lives in the catalog, not
-    * the files — a plain `read.parquet` over the same files is
-    * correct but re-shuffles and re-sorts on every merge. This DDL is
-    * exactly what a production metastore would persist; declaring it
-    * over files the bucketed writer produced restores the
-    * zero-exchange, zero-sort merge plan.
-    */
-  def declareBucketedTable(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String, path: String, rowKey: String, buckets: Int,
-      schemaDdl: Option[String] = None): Unit = {
-    // `schemaDdl` covers the EMPTY-store bootstrap (a store created
-    // over zero rows has no data file to infer from — the streaming
-    // curation / linkage pipelines legitimately start that way); the
-    // store sidecars persist the DDL at create time for this.
-    val ddl = schemaDdl.getOrElse(spark.read.parquet(path).schema.toDDL)
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    spark.sql(
-      s"CREATE TABLE `$table` ($ddl) USING PARQUET " +
-        s"CLUSTERED BY (`$rowKey`) SORTED BY (`$rowKey`) INTO $buckets BUCKETS " +
-        s"LOCATION '$path'")
-  }
-
-  /** Merge previously bucketed matrices (see [[writeBucketed]]):
-    * every BUCKETED input streams into its sort-merge join with no
-    * exchange and no sort — that is the cost [[writeBucketed]] paid
-    * once. In a chain of 3+ tables the ACCUMULATED intermediate still
-    * re-shuffles before each later join (a full-outer join's output
-    * partitioning is unknown to Catalyst — either side may inject
-    * nulls — even though the data is in fact still hash-placed), so a
-    * chain runs (n−2) exchanges on intermediate volume vs the
-    * unbucketed chain's 2(n−1) exchanges covering every input too.
-    * For REPEATED pan-cancer assembly, the dominant pattern is
-    * pairwise: keep the accumulated matrix itself bucketed
-    * ([[writeBucketed]] after each merge) and every step is a
-    * zero-exchange, zero-sort join of two bucketed tables.
-    */
-  def mergeHorizontalBucketed(
-      spark: org.apache.spark.sql.SparkSession,
-      tables: Seq[String],
-      rowKey: String): DataFrame =
-    tables.map(spark.table).reduce((a, b) => a.join(b, Seq(rowKey), "full_outer"))
-
   /** S8 list-typed leaf detection (reference `utils.py:235-272`
     * `get_to_drops`): dotted paths of every array-typed leaf in a
     * schema. Pure schema introspection — driver-side, no job. The

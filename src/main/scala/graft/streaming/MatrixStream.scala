@@ -21,7 +21,7 @@ import graft.transform.GdcTransforms
   * itself. For a pan-cancer corpus that state belongs in a sink-side
   * merge, not executor memory: run this long form in update mode with
   * `foreachBatch` upserting into a bucketed long table
-  * ([[graft.ops.XenaOps.writeBucketed]]), and render the wide pivot at
+  * ([[graft.io.BucketedTable]]), and render the wide pivot at
   * sink time like the batch path. The wide pivot itself is not
   * streamable (it would need the full sample list per trigger).
   */

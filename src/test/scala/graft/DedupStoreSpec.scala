@@ -108,7 +108,7 @@ class DedupStoreSpec extends SparkSpecBase {
     // created with the session-derived default bucket count — the
     // sidecar must carry the RESOLVED value, not the 0 sentinel
     assert((n2, nh2, b2, bk2, cap2) ==
-      ((2, 64, 16, graft.ops.XenaOps.defaultBucketedStoreBuckets(spark), Long.MaxValue)))
+      ((2, 64, 16, graft.io.BucketedTable.defaultBuckets(spark), Long.MaxValue)))
     val oddOne = odd.limit(1).collect()(0)
     val newRef = Seq((oddOne.getLong(0) + 1000000L,
       oddOne.getString(1))).toDF("doc_id", "text")

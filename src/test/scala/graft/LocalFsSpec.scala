@@ -80,6 +80,14 @@ class LocalFsSpec extends SparkSpecBase {
     assert(banned.isEmpty, s"${banned.size} forks: ${banned.take(5).mkString("; ")}")
   }
 
+  test("a session-less caller's conf resolves file: to the fork-free filesystem") {
+    // getFileSystemClass reads the conf only: the FileSystem cache is
+    // not touched. A plain conf gets the service loader's choice.
+    assert(FileSystem.getFileSystemClass("file", graft.io.LocalFs.hadoopConf()) ==
+      classOf[NioLocalFileSystem])
+    assert(FileSystem.getFileSystemClass("file", new Configuration()) != classOf[NioLocalFileSystem])
+  }
+
   test("file and dir modes match a stock LocalFileSystem's; explicit 0700 holds; the sticky bit falls back") {
     for (umask <- Seq("022", "077", "027")) {
       val (stock, nio) = localFs(umask)

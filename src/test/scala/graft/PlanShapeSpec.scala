@@ -10,37 +10,6 @@ class PlanShapeSpec extends SparkSpecBase {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
-  /** `body`'s result and the descriptions of the Spark jobs it starts.
-    * Listener events arrive asynchronously but in order: fence `body`
-    * between two marker jobs and keep the jobs in between. */
-  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        started.add(Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("fence-start")
-      val result = body
-      marker("fence-end")
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.contains("fence-end") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(started.contains("fence-end"), "marker job never reached the listener")
-      (result, started.asScala.toSeq
-        .dropWhile(_ != "fence-start").drop(1).takeWhile(_ != "fence-end"))
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("q104: weighted sample keeps the WindowGroupLimit pushdown, one exchange") {
     // The operator's 100-TB contract (Sampling.weightedSample): group
     // cardinality is tiny (sources), so the rank filter MUST push a
@@ -244,19 +213,19 @@ class PlanShapeSpec extends SparkSpecBase {
 
   test("bucketed matrix merge runs with zero exchanges and zero sorts") {
     import spark.implicits._
-    import graft.ops.XenaOps
+    import graft.io.{BucketedStore, BucketedTable}
     try {
       val m1 = (1 to 50).map(i => (s"p$i", i * 1.0)).toDF("probe", "s1")
       val m2 = (20 to 70).map(i => (s"p$i", i * 2.0)).toDF("probe", "s2")
-      XenaOps.writeBucketed(m1, "bm1", "probe", 4)
-      XenaOps.writeBucketed(m2, "bm2", "probe", 4)
-      val merged = XenaOps.mergeHorizontalBucketed(spark, Seq("bm1", "bm2"), "probe")
+      BucketedTable.write(m1, "bm1", "probe", 4)
+      BucketedTable.write(m2, "bm2", "probe", 4)
+      val merged = BucketedStore.mergeJoin(spark.table("bm1"), Seq(spark.table("bm2")), "probe")
       assert(merged.count() == 70)
       val p = merged.queryExecution.executedPlan.toString
       assert(p.contains("SortMergeJoin"), p.take(1200))
       assert(!p.contains("Exchange"), "bucketed merge still shuffles:\n" + p.take(1200))
       // The zero-SORT half of the claim needs both writer and session
-      // to cooperate: writeBucketed pre-repartitions so each bucket is
+      // to cooperate: BucketedTable.write pre-repartitions so each bucket is
       // ONE sorted file, and GraftSession enables
       // bucketedTableScan.outputOrdering so the scan may claim that
       // order. Break either and this line catches it.
@@ -272,7 +241,7 @@ class PlanShapeSpec extends SparkSpecBase {
       val bucketIds = dataFiles.flatMap(f => "_(\\d{5})\\.".r.findFirstMatchIn(f.getName))
         .map(_.group(1))
       assert(bucketIds.length == dataFiles.length && bucketIds.distinct.length == dataFiles.length,
-        s"writeBucketed must emit at most one file per bucket, got:\n" +
+        s"BucketedTable.write must emit at most one file per bucket, got:\n" +
           dataFiles.map(_.getName).mkString("\n"))
     } finally {
       spark.sql("DROP TABLE IF EXISTS bm1")
