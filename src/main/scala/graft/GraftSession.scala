@@ -47,5 +47,11 @@ object GraftSession {
       // process forks (graft.io.LocalFs; FileSystem and FileContext).
       .config(graft.io.LocalFs.sparkConf)
 
-  def local(): SparkSession = builder().getOrCreate()
+  /** The single-machine session of the mains (`Cli`, `Bench`,
+    * `Verify`, `ScaleSmoke`): `local[cpus]` with one shuffle partition
+    * per core, where cpus is `SPARK_GRAFT_CPUS`, else every core. */
+  def local(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+    builder(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
+  }
 }

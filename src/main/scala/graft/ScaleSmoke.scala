@@ -143,11 +143,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_scale10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // The whole rehearsal starts from a CLEAN work dir (refuse-or-wipe
@@ -1615,7 +1611,7 @@ object ScaleSmoke {
     md ++= "# SCALE — 10× rehearsal (sf1-equivalent text/vector/event surface)\n\n"
     md ++= s"Base: `$baseDir` ×$Copies duplicate-with-noise (generation ${f"$genSec%.1f"} s). "
     md ++= "Tables: documents 50k, embeddings 20k, events 1M rows. "
-    md ++= s"Harness: local[$cpus], ${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")} heap " +
+    md ++= s"Harness: ${spark.sparkContext.master}, ${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")} heap " +
       "(the rehearsal holds the 750M-cell pivot and the 50k-doc retrieval corpus in one " +
       "JVM — run with SPARK_DRIVER_MEM=48g; a cluster spreads this across executors), " +
       "noop sink, one shot per query (first-run codegen included).\n\n"

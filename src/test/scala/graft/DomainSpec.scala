@@ -1454,6 +1454,81 @@ class DomainSpec extends SparkSpecBase {
     assert(Cli.run(Array("nonsense")) == 2)
   }
 
+  /** `Cli.run` with its stdout and stderr captured. */
+  private def cliCaptured(args: String*): (Int, String, String) = {
+    val (out, err) = (new java.io.ByteArrayOutputStream, new java.io.ByteArrayOutputStream)
+    def utf8(b: java.io.ByteArrayOutputStream) = new java.io.PrintStream(b, true, "UTF-8")
+    val code = Console.withOut(utf8(out))(Console.withErr(utf8(err))(Cli.run(args.toArray)))
+    (code, out.toString("UTF-8"), err.toString("UTF-8"))
+  }
+
+  /** `args` exits 2 before any Spark job, naming its verb and `flag` on
+    * the first stderr line, then printing the verb's synopsis. */
+  private def assertArgError(flag: String, args: String*): Unit = {
+    val ((code, out, err), jobs) = jobsDuring(cliCaptured(args: _*))
+    assert(code == 2, s"${args.mkString(" ")} exited $code; stderr: $err")
+    val first = err.linesIterator.next()
+    assert(first.startsWith(s"${args.head}: ") && first.contains(flag), s"stderr: $err")
+    assert(err.contains(Cli.verbs.find(_.name == args.head).get.usage), s"no synopsis: $err")
+    assert(out.isEmpty && jobs.isEmpty, s"stdout '$out', jobs $jobs")
+  }
+
+  test("CLI session: a verb reuses the running session without resetting its shuffle width") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cli_width").toString
+    import spark.implicits._
+    graft.io.XenaTsv.write(Seq(("p1", 1.0)).toDF("id", "s1"), s"$tmp/a", rowKey = Some("id"))
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    // A width no core count sets, so a reset to the core count shows.
+    spark.conf.set(key, "7")
+    try {
+      assert(Cli.run(Array("xena-eql", s"$tmp/a", s"$tmp/a")) == 0)
+      assert(spark.conf.get(key) == "7", "Cli.run reset the running session's shuffle width")
+    } finally spark.conf.set(key, before)
+  }
+
+  test("CLI argument errors: unknown flag, malformed number, missing flag exit 2 before any job") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cli_args").toString
+    val docs = s"$sfDir/documents.parquet"
+    // --trm is not --trim: ignored, it would drop whole documents.
+    assertArgError("--trm", "decontaminate", "-i", docs, "-b", docs, "-o", s"$tmp/clean", "--trm")
+    assertArgError("-k", "vocab", "-i", docs, "-o", s"$tmp/vocab.tsv", "-k", "ten")
+    assertArgError("-o", "merge-xena", "-f", s"$tmp/m0.tsv", "-t", "methylation450")
+    assertArgError("<matrix-b>", "xena-eql", s"$tmp/a")
+    assert(new java.io.File(tmp).list().isEmpty, "a rejected command line wrote output")
+  }
+
+  test("CLI etl-batch --resum: exits 2 and leaves unfinished.json as it was") {
+    import java.nio.file.Files
+    val raw = Files.createTempDirectory("graft_cli_resum")
+    val ledger = raw.resolve("unfinished.json")
+    Files.writeString(ledger, """{".": ["mirna"]}""")
+    val before = Files.readAllBytes(ledger)
+    // Ignored, --resum would re-run every dtype instead of resuming.
+    assertArgError("--resum", "etl-batch", "-t", "all", "-r", raw.toString,
+      "-o", raw.resolve("out").toString, "--resum")
+    assert(java.util.Arrays.equals(Files.readAllBytes(ledger), before))
+    assert(raw.toFile.list().toSeq == Seq("unfinished.json"), "no .err log, no output")
+  }
+
+  test("CLI usage: no verb prints every table verb's synopsis; an unknown verb exits 2") {
+    val (code, _, err) = cliCaptured()
+    assert(code == 2)
+    assert(Cli.verbs.map(_.name).distinct.size == Cli.verbs.size, "duplicate verb names")
+    Cli.verbs.foreach(v => assert(err.contains(v.usage), s"help lacks ${v.name}"))
+    assert(cliCaptured("nonsense")._1 == 2)
+  }
+
+  test("CLI explain: prints a named query's formatted physical plan") {
+    val (code, out, _) = cliCaptured("explain", sfDir, "q01_agg_pushdown")
+    assert(code == 0)
+    val lines = out.linesIterator.toList
+    val at = lines.indexOf("===== q01_agg_pushdown =====")
+    assert(at >= 0, s"no header: $out")
+    assert(lines.drop(at + 1).exists(_.startsWith("== Physical Plan ==")), s"no plan: $out")
+    assert(!out.contains("(failed:"), out)
+  }
+
   test("CLI etl: star_counts fixture to TSV matrix + metadata JSON") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_cli_etl").toString
     val out = s"$tmp/star.tsv"
