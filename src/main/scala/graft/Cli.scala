@@ -150,7 +150,7 @@ object Cli {
       import org.apache.spark.sql.functions.{col, greatest, least}
       val (table, (sigBits, bands, buckets)) = graft.dedup.SigBandStore.attach(spark, store)
       val sigs = sign(spark, in)
-        .localCheckpoint(false) // consumed twice: link + append
+        .transform(graft.ops.Parallelism.stage) // consumed twice: link + append
       graft.dedup.SigBandStore.linkNew(spark, table, sigs, "name", "sig",
           maxDist = maxHamming, sigBits = sigBits, bands = bands)
         .filter(col("id_a") =!= col("id_b"))
@@ -334,7 +334,7 @@ object Cli {
         // whole run instead — the ledger keeps whatever it held before
         // this pair, so --resume still re-attempts it.
         case e: graft.gdc.GdcInterrupted =>
-          println(s"[etl-batch] $sub: interrupted — aborting run " +
+          println(s"[etl-batch] $sub: interrupted - aborting run " +
             s"(${ledger.recorded.size} pair(s) remain recorded for --resume)")
           aborted.compareAndSet(null, e)
         // NonFatal only: an OOM/linkage error means the session is no
@@ -508,7 +508,7 @@ object Cli {
         s"${report.deleted.size} stale deleted, ${report.redacted.size} redacted, " +
         s"${report.quarantined.size} quarantined")
       report.quarantined.foreach { case (n, why) =>
-        println(s"[download] QUARANTINED $n — $why") }
+        println(s"[download] QUARANTINED $n - $why") }
       if (report.ok) 0 else 1
     },
 
@@ -545,7 +545,7 @@ object Cli {
           import org.apache.spark.sql.functions.{col, min => fmin}
           val fps = docs.select(col(idCol),
             graft.functions.TextFunctions.fingerprint(col(textCol)).as("fp"))
-            .localCheckpoint(false)
+            .transform(graft.ops.Parallelism.stage)
           fps.join(
             fps.groupBy("fp").agg(fmin(col(idCol)).as("cluster_id")), Seq("fp"))
             .select(col(idCol), col("cluster_id"))
@@ -623,7 +623,7 @@ object Cli {
         (a.has("--ct-lang"), a.opt("--lang-store"), a.opt("--bench"), a.opt("--seed"))
       if (ctLang && langStore.nonEmpty)
         sys.error("pass either --ct-lang (in-run fit) or --lang-store " +
-          "(frozen store), not both — the two name different label sources")
+          "(frozen store), not both - the two name different label sources")
       val spark = a.spark
       import org.apache.spark.sql.functions.col
       val raw = spark.read.parquet(in)
@@ -958,7 +958,9 @@ object Cli {
         val batch = spark.read.parquet(in)
         val accepted = graft.dedup.FingerprintStore
           .dedupeNew(spark, table, batch, idCol, textCol)
-          .localCheckpoint(false) // consumed twice: sink + fp append
+          // snapshot pin: probes the store the append below grows, and
+          // is counted after it (a recompute would accept 0 rows)
+          .localCheckpoint(false)
         accepted.write.mode("overwrite").parquet(out)
         graft.dedup.FingerprintStore.append(spark, table, accepted, idCol, textCol, buckets)
         println(s"accepted ${accepted.count()} of ${batch.count()} batch rows -> $out; store updated")
@@ -1433,7 +1435,7 @@ object Cli {
       0
     },
 
-    Verb("retrieve", "-i|--input <corpus.parquet> -o|--output <out.parquet> (-q|--queries <queries.parquet> | --queries-where '<pred>') [-s|--store <posting-store>] [--mode bm25|tfidf] [-k 10] [--max-term-df N] [--id doc_id] [--text text]   (--max-term-df: drop query terms with corpus df > N from scoring — the declared probe-cost cap; tf-idf keeps full-vocabulary norms and caps the dot probe only)") { a =>
+    Verb("retrieve", "-i|--input <corpus.parquet> -o|--output <out.parquet> (-q|--queries <queries.parquet> | --queries-where '<pred>') [-s|--store <posting-store>] [--mode bm25|tfidf] [-k 10] [--max-term-df N] [--id doc_id] [--text text]   (--max-term-df: drop query terms with corpus df > N from scoring - the declared probe-cost cap; tf-idf keeps full-vocabulary norms and caps the dot probe only)") { a =>
       // BM25 top-k lexical retrieval: score a query parquet (or a
       // --queries-where subset of the corpus) against a corpus
       // parquet; writes (query_id, doc_id, rank, score).
@@ -1480,7 +1482,7 @@ object Cli {
       0
     },
 
-    Verb("posting-store", "--create -i|--input <corpus.parquet> -s|--store <store-dir> [--buckets N] | --ingest -i <new-docs.parquet> -s <store-dir> --tag <batch-tag> | --freeze-norms -s <store-dir>   [--id doc_id] [--text text]   (--freeze-norms: persist the tf-idf document norms of the committed ledger — required by tf-idf retrieval through the store, refit after each ingest)") { a =>
+    Verb("posting-store", "--create -i|--input <corpus.parquet> -s|--store <store-dir> [--buckets N] | --ingest -i <new-docs.parquet> -s <store-dir> --tag <batch-tag> | --freeze-norms -s <store-dir>   [--id doc_id] [--text text]   (--freeze-norms: persist the tf-idf document norms of the committed ledger - required by tf-idf retrieval through the store, refit after each ingest)") { a =>
       // Persisted BM25 posting store: --create tokenizes + counts the
       // corpus once into a term-bucket-partitioned posting table;
       // --ingest appends NEW docs (dedup upstream). Probe with

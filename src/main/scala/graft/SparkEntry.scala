@@ -713,7 +713,7 @@ object SparkEntry {
     // execute once per branch.
     val pairs = Similarity.cosinePairs(Tables.embeddings(s, dir), "vec_id", "embedding",
       threshold = 0.2, dim = 64, bits = 8)
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val sym = pairs.select(col("id_a").as("src"), col("id_b").as("nbr"), col("cos"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("nbr"), col("cos")))
     val w = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("nbr"))
@@ -1130,7 +1130,7 @@ object SparkEntry {
     // count aggregate ran twice (broadcast subtrees don't share plans).
     val cnt = Tables.documents(s, dir)
       .groupBy("source").agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val tot = cnt.agg(sum(sqrt(col("n_docs").cast("double"))).as("tpw"))
     cnt.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"),
@@ -2052,7 +2052,7 @@ object SparkEntry {
     val scored = graft.ops.Quality.naiveBayesLogOdds(docs, col("lang") === "en")
       .join(docs.select(col("doc_id"),
         (col("lang") === "en").cast("int").as("y")), Seq("doc_id"))
-      .localCheckpoint(false) // two consumers: the cut fit + the probe
+      .transform(graft.ops.Parallelism.stage) // two consumers: the cut fit + the probe
     graft.ops.PsiStore.createAt(
       s, scored.filter(col("doc_id") % 5 =!= 0), "log_odds", s"$tmp/cuts")
     val (cuts, _) = graft.ops.PsiStore.attach(s, s"$tmp/cuts")

@@ -144,7 +144,7 @@ object Dedup {
     // cover the differing projections, so without materialization the
     // tokenize+shingle+distinct subplan recomputes per consumer.
     // localCheckpoint truncates the lineage once, executor-local.
-    val filtered = filtered0.localCheckpoint(false)
+    val filtered = Parallelism.stage(filtered0)
 
     // Sizes from the SAME (post-cap) gram universe as the intersection
     // counts — otherwise dropped high-df grams inflate the union but can
@@ -202,7 +202,7 @@ object Dedup {
     // producing join (band-bucket self-join upstream) must not
     // re-execute per consumer. Ids come from one explode pass, not a
     // two-branch self-union.
-    val cands = candidates.localCheckpoint(false)
+    val cands = Parallelism.stage(candidates)
     val candIds = cands
       .select(explode(array(col("doc_a"), col("doc_b"))).as("vid"))
       .distinct()
@@ -211,7 +211,7 @@ object Dedup {
       array_distinct(
         TextFunctions.wordNgrams(TextFunctions.tokens(col(textCol)), n)).as("vgrams"))
       .join(candIds, Seq("vid"), "left_semi")
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     cands
       .join(grams.select(col("vid").as("doc_a"), col("vgrams").as("grams_a")), Seq("doc_a"))
       .join(grams.select(col("vid").as("doc_b"), col("vgrams").as("grams_b")), Seq("doc_b"))
@@ -341,7 +341,7 @@ object Dedup {
     val bandTable = sigs
       .select(col("doc_id"), explode(bandBuckets(col("sig"), numHashes, bands)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
 
     if (maxBucketSize == Long.MaxValue) bandTable
     else {
@@ -517,7 +517,7 @@ object Dedup {
       textCol: String,
       n: Int,
       threshold: Double): DataFrame = {
-    val cands = candidates.localCheckpoint(false)
+    val cands = Parallelism.stage(candidates)
     def sideGrams(docs: DataFrame, side: String): DataFrame =
       Parallelism.ensure(docs).select(
         col(idCol).as(side),
@@ -525,7 +525,7 @@ object Dedup {
           TextFunctions.wordNgrams(TextFunctions.tokens(col(textCol)), n))
           .as(s"grams_$side"))
         .join(cands.select(side).distinct(), Seq(side), "left_semi")
-        .localCheckpoint(false)
+        .transform(Parallelism.stage)
     cands
       .join(sideGrams(left, "doc_a"), Seq("doc_a"))
       .join(sideGrams(right, "doc_b"), Seq("doc_b"))
@@ -643,7 +643,7 @@ object Dedup {
     // and probe sides explode from it, which would otherwise run the
     // upstream signature aggregate twice.
     val s = sigs.select(col(idCol).as("__bh_id"), col(sigCol).as("__bh_sig"))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     def bucketCol(b: Int): Column =
       shiftrightunsigned(col("__bh_sig"), b * bandBits).bitwiseAND(lit(mask))
 
@@ -789,7 +789,7 @@ object Dedup {
     val idType = nodes.schema(idCol).dataType
     val integral = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
-    val e = edges.select(col("doc_a"), col("doc_b")).localCheckpoint(false)
+    val e = Parallelism.stage(edges.select(col("doc_a"), col("doc_b")))
     if (integral && e.count() <= smallGraphThreshold) {
       def toLong(v: Any): Long = v match {
         case i: Int => i.toLong
@@ -854,7 +854,7 @@ object Dedup {
       // Partitioned by the join key ONCE; every iteration's edge join
       // then reuses this layout instead of reshuffling the edge list.
       .repartition(col("dst"))
-      .localCheckpoint(false)
+      .localCheckpoint(false) // loop truncation: every propagation round joins it
     val edgeNodes = sym.select(col("src").as("id")).distinct()
     var labels = nodes
       .select(col(idCol).as("id"), col(idCol).as("label"))
@@ -862,7 +862,7 @@ object Dedup {
       // Same layout as each iteration's aggregate output, so the first
       // iteration's joins are co-partitioned too.
       .repartition(col("id"))
-      .localCheckpoint(false)
+      .localCheckpoint(false) // loop truncation: the propagation loop's seed
     // One materialized round per iteration. (Chaining two
     // propagateOnce calls per localCheckpoint was tried and measured
     // WORSE: the unmaterialized mid-labels feed four consumers inside
@@ -872,6 +872,7 @@ object Dedup {
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {
+      // loop truncation: one round per checkpoint, flat lineage
       val next = propagateOnce(sym, labels).localCheckpoint(false)
       changed = next.filter(col("chg")).count()
       labels = next.select(col("id"), col("new_label").as("label"))
@@ -962,7 +963,7 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     val benchGrams = docGrams(benchmark, idCol, textCol, n)
       .select(col("gram")).distinct()
-      .localCheckpoint(false) // two consumers: filter build + confirm broadcast
+      .transform(Parallelism.stage) // two consumers: filter build + confirm broadcast
     val benchHashes = benchGrams.select(gramHash(col("gram")).as("gh"))
     val nGrams = benchHashes.count()
     if (nGrams == 0L) {
@@ -1026,7 +1027,7 @@ object Dedup {
       .filter(size(col("toks")) >= w)
       .select(col("doc_id"),
         transform(TextFunctions.wordNgrams(col("toks"), w), g => gramHash(g)).as("whs"))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     val occ = hashed.select(col("doc_id"), explode(col("whs")).as("wh"))
     val dupSet = occ.distinct()
       .groupBy(col("wh")).agg(count(lit(1)).as("df"))
@@ -1155,7 +1156,7 @@ object Dedup {
         when(size(col("toks")) >= w,
           transform(TextFunctions.wordNgrams(col("toks"), w), g => gramHash(g)))
           .otherwise(array().cast("array<bigint>")))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
 
   /** Shared tail of the span-trimming passes: union the `w`-wide cut
     * windows (`cutOcc`: doc_id, pos of each occurrence to remove) into

@@ -211,6 +211,7 @@ object SigBandStore {
     val perItem = if (nItems == 0L) 0.0 else cand.toDouble / nItems
     val breached = perItem > maxCandPairsPerItem
     if (breached) {
+      // snapshot pin: createAt overwrites the store these rows come from
       val pinned = items.localCheckpoint()
       createAt(spark, pinned, "id", "sig", path, sigBits, newBands, buckets)
     }

@@ -147,7 +147,9 @@ object DownloadExecutor {
             excludePathContains = Seq("/quarantine/"))
           .filter(!org.apache.spark.sql.functions.col("name")
             .isin("redacted.txt", "quarantine"))
-          .localCheckpoint(true) // feeds BOTH anti-joins; hash each file once
+          // snapshot pin: catalogs the raw dir `execute` then rewrites;
+          // feeds BOTH anti-joins, so each file is hashed once
+          .localCheckpoint(true)
         (DownloadCache.toDownload(remote, local),
           DownloadCache.toDelete(local, remote)
             .select("name").collect().map(_.getString(0)).toSeq)

@@ -119,11 +119,11 @@ object CorpusStats {
       .select(explode(pairsCol).as("p"))
       .groupBy(col("p.x").as("x"), col("p.y").as("y"))
       .agg(count(lit(1)).as("pair_cnt"))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     val unigram = tk
       .select(explode(col("tk")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
 
     // Totals collected as LITERALS in the same pass that learns the
     // exact table sizes, and the two unigram joins BROADCAST under

@@ -55,34 +55,32 @@ object Curation {
   /** One ledger line: rows leaving a named stage. */
   final case class StageCount(stage: String, rows: Long)
 
-  /** `materialize` wraps each stage boundary. The boundaries are NOT
-    * single-consumer even in the plain [[pipeline]] path: `gated`
-    * feeds both the decontamination scan and the anti-join's left
-    * side, and `clean` feeds both the token-budget staging and the
-    * final rejoin — unmaterialized, the gated subtree (survivor join,
-    * quality/token gates, and the scored pass above them) re-executes
-    * up to 4× inside one query (measured in the q79 profile: the same
-    * checkpoint/save stages repeating across executions). So
-    * [[pipeline]] materializes with [[Parallelism.stage]] (pluggable:
-    * localCheckpoint locally, DISK_ONLY on clusters, none to opt
-    * out), and [[withLedger]] keeps its explicit `localCheckpoint`
-    * (count + next stage as added consumers). Values are unchanged —
-    * a materialization barrier moves no arithmetic. */
+  /** Every stage boundary is staged ([[Parallelism.stage]]). The
+    * boundaries are NOT single-consumer even in the plain [[pipeline]]
+    * path: `gated` feeds both the decontamination scan and the
+    * anti-join's left side, and `clean` feeds both the token-budget
+    * staging and the final rejoin — unmaterialized, the gated subtree
+    * (survivor join, quality/token gates, and the scored pass above
+    * them) re-executes up to 4× inside one query (measured in the q79
+    * profile: the same checkpoint/save stages repeating across
+    * executions). [[withLedger]] and [[withQualityLedger]] add the
+    * count and the per-stage quality line as further consumers of the
+    * same boundaries. Values are unchanged — a materialization
+    * barrier moves no arithmetic. */
   def stages(
       docs: DataFrame,
       bench: DataFrame,
-      cfg: Config = Config(),
-      materialize: DataFrame => DataFrame = identity): Stages = {
+      cfg: Config = Config()): Stages = {
     val scored = docs.select(col("doc_id"),
       TextFunctions.qualityScore(col("text")).as("quality"))
     val edges = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
       n = cfg.ngramN, threshold = cfg.jaccardThreshold, maxDocFreq = cfg.maxDocFreq)
     val clusters = Dedup.dupClusters(docs, edges, "doc_id")
       .select(col("doc_id"), col("cluster_id"))
-    val survivors = materialize(
+    val survivors = Parallelism.stage(
       Dedup.keepBestPerCluster(clusters, scored, "doc_id", "quality")
         .select(col("doc_id"), col("quality")))
-    val gated = materialize(survivors
+    val gated = Parallelism.stage(survivors
       .join(docs.select(col("doc_id"), col("text"), col("source"), col("lang"),
         TextFunctions.tokenCount(col("text")).as("n_tokens")), Seq("doc_id"))
       .filter(col("quality") >= cfg.minQuality &&
@@ -90,8 +88,8 @@ object Curation {
     val flagged = Dedup.crossNgramOverlapBloom(
       gated.select("doc_id", "text"), bench, "doc_id", "text", n = cfg.decontamN)
       .select("doc_id")
-    val clean = materialize(gated.join(flagged, Seq("doc_id"), "left_anti"))
-    val budgeted = materialize(Sampling.tokenBudgetPerKey(
+    val clean = Parallelism.stage(gated.join(flagged, Seq("doc_id"), "left_anti"))
+    val budgeted = Parallelism.stage(Sampling.tokenBudgetPerKey(
       clean.select("doc_id", "source", "n_tokens"),
       "source", "doc_id", "n_tokens", budget = cfg.budgetPerSource)
       .select(col("doc_id"), col("source"), col("n_tokens"))
@@ -101,7 +99,7 @@ object Curation {
 
   /** The curated corpus — q79's exact result. */
   def pipeline(docs: DataFrame, bench: DataFrame, cfg: Config = Config()): DataFrame =
-    stages(docs, bench, cfg, materialize = Parallelism.stage).budgeted
+    stages(docs, bench, cfg).budgeted
 
   /** The pipeline's pluggable language source, production default:
     * REPLACE the incoming `lang` column with the Cavnar–Trenkle
@@ -151,15 +149,15 @@ object Curation {
     * ships with its output — the operational audit trail ("n in, n
     * survived dedup, n passed gates, n decontaminated, n under
     * budget", plus the final token total). Stage boundaries are
-    * localCheckpointed so the count action and the downstream stage
+    * staged so the count action and the downstream stage
     * share one materialization instead of re-running the cluster
     * pass per consumer. */
   def withLedger(
       docs: DataFrame,
       bench: DataFrame,
       cfg: Config = Config()): (DataFrame, Seq[StageCount]) = {
-    val input = docs.localCheckpoint(false)
-    val st = stages(input, bench, cfg, materialize = _.localCheckpoint(false))
+    val input = Parallelism.stage(docs)
+    val st = stages(input, bench, cfg)
     val ledger = Seq(
       StageCount("input", input.count()),
       StageCount("dedup_survivors", st.survivors.count()),
@@ -219,20 +217,20 @@ object Curation {
       bench: DataFrame,
       seedLabel: org.apache.spark.sql.Column,
       cfg: Config = Config()): (DataFrame, Seq[StageQuality], DataFrame) = {
-    val input = docs.localCheckpoint(false)
-    val st = stages(input, bench, cfg, materialize = _.localCheckpoint(false))
+    val input = Parallelism.stage(docs)
+    val st = stages(input, bench, cfg)
     // every input doc scored ONCE: quality score (the ranking score
     // the AUC rates), token count, trusted label
     val scoredAll = input.select(col("doc_id"),
       TextFunctions.qualityScore(col("text")).as("q"),
       TextFunctions.tokenCount(col("text")).as("nt"),
-      seedLabel.cast("int").as("y")).localCheckpoint(false)
+      seedLabel.cast("int").as("y")).transform(Parallelism.stage)
     def line(stage: String, kept: DataFrame): StageQuality = {
       val pred = scoredAll
         .join(kept.select(col("doc_id"), lit(1).as("flag")), Seq("doc_id"), "left")
         .select(col("q"), coalesce(col("flag"), lit(0)).as("pred"),
           col("y"), col("nt"))
-        .localCheckpoint(false) // two consumers: metrics + token sum
+        .transform(Parallelism.stage) // two consumers: metrics + token sum
       val m = Eval.classifierMetrics(pred, "q", "pred", "y").head()
       val kt = pred.filter(col("pred") === 1)
         .agg(count(lit(1)).cast("long"),
@@ -252,7 +250,7 @@ object Curation {
     // retrieval audit of the decontamination stage
     val truth = contaminationPairs(
       st.gated.select("doc_id", "text"), bench, cfg.decontamN)
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     def probe(corpus: DataFrame, phase: String): DataFrame =
       Eval.retrievalSummary(Eval.retrievalMetrics(
         Retrieval.bm25TopK(corpus.select("doc_id", "text"),

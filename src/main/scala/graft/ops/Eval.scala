@@ -289,7 +289,7 @@ object Eval {
     // embarrassment, and the 100-TB caller is told to be on
     // calibrationAtCuts regardless.
     val base = if (allowExact) narrow else {
-      val staged = narrow.localCheckpoint(false)
+      val staged = Parallelism.stage(narrow)
       val n = staged.count()
       require(n <= MaxExactCalibrationRows,
         s"calibration's equal-frequency ntile carries every input row through " +

@@ -104,7 +104,7 @@ object HllStore {
       // lazy checkpointing only severs lineage if something else
       // happens to materialize it first (the DownloadExecutor
       // read-then-overwrite precedent).
-      .localCheckpoint(true)
+      .localCheckpoint(true) // snapshot pin: the write below overwrites its files
     merged.coalesce(1).write.mode("overwrite").parquet(s"$path/regs")
     merged
   }
@@ -141,7 +141,7 @@ object HllStore {
     // regs overwrite below is safe because nothing re-reads the files.
     val joined = stored.select(col("lang"), col("sketch").as("s_store"))
       .join(batch.select(col("lang"), col("sketch").as("s_batch")), Seq("lang"), "full_outer")
-      .localCheckpoint(true)
+      .localCheckpoint(true) // snapshot pin: regs are overwritten below
     def est(c: org.apache.spark.sql.Column) =
       ColumnBridge.column(HllEstimate(ColumnBridge.expression(c)))
     val report = joined

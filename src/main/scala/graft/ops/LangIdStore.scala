@@ -54,7 +54,7 @@ object LangIdStore {
     // subtree reuse applied).
     val counts = staged.filter(col("text").isNotNull && col("lang").isNotNull)
       .groupBy(col("lang")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     val t = counts.agg(coalesce(sum("n"), lit(0L)).cast("long")).head().getLong(0)
     counts
       .select(col("lang"),
@@ -126,7 +126,7 @@ object LangIdStore {
       Parallelism.ensure(docs), "doc_id", "text", profiles, topM)
       .groupBy(col("pred_lang").as("lang"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     val tot = predCounts.agg(coalesce(sum("n"), lit(0L)).as("t"))
     ref
       .join(broadcast(predCounts), Seq("lang"), "left")

@@ -77,7 +77,7 @@ object Packing {
     val ranged = df
       .repartitionByRange(nparts, orderCols.map(col): _*)
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     val totals = ranged.groupBy("pid").agg(valueExpr.as("t"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val offsets = totals.scanLeft((0, start)) { case ((_, acc), (pid, t)) => (pid, acc + t) }

@@ -43,36 +43,46 @@ object Parallelism {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** Materialization point for a REUSED corpus-sized intermediate
-    * (the tokenized corpus feeding PMI's pair and unigram aggregates,
-    * BM25's posting table feeding probe + df + stats). The default —
-    * `localCheckpoint` — is the right single-JVM/bench answer: no
-    * re-tokenize per consumer, lineage truncated. Its cluster trade
-    * is real, though: blocks pin to executor storage and are LOST on
-    * executor failure (lineage is gone, the job dies), which is the
-    * wrong default for a 1000-executor run where some executor loss
-    * is routine. `spark.graft.stage.storage` picks the strategy:
+  /** The engine's one materialization point for a REUSED,
+    * non-iterative intermediate (the tokenized corpus feeding PMI's
+    * pair and unigram aggregates, BM25's posting table feeding probe +
+    * df + stats, a candidate-pair frame feeding both join sides, a
+    * curation stage boundary feeding its count and the next stage).
+    * The default — `localCheckpoint` — is the right single-JVM/bench
+    * answer: no recompute per consumer, lineage truncated. Its cluster
+    * trade is real, though: blocks pin to executor storage and are
+    * LOST on executor failure (lineage is gone, the job dies), which
+    * is the wrong default for a 1000-executor run where some executor
+    * loss is routine. `spark.graft.stage.storage` picks the strategy
+    * for every reuse point at once:
     *
     *  - `local-checkpoint` (default): fastest, non-resilient;
     *  - `disk`: `persist(DISK_ONLY)` — keeps lineage, so a lost
     *    block recomputes from source instead of failing the job
     *    (the cluster answer; costs lineage growth, fine for these
-    *    non-iterative plans);
-    *  - `none`: no materialization — every consumer recomputes
-    *    (spot-instance fleets where storage churn beats recompute).
+    *    non-iterative plans).
     *
-    * NOT for iterative loops ([[graft.dedup.Dedup.dupClusters]]):
-    * those need the lineage TRUNCATION, not just the caching, and
-    * keep their explicit `localCheckpoint`.
+    * Two classes of site keep an explicit `localCheckpoint`, each
+    * with a one-line reason at the call:
+    *
+    *  - lineage truncation inside an iterative loop (the label
+    *    propagation of [[graft.dedup.Dedup.dupClusters]], the vocabulary
+    *    rewrite of [[Quality.bpeMergesDistributed]]): those need the
+    *    TRUNCATION, not just the caching — a persisted frame would
+    *    grow its lineage by one round per iteration;
+    *  - snapshot pins: a frame whose plan reads a table or path the
+    *    code writes before the frame's last consumer runs (a store
+    *    read-then-overwrite, a dedup probe counted after its append).
+    *    A `DISK_ONLY` recompute would silently read the mutated
+    *    source; a lost local checkpoint fails loudly instead.
     */
   def stage(df: DataFrame): DataFrame =
     df.sparkSession.conf.getOption("spark.graft.stage.storage")
       .getOrElse("local-checkpoint") match {
       case "local-checkpoint" => df.localCheckpoint(false)
       case "disk" => df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      case "none" => df
       case other => sys.error(
-        s"unknown spark.graft.stage.storage '$other' (local-checkpoint|disk|none)")
+        s"unknown spark.graft.stage.storage '$other' (local-checkpoint|disk)")
     }
 
   /** [[ensure]] that spreads BY a key instead of round-robin, for

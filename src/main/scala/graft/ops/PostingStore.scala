@@ -86,7 +86,7 @@ object PostingStore {
       docs: DataFrame, path: String, tag: String, nBuckets: Int): Unit = {
     val spark = docs.sparkSession
     val postings = Retrieval.buildPostings(Parallelism.ensure(docs))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     // repartition PINS the partition count to the bucket count: the
     // keyless form defers to spark.sql.shuffle.partitions and AQE,
     // which on a small batch coalesces the exchange to ONE partition —
@@ -176,7 +176,7 @@ object PostingStore {
     // probe buckets the static partition filter never admitted.
     val qterms = Retrieval.queryTerms(queries)
       .withColumn("tb", termBucket(col("term"), nBuckets))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     val buckets = qterms.select("tb").distinct().collect().map(_.getInt(0)).toSeq
     // Global df re-derived from the probed buckets' deltas: integer
     // sums are order-independent, so this equals the df a single
@@ -310,7 +310,7 @@ object PostingStore {
         "space is stale; re-run freezeNorms before probing.")
     val qterms = Retrieval.queryTerms(queries)
       .withColumn("tb", termBucket(col("term"), nBuckets))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     val buckets = qterms.select("tb").distinct().collect().map(_.getInt(0)).toSeq
     // Query-term-bucket df, summed over the ledger — equals the full
     // in-memory df on every query term (integer delta sums), which is

@@ -104,7 +104,7 @@ object Quality {
     val hist = perDoc.groupBy("b").agg(
       sum("cnt").as("raw_cnt"),
       sum(when(col("is_target"), col("cnt")).otherwise(0L)).as("tgt_cnt"))
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     val totals = hist.agg(
       sum("raw_cnt").as("raw_total"), sum("tgt_cnt").as("tgt_total"))
     val lr = hist.crossJoin(broadcast(totals)).select(col("b"),
@@ -326,7 +326,7 @@ object Quality {
   private[graft] def bpeMergesDistributed(vocabDf: DataFrame, nMerges: Int): Seq[BpeMerge] = {
     var vocab = vocabDf
       .select(filter(split(col("tok"), ""), s => s =!= "").as("syms"), col("c"))
-      .localCheckpoint(false)
+      .localCheckpoint(false) // loop truncation: seeds the merge loop below
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
     var step = 1
     var exhausted = false
@@ -347,7 +347,7 @@ object Quality {
         merges += BpeMerge(step, x, y, x + y, cnt)
         vocab = vocab
           .select(applyMerge(col("syms"), x, y).as("syms"), col("c"))
-          .localCheckpoint(false)
+          .localCheckpoint(false) // loop truncation: one merge per round, flat lineage
         step += 1
       }
     }

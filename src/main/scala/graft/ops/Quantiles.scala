@@ -111,7 +111,7 @@ object Quantiles {
     }.reduce(_ || _)
     val cumU = Packing.globalCumsum(
       vals.filter(unionPred).groupBy(col("v")).agg(count(lit(1)).as("cnt")),
-      Seq("v"), "cnt").localCheckpoint(false)
+      Seq("v"), "cnt").transform(Parallelism.stage)
     // one job: union-bracket count ≤ lo per distinct lo
     val cumAtRow = cumU.agg(
       count(lit(1)).as("_all"),

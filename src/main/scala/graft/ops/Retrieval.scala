@@ -169,12 +169,10 @@ object Retrieval {
     // in the scan's one or two tasks. Structurally a no-op at scale.
     // ensureBy(doc_id), not round-robin: same firing guard as ensure
     // (provably-small scans only), but the spread keeps each
-    // document's postings hash-clustered by intent, and under
-    // `spark.graft.stage.storage=none` (no checkpoint between this
-    // exchange and the score aggregate) the (q_id, doc_id) reduction
-    // reuses it outright. Through the default localCheckpoint AQE
-    // drops partitioning metadata, so the aggregate keeps its own
-    // exchange there — carrying FULLY map-side-combined rows, because
+    // document's postings hash-clustered by intent. Through the
+    // default localCheckpoint AQE drops partitioning metadata, so the
+    // (q_id, doc_id) aggregate keeps its own exchange — carrying
+    // FULLY map-side-combined rows, because
     // doc-locality makes every (q, d) pair complete within one
     // partition (the store probes, which have no checkpoint, drop the
     // exchange entirely — see PostingStore.retrieve).
@@ -321,7 +319,7 @@ object Retrieval {
       .join(dfreq, Seq("term"), "left")
       .withColumn("df", coalesce(col("df"), lit(0L))))
       .select(col("q_id"), col("term"), weight.as("w"))
-      .localCheckpoint(false) // two consumers: qnorm + the dot probe
+      .transform(Parallelism.stage) // two consumers: qnorm + the dot probe
     val qnorm = wq.groupBy(col("q_id"))
       .agg(sqrt(sum(round(col("w") * col("w") * lit(1.0e4), 0).cast("long"))
         .cast("double") / lit(1.0e4)).as("qnorm"))

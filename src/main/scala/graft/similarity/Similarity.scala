@@ -450,7 +450,7 @@ object Similarity {
     // source scan.
     val quantized = graft.ops.Parallelism.ensure(corpus)
       .select(col(idCol), col(vecCol), quantize(col(vecCol), scale).as("qv"))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val centroids = kmeansCellsDeterministic(quantized, idCol, vecCol, dim, nlist, iters)
     // The nlist × dim centroid matrix rides inside the native probe
     // expression as one reference object — a single plan node per
@@ -555,7 +555,7 @@ object Similarity {
         explode(lshProbeArray(col(queryVecCol), dim, bits, tables)).as("tp"))
       .select(col("*"), col("tp.t").as("t"), col("tp.probe").as("probe"))
       .drop("tp")
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     // Distinct probed buckets per table — tiny by contract — become a
     // static per-table `sig IN (...)` disjunction on the partition
     // columns: only probed bucket directories are listed/read.
@@ -657,7 +657,7 @@ object Similarity {
     import s.implicits._
     val quantized = graft.ops.Parallelism.ensure(corpus)
       .select(col(idCol), col(vecCol), quantize(col(vecCol), scale).as("qv"))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val centroids = kmeansCellsDeterministic(quantized, idCol, vecCol, dim, nlist, iters)
     val cdf = centroids.zipWithIndex
       .map { case (cv, i) => (i, cv) }.toDF("cell", "cv")
@@ -687,7 +687,7 @@ object Similarity {
     // share plans — without the checkpoint the corpus-sized
     // assign+error pass above ran TWICE per report (measured: the two
     // heaviest stages of q116 were the same scan back to back).
-    val pc = perCell.localCheckpoint(false)
+    val pc = graft.ops.Parallelism.stage(perCell)
     val tot = pc.agg(sum("n_vecs").as("n_total"))
     s.range(nlist).select(col("id").cast("int").as("cell"))
       .join(broadcast(pc), Seq("cell"), "left")
@@ -764,6 +764,8 @@ object Similarity {
       iters: Int = 2): ReindexDecision = {
     val meta = readIvfIndexMeta(spark, path)
     val nlist = meta.centroids.size
+    // snapshot pin: the health read must finish before a rebuild below
+    // overwrites the index it reads
     val h = ivfHealthIndexed(spark, path).localCheckpoint()
     val Array(occCv, meanErr) = h.agg(
       (stddev_pop(col("n_vecs").cast("double")) /
@@ -791,7 +793,7 @@ object Similarity {
       // first). Corpus-sized, but so is any rebuild.
       val rows = spark.read.parquet(s"$path/vectors")
         .select(col(meta.idCol), col(meta.vecCol))
-        .localCheckpoint()
+        .localCheckpoint() // snapshot pin: writeIvfIndex overwrites its files
       writeIvfIndex(rows, meta.idCol, meta.vecCol, meta.dim, nlist, path,
         iters, meta.scale)
     }
@@ -835,7 +837,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val quantized = graft.ops.Parallelism.ensure(corpus)
       .select(col(idCol), col(vecCol), quantize(col(vecCol), scale).as("qv"))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val centroids = kmeansCellsDeterministic(quantized, idCol, vecCol, dim, nlist, iters)
     quantized
       .withColumn("cell",
@@ -936,7 +938,7 @@ object Similarity {
       .withColumn("cell",
         explode(graft.functions.IvfNearestCells(
           quantize(col(queryVecCol), meta.scale), meta.centroids, nprobe)))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     // Distinct probed cells — tiny by contract — collected once so the
     // scan carries a STATIC partition predicate (no full-index listing
     // of data files outside the probed cells).
@@ -1011,7 +1013,7 @@ object Similarity {
         val sigs = wide
           .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
           .withColumn("sig0", lshSignature(col("v"), dim, bits))
-          .localCheckpoint(false)
+          .transform(graft.ops.Parallelism.stage)
         // Bucket each vector by its signature, plus Hamming-1 probe
         // buckets on the id_a side only (probing one side suffices:
         // a pair at signature distance 1 still collides).
@@ -1075,7 +1077,7 @@ object Similarity {
     // re-run per consumer.
     val quantized = graft.ops.Parallelism.ensure(corpus)
       .select(col(idCol), col(vecCol), quantize(col(vecCol), scale).as("qv"))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val centroids = kmeansCellsDeterministic(quantized, idCol, vecCol, dim, nlist, iters)
     val cLit = array(centroids.map(c => array(c.map(v => lit(v.toDouble)): _*)): _*)
     // The double-cast vector and its norm are materialized ONCE here,
@@ -1095,7 +1097,7 @@ object Similarity {
         round(cosine(asDouble(col(vecCol)), element_at(cLit, col("cell") + 1)), 6)
           .as("cos_centroid"))
       .withColumn("__nrm", sqrt(dot(col("__vd"), col("__vd"))))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val a = assigned.select(col("cell"), col(idCol).as("__id_a"),
       col("__vd").as("__v_a"), col("__nrm").as("__n_a"), col("cos_centroid").as("__cc_a"))
     val b = assigned.select(col("cell"), col(idCol).as("__id_b"),
@@ -1146,7 +1148,7 @@ object Similarity {
       scale: Long = 1000000L): DataFrame = {
     val quantized = graft.ops.Parallelism.ensure(corpus)
       .select(col(idCol), col(vecCol), quantize(col(vecCol), scale).as("qv"))
-      .localCheckpoint(false) // feeds k-means training AND assignment
+      .transform(graft.ops.Parallelism.stage) // feeds k-means training AND assignment
     val centroids = kmeansCellsDeterministic(quantized, idCol, vecCol, dim, nlist, iters)
     val assigned = quantized
       .select(col(idCol),
@@ -1190,7 +1192,7 @@ object Similarity {
         explode(array((0 until m).map(s =>
           struct(lit(s).as("s"), slice(col("qv"), s * dsub + 1, dsub).as("sv"))): _*)).as("e"))
       .select(col("__id"), col("e.s").as("s"), col("e.sv").as("sv"))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val w = Window.partitionBy(col("s")).orderBy(col("__h"), col("__id"))
     val seedRows = sub
       .withColumn("__h",
@@ -1280,7 +1282,7 @@ object Similarity {
     import spark.implicits._
     val quantized = graft.ops.Parallelism.ensure(corpus)
       .select(col(idCol), quantize(col(vecCol), scale).as("qv"))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val cbs = pqCodebooksDeterministic(quantized, idCol, m, ksub, dsub, iters)
     val encoded = quantized.select(col(idCol), pqCodes(col("qv"), cbs, dsub).as("codes"))
     pqAdcRank(encoded, idCol, queries, queryIdCol, queryVecCol, cbs, k, scale)
@@ -1364,7 +1366,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val quantized = graft.ops.Parallelism.ensure(corpus)
       .select(col(idCol), quantize(col(vecCol), scale).as("qv"))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val cbs = pqCodebooksDeterministic(quantized, idCol, m, ksub, dsub, iters)
     quantized.select(col(idCol), pqCodes(col("qv"), cbs, dsub).as("codes"))
       .write.mode("overwrite").parquet(s"$path/codes")
@@ -1542,7 +1544,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val quantized = graft.ops.Parallelism.ensure(corpus)
       .select(col(idCol), quantize(col(vecCol), scale).as("qv"))
-      .localCheckpoint(false)
+      .transform(graft.ops.Parallelism.stage)
     val centroids = kmeansCellsDeterministic(quantized, idCol, "qv", dim, nlist, iters)
     // Residual mode (the faiss-IVFPQ refinement): codebooks train on
     // qv - centroid[cell], a far smaller ball than the raw corpus, so

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.LangIdStore
+import graft.ops.{LangIdStore, Parallelism}
 
 /** Streaming language-mix monitor over a FROZEN language-ID store
   * ([[LangIdStore]]): each arriving micro-batch is classified under
@@ -33,8 +33,8 @@ object LangIdStream {
       schema: org.apache.spark.sql.types.StructType,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val (profiles, topM) = LangIdStore.attach(spark, storePath)
-    val prof = profiles.localCheckpoint(false)
-    val ref = spark.read.parquet(s"$storePath/mix").localCheckpoint(false)
+    val prof = Parallelism.stage(profiles)
+    val ref = Parallelism.stage(spark.read.parquet(s"$storePath/mix"))
     LedgerStream.maintain(spark.readStream.schema(schema).parquet(landingDir),
         outDir, checkpointDir, trigger)(
       LangIdStore.mixDriftFrom(prof, topM, ref, _))

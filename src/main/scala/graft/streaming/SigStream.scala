@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.dedup.{Dedup, SigBandStore}
+import graft.ops.Parallelism
 
 /** Modality-generic streaming near-dup maintenance over a persisted
   * signature band store ([[SigBandStore]]): binary blobs landing in a
@@ -64,7 +65,7 @@ object SigStream {
         checkpointDir, trigger) { (batch, _) =>
       // one decode+sign per blob, consumed by three stages
       val sigs = sign(batch.select(col("path"), col("content")))
-        .localCheckpoint(false)
+        .transform(Parallelism.stage)
       val cross = SigBandStore.linkNew(spark, table, sigs, "name", "sig",
           maxDist = maxHamming, sigBits = sigBits, bands = bands)
         .select(least(col("id_a"), col("id_b")).as(aCol),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.dedup.FingerprintStore
 import graft.functions.TextFunctions
+import graft.ops.Parallelism
 
 /** Incremental curation maintenance — the operational path of the
   * batch pipeline ([[graft.ops.Curation]]): documents landing in a
@@ -66,24 +67,26 @@ object StreamCurate {
       decontamN: Int = 5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val (table, buckets) = FingerprintStore.attach(spark, fpStorePath)
-    val benchStatic = bench.select(col("doc_id"), col("text")).localCheckpoint(false)
+    val benchStatic = Parallelism.stage(bench.select(col("doc_id"), col("text")))
     LedgerStream.start(spark.readStream.schema(docSchema).parquet(landingDir),
         checkpointDir, trigger) { (batch, batchId) =>
-      val arrived = batch.localCheckpoint(false)
+      val arrived = Parallelism.stage(batch)
       val gated = arrived
         .filter(col("text").isNotNull)
         .withColumn("quality", TextFunctions.qualityScore(col("text")))
         .withColumn("n_tokens", TextFunctions.tokenCount(col("text")).cast("long"))
         .filter(col("quality") >= minQuality &&
           col("n_tokens").between(minTokens, maxTokens))
-        .localCheckpoint(false)
+        .transform(Parallelism.stage)
       val clean = StreamDecontam.sharedGramCount(
           gated, benchStatic, "text", n = decontamN)
         .filter(col("shared_grams") === 0L)
         .drop("shared_grams")
-        .localCheckpoint(false)
+        .transform(Parallelism.stage)
       val accepted = FingerprintStore.dedupeNew(
           spark, table, clean, "doc_id", "text")
+        // snapshot pin: probes the store the append below grows, and
+        // is counted after it (a recompute would accept 0 rows)
         .localCheckpoint(false)
       accepted.write.mode("append").parquet(s"$outDir/corpus")
       FingerprintStore.append(spark, table, accepted, "doc_id", "text", buckets)

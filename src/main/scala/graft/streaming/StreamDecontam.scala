@@ -54,7 +54,7 @@ object StreamDecontam {
       .select(explode(array_distinct(
         TextFunctions.wordNgrams(TextFunctions.tokens(col(textCol)), n))).as("gram"))
       .distinct()
-      .localCheckpoint(false) // consumed twice: filter build + static array
+      .transform(graft.ops.Parallelism.stage) // consumed twice: filter build + static array
     val hashes = benchGrams.select(graft.functions.Md5Prefix64(col("gram")).as("gh"))
     val nGrams = hashes.count()
     if (nGrams == 0L) return docs.withColumn("shared_grams", lit(0L))

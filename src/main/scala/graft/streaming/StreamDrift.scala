@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{LmStore, Quality}
+import graft.ops.{LmStore, Parallelism, Quality}
 
 /** Streaming distribution-drift monitor: each arriving micro-batch is
   * scored per group against the FROZEN reference distribution in an
@@ -54,7 +54,7 @@ object StreamDrift {
       .agg(count(lit(1)).as("cnt"))
     val joined = gt
       .join(spark.table(table).select(col("tok"), col("cnt").as("c")), Seq("tok"), "left")
-      .localCheckpoint(false)
+      .transform(Parallelism.stage)
     val inTotals = joined.filter(col("c").isNotNull)
       .groupBy(groupCol).agg(sum("cnt").as("gtot")) // groups-bounded
     // (cnt/gtot) ln((cnt·total)/(gtot·c)) with every factor cast to

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.TokStore
+import graft.ops.{Parallelism, TokStore}
 
 /** Streaming fertility monitor over a FROZEN BPE tokenizer
   * ([[TokStore]]): each arriving micro-batch is frozen-encoded and its
@@ -33,7 +33,7 @@ object TokStream {
       schema: org.apache.spark.sql.types.StructType,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val merges = TokStore.attach(spark, storePath)
-    val ref = spark.read.parquet(s"$storePath/fertility").localCheckpoint(false)
+    val ref = Parallelism.stage(spark.read.parquet(s"$storePath/fertility"))
     LedgerStream.maintain(spark.readStream.schema(schema).parquet(landingDir),
         outDir, checkpointDir, trigger)(
       batch => TokStore.driftAgainst(TokStore.perLangFertility(batch, merges), ref))

@@ -41,7 +41,7 @@ object GdcTransforms {
       case MafVector        => mafVector(spark, dir)
       case other =>
         throw new IllegalArgumentException(
-          s"dtype $dtype uses $other — built by its dedicated pipeline, not raw files")
+          s"dtype $dtype uses $other - built by its dedicated pipeline, not raw files")
     }
 
   /** GDC file-UUID pattern (`xena_dataset.py:60-61,104-105,196-198`). */

@@ -1519,6 +1519,16 @@ class DomainSpec extends SparkSpecBase {
     assert(cliCaptured("nonsense")._1 == 2)
   }
 
+  test("CLI output is ASCII: the help (every synopsis) encodes to bytes below 0x80") {
+    // Console's PrintStream encodes with the default charset; a
+    // non-ASCII character prints as '?' wherever that is not UTF-8.
+    // Captured through UTF-8, a character above 0x7f is a byte >= 0x80.
+    val (code, out, err) = cliCaptured()
+    assert(code == 2 && err.nonEmpty)
+    val bad = (out + err).linesIterator.filter(_.exists(_ > 0x7f)).toList
+    assert(bad.isEmpty, s"non-ASCII help lines: ${bad.take(3).mkString(" | ")}")
+  }
+
   test("CLI explain: prints a named query's formatted physical plan") {
     val (code, out, _) = cliCaptured("explain", sfDir, "q01_agg_pushdown")
     assert(code == 0)
@@ -1558,6 +1568,35 @@ class DomainSpec extends SparkSpecBase {
       java.nio.file.Paths.get(s"$tmp/out/star_counts.tsv.json")))
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$tmp/out/mirna.tsv")))
+  }
+
+  test("CLI etl-batch: a truncated .maf.gz quarantines its pair, the good pair is ok") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_cli_truncated")
+    val raw = tmp.resolve("raw")
+    val fixtures = Paths.get("fixtures/somaticmutation_wxs").toFile.listFiles
+      .filter(_.getName.endsWith(".maf.gz")).sortBy(_.getName).map(_.toPath)
+    val good = Files.createDirectories(raw.resolve("P-GOOD/somaticmutation_wxs"))
+    fixtures.foreach(f => Files.copy(f, good.resolve(f.getFileName)))
+    // The bad pair: one intact file next to a gzip stream cut in half,
+    // so the decompressor hits end-of-input mid-member.
+    val bad = Files.createDirectories(raw.resolve("P-BAD/somaticmutation_wxs"))
+    Files.copy(fixtures(0), bad.resolve(fixtures(0).getFileName))
+    val bytes = Files.readAllBytes(fixtures(1))
+    Files.write(bad.resolve(fixtures(1).getFileName), bytes.take(bytes.length / 2))
+    val out = tmp.resolve("out").toString
+    val (code, stdout, _) = cliCaptured("etl-batch", "-t", "somaticmutation_wxs",
+      "-p", "P-BAD", "P-GOOD", "-r", raw.toString, "-o", out)
+    assert(code == 1, s"a quarantined pair must surface as a nonzero exit: $stdout")
+    val lines = stdout.linesIterator.toList
+    assert(lines.exists(_.startsWith("[etl-batch] P-BAD/somaticmutation_wxs: QUARANTINED")), stdout)
+    assert(lines.contains("[etl-batch] P-GOOD/somaticmutation_wxs: ok"), stdout)
+    assert(Files.readString(raw.resolve("unfinished.json"))
+      == """{"P-BAD": ["somaticmutation_wxs"]}""",
+      "the ledger must name exactly the truncated pair")
+    assert(Files.exists(Paths.get(s"$out/P-GOOD/somaticmutation_wxs.tsv")))
+    assert(!Files.exists(Paths.get(s"$out/P-BAD/somaticmutation_wxs.tsv")),
+      "the truncated pair must not leave a partial matrix")
   }
 
   test("CLI etl-batch --parallel: concurrent datasets, same outputs and quarantine as sequential") {

@@ -1275,55 +1275,98 @@ class StreamingSpec extends SparkSpecBase {
       "replaying a batch disturbed its ledger row")
   }
 
-  test("monitor ledgers: a replayed batch id rewrites its ledger rows, never duplicates them " +
-    "(StreamDrift, TokStream, LangIdStream)") {
+  /** Land `arriving` through a monitor (`start` over landing, store,
+    * ledger, checkpoint), forget the last commit and restart, so the
+    * query re-runs that batch id as after a crash between the sink
+    * write and the commit. Returns the ledger's (row count, rows)
+    * before and after the replay. */
+  private def replayLastBatch(
+      name: String,
+      tmp: String,
+      arriving: org.apache.spark.sql.DataFrame,
+      start: (String, String, String, String) => org.apache.spark.sql.streaming.StreamingQuery)
+      : ((Long, Set[Seq[Any]]), (Long, Set[Seq[Any]])) = {
     import java.io.File
+    arriving.coalesce(1).write.parquet(s"$tmp/in")
+    def land(): Unit = {
+      val q = start(s"$tmp/in", s"$tmp/store", s"$tmp/ledger", s"$tmp/ckpt")
+      try q.processAllAvailable() finally q.stop()
+    }
+    def ledger() = {
+      val l = spark.read.parquet(s"$tmp/ledger")
+        .withColumn("batch", col("batch").cast("long"))
+      (l.count(), l.collect().map(_.toSeq).toSet)
+    }
+    land()
+    val before = ledger()
+    assert(before._1 > 0L, s"$name wrote no ledger rows")
+    val commits = new File(s"$tmp/ckpt/commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    val commit = new File(commits, last.toString)
+    assert(commit.delete())
+    new File(commits, s".$last.crc").delete()
+    land()
+    assert(commit.exists(), s"$name did not re-run batch $last")
+    (before, ledger())
+  }
+
+  test("monitor ledgers: a replayed batch id rewrites its ledger rows, never duplicates them " +
+    "(StreamDrift, TokStream, LangIdStream, PsiStream, CmsStream, EvalStream)") {
     import org.apache.spark.sql.streaming.StreamingQuery
-    import graft.ops.{LangIdStore, LmStore, TokStore}
-    import graft.streaming.{LangIdStream, StreamDrift, TokStream}
+    import graft.ops.{CmsStore, LangIdStore, LmStore, NbStore, PsiStore, TokStore}
+    import graft.streaming.{CmsStream, EvalStream, LangIdStream, PsiStream, StreamDrift, TokStream}
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text", "source", "lang")
     val ref = docs.filter(col("doc_id") % 25 === 0)
     val arriving = docs.filter(col("doc_id") % 25 =!= 0)
-    // (name, create the frozen store at a path, start the monitor over
-    // (landing, store, ledger, checkpoint))
-    val monitors: Seq[(String, String => Unit, (String, String, String, String) => StreamingQuery)] =
+    // the audit feed EvalStream scores carries its label
+    val labeled = arriving.withColumn("y", (col("lang") === "en").cast("int"))
+    // (name, landing, create the frozen store at a path, start the
+    // monitor over (landing, store, ledger, checkpoint))
+    val monitors: Seq[(String, org.apache.spark.sql.DataFrame, String => Unit,
+        (String, String, String, String) => StreamingQuery)] =
       Seq(
-        ("StreamDrift", LmStore.createAt(spark, ref, _),
+        ("StreamDrift", arriving, LmStore.createAt(spark, ref, _),
           StreamDrift.maintain(spark, _, _, _, _, arriving.schema, "source")),
-        ("TokStream", TokStore.createAt(spark, ref, _, nMerges = 3),
+        ("TokStream", arriving, TokStore.createAt(spark, ref, _, nMerges = 3),
           TokStream.maintain(spark, _, _, _, _, arriving.schema)),
-        ("LangIdStream", LangIdStore.createAt(spark, ref, _, topM = 64),
-          LangIdStream.maintain(spark, _, _, _, _, arriving.schema)))
-    for ((name, create, start) <- monitors) {
+        ("LangIdStream", arriving, LangIdStore.createAt(spark, ref, _, topM = 64),
+          LangIdStream.maintain(spark, _, _, _, _, arriving.schema)),
+        ("PsiStream", arriving, PsiStore.createAt(spark, ref, "doc_id", _),
+          PsiStream.maintain(spark, _, _, _, _, arriving.schema, "doc_id")),
+        ("CmsStream", arriving, CmsStore.createAt(spark, ref, _),
+          CmsStream.maintain(spark, _, _, _, _, arriving.schema)),
+        ("EvalStream", labeled, NbStore.createAt(spark, ref, col("lang") === "en", _),
+          EvalStream.maintain(spark, _, _, _, _, labeled.schema, "y")))
+    for ((name, landing, create, start) <- monitors) {
       val tmp = java.nio.file.Files.createTempDirectory("graft_ledger_replay").toString
       create(s"$tmp/store")
-      arriving.coalesce(1).write.parquet(s"$tmp/in")
-      def land(): Unit = {
-        val q = start(s"$tmp/in", s"$tmp/store", s"$tmp/ledger", s"$tmp/ckpt")
-        try q.processAllAvailable() finally q.stop()
-      }
-      def ledger() = {
-        val l = spark.read.parquet(s"$tmp/ledger")
-          .withColumn("batch", col("batch").cast("long"))
-        (l.count(), l.collect().map(_.toSeq).toSet)
-      }
-      land()
-      val before = ledger()
-      assert(before._1 > 0L, s"$name wrote no ledger rows")
-      // Forget the last commit: the restarted query finds its offsets
-      // logged but uncommitted and re-runs that batch id, as after a
-      // crash between the sink write and the commit.
-      val commits = new File(s"$tmp/ckpt/commits")
-      val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
-      val commit = new File(commits, last.toString)
-      assert(commit.delete())
-      new File(commits, s".$last.crc").delete()
-      land()
-      assert(commit.exists(), s"$name did not re-run batch $last")
-      val after = ledger()
+      val (before, after) = replayLastBatch(name, tmp, landing, start)
       assert(after._1 == before._1,
-        s"$name: replaying batch $last changed the ledger row count ${before._1} -> ${after._1}")
-      assert(after._2 == before._2, s"$name: replaying batch $last changed the ledger rows")
+        s"$name: replaying the last batch changed the ledger row count ${before._1} -> ${after._1}")
+      assert(after._2 == before._2, s"$name: replaying the last batch changed the ledger rows")
     }
+  }
+
+  test("HLL monitor: a replayed batch id keeps its ledger row count, and the store " +
+    "stays the one-shot sketch") {
+    // HllStream folds each batch into its store, so the replayed
+    // batch's growth row may read ~0 (its scaladoc's residual window);
+    // the row count and the store must not move.
+    import graft.ops.HllStore
+    import graft.streaming.HllStream
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text", "lang")
+    val ref = docs.filter(col("doc_id") % 25 === 0)
+    val arriving = docs.filter(col("doc_id") % 25 =!= 0)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_hll_replay").toString
+    HllStore.createAt(spark, ref, s"$tmp/store", p = 10)
+    val (before, after) = replayLastBatch("HllStream", tmp, arriving,
+      HllStream.maintain(spark, _, _, _, _, arriving.schema))
+    assert(after._1 == before._1,
+      s"HllStream: replaying the last batch changed the ledger row count ${before._1} -> ${after._1}")
+    def regs(path: String) = spark.read.parquet(s"$path/regs")
+      .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    HllStore.createAt(spark, ref.union(arriving), s"$tmp/oneshot", p = 10)
+    assert(regs(s"$tmp/store") == regs(s"$tmp/oneshot"),
+      "the replayed fold diverged from the single-shot sketch")
   }
 }

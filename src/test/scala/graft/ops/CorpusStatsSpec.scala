@@ -302,7 +302,7 @@ class CorpusStatsSpec extends SparkSpecBase {
       "re-created store still sees the pre-create ledger")
   }
 
-  test("stage storage modes (local-checkpoint/disk/none) agree: pmi and bm25 bit-identical") {
+  test("stage storage modes agree, and disk stages every reuse point DISK_ONLY") {
     val docs = Tables()
     val queries = docs.filter(col("doc_id") % 100 === 0)
       .select(col("doc_id").as("q_id"), col("text"))
@@ -310,16 +310,54 @@ class CorpusStatsSpec extends SparkSpecBase {
     def bmRows() = Retrieval.bm25TopK(docs, queries, k = 5)
       .orderBy("query_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    // Gate queries (and one stream helper) whose bodies reach a reuse
+    // point in each staging module: Dedup (q18, q79), Similarity and
+    // SparkEntry (q56), Curation (q79), Quality (q81), PostingStore
+    // (q92), Eval (q132), LangIdStore (q127), Packing (q63), Quantiles
+    // (q125), Retrieval (q98), CorpusStats (q90), SparkEntry (q67),
+    // StreamDecontam (sharedGramCount).
+    val gate = Seq("q18_ngram_jaccard", "q56_knn_join", "q63_pack", "q67_mixture",
+      "q79_curation_pipeline", "q81_importance_weights", "q90_pmi_pairs",
+      "q92_bm25_indexed", "q98_tfidf_topk", "q125_norm_quantiles",
+      "q127_langid_store_mix", "q132_calibration")
+    val bench = graft.model.Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % 50 === 0).select("doc_id", "text")
+    val bodies: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
+      gate.map(q => q -> (() => graft.SparkEntry.queries(q)(spark, sfDir))) :+
+        ("sharedGramCount" -> (() => graft.streaming.StreamDecontam.sharedGramCount(
+          docs, bench, "text", n = 5)))
+    def rows(body: () => org.apache.spark.sql.DataFrame): Seq[String] =
+      body().collect().map(_.toString).toSeq.sorted
+    // rows of `body`, and the storage levels of the RDDs it persisted
+    def stagedBy(body: () => org.apache.spark.sql.DataFrame)
+        : (Seq[String], Seq[org.apache.spark.storage.StorageLevel]) = {
+      spark.catalog.clearCache() // a cached plan from an earlier run would hide the staging
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val r = rows(body)
+      (r, spark.sparkContext.getPersistentRDDs.toSeq
+        .collect { case (id, rdd) if !before.contains(id) => rdd.getStorageLevel })
+    }
     val key = "spark.graft.stage.storage"
     val base = (pmiRows(), bmRows()) // default: local-checkpoint
+    val baseBodies = bodies.map { case (name, body) => name -> rows(body) }
     try {
-      for (mode <- Seq("disk", "none")) {
-        spark.conf.set(key, mode)
-        assert((pmiRows(), bmRows()) == base, s"mode $mode diverged")
+      spark.conf.set(key, "disk")
+      assert((pmiRows(), bmRows()) == base, "mode disk diverged")
+      for (((name, body), (_, expected)) <- bodies.zip(baseBodies)) {
+        val (got, levels) = stagedBy(body)
+        assert(got == expected, s"$name: disk rows differ from local-checkpoint rows")
+        assert(levels.nonEmpty, s"$name staged nothing")
+        assert(levels.forall(_ == org.apache.spark.storage.StorageLevel.DISK_ONLY),
+          s"$name persisted ${levels.distinct.mkString(", ")}: a reuse point bypassed stage")
       }
-      spark.conf.set(key, "bogus")
-      intercept[RuntimeException](bmRows())
-    } finally spark.conf.unset(key)
+      for (bad <- Seq("none", "bogus")) {
+        spark.conf.set(key, bad)
+        intercept[RuntimeException](bmRows())
+      }
+    } finally {
+      spark.conf.unset(key)
+      spark.catalog.clearCache()
+    }
   }
 
   test("PostingStore.retrieve ignores an uncommitted batch (no stats file = invisible)") {
