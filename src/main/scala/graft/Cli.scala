@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.gdc.{GdcCatalog, HttpTransport}
-import graft.io.{BucketedTable, DownloadExecutor, XenaMetadata, XenaTsv}
+import graft.io.{BucketedTable, CohortStore, DownloadExecutor, XenaMetadata, XenaTsv}
 import graft.model.DTypes
 import graft.ops.XenaOps
 import graft.transform.{Clinical, GdcTransforms}
@@ -343,6 +343,14 @@ object Cli {
         case scala.util.control.NonFatal(e) =>
           nFail.incrementAndGet()
           ledger.failed(proj, d, e)
+          // A write that failed mid-job leaves its directory without a
+          // `_SUCCESS` marker (its overwrite had already cleared any
+          // earlier matrix); a failure before the write keeps the last
+          // good matrix.
+          val out = new org.apache.hadoop.fs.Path(s"$outDir/$sub.tsv")
+          val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+          if (fs.exists(out) && !fs.exists(new org.apache.hadoop.fs.Path(out, "_SUCCESS")))
+            fs.delete(out, true)
           println(s"[etl-batch] $sub: QUARANTINED (${e.getMessage})")
       }
     }
@@ -406,47 +414,42 @@ object Cli {
       "(quarantines failures to <root>/unfinished.json + etl_<ts>.err; --resume re-attempts exactly those)")(etlBatch),
 
     Verb("merge-xena", "-f|--files <files...> -t|--datatype <dtype> -o|--output <out-matrix>\n" +
-      "--bucketed-store <dir> [--buckets N] -t <dtype> [-f <files...>] [-o <out-matrix>]\n" +
-      "(incremental merge into a persistent store; --buckets is fixed at init, default the session's shuffle partitions; -o writes rows in row-key order)") { a =>
+      "--bucketed-store <dir> -t <dtype> [-f <files...>] [-o <out-matrix>]\n" +
+      "(a persistent store of cohort matrices: -f copies each matrix in and commits it, with no Spark job; " +
+      "-o writes the merge of every committed cohort in row-key order)") { a =>
       val (files, dtype, storeDir) = (a.list("-f"), a("-t"), a.opt("--bucketed-store"))
       val out = if (storeDir.isEmpty) Some(a("-o")) else a.opt("-o")
-      val buckets = a.int("--buckets", 0)
       val spark = a.spark
-      // Typed from the registry: no inference job per input file.
-      val dfs = files.map(f => XenaTsv.readTyped(spark, f, DTypes.matrixSchema(dtype, _)))
       storeDir match {
-        // Incremental assembly against a persistent bucketed store: the
-        // accumulated pan-cancer matrix stays bucketed+sorted on the row
-        // key BETWEEN runs, so each new cohort merges with the
-        // (dominant) accumulated side streaming shuffle- and sort-free
-        // — vs the reference's join_xena.sh, which re-sorts every
-        // matrix on every assembly. `-o` is optional here: export and
-        // accumulation are separate concerns.
+        // Incremental assembly: each invocation adds cohorts to the
+        // store's manifest, and the export is the one-shot merge over
+        // every committed cohort, as join_xena.sh assembles per-cohort
+        // matrices once. `-o` is optional: merging and exporting are
+        // separate concerns.
         case Some(dir) =>
           require(!isLongShape(dtype),
             "--bucketed-store is the horizontal (matrix dtype) merge path; " +
               s"$dtype merges vertically and needs no row-key store")
-          val acc =
-            if (!graft.io.BucketedStore.exists(dir)) {
-              require(files.nonEmpty, "initializing a bucketed store needs -f <files...>")
-              graft.io.BucketedStore.init(spark, dir, dfs.head, dfs.head.columns.head, buckets)
-              if (dfs.sizeIs > 1) graft.io.BucketedStore.merge(spark, dir, dfs.tail)
-              else graft.io.BucketedStore.accumulated(spark, dir)
-            } else if (files.nonEmpty) graft.io.BucketedStore.merge(spark, dir, dfs)
-            else graft.io.BucketedStore.accumulated(spark, dir)
+          val m =
+            if (files.nonEmpty) CohortStore.merge(spark, dir, files)
+            else {
+              require(CohortStore.exists(spark, dir), "initializing a bucketed store needs -f <files...>")
+              CohortStore.read(spark, dir)
+            }
           out.foreach { o =>
-            // Row-key order, as join_xena.sh's sort renders it (the scan
-            // follows the bucket files, which differ between two stores
-            // of the same rows), sorted inside the sink's single task.
-            val key = acc.columns.head
-            XenaTsv.write(acc.coalesce(1).sortWithinPartitions(acc.col(s"`$key`")), o,
-              rowKey = Some(key))
+            // Row-key order, as join_xena.sh's sort renders it, sorted
+            // inside the sink's single task.
+            val merged = XenaOps.mergeHorizontal(
+              CohortStore.matrices(spark, dir, DTypes.matrixSchema(dtype, _)), m.rowKey)
+            XenaTsv.write(merged.coalesce(1).sortWithinPartitions(merged.col(s"`${m.rowKey}`")), o,
+              rowKey = Some(m.rowKey))
           }
-          println(s"bucketed store $dir: v${graft.io.BucketedStore.readMeta(dir).version}, " +
-            s"${acc.columns.length - 1} sample columns" +
+          println(s"bucketed store $dir: v${m.version}, ${m.samples.size} sample columns" +
             (if (files.nonEmpty) s" (+${files.size} matrices merged)" else ""))
         case None =>
           require(files.nonEmpty, "merge-xena needs -f <files...>")
+          // Typed from the registry: no inference job per input file.
+          val dfs = files.map(f => XenaTsv.readTyped(spark, f, DTypes.matrixSchema(dtype, _)))
           val merged =
             if (isLongShape(dtype)) XenaOps.mergeVertical(dfs)
             else XenaOps.mergeHorizontal(dfs, dfs.head.columns.head)

@@ -50,10 +50,11 @@ object FingerprintStore {
   /** [[fingerprints]] of `docs` written bucketed+sorted by `fp` and
     * registered as `table` (external at `path`).
     *
-    * SIZE `buckets` >= the cluster's `spark.sql.shuffle.partitions`,
-    * or the planner falls back to an unbucketed scan + full store
-    * reshuffle per batch ([[BucketedTable.shuffleWidth]];
-    * DedupStoreSpec pins the working shape). `buckets` 0 =
+    * SIZE `buckets` >= the cluster's `spark.sql.shuffle.partitions`:
+    * [[dedupeNew]]'s batch side arrives partitioned at that width, so
+    * below it the planner reshuffles the whole store per batch
+    * ([[BucketedTable.shuffleWidth]]; DedupStoreSpec pins the working
+    * shape, PlanShapeSpec the fallback). `buckets` 0 =
     * session-derived ([[BucketedTable.defaultBuckets]], that floor
     * built in). */
   def create(

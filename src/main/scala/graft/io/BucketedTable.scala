@@ -8,18 +8,14 @@ import org.apache.spark.sql.functions.col
 /** The bucketed table: the one place that knows how a store's table
   * is sized, written, re-attached and appended.
   *
-  * Pan-cancer assembly full-outer-joins many matrices on one row key
-  * (J4/J5), and the frozen stores join every arriving batch on theirs.
-  * Written bucketed and sorted by that key, each later join is a
-  * sort-merge join with no exchange and no sort on the table's side:
-  * the shuffle is paid once at write time instead of per join (the
-  * 100-TB answer to the reference's repeated `join_xena.sh` sort|join).
+  * The frozen stores join every arriving batch on their key. Written
+  * bucketed and sorted by that key, each later join is a sort-merge
+  * join with no exchange and no sort on the table's side: the shuffle
+  * is paid once at write time instead of per join.
   *
   * Bucketing lives in the session catalog, not in the files, so a store
   * keeps a [[StoreMeta]] sidecar with its bucket count and schema DDL,
-  * and [[attach]] re-declares the table from it with no Spark job. The
-  * pan-cancer [[BucketedStore]] keeps its own versioned `store.json`
-  * and uses [[write]] and [[declare]] directly.
+  * and [[attach]] re-declares the table from it with no Spark job.
   */
 object BucketedTable {
 
@@ -30,14 +26,18 @@ object BucketedTable {
     def table(path: String): String = StoreMeta.tableName(prefix, path)
   }
 
-  /** The session's shuffle width. A bucketed scan keeps its exchange-
-    * free join only while the bucket count is >= it; below, the
-    * planner's DisableUnnecessaryBucketedScan rule falls back to an
-    * unbucketed scan plus a full reshuffle of the table (observed on
-    * the fingerprint anti-join: 4 buckets vs 32 shuffle partitions).
-    * It is also the whole bucket count of the pan-cancer store, which
-    * is only merged, never probed: one bucket per shuffle slot makes
-    * each store write one task wave. */
+  /** The session's shuffle width. Below it, whether a store join keeps
+    * its bucketed side depends on the other side (PlanShapeSpec pins
+    * both, broadcast off):
+    *  - a probe side that arrives already hash-partitioned by the key
+    *    at the shuffle width (the fingerprint anti-join's per-batch
+    *    first-occurrence window) keeps that width, so the planner
+    *    reshuffles the table to match and drops its bucketed scan
+    *    (4 buckets vs 32 shuffle partitions);
+    *  - a probe side with no keyed exchange of its own (`LmStore.score`'s
+    *    token explode) is shuffled to the table's bucket count, so the
+    *    table side stays exchange-free, and the join runs one task per
+    *    bucket. */
   def shuffleWidth(spark: SparkSession): Int = spark.sessionState.conf.numShufflePartitions
 
   /** Bucket count of a store created in this session: one bucket per

@@ -1,6 +1,7 @@
 package graft.io
 
 import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
@@ -50,7 +51,20 @@ object XenaTsv {
       spark: SparkSession,
       path: String,
       schemaOf: Seq[String] => Option[StructType]): DataFrame =
-    read(spark, path, headerNames(spark, path, ReadOptions).flatMap(schemaOf))
+    read(spark, path, matrixHeader(spark, path).flatMap(schemaOf))
+
+  /** [[headerNames]] under [[read]]'s options: the columns a matrix at
+    * `path` reads with. */
+  def matrixHeader(spark: SparkSession, path: String): Option[Seq[String]] =
+    headerNames(spark, path, ReadOptions)
+
+  /** The data files of `path` (itself, when it is a file), by name;
+    * hidden `.` and `_` files, which Spark's file readers skip, are
+    * left out. */
+  def dataFiles(fs: FileSystem, path: Path): Seq[Path] =
+    fs.listStatus(path).toSeq.filter(_.isFile).map(_.getPath)
+      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+      .sortBy(_.getName)
 
   /** The column names Spark's CSV reader would give `path` under
     * `options`, read on the driver instead of by a probe job: the first
@@ -65,11 +79,8 @@ object XenaTsv {
     val conf = spark.sessionState.conf
     val hadoopConf = spark.sessionState.newHadoopConf()
     val opts = new CSVOptions(options, false, conf.sessionLocalTimeZone)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val files = p.getFileSystem(hadoopConf).listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
-      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
-      .sortBy(_.getName)
-    files.iterator
+    val p = new Path(path)
+    dataFiles(p.getFileSystem(hadoopConf), p).iterator
       .flatMap(f => CSVUtils.readHeaderLine(f, opts, hadoopConf))
       .nextOption()
       .map(line => CSVUtils.makeSafeHeader(
@@ -130,7 +141,7 @@ object XenaTsv {
       skip: Int,
       schema: Option[StructType] = None): DataFrame = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.getFileStatus(p).isFile,
       s"readSkippingLines requires a single file (got $path); " +

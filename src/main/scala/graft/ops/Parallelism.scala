@@ -80,10 +80,31 @@ object Parallelism {
     df.sparkSession.conf.getOption("spark.graft.stage.storage")
       .getOrElse("local-checkpoint") match {
       case "local-checkpoint" => df.localCheckpoint(false)
-      case "disk" => df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      case "disk" =>
+        val persisted = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        Option(scope.get).foreach(_ += persisted)
+        persisted
       case other => sys.error(
         s"unknown spark.graft.stage.storage '$other' (local-checkpoint|disk)")
     }
+
+  private val scope = new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]
+
+  /** Run `body`, then unpersist every frame [[stage]] persisted on this
+    * thread inside it. A `disk` stage stays registered with the cache
+    * manager until unpersisted, so a long-running stream that stages
+    * per micro-batch runs each batch in one of these scopes; a
+    * `local-checkpoint` stage is released when its frame is collected. */
+  def releasingStaged[T](body: => T): T = {
+    val outer = scope.get
+    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    scope.set(staged)
+    try body
+    finally {
+      scope.set(outer)
+      staged.foreach(_.unpersist(blocking = false))
+    }
+  }
 
   /** [[ensure]] that spreads BY a key instead of round-robin, for
     * inputs whose downstream reductions are keyed by that key: fires

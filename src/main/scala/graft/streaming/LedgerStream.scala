@@ -17,13 +17,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object LedgerStream {
 
-  /** Run `f(batch, batchId)` per micro-batch of `source`. */
+  /** Run `f(batch, batchId)` per micro-batch of `source`; what `f`
+    * staged is released when it returns
+    * ([[graft.ops.Parallelism.releasingStaged]]). */
   def start(source: DataFrame, checkpointDir: String, trigger: Trigger)(
       f: (DataFrame, Long) => Unit): StreamingQuery =
     source.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch(f)
+      .foreachBatch((batch: DataFrame, batchId: Long) =>
+        graft.ops.Parallelism.releasingStaged(f(batch, batchId)))
       .start()
 
   /** Where batch `batchId`'s ledger rows live under `outDir`. */

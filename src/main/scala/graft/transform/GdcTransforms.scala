@@ -70,9 +70,14 @@ object GdcTransforms {
 
   /** CSV reader options of a raw dtype scan — shared by the batch scan,
     * [[rawSchema]] and the streaming twin
-    * ([[graft.streaming.MatrixStream.readRawStream]]). */
+    * ([[graft.streaming.MatrixStream.readRawStream]]). With a header,
+    * `enforceSchema` off makes the scan check each file's header
+    * against [[rawSchema]]'s names, so a file of another layout (or
+    * text that is no raw file at all, inside a valid gzip) fails its
+    * dataset instead of being read positionally into null cells. */
   private[graft] def rawReadOptions(cfg: RawReadConfig): Map[String, String] =
-    Map("sep" -> "\t", "header" -> cfg.header.toString, "inferSchema" -> "false") ++
+    Map("sep" -> "\t", "header" -> cfg.header.toString, "inferSchema" -> "false",
+      "enforceSchema" -> "false") ++
       cfg.commentPrefix.map("comment" -> _)
 
   /** The unprojected scan of a dtype directory (all columns, string
@@ -84,8 +89,10 @@ object GdcTransforms {
   /** The all-string schema Spark's CSV header path would infer for a
     * dtype directory, read on the driver instead of by a probe job
     * ([[graft.io.XenaTsv.headerNames]]). Files of one dtype share one
-    * layout; the scan applies this schema positionally to each.
-    * A directory with no data line fails here, naming the directory.
+    * layout: the scan checks each file's header against these names
+    * ([[rawReadOptions]]), so a header with an empty or repeated name,
+    * which these names carry renamed, fails the scan. A directory with
+    * no data line fails here, naming the directory.
     */
   def rawSchema(spark: SparkSession, dir: String, cfg: RawReadConfig): StructType = {
     val p = new org.apache.hadoop.fs.Path(dir)

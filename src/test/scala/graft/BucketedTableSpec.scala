@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{BucketedStore, BucketedTable, StoreMeta}
+import graft.io.{BucketedTable, CohortStore, StoreMeta}
 
 /** Every bucketed store round-trips through [[BucketedTable]]: created
   * with the session-derived bucket count, its catalog entry dropped,
@@ -75,17 +75,6 @@ class BucketedTableSpec extends SparkSpecBase {
     val normsTable = StoreMeta.tableName("tfidf_norms", posting)
     roundTrip("posting norms", normsTable, nb, "`doc_id` BIGINT,`dnorm` DOUBLE")(
       PostingStore.attachNorms(spark, posting)._1)
-
-    // The pan-cancer store: merged, never probed, so one bucket per
-    // shuffle slot; store.json carries the catalog's DDL.
-    val pan = tmp("bt_pan")
-    BucketedStore.init(spark, pan, (1 to 40).map(i => (s"p$i", i * 1.0)).toDF("probe", "sA"), "probe")
-    assert(BucketedStore.readMeta(pan).buckets == BucketedTable.shuffleWidth(spark))
-    roundTrip("pan-cancer", "graft_bucketed_acc_v1", BucketedTable.shuffleWidth(spark),
-      "`probe` STRING,`sA` DOUBLE") {
-      BucketedStore.accumulated(spark, pan)
-      "graft_bucketed_acc_v1"
-    }
   }
 
   test("an empty store written before the schema field attaches with its fixed DDL") {
@@ -111,21 +100,18 @@ class BucketedTableSpec extends SparkSpecBase {
 
   test("merge-xena --bucketed-store -o: two stores of the same cohorts export the same bytes, in row-key order") {
     val dir = tmp("bt_export")
-    // The same rows under two layouts: the bucket count is fixed at
-    // init (by default it follows the creating session's shuffle
-    // width), and the scan's row order follows the bucket files.
     val files = Seq("sA", "sB").map { smp =>
       graft.io.XenaTsv.write((0 until 300).map(i => (f"g$i%04d", 1.0)).toDF("id", smp),
         s"$dir/$smp.tsv", rowKey = Some("id"))
       s"$dir/$smp.tsv"
     }
-    def export(store: String, buckets: Seq[String]): Array[Byte] = {
+    def export(store: String): Array[Byte] = {
       assert(Cli.run((Seq("merge-xena", "--bucketed-store", s"$dir/$store", "-t", "methylation450",
-        "-o", s"$dir/$store.tsv") ++ buckets ++ files.flatMap(f => Seq("-f", f))).toArray) == 0)
+        "-o", s"$dir/$store.tsv") ++ files.flatMap(f => Seq("-f", f))).toArray) == 0)
       partBytes(s"$dir/$store.tsv")
     }
-    val a = export("storeA", Seq("--buckets", "3"))
-    assert(a sameElements export("storeB", Seq("--buckets", "7")),
+    val a = export("storeA")
+    assert(a sameElements export("storeB"),
       "two stores of the same rows exported different bytes")
     val lines = new String(a, "UTF-8").split("\n").toSeq
     assert(lines.head == "id\tsA\tsB")
@@ -134,11 +120,13 @@ class BucketedTableSpec extends SparkSpecBase {
 
   test("the bucketed-store export sorts inside the sink's one task: one job, no exchange") {
     val dir = tmp("bt_export_jobs")
-    BucketedStore.init(spark, dir, (0 until 100).map(i => (f"p$i%03d", i * 1.0)).toDF("probe", "sA"), "probe")
+    graft.io.XenaTsv.write((0 until 100).map(i => (f"p$i%03d", i * 1.0)).toDF("probe", "sA"),
+      s"$dir/m.tsv", rowKey = Some("probe"))
+    CohortStore.merge(spark, s"$dir/store", Seq(s"$dir/m.tsv"))
     // Opening the store runs no job and the sink runs one; an exchange
     // would add its own (adaptive execution runs each shuffle stage as
     // a job).
-    val (rc, jobs) = jobsDuring(Cli.run(Array("merge-xena", "--bucketed-store", dir,
+    val (rc, jobs) = jobsDuring(Cli.run(Array("merge-xena", "--bucketed-store", s"$dir/store",
       "-t", "methylation450", "-o", s"$dir/export.tsv")))
     assert(rc == 0)
     assert(jobs.size == 1, s"export ran ${jobs.size} jobs: $jobs")

@@ -1257,7 +1257,7 @@ class DomainSpec extends SparkSpecBase {
     assert(graft.ops.XenaOps.canonicalEqual(
       graft.io.XenaTsv.read(spark, s"$tmp/export.tsv"),
       graft.io.XenaTsv.read(spark, s"$tmp/oneshot.tsv")))
-    // A RELATIVE store dir resolves to one place: the table data and
+    // A RELATIVE store dir resolves to one place: the cohort data and
     // store.json both land under it, so a second invocation re-attaches.
     val relStore = s"target/graft_cli_bstore_rel_${System.nanoTime}"
     try {
@@ -1265,8 +1265,8 @@ class DomainSpec extends SparkSpecBase {
         "-f", m0, "-f", m1, "-t", "methylation450")) == 0)
       assert(graft.Cli.run(Array("merge-xena", "--bucketed-store", relStore,
         "-f", m2, "-t", "methylation450", "-o", s"$tmp/rel.tsv")) == 0)
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(relStore, "acc_v3")),
-        "relative store dir split the table data from store.json")
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(relStore, "cohort_3")),
+        "relative store dir split the cohort data from store.json")
       assert(graft.ops.XenaOps.canonicalEqual(
         graft.io.XenaTsv.read(spark, s"$tmp/rel.tsv"),
         graft.io.XenaTsv.read(spark, s"$tmp/oneshot.tsv")))
@@ -1277,6 +1277,41 @@ class DomainSpec extends SparkSpecBase {
       "-f", m0, "-t", "segment_cnv_DNAcopy", "-o", s"$tmp/x.tsv"))
     catch { case _: IllegalArgumentException => 1 }
     assert(rc != 0, "long-shape dtype must not use --bucketed-store")
+  }
+
+  test("CLI merge-xena --bucketed-store: a sample already in the store is refused; store.json and the export are unchanged") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val tmp = Files.createTempDirectory("graft_cli_bstore_dup").toString
+    val key = "Composite Element REF"
+    def mat(name: String, sample: String, cells: (String, Double)*): String = {
+      val path = s"$tmp/$name.tsv"
+      graft.io.XenaTsv.write(cells.toSeq.toDF(key, sample), path, rowKey = Some(key))
+      path
+    }
+    val store = s"$tmp/store"
+    assert(Cli.run(Array("merge-xena", "--bucketed-store", store, "-t", "methylation450",
+      "-f", mat("m0", "SAMP-01A", "cg01" -> 0.5, "cg02" -> 0.6),
+      "-f", mat("m1", "SAMP-02A", "cg01" -> 0.7, "cg03" -> 0.8))) == 0)
+    def exportBytes(name: String): Array[Byte] = {
+      assert(Cli.run(Array("merge-xena", "--bucketed-store", store, "-t", "methylation450",
+        "-o", s"$tmp/$name.tsv")) == 0)
+      val parts = Files.list(Paths.get(s"$tmp/$name.tsv")).iterator.asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      assert(parts.size == 1, s"$name: ${parts.size} part files")
+      Files.readAllBytes(parts.head)
+    }
+    val meta = Files.readAllBytes(Paths.get(store, "store.json"))
+    val before = exportBytes("before")
+    val again = mat("again", "SAMP-01A", "cg01" -> 0.1, "cg05" -> 0.2)
+    val rc = try Cli.run(Array("merge-xena", "--bucketed-store", store, "-t", "methylation450",
+      "-f", again))
+    catch { case scala.util.control.NonFatal(_) => 1 }
+    assert(rc != 0, "a sample already in the store must be refused")
+    assert(Files.readAllBytes(Paths.get(store, "store.json")) sameElements meta,
+      "a refused merge changed store.json")
+    assert(exportBytes("after") sameElements before, "a refused merge changed the export")
   }
 
   test("CLI frames: avi and wav frame tables land with sane schemas") {
@@ -1597,6 +1632,36 @@ class DomainSpec extends SparkSpecBase {
     assert(Files.exists(Paths.get(s"$out/P-GOOD/somaticmutation_wxs.tsv")))
     assert(!Files.exists(Paths.get(s"$out/P-BAD/somaticmutation_wxs.tsv")),
       "the truncated pair must not leave a partial matrix")
+  }
+
+  test("CLI etl-batch: a valid .maf.gz holding non-MAF text quarantines its pair, the good pair is ok") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_cli_garbled")
+    val raw = tmp.resolve("raw")
+    val fixtures = Paths.get("fixtures/somaticmutation_wxs").toFile.listFiles
+      .filter(_.getName.endsWith(".maf.gz")).sortBy(_.getName).map(_.toPath)
+    val good = Files.createDirectories(raw.resolve("P-GOOD/somaticmutation_wxs"))
+    fixtures.foreach(f => Files.copy(f, good.resolve(f.getFileName)))
+    // The bad pair: one intact file next to a well-formed gzip stream
+    // whose text is not a MAF (no header the reader can align).
+    val bad = Files.createDirectories(raw.resolve("P-BAD/somaticmutation_wxs"))
+    Files.copy(fixtures(0), bad.resolve(fixtures(0).getFileName))
+    val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(bad.resolve(fixtures(1).getFileName)))
+    try gz.write("<html><body>502 Bad Gateway</body></html>\nthis is not a MAF\n".getBytes("UTF-8"))
+    finally gz.close()
+    val out = tmp.resolve("out").toString
+    val (code, stdout, _) = cliCaptured("etl-batch", "-t", "somaticmutation_wxs",
+      "-p", "P-BAD", "P-GOOD", "-r", raw.toString, "-o", out)
+    assert(code == 1, s"a quarantined pair must surface as a nonzero exit: $stdout")
+    val lines = stdout.linesIterator.toList
+    assert(lines.exists(_.startsWith("[etl-batch] P-BAD/somaticmutation_wxs: QUARANTINED")), stdout)
+    assert(lines.contains("[etl-batch] P-GOOD/somaticmutation_wxs: ok"), stdout)
+    assert(Files.readString(raw.resolve("unfinished.json"))
+      == """{"P-BAD": ["somaticmutation_wxs"]}""",
+      "the ledger must name exactly the garbled pair")
+    assert(Files.exists(Paths.get(s"$out/P-GOOD/somaticmutation_wxs.tsv")))
+    assert(!Files.exists(Paths.get(s"$out/P-BAD/somaticmutation_wxs.tsv")),
+      "the garbled pair must not leave a matrix")
   }
 
   test("CLI etl-batch --parallel: concurrent datasets, same outputs and quarantine as sequential") {
@@ -2335,16 +2400,17 @@ class DomainSpec extends SparkSpecBase {
           files.flatMap(f => Seq("-f", f))).toArray) == 0)
         sameBytes(s"$out/merged_$d.tsv", s"$out/ref_$d.tsv", s"$raw $d")
         if (!long) {
-          val buckets = spark.sessionState.conf.numShufflePartitions
-          graft.io.BucketedStore.init(spark, s"$out/refstore_$d", inferred.head, key, buckets)
-          val acc = graft.io.BucketedStore.merge(spark, s"$out/refstore_$d", inferred.tail)
-          graft.io.XenaTsv.write(acc, s"$out/refexport_$d.tsv", rowKey = Some(key))
+          // The reference export: the store's committed cohorts read
+          // with inference, merged, in row-key order.
+          val refStore = s"$out/refstore_$d"
+          graft.io.CohortStore.merge(spark, refStore, files.take(1))
+          graft.io.CohortStore.merge(spark, refStore, files.drop(1))
+          val acc = XenaOps.mergeHorizontal(graft.io.CohortStore.matrices(spark, refStore, _ => None), key)
+          graft.io.XenaTsv.write(acc.coalesce(1).sortWithinPartitions(acc.col(s"`$key`")),
+            s"$out/refexport_$d.tsv", rowKey = Some(key))
           assert(Cli.run((Seq("merge-xena", "--bucketed-store", s"$out/store_$d", "-t", d,
             "-o", s"$out/export_$d.tsv") ++ files.flatMap(f => Seq("-f", f))).toArray) == 0)
-          // The same lines; their order follows the store's bucket-file
-          // listing, which differs between any two stores.
-          val (got, want) = (lines(s"$out/export_$d.tsv"), lines(s"$out/refexport_$d.tsv"))
-          assert(got.head == want.head && got.tail.sorted == want.tail.sorted, s"$raw $d bucketed store")
+          sameBytes(s"$out/export_$d.tsv", s"$out/refexport_$d.tsv", s"$raw $d bucketed store")
         }
       }
     }

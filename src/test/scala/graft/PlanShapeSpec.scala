@@ -213,13 +213,13 @@ class PlanShapeSpec extends SparkSpecBase {
 
   test("bucketed matrix merge runs with zero exchanges and zero sorts") {
     import spark.implicits._
-    import graft.io.{BucketedStore, BucketedTable}
+    import graft.io.BucketedTable
     try {
       val m1 = (1 to 50).map(i => (s"p$i", i * 1.0)).toDF("probe", "s1")
       val m2 = (20 to 70).map(i => (s"p$i", i * 2.0)).toDF("probe", "s2")
       BucketedTable.write(m1, "bm1", "probe", 4)
       BucketedTable.write(m2, "bm2", "probe", 4)
-      val merged = BucketedStore.mergeJoin(spark.table("bm1"), Seq(spark.table("bm2")), "probe")
+      val merged = spark.table("bm1").join(spark.table("bm2"), Seq("probe"), "full_outer")
       assert(merged.count() == 70)
       val p = merged.queryExecution.executedPlan.toString
       assert(p.contains("SortMergeJoin"), p.take(1200))
@@ -249,71 +249,56 @@ class PlanShapeSpec extends SparkSpecBase {
     }
   }
 
-  test("bucketed store: accumulated side merges exchange-free across re-declaration") {
-    import spark.implicits._
-    import graft.io.BucketedStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_bstore_plan").toString
-    val m1 = (1 to 60).map(i => (s"p$i", i * 1.0)).toDF("probe", "sA")
-    BucketedStore.init(spark, dir, m1, "probe", 4)
-    // accumulated() re-declares the external table from store.json +
-    // files alone (the in-memory catalog is NOT trusted across runs),
-    // so this is the plan a tomorrow's CLI invocation gets.
-    val acc = BucketedStore.accumulated(spark, dir)
-    val m2 = (30 to 90).map(i => (s"p$i", i * 2.0)).toDF("probe", "sB")
-    val step = acc.join(m2, Seq("probe"), "full_outer")
-    assert(step.count() == 90)
-    val p = step.queryExecution.executedPlan.toString
-    // Exactly the NEW side pays: one exchange + one sort; the
-    // accumulated (at scale, dominant) side streams off its buckets.
-    assert("Exchange".r.findAllIn(p).length == 1,
-      "accumulated side of the incremental merge shuffled:\n" + p.take(1500))
-    assert("\\bSort\\b".r.findAllIn(p).length == 1,
-      "accumulated side of the incremental merge re-sorted:\n" + p.take(1500))
-    // And the committed result is the plain merge, bit for bit.
-    val after = BucketedStore.merge(spark, dir, Seq(m2))
-    assert(graft.ops.XenaOps.canonicalEqual(
-      after, graft.ops.XenaOps.mergeHorizontal(Seq(m1, m2), "probe")))
-    assert(BucketedStore.readMeta(dir).version == 2)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "acc_v1")),
-      "superseded store version must be swept after commit")
+  /** Shuffles on the store side (the right child) of the first
+    * `joinType` join in `df`'s initial adaptive plan, and that side's
+    * plan text. */
+  private def storeSide(df: org.apache.spark.sql.DataFrame, joinType: String): (Int, String) = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val p = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val join = p.collectFirst { case j: BaseJoinExec if j.joinType.sql == joinType => j }
+      .getOrElse(fail(s"no $joinType join in:\n$p"))
+    val side = join.right
+    (side.collect { case e: ShuffleExchangeExec => e }.size, side.toString)
   }
 
-  test("bucketed store: store.json carries the schema, so an open starts no Spark job") {
-    import spark.implicits._
-    import graft.io.BucketedStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_bstore_nojob").toString
-    val m1 = (1 to 40).map(i => (s"p$i", i * 1.0)).toDF("probe", "sA")
-    BucketedStore.init(spark, dir, m1, "probe", 4)
-    // The committed DDL is the one footer inference would produce.
-    assert(BucketedStore.readMeta(dir).schemaDdl ==
-      Some(spark.read.parquet(s"$dir/acc_v1").schema.toDDL))
-    val (acc, jobs) = jobsDuring(BucketedStore.accumulated(spark, dir))
-    assert(jobs.isEmpty, s"opening the store ran ${jobs.size} Spark job(s)")
-    assert(acc.columns.toSeq == Seq("probe", "sA"))
+  /** Run `body` with broadcast joins off (the non-broadcast shape is
+    * the scale contract) and `partitions` shuffle partitions. */
+  private def unbroadcast[T](partitions: Int)(body: => T): T = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.shuffle.partitions" -> partitions.toString)
+    val orig = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally orig.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
-  test("bucketed store: a store.json without schema (older format) re-attaches and gains it on commit") {
-    import spark.implicits._
-    import graft.io.BucketedStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_bstore_legacy").toString
-    val m1 = (1 to 50).map(i => (s"p$i", i * 1.0)).toDF("probe", "sA")
-    BucketedStore.init(spark, dir, m1, "probe", 4)
-    // Rewrite store.json in the older layout: rowKey, buckets, version.
-    val meta = java.nio.file.Paths.get(dir, "store.json")
-    java.nio.file.Files.writeString(meta,
-      """{"rowKey": "probe", "buckets": 4, "version": 1}""")
-    assert(BucketedStore.readMeta(dir).schemaDdl.isEmpty)
-    assert(graft.ops.XenaOps.canonicalEqual(BucketedStore.accumulated(spark, dir), m1))
-    val m2 = (25 to 75).map(i => (s"p$i", i * 2.0)).toDF("probe", "sB")
-    val after = BucketedStore.merge(spark, dir, Seq(m2))
-    assert(graft.ops.XenaOps.canonicalEqual(
-      after, graft.ops.XenaOps.mergeHorizontal(Seq(m1, m2), "probe")))
-    val committed = BucketedStore.readMeta(dir)
-    assert(committed.version == 2)
-    assert(committed.schemaDdl ==
-      Some(spark.read.parquet(s"$dir/acc_v2").schema.toDDL),
-      s"commit did not add the schema field: ${java.nio.file.Files.readString(meta)}")
-    assert(graft.ops.XenaOps.canonicalEqual(BucketedStore.accumulated(spark, dir), after))
+  test("store joins below the shuffle width: the fingerprint anti-join reshuffles its store, the LM score join does not") {
+    import org.apache.spark.sql.functions.col
+    import graft.dedup.FingerprintStore
+    import graft.ops.LmStore
+    val docs = model.Tables.documents(spark, sfDir)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_store_floor").toString
+    val fpTable = s"fp_floor_${System.nanoTime}"
+    FingerprintStore.create(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", fpTable,
+      s"$tmp/fp", buckets = 4)
+    LmStore.createAt(spark, docs, s"$tmp/lm", buckets = 4)
+    unbroadcast(partitions = 32) {
+      val (fpShuffles, fpSide) = storeSide(FingerprintStore.dedupeNew(
+        spark, fpTable, docs.filter(col("doc_id") % 2 === 1), "doc_id", "text"), "LEFT ANTI")
+      assert(fpShuffles == 1 && fpSide.contains("Bucketed: false"),
+        s"4-bucket fingerprint store at 32 shuffle partitions:\n$fpSide")
+      val (lmShuffles, lmSide) = storeSide(LmStore.score(spark, s"$tmp/lm",
+        docs.filter(col("doc_id") % 2 === 1)), "LEFT OUTER")
+      assert(lmShuffles == 0 && lmSide.contains("Bucketed: true"),
+        s"4-bucket LM store at 32 shuffle partitions:\n$lmSide")
+    }
   }
 
   test("q45: IVF probe join broadcasts the probe table, no cartesian") {

@@ -1040,6 +1040,36 @@ class StreamingSpec extends SparkSpecBase {
     assert(ledger.filter(col("kl").isNull).isEmpty, "fitting-corpus batches must score")
   }
 
+  test("disk staging: a stream releases what each micro-batch staged (no DISK_ONLY RDD after two batches)") {
+    import graft.streaming.StreamDrift
+    import org.apache.spark.storage.StorageLevel
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stage_release").toString
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text", "source")
+    graft.ops.LmStore.createAt(spark, docs, s"$tmp/lm")
+    val key = "spark.graft.stage.storage"
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      spark.conf.set(key, "disk")
+      // One landing per run over one checkpoint: two micro-batches,
+      // each staging StreamDrift's joined count table.
+      for (part <- 0 to 1) {
+        docs.filter(col("doc_id") % 2 === part).coalesce(1).write.mode("append").parquet(s"$tmp/in")
+        val q = StreamDrift.maintain(spark, s"$tmp/in", s"$tmp/lm", s"$tmp/ledger",
+          s"$tmp/ckpt", docs.schema, "source")
+        try q.processAllAvailable() finally q.stop()
+      }
+      assert(spark.read.parquet(s"$tmp/ledger").select("batch").distinct().count() == 2)
+      val left = spark.sparkContext.getPersistentRDDs.toSeq.collect {
+        case (id, rdd) if !before(id) && rdd.getStorageLevel == StorageLevel.DISK_ONLY => id
+      }
+      assert(left.isEmpty, s"${left.size} staged DISK_ONLY RDD(s) outlived their micro-batch")
+    } finally {
+      spark.conf.unset(key)
+      spark.catalog.clearCache()
+    }
+  }
+
   test("drift monitor: mixed in-vocab/OOV group renormalizes over in-vocab mass only") {
     import graft.streaming.StreamDrift
     import spark.implicits._
