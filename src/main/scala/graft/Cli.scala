@@ -1766,10 +1766,12 @@ object Cli {
 
   private val byName: Map[String, Verb] = verbs.map(v => v.name -> v).toMap
 
+  /** Run one command line; every frame the verb stages is released
+    * when it returns ([[graft.ops.Parallelism.releasingStaged]]). */
   def run(args: Array[String]): Int = args.toList match {
     case name :: rest if byName.contains(name) =>
       val verb = byName(name)
-      try verb.body(new Args(verb, rest))
+      try graft.ops.Parallelism.releasingStaged(verb.body(new Args(verb, rest)))
       catch {
         case e: ArgError =>
           Console.err.println(s"$name: ${e.getMessage}")

@@ -184,9 +184,8 @@ object SigBandStore {
     * [[BandStore.retuneIfSkewed]] the rebuild needs no external
     * corpus: the store's rows carry the full signature (the verifier),
     * so the distinct (id, sig) set IS the rebuild input — pinned
-    * executor-local first, because re-banding overwrites the files
-    * being read (the [[graft.similarity.Similarity.reindexIfUnhealthy]]
-    * discipline). FEWER bands = longer band chunks = geometrically
+    * executor-local first, because re-banding re-creates the catalog
+    * table being read. FEWER bands = longer band chunks = geometrically
     * fewer random collisions, at the price of a smaller guaranteed
     * radius (`maxDist <= 2*bands−1` by pigeonhole) — the decision log
     * records both so the trade is auditable. Callers re-[[attach]]

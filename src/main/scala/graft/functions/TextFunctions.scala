@@ -116,13 +116,6 @@ object TextFunctions {
         .cast("double") / length(text).cast("double"))
       .otherwise(lit(0.0))
 
-  /** Mean token length in characters. */
-  def meanTokenLen(toks: Column): Column =
-    when(size(toks) > 0,
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t).cast("long"))
-        .cast("double") / size(toks).cast("double"))
-      .otherwise(lit(0.0))
-
   /** Composite quality score in [0,1]: rewards mid-length documents
     * with a sane stopword ratio and low punctuation noise. Deterministic
     * arithmetic only — reproducible in SQL.

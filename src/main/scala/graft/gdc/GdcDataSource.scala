@@ -40,16 +40,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * values are rendered as strings, arrays flattened and comma-joined
   * (the reference's `get_json_objects` walk, `utils.py:207-232`).
   *
-  * The transport is injected by CLASS NAME (`transport` option) and
-  * instantiated per partition — network-free tests plug a
-  * deterministic in-memory server; deployment plugs an HTTP client.
+  * The transport is an [[HttpTransport]] injected by CLASS NAME
+  * (`transport` option, a zero-arg constructor) and instantiated per
+  * partition — network-free tests plug a deterministic in-memory
+  * server; deployment plugs an HTTP client.
   *
   * Usage:
   * {{{
   *   spark.read.format("gdc")
   *     .option("endpoint", "files")
   *     .option("fields", "file_id,cases.project.project_id,md5sum")
-  *     .option("transport", "com.example.HttpGdcTransport")
+  *     .option("transport", "com.example.GdcHttpTransport") // an HttpTransport
   *     .load()
   *     .filter($"`cases.project.project_id`" === "TCGA-BRCA")  // pushed
   * }}}
@@ -68,13 +69,6 @@ class GdcTableProvider extends TableProvider with DataSourceRegister {
     new GdcTable(schema, new CaseInsensitiveStringMap(properties))
 }
 
-/** Transport contract: (endpoint, params) → GDC envelope JSON.
-  * Implementations need a zero-arg constructor (instantiated
-  * reflectively on driver and executors). */
-trait GdcTransport {
-  def fetch(endpoint: String, params: Map[String, String]): String
-}
-
 object GdcDataSource {
   private val mapper = new ObjectMapper()
 
@@ -87,40 +81,23 @@ object GdcDataSource {
     fs.split(",").map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  /** Instantiate the named transport and mount the reference's retry
-    * policy (`utils.py:187-204`, the same `RetryingTransport` the Cli
-    * uses): every driver probe and every executor page fetch retries
-    * up to `retries` times with `backoffFactor` backoff. A class
-    * implementing the richer [[HttpTransport]] gets status-forcelist
-    * {500, 502, 504} retries too; the plain [[GdcTransport]] contract
-    * surfaces no status codes, so there only connect/read
-    * `IOException`s are retryable. `retries = 0` disables wrapping.
+  /** Instantiate the named [[HttpTransport]] and mount the
+    * reference's retry policy (`utils.py:187-204`, the same
+    * `RetryingTransport` the Cli uses): every driver probe and every
+    * executor page fetch retries up to `retries` times with
+    * `backoffFactor` backoff, on statuses {500, 502, 504} and on
+    * connect/read `IOException`s. `retries = 0` disables wrapping.
+    * Returns the `(endpoint, params) => body` fetch.
     */
   def newTransport(
       className: String,
       retries: Int = 10,
-      backoffFactor: Double = 0.5): GdcTransport = {
-    val raw = Class.forName(className).getDeclaredConstructor().newInstance()
-    raw match {
+      backoffFactor: Double = 0.5): (String, Map[String, String]) => String =
+    Class.forName(className).getDeclaredConstructor().newInstance() match {
       case h: HttpTransport =>
-        val f = HttpTransport.fetchFn(
-          if (retries <= 0) h else new RetryingTransport(h, retries, backoffFactor))
-        (ep: String, params: Map[String, String]) => f(ep, params)
-      case t: GdcTransport =>
-        if (retries <= 0) t
-        else {
-          val asHttp = new HttpTransport {
-            override def get(ep: String, params: Map[String, String]): GdcResponse =
-              GdcResponse(200,
-                t.fetch(ep, params).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-          val retrying = new RetryingTransport(asHttp, retries, backoffFactor)
-          (ep: String, params: Map[String, String]) => retrying.get(ep, params).text
-        }
-      case _ => throw new IllegalArgumentException(
-        s"$className implements neither graft.gdc.GdcTransport nor graft.gdc.HttpTransport")
+        HttpTransport.fetchFn(if (retries <= 0) h else new RetryingTransport(h, retries, backoffFactor))
+      case _ => throw new IllegalArgumentException(s"$className is not a graft.gdc.HttpTransport")
     }
-  }
 
   /** (`retries`, `backoffFactor`) read options — the connector's retry
     * knobs, defaulting to the reference policy. */
@@ -302,7 +279,7 @@ class GdcCountScan(options: CaseInsensitiveStringMap, conds: Array[GdcFilter.Con
         if (emitted) false
         else {
           val total = GdcDataSource.parseTotal(
-            GdcDataSource.newTransport(tc, r, bf).fetch(ep, params))
+            GdcDataSource.newTransport(tc, r, bf)(ep, params))
           row = new GenericInternalRow(Array[Any](total))
           emitted = true
           true
@@ -340,9 +317,8 @@ class GdcScan(
 
   override def planInputPartitions(): Array[InputPartition] = {
     // O3: the size-1 probe establishes the result count server-side.
-    val transport = GdcDataSource.newTransport(transportClass, retries, backoff)
-    val total = GdcDataSource.parseTotal(
-      transport.fetch(endpoint, baseParams + ("size" -> "1")))
+    val fetch = GdcDataSource.newTransport(transportClass, retries, backoff)
+    val total = GdcDataSource.parseTotal(fetch(endpoint, baseParams + ("size" -> "1")))
     val effective = limit.fold(total)(l => math.min(total, l.toLong))
     // O4: one partition per result page.
     (0L until effective by pageSize.toLong).map { from =>
@@ -371,8 +347,8 @@ class GdcReaderFactory(
     val p = partition.asInstanceOf[GdcInputPartition]
     new PartitionReader[InternalRow] {
       private lazy val hits = {
-        val transport = GdcDataSource.newTransport(transportClass, retries, backoffFactor)
-        GdcDataSource.parseHits(transport.fetch(endpoint,
+        val fetch = GdcDataSource.newTransport(transportClass, retries, backoffFactor)
+        GdcDataSource.parseHits(fetch(endpoint,
           baseParams ++ Map("from" -> p.from.toString, "size" -> p.size.toString)))
       }.iterator
       private var current: InternalRow = _

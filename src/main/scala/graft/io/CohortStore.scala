@@ -6,7 +6,6 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.types.StructType
 
 /** The pan-cancer store (CLI `merge-xena --bucketed-store`): a
@@ -25,8 +24,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Store layout under `dir` (qualified against the working directory
   * first, so a relative dir names one place):
-  *  - `store.json` — the commit point, swapped atomically (temp +
-  *    rename through Spark's `CheckpointFileManager`). Fields: `rowKey`;
+  *  - `store.json` — the commit point, swapped atomically
+  *    ([[StoreMeta.writeText]]). Fields: `rowKey`;
   *    `version`, the number of commits; `cohorts`, each cohort's `dir`
   *    (relative to the store) and `samples`, in commit order;
   *  - `cohort_<n>/` — the data files of one merged matrix, as copied.
@@ -117,7 +116,7 @@ object CohortStore {
       Cohort(target.getName, h.tail)
     }
     val next = prev.copy(version = prev.version + 1, cohorts = prev.cohorts ++ added)
-    commit(root, next)
+    commit(spark, root, next)
     // Sweep what no manifest names (crash leftovers) AFTER the commit
     // point moved.
     val live = next.cohorts.map(_.dir).toSet
@@ -127,18 +126,14 @@ object CohortStore {
     next
   }
 
-  private def commit(root: Root, m: Manifest): Unit = {
+  private def commit(spark: SparkSession, root: Root, m: Manifest): Unit = {
     val node = json.createObjectNode().put("rowKey", m.rowKey).put("version", m.version)
     val cohorts = node.putArray("cohorts")
     m.cohorts.foreach { c =>
       val samples = cohorts.addObject().put("dir", c.dir).putArray("samples")
       c.samples.foreach(s => samples.add(s))
     }
-    val out = CheckpointFileManager.create(root.path, root.conf)
-      .createAtomic(root.manifest, overwriteIfPossible = true)
-    try out.write(json.writeValueAsBytes(node))
-    catch { case e: Throwable => out.cancel(); throw e }
-    out.close()
+    StoreMeta.writeText(spark, root.manifest.toString, json.writeValueAsString(node))
   }
 
   /** The committed cohorts, in commit order, each read as

@@ -1,21 +1,26 @@
 package graft.io
 
+import java.nio.charset.StandardCharsets
+
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 
 /** The one reader and writer of the frozen stores' JSON sidecars
   * (`_<kind>_store.json`, the posting store's `store.json` and
-  * `stats/<tag>.json`, the curation stream's `_ledger` lines).
+  * `stats/<tag>.json`, the curation stream's `_ledger` lines), and the
+  * engine's one commit point: every small file a store commits goes
+  * through [[writeText]], and every store directory rewritten whole
+  * goes through [[replaceDir]].
   *
-  * Writes are temp-then-rename, so a sidecar is either absent or
-  * complete, and render one flat object as `{"k": v, "k2": v2}`.
-  * Reads parse strictly: a document that does not parse, or lacks a
-  * required field, fails with `malformed <file>: <content>`; only the
-  * `opt*` accessors let a field be absent (older sidecars).
+  * Writes render one flat object as `{"k": v, "k2": v2}`. Reads parse
+  * strictly: a document that does not parse, or lacks a required field,
+  * fails with `malformed <file>: <content>`; only the `opt*` accessors
+  * let a field be absent (older sidecars).
   */
 object StoreMeta {
 
@@ -50,17 +55,60 @@ object StoreMeta {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Commit `body` as the whole content of `path`: written to a hidden
+    * temp file beside it, then renamed over it (Spark's
+    * `CheckpointFileManager.createAtomic`), so a reader sees the
+    * previous content or the new one, never a torn file. A missing
+    * parent directory is created. */
   private[graft] def writeText(spark: SparkSession, path: String, body: String): Unit = {
-    val f = fs(spark, path)
-    // temp-then-rename: a sidecar is either absent or complete,
-    // never a torn read for a concurrent reader (a posting retrieve).
-    val tmp = new Path(path + "._tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    f.delete(new Path(path), false)
-    if (!f.rename(tmp, new Path(path)))
-      sys.error(s"rename failed for $path")
+    val p = new Path(path)
+    val fm = CheckpointFileManager.create(p.getParent, spark.sparkContext.hadoopConfiguration)
+    if (!fm.exists(p.getParent)) fm.mkdirs(p.getParent)
+    val out = fm.createAtomic(p, overwriteIfPossible = true)
+    try out.write(body.getBytes(StandardCharsets.UTF_8))
+    catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
+  }
+
+  /** Replace the directory `live` whole, never in place: `write` gets
+    * the sibling `<live>__new` to write the next version into (it may
+    * read `live` meanwhile), then two renames swap it in, moving the
+    * previous version to `<live>__old` and deleting it after.
+    *
+    * An in-place overwrite has a destructive window: Spark's overwrite
+    * deletes the old files before its job runs, and a pinned copy of
+    * the input (a local checkpoint) is not replayable, so a failed write
+    * or a lost executor loses the store. Here, if `write` fails, `live`
+    * is untouched; at every instant `live` or `<live>__old` holds a
+    * complete version. A crash between the two renames leaves `live`
+    * missing and `<live>__old` holding the only copy, so the next call
+    * restores it before anything is deleted; stale siblings are cleared
+    * only after that. Returns what `write` returns.
+    */
+  def replaceDir[T](spark: SparkSession, live: String)(write: String => T): T = {
+    restoreSwap(spark, live)
+    val f = fs(spark, live)
+    val (dir, next, old) = (new Path(live), new Path(live + "__new"), new Path(live + "__old"))
+    f.delete(old, true)
+    f.delete(next, true)
+    val result = write(next.toString)
+    if (f.exists(dir) && !f.rename(dir, old)) sys.error(s"could not move $live aside")
+    if (!f.rename(next, dir)) {
+      f.rename(old, dir)
+      sys.error(s"could not activate $next; $live restored")
+    }
+    f.delete(old, true)
+    result
+  }
+
+  /** Undo a [[replaceDir]] swap interrupted between its two renames:
+    * `live` missing and `<live>__old` holding the only copy. For a
+    * caller that reads `live` before it decides whether to rewrite it. */
+  private[graft] def restoreSwap(spark: SparkSession, live: String): Unit = {
+    val f = fs(spark, live)
+    val (dir, old) = (new Path(live), new Path(live + "__old"))
+    if (!f.exists(dir) && f.exists(old) && !f.rename(old, dir))
+      sys.error(s"$live is missing after an interrupted swap and $old could not be restored")
   }
 
   /** Write `fields` (Int, Long, String or Seq[String] values, in

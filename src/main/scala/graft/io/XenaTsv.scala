@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.StructType
   * `:1591`, `utils.py:128`) and reads them back with header inference,
   * positional column selection and optional leading-row skips
   * (`pd.read_csv(sep='\t', usecols=..., skiprows=...)`,
-  * `xena_dataset.py:208-220`).
+  * `xena_dataset.py:208-220`); those raw reads are
+  * [[graft.transform.GdcTransforms.readRaw]].
   *
   * Here TSV is strictly an edge format: parquet/long-form inside the
   * engine, TSV only at ingest/export.
@@ -85,81 +86,6 @@ object XenaTsv {
       .nextOption()
       .map(line => CSVUtils.makeSafeHeader(
         new CsvParser(opts.asParserSettings).parseLine(line), conf.caseSensitiveAnalysis, opts).toSeq)
-  }
-
-  /** Read with positional column projection + rename, the reference's
-    * `usecols=[...] , names=[...]` pattern (`xena_dataset.py:208-220`).
-    * Column pruning still reaches the CSV scan: the select is a plain
-    * projection Catalyst pushes into the reader.
-    */
-  def readCols(
-      spark: SparkSession,
-      path: String,
-      useCols: Seq[Int],
-      names: Seq[String],
-      schema: Option[StructType] = None): DataFrame = {
-    val df = read(spark, path, schema)
-    val picked = useCols.map(i => df.col(quoted(df.columns(i))))
-    df.select(picked.zip(names).map { case (c, n) => c.as(n) }: _*)
-  }
-
-  /** Read a (possibly gzip) TSV whose banner/comment lines start with a
-    * marker character — the real MAF case (`# version ...` banners,
-    * reference `xena_dataset.py:114-120` `comment='#'`). Handled
-    * natively by the CSV reader, per file, inside the optimized scan
-    * path: works on directories of files, keeps column pruning, and
-    * adds no extra job.
-    */
-  def readCommented(
-      spark: SparkSession,
-      path: String,
-      comment: String = "#",
-      schema: Option[StructType] = None): DataFrame = {
-    val base = spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("nullValue", "")
-      .option("comment", comment)
-    schema match {
-      case Some(s) => base.schema(s).csv(path)
-      case None    => base.option("inferSchema", "true").csv(path)
-    }
-  }
-
-  /** Read a headered TSV skipping `skip` leading banner lines that have
-    * no comment marker (the reference's positional `skiprows`).
-    *
-    * RESTRICTED TO A SINGLE FILE by design: a distributed text scan has
-    * no per-file line index, so a global skip over a directory would
-    * strip lines from an arbitrary file-concatenation order (the
-    * round-1 bug). For marker-prefixed banners over many files use
-    * [[readCommented]] — that is the path that scales.
-    */
-  def readSkippingLines(
-      spark: SparkSession,
-      path: String,
-      skip: Int,
-      schema: Option[StructType] = None): DataFrame = {
-    import spark.implicits._
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.getFileStatus(p).isFile,
-      s"readSkippingLines requires a single file (got $path); " +
-        "use readCommented for directories of marker-prefixed files")
-    val lines = spark.read.textFile(path)
-      .rdd
-      .zipWithIndex()
-      .filter { case (_, i) => i >= skip }
-      .map(_._1)
-      .toDS()
-    val base = spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("nullValue", "")
-    schema match {
-      case Some(s) => base.schema(s).csv(lines)
-      case None    => base.option("inferSchema", "true").csv(lines)
-    }
   }
 
   /** Write a single-file TSV matrix, row-key column first

@@ -73,40 +73,44 @@ object HllStore {
       langCol: String = "lang",
       textCol: String = "text"): DataFrame = {
     val (stored, p) = attach(spark, path)
-    val batch = sketchOf(docs, langCol, textCol, p)
-    def est(c: org.apache.spark.sql.Column) =
-      ColumnBridge.column(HllEstimate(ColumnBridge.expression(c)))
+    report(joined(stored, sketchOf(docs, langCol, textCol, p)))
+  }
+
+  /** The stored and the batch registers side by side, per language. */
+  private def joined(stored: DataFrame, batch: DataFrame): DataFrame =
     stored.select(col("lang"), col("sketch").as("s_store"))
       .join(batch.select(col("lang"), col("sketch").as("s_batch")), Seq("lang"), "full_outer")
-      .select(col("lang"),
+
+  private def report(joined: DataFrame): DataFrame = {
+    def est(c: org.apache.spark.sql.Column) =
+      ColumnBridge.column(HllEstimate(ColumnBridge.expression(c)))
+    joined.select(col("lang"),
         when(col("s_store").isNotNull, round(est(col("s_store")), 6))
           .otherwise(lit(0.0)).as("est_before"),
         round(est(graft.functions.HllMerge(col("s_store"), col("s_batch"))), 6).as("est_after"))
       .withColumn("est_growth", round(col("est_after") - col("est_before"), 6))
   }
 
+  /** Write the register-wise union of `joined` as the next `regs`. */
+  private def fold(joined: DataFrame, next: String): Unit =
+    joined.select(col("lang"), graft.functions.HllMerge(col("s_store"), col("s_batch")).as("sketch"))
+      .coalesce(1).write.parquet(next)
+
   /** Fold a batch's registers INTO the store (register-wise max) —
-    * the incremental maintenance step. Returns the updated per-lang
-    * frame after the write. */
+    * the incremental maintenance step; `regs` is replaced whole
+    * ([[StoreMeta.replaceDir]]). Returns the updated per-lang frame
+    * after the write. */
   def ingest(
       spark: SparkSession,
       path: String,
       docs: DataFrame,
       langCol: String = "lang",
       textCol: String = "text"): DataFrame = {
-    val (stored, p) = attach(spark, path)
-    val batch = sketchOf(docs, langCol, textCol, p)
-    val merged = stored.select(col("lang"), col("sketch").as("s_store"))
-      .join(batch.select(col("lang"), col("sketch").as("s_batch")), Seq("lang"), "full_outer")
-      .select(col("lang"), graft.functions.HllMerge(col("s_store"), col("s_batch")).as("sketch"))
-      // EAGER checkpoint: the write below overwrites the very files
-      // this plan reads, so the read must complete BEFORE the delete —
-      // lazy checkpointing only severs lineage if something else
-      // happens to materialize it first (the DownloadExecutor
-      // read-then-overwrite precedent).
-      .localCheckpoint(true) // snapshot pin: the write below overwrites its files
-    merged.coalesce(1).write.mode("overwrite").parquet(s"$path/regs")
-    merged
+    StoreMeta.replaceDir(spark, s"$path/regs") { next =>
+      val (stored, p) = attach(spark, path)
+      fold(joined(stored, sketchOf(docs, langCol, textCol, p)), next)
+    }
+    attach(spark, path)._1
   }
 
   /** [[growth]] + [[ingest]] from ONE store read, ONE batch sketch
@@ -125,8 +129,8 @@ object HllStore {
     * while the residual window — a crash after the fold but before
     * the CALLER's own commit (the streaming offset) — still replays
     * against the folded store and re-reports ~0.
-    * Returns the growth report (narrow re-read of the checkpointed
-    * join) for callers that want it in-memory. */
+    * Returns the growth report (narrow re-read of the staged join) for
+    * callers that want it in-memory. */
   def growthAndIngest(
       spark: SparkSession,
       path: String,
@@ -134,26 +138,15 @@ object HllStore {
       langCol: String = "lang",
       textCol: String = "text",
       reportSink: DataFrame => Unit = _ => ()): DataFrame = {
-    val (stored, p) = attach(spark, path)
-    val batch = sketchOf(docs, langCol, textCol, p)
-    // Eager: materializes the store read + batch sketch ONCE; both the
-    // report and the merged registers derive narrowly from it, and the
-    // regs overwrite below is safe because nothing re-reads the files.
-    val joined = stored.select(col("lang"), col("sketch").as("s_store"))
-      .join(batch.select(col("lang"), col("sketch").as("s_batch")), Seq("lang"), "full_outer")
-      .localCheckpoint(true) // snapshot pin: regs are overwritten below
-    def est(c: org.apache.spark.sql.Column) =
-      ColumnBridge.column(HllEstimate(ColumnBridge.expression(c)))
-    val report = joined
-      .select(col("lang"),
-        when(col("s_store").isNotNull, round(est(col("s_store")), 6))
-          .otherwise(lit(0.0)).as("est_before"),
-        round(est(graft.functions.HllMerge(col("s_store"), col("s_batch"))), 6).as("est_after"))
-      .withColumn("est_growth", round(col("est_after") - col("est_before"), 6))
-    reportSink(report)
-    joined
-      .select(col("lang"), graft.functions.HllMerge(col("s_store"), col("s_batch")).as("sketch"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/regs")
-    report
+    StoreMeta.replaceDir(spark, s"$path/regs") { next =>
+      val (stored, p) = attach(spark, path)
+      // two consumers: the report and the fold
+      val both = joined(stored, sketchOf(docs, langCol, textCol, p))
+        .transform(Parallelism.stage)
+      val growth = report(both)
+      reportSink(growth)
+      fold(both, next)
+      growth
+    }
   }
 }

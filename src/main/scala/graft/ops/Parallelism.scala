@@ -71,10 +71,17 @@ object Parallelism {
     *    TRUNCATION, not just the caching — a persisted frame would
     *    grow its lineage by one round per iteration;
     *  - snapshot pins: a frame whose plan reads a table or path the
-    *    code writes before the frame's last consumer runs (a store
-    *    read-then-overwrite, a dedup probe counted after its append).
-    *    A `DISK_ONLY` recompute would silently read the mutated
-    *    source; a lost local checkpoint fails loudly instead.
+    *    code writes before the frame's last consumer runs. A
+    *    `DISK_ONLY` recompute would silently read the mutated source;
+    *    a lost local checkpoint fails loudly instead. A store rewritten
+    *    whole needs none ([[graft.io.StoreMeta.replaceDir]] writes the
+    *    next version beside the live one), so four remain: the
+    *    [[graft.dedup.SigBandStore.retuneIfSkewed]] rows (the re-band
+    *    re-creates the catalog table they are read from), the download
+    *    planner's local catalog (the transfer then rewrites the raw dir
+    *    it lists), and the `fp-store --ingest` and StreamCurate
+    *    `accepted` frames (each probes the store its append grows, and
+    *    is counted after the append).
     */
   def stage(df: DataFrame): DataFrame =
     df.sparkSession.conf.getOption("spark.graft.stage.storage")

@@ -515,11 +515,7 @@ object Similarity {
     // parse (or silently mis-parses).
     val meta =
       s"""{"dim":$dim,"bits":$bits,"tables":$tables,"idCol":${graft.io.JsonUtil.quote(idCol)},"vecCol":${graft.io.JsonUtil.quote(vecCol)}}"""
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/index.json"), true)
-    try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.io.StoreMeta.writeText(spark, s"$path/index.json", meta)
   }
 
   /** ANN top-k against a persisted LSH index: per-table probe
@@ -751,9 +747,10 @@ object Similarity {
     * error (rising error = centroids no longer fit the corpus).
     *
     * The rebuild re-trains the quantizer on the CURRENT stored
-    * vectors and rewrites the index in place (the stored rows are
-    * pinned executor-local first — rebuilding overwrites the files
-    * being read). Rebuild cost is the [[writeIvfIndex]] build; the
+    * vectors and writes a new index beside the old one, which it then
+    * replaces whole ([[graft.io.StoreMeta.replaceDir]]): vectors and
+    * centroids commit together, and a failed rebuild leaves the old
+    * index as it was. Rebuild cost is the [[writeIvfIndex]] build; the
     * no-op path costs one vectors scan.
     */
   def reindexIfUnhealthy(
@@ -762,12 +759,12 @@ object Similarity {
       maxOccupancyCv: Double,
       maxMeanSqErr: Double,
       iters: Int = 2): ReindexDecision = {
+    // the measurement reads the index a crashed rebuild may have left
+    // moved aside
+    graft.io.StoreMeta.restoreSwap(spark, path)
     val meta = readIvfIndexMeta(spark, path)
     val nlist = meta.centroids.size
-    // snapshot pin: the health read must finish before a rebuild below
-    // overwrites the index it reads
-    val h = ivfHealthIndexed(spark, path).localCheckpoint()
-    val Array(occCv, meanErr) = h.agg(
+    val Array(occCv, meanErr) = ivfHealthIndexed(spark, path).agg(
       (stddev_pop(col("n_vecs").cast("double")) /
         avg(col("n_vecs").cast("double"))).as("cv"),
       (sum(col("n_vecs").cast("double") * coalesce(col("mean_sqerr"), lit(0.0))) /
@@ -787,30 +784,20 @@ object Similarity {
           Some(f"mean sqerr $meanErr%.4f > $maxMeanSqErr%.4f")
         case _ => None
       }
-    if (breached.isDefined) {
-      // Pin the stored rows BEFORE writeIvfIndex overwrites the files
-      // they come from (eager local checkpoint: the read must finish
-      // first). Corpus-sized, but so is any rebuild.
-      val rows = spark.read.parquet(s"$path/vectors")
-        .select(col(meta.idCol), col(meta.vecCol))
-        .localCheckpoint() // snapshot pin: writeIvfIndex overwrites its files
-      writeIvfIndex(rows, meta.idCol, meta.vecCol, meta.dim, nlist, path,
-        iters, meta.scale)
-    }
+    if (breached.isDefined)
+      graft.io.StoreMeta.replaceDir(spark, path) { next =>
+        writeIvfIndex(spark.read.parquet(s"$path/vectors").select(col(meta.idCol), col(meta.vecCol)),
+          meta.idCol, meta.vecCol, meta.dim, nlist, next, iters, meta.scale)
+      }
     val decision = ReindexDecision(occCv, meanErr, breached.isDefined,
       breached.getOrElse(
         f"occupancy cv $occCv%.4f <= $maxOccupancyCv%.4f and " +
           f"mean sqerr $meanErr%.4f <= $maxMeanSqErr%.4f"))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/reindex.json"), true)
-    try out.write(
-      (s"""{"occupancy_cv":$occCv,"mean_sqerr":$meanErr,""" +
+    graft.io.StoreMeta.writeText(spark, s"$path/reindex.json",
+      s"""{"occupancy_cv":$occCv,"mean_sqerr":$meanErr,""" +
         s""""max_occupancy_cv":$maxOccupancyCv,"max_mean_sqerr":$maxMeanSqErr,""" +
         s""""rebuilt":${decision.rebuilt},""" +
         s""""reason":${graft.io.JsonUtil.quote(decision.reason)}}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
     decision
   }
 
@@ -860,11 +847,7 @@ object Similarity {
     meta ++= s"""{"dim":$dim,"nlist":$nlist,"scale":$scale,"idCol":${graft.io.JsonUtil.quote(idCol)},"vecCol":${graft.io.JsonUtil.quote(vecCol)},"centroids":["""
     meta ++= centroids.map(_.mkString("[", ",", "]")).mkString(",")
     meta ++= "]}"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/index.json"), true)
-    try out.write(meta.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.io.StoreMeta.writeText(spark, s"$path/index.json", meta.toString)
   }
 
   /** Self-describing index metadata (`<path>/index.json`). */
@@ -1375,11 +1358,7 @@ object Similarity {
     meta ++= s""""vecCol":${graft.io.JsonUtil.quote(vecCol)},"codebooks":["""
     meta ++= cbs.map(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")).mkString(",")
     meta ++= "]}"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/index.json"), true)
-    try out.write(meta.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.io.StoreMeta.writeText(spark, s"$path/index.json", meta.toString)
   }
 
   private[graft] def readPqIndexMeta(
@@ -1579,11 +1558,7 @@ object Similarity {
     meta ++= """],"codebooks":["""
     meta ++= cbs.map(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")).mkString(",")
     meta ++= "]}"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/index.json"), true)
-    try out.write(meta.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.io.StoreMeta.writeText(spark, s"$path/index.json", meta.toString)
     IvfPqBuildResult(useResidual, gain)
   }
 

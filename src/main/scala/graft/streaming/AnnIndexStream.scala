@@ -122,44 +122,17 @@ object AnnIndexStream {
     * are identical rows) and rewrite clustered one-task-per-cell.
     * Run between maintenance windows — also reconciles the
     * many-small-appends file layout back to the batch-built shape.
+    * `vectors` is replaced whole ([[graft.io.StoreMeta.replaceDir]]).
     */
   def compact(spark: SparkSession, indexPath: String): Unit = {
     val meta = Similarity.readIvfIndexMeta(spark, indexPath)
-    // Write-then-swap: compacting IN PLACE (overwrite of the source
-    // dir, even from an eager localCheckpoint) has a destructive
-    // window — checkpoint blocks are not replayable, so losing an
-    // executor after the overwrite deleted the originals loses the
-    // store. Writing to a sibling temp dir keeps the live store
-    // intact until the new one is durable; the swap is two renames.
-    val vectors = new org.apache.hadoop.fs.Path(s"$indexPath/vectors")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexPath/vectors__compacting")
-    val old = new org.apache.hadoop.fs.Path(s"$indexPath/vectors__old")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexPath), spark.sparkContext.hadoopConfiguration)
-    fs.delete(tmp, true)
-    // Crash recovery BEFORE any delete: a prior compact that died
-    // between its two swap renames leaves `vectors` gone and `old`
-    // holding the only copy — deleting `old` here would destroy the
-    // store permanently. Swap it back first; `old` is only garbage
-    // once `vectors` exists.
-    if (!fs.exists(vectors) && fs.exists(old)) {
-      require(fs.rename(old, vectors),
-        s"compact: found interrupted swap ($vectors missing) but could not restore $old")
+    graft.io.StoreMeta.replaceDir(spark, s"$indexPath/vectors") { next =>
+      spark.read.parquet(s"$indexPath/vectors")
+        .dropDuplicates(meta.idCol)
+        // pinned to the cell count: keyless repartition AQE-coalesces a
+        // small store to one serial writer task (the q141 lesson)
+        .repartition(meta.centroids.length, col("cell"))
+        .write.partitionBy("cell").parquet(next)
     }
-    fs.delete(old, true)
-    spark.read.parquet(vectors.toString)
-      .dropDuplicates(meta.idCol)
-      // pinned to the cell count: keyless repartition AQE-coalesces a
-      // small store to one serial writer task (the q141 lesson)
-      .repartition(meta.centroids.length, col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-    require(fs.rename(vectors, old), s"compact: could not move $vectors aside")
-    if (!fs.rename(tmp, vectors)) {
-      // Recover the middle state: put the live store back before
-      // failing, so queries and a compact retry keep working.
-      fs.rename(old, vectors)
-      sys.error(s"compact: could not activate $tmp; original store restored")
-    }
-    fs.delete(old, true)
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.io.StoreMeta
 import graft.ops.Packing
 
 /** Streaming continuation of the packing prefix sum: documents
@@ -22,8 +23,9 @@ import graft.ops.Packing
   *
   * Exactly-once offsets without a transactional sink:
   *  - the running offset lives in `<outDir>/_offsets/<batchId>`
-  *    ("start end"), written AFTER the batch's data commit via
-  *    create-temp-then-rename (atomic on HDFS and local FS);
+  *    ("start end"), committed AFTER the batch's data
+  *    ([[graft.io.StoreMeta.writeText]]; a retried batch rewrites the
+  *    same deterministic offsets);
   *  - each batch overwrites its own `data/batch=<id>` directory, so a
   *    crash-retried batch replaces — never duplicates — its output;
   *  - a retried batch whose offset file already exists reuses its
@@ -86,12 +88,12 @@ object PackStream {
     }
     // Pin the pack geometry: every batch (and compact) must use the
     // SAME budget or pack ids stop being comparable across the store.
-    recordBudget(f, outDir, budget)
+    recordBudget(spark, f, outDir, budget)
     val start = startOffsetFor(spark, outDir, id)
     val (assigned, total) = Packing.assignWithTotal(
       Packing.chunk(batch, window, stride), budget, start)
     assigned.write.mode("overwrite").parquet(s"$outDir/data/batch=$id")
-    writeOffset(spark, outDir, id, start, start + total)
+    StoreMeta.writeText(spark, s"$outDir/_offsets/$id", s"$start ${start + total}")
   }
 
   /** Highest batch id covered by the last [[compact]], if any. */
@@ -107,29 +109,19 @@ object PackStream {
     if (f.exists(p)) Some(readSmallFile(f, p).trim.toLong) else None
   }
 
-  private def recordBudget(f: FileSystem, outDir: String, budget: Long): Unit =
+  private def recordBudget(spark: SparkSession, f: FileSystem, outDir: String, budget: Long): Unit =
     recordedBudget(f, outDir) match {
       case Some(b) if b != budget =>
         sys.error(s"pack store $outDir was built with --budget $b; running with " +
           s"--budget $budget would mix two pack geometries in one store")
       case Some(_) => ()
-      case None => writeSmallFile(f, new Path(s"$outDir/_budget"), budget.toString)
+      case None => StoreMeta.writeText(spark, s"$outDir/_budget", budget.toString)
     }
 
   private def readSmallFile(f: FileSystem, p: Path): String = {
     val in = f.open(p)
     try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
     finally in.close()
-  }
-
-  private def writeSmallFile(f: FileSystem, p: Path, content: String): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(content.getBytes(UTF_8)) finally out.close()
-    if (!f.rename(tmp, p)) {
-      f.delete(tmp, false)
-      if (!f.exists(p)) sys.error(s"could not commit $p")
-    }
   }
 
   /** All packed chunks so far; `batch` arrives as a partition column
@@ -181,9 +173,8 @@ object PackStream {
     * so the running cumsum stays valid and subsequent maintenance
     * batches continue appending from the same offset. The rewritten
     * rows land under the last batch's `batch=<id>` partition (one
-    * coherent layout for [[packed]]); the swap is the same
-    * write-aside-then-two-renames as the ANN store compactor, with
-    * the same interrupted-swap recovery. The geometry comes from the
+    * coherent layout for [[packed]]), and `data` is replaced whole
+    * ([[graft.io.StoreMeta.replaceDir]]). The geometry comes from the
     * store's pinned `_budget` (an explicit conflicting override is
     * refused), and the `_compacted` watermark fences out crash-replays
     * of covered batch ids afterwards. Run between maintenance windows
@@ -214,17 +205,6 @@ object PackStream {
         sys.error(s"pack store $outDir has no pinned _budget; pass an explicit " +
           "--budget matching the budget the store was built with")
     }
-    val data = new Path(s"$outDir/data")
-    val tmp = new Path(s"$outDir/data__compacting")
-    val old = new Path(s"$outDir/data__old")
-    f.delete(tmp, true)
-    // Crash recovery BEFORE any delete: a prior compact that died
-    // between its swap renames leaves `data` gone and `old` holding
-    // the only copy.
-    if (!f.exists(data) && f.exists(old))
-      require(f.rename(old, data),
-        s"compact: found interrupted swap ($data missing) but could not restore $old")
-    f.delete(old, true)
     val offDir = offsetsDir(outDir)
     val ids =
       if (!f.exists(offDir)) Array.empty[Long]
@@ -238,20 +218,15 @@ object PackStream {
       sys.error(s"pack store $outDir has no committed offsets (_offsets empty); " +
         "nothing to compact — run the stream (or let a batch commit) first")
     val lastEnd = readOffset(f, new Path(offDir, ids.max.toString))._2
-    val chunks = spark.read.parquet(data.toString)
-      .select("doc_id", "chunk_seq", "n_tokens")
-    val (assigned, total) = Packing.assignWithTotal(chunks, budget, 0L)
-    require(total == lastEnd,
-      s"compact: reassigned token total $total != last committed offset end $lastEnd — " +
-        "refusing to swap (store and offsets would disagree)")
-    assigned.write.mode("overwrite")
-      .parquet(new Path(tmp, s"batch=${ids.max}").toString)
-    require(f.rename(data, old), s"compact: could not move $data aside")
-    if (!f.rename(tmp, data)) {
-      f.rename(old, data)
-      sys.error(s"compact: could not activate $tmp; original store restored")
+    StoreMeta.replaceDir(spark, s"$outDir/data") { next =>
+      val chunks = spark.read.parquet(s"$outDir/data")
+        .select("doc_id", "chunk_seq", "n_tokens")
+      val (assigned, total) = Packing.assignWithTotal(chunks, budget, 0L)
+      require(total == lastEnd,
+        s"compact: reassigned token total $total != last committed offset end $lastEnd — " +
+          "refusing to swap (store and offsets would disagree)")
+      assigned.write.parquet(s"$next/batch=${ids.max}")
     }
-    f.delete(old, true)
     // Pin the resolved geometry so subsequent maintenance batches are
     // held to the same budget (recordBudget is a no-op when already
     // pinned; the conflict case was refused above). Pinned only AFTER
@@ -260,30 +235,11 @@ object PackStream {
     // would leave a wrong pin behind on a store whose empty-offsets or
     // conservation guard then rejected the operation, and the stream's
     // first legitimate batch would be refused against it.
-    recordBudget(f, outDir, budget)
+    recordBudget(spark, f, outDir, budget)
     // Replay fence: every batch id up to the compaction coverage now
     // lives inside the rewritten store; a crash-replay of one of them
     // would overwrite its partition with colliding arrival-order pack
     // ids. processBatch refuses ids <= this watermark.
-    writeSmallFile(f, new Path(s"$outDir/_compacted"), ids.max.toString)
-  }
-
-  private def writeOffset(
-      spark: SparkSession, outDir: String, id: Long, start: Long, end: Long): Unit = {
-    val f = fs(spark, outDir)
-    val dir = offsetsDir(outDir)
-    f.mkdirs(dir)
-    val tmp = new Path(dir, s".$id.tmp")
-    val fin = new Path(dir, id.toString)
-    val out = f.create(tmp, true)
-    try out.write(s"$start $end".getBytes(UTF_8)) finally out.close()
-    // Replace-if-exists rename: a retried batch rewrites the same
-    // (deterministic) offsets, so losing the race to a previous
-    // attempt's file is benign.
-    if (!f.rename(tmp, fin)) {
-      f.delete(tmp, false)
-      if (!f.exists(fin))
-        sys.error(s"could not commit offset file for batch $id")
-    }
+    StoreMeta.writeText(spark, s"$outDir/_compacted", ids.max.toString)
   }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{Parallelism, Sampling}
+import graft.io.StoreMeta
+import graft.ops.Sampling
 
 /** Streaming weighted reservoir: the cross-batch continuation of
   * [[graft.ops.Sampling.weightedSample]]. The batch operator's
@@ -17,12 +18,10 @@ import graft.ops.{Parallelism, Sampling}
   * paper's title).
   *
   * The store at `storeDir` holds the current sample — (id, group,
-  * weight, rank), `groups × k` rows by contract — and is rewritten
-  * per micro-batch via write-aside-then-two-renames with the
-  * [[PackStream]] interrupted-swap recovery (at every instant either
-  * `sample` or `_old` holds a complete reservoir; the store is
-  * re-read while merging, so in-place overwrite would clobber its
-  * own input). Per-batch cost: O(batch) for keys + a top-k over
+  * weight, rank), `groups × k` rows by contract — in `sample`, which
+  * each micro-batch replaces whole ([[graft.io.StoreMeta.replaceDir]]:
+  * the merge reads the live reservoir and writes the next one beside
+  * it). Per-batch cost: O(batch) for keys + a top-k over
   * (batch ∪ store); the stream never re-reads, let alone re-ranks,
   * past batches. A crash-replayed batch re-merges the same rows into
   * the same reservoir — the merge is idempotent by construction
@@ -32,11 +31,6 @@ import graft.ops.{Parallelism, Sampling}
 object StreamSample {
 
   private val WeightCol = "__ws_w"
-
-  /** Hard cap on groups x k rows landed driver-side per merge; above
-    * this the "reservoir is small by contract" premise is broken and
-    * the job fails loud instead of OOMing the driver. */
-  val MaxReservoirRows: Long = 2000000L
 
   /** Merge one batch of rows into the reservoir at `storeDir`.
     * Shared verbatim by the streaming sink and any batch backfill —
@@ -52,52 +46,17 @@ object StreamSample {
     val b = batch.select(
       col(idCol), col(groupCol).cast("string").as(groupCol),
       weight.cast("double").as(WeightCol))
+    val sample = s"$storeDir/sample"
     val fs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sample = new org.apache.hadoop.fs.Path(s"$storeDir/sample")
-    val swap = new org.apache.hadoop.fs.Path(s"$storeDir/_swap")
-    val old = new org.apache.hadoop.fs.Path(s"$storeDir/_old")
-    // Crash recovery BEFORE any read: a prior merge that died between
-    // its swap renames leaves `sample` gone and `_old` holding the
-    // only copy (the PackStream.compact recovery convention).
-    if (!fs.exists(sample) && fs.exists(old))
-      require(fs.rename(old, sample),
-        s"mergeBatch: found interrupted swap ($sample missing) but could not restore $old")
-    fs.delete(old, true)
-    fs.delete(swap, true)
-    val prev =
-      if (fs.exists(sample))
-        spark.read.parquet(sample.toString)
-          .select(col(idCol), col(groupCol), col(WeightCol))
-      else b.limit(0)
-    val merged = b.unionByName(prev).dropDuplicates(groupCol, idCol)
-      .transform(Parallelism.stage) // two consumers: group guard + sample
-    // The reservoir is groups x k rows by contract; enforce the
-    // contract before collecting — a high-cardinality group column
-    // (misconfigured --group, huge nlist) must fail with a message,
-    // not a driver OOM.
-    val nGroups = merged.select(col(groupCol)).distinct().count()
-    require(nGroups * k <= MaxReservoirRows,
-      s"mergeBatch: $nGroups groups x k=$k exceeds the $MaxReservoirRows-row " +
-        s"driver reservoir cap; '$groupCol' is too fine-grained for a " +
-        "driver-merged sample store")
-    val top = Sampling.weightedSample(merged, idCol, groupCol, col(WeightCol), k)
-    // Bounded to MaxReservoirRows by the guard above — small enough to
-    // land driver-side, which breaks the read-while-overwrite cycle.
-    val rows = top.collect().toSeq
-    val out = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), top.schema)
-    out.write.mode("overwrite").parquet(swap.toString)
-    // two-rename swap: at every instant either `sample` or `_old`
-    // holds a complete reservoir, so the recovery above always has
-    // something to restore.
-    if (fs.exists(sample))
-      require(fs.rename(sample, old), s"mergeBatch: could not move $sample aside")
-    if (!fs.rename(swap, sample)) {
-      fs.rename(old, sample)
-      sys.error(s"mergeBatch: could not activate $swap; original reservoir restored")
+    StoreMeta.replaceDir(spark, sample) { next =>
+      val prev =
+        if (fs.exists(new org.apache.hadoop.fs.Path(sample)))
+          spark.read.parquet(sample).select(col(idCol), col(groupCol), col(WeightCol))
+        else b.limit(0)
+      val merged = b.unionByName(prev).dropDuplicates(groupCol, idCol)
+      Sampling.weightedSample(merged, idCol, groupCol, col(WeightCol), k).write.parquet(next)
     }
-    fs.delete(old, true)
   }
 
   /** Maintain the reservoir from parquet landings in `landingDir`.

@@ -329,9 +329,9 @@ class DomainSpec extends SparkSpecBase {
     StreamSample.mergeBatch(rows, s"$tmp/s", "id", "grp", col("w"), k = 5)
     val before = spark.read.parquet(s"$tmp/s/sample").collect().map(_.toSeq).toSet
     // simulate a crash between the two swap renames: sample moved
-    // aside to _old, replacement never activated
+    // aside to sample__old, replacement never activated
     val dir = java.nio.file.Paths.get(s"$tmp/s")
-    java.nio.file.Files.move(dir.resolve("sample"), dir.resolve("_old"))
+    java.nio.file.Files.move(dir.resolve("sample"), dir.resolve("sample__old"))
     StreamSample.mergeBatch(rows.limit(0), s"$tmp/s", "id", "grp", col("w"), k = 5)
     assert(spark.read.parquet(s"$tmp/s/sample").collect().map(_.toSeq).toSet == before,
       "recovery from _old lost the reservoir")

@@ -4,23 +4,24 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.functions._
 
-import graft.gdc.{GdcDataSource, GdcTransport}
+import graft.gdc.{GdcDataSource, GdcResponse, HttpTransport}
 
 /** A deterministic in-memory GDC server: 57 file records over two
   * projects, honoring filters / fields / from / size like the real
   * API, and recording every request so pushdown can be asserted at
   * the wire level — not just on results. */
-class FakeGdcServer extends GdcTransport {
+class FakeGdcServer extends HttpTransport {
   import FakeGdcServer._
 
-  override def fetch(endpoint: String, params: Map[String, String]): String = {
+  override def get(endpoint: String, params: Map[String, String]): GdcResponse = {
     record(endpoint, params)
     val all = records.filter(matches(_, params.get("filters")))
     val from = params.get("from").map(_.toInt).getOrElse(0)
     val size = params.get("size").map(_.toInt).getOrElse(10)
     val page = all.slice(from, from + size)
     val hits = page.map(toJson).mkString("[", ",", "]")
-    s"""{"data":{"hits":$hits,"pagination":{"total":${all.size}}}}"""
+    GdcResponse(200,
+      s"""{"data":{"hits":$hits,"pagination":{"total":${all.size}}}}""".getBytes("UTF-8"))
   }
 }
 
@@ -71,12 +72,12 @@ object FakeGdcServer {
   * wire, pages become partitions, dotted paths flatten arrays. */
 /** Fails the first N fetches with IOException, then delegates to the
   * fixture server — exercises the connector-mounted retry policy. */
-class FlakyGdcServer extends GdcTransport {
-  override def fetch(endpoint: String, params: Map[String, String]): String = {
+class FlakyGdcServer extends HttpTransport {
+  override def get(endpoint: String, params: Map[String, String]): GdcResponse = {
     FlakyGdcServer.calls += 1
     if (FlakyGdcServer.calls <= FlakyGdcServer.failFirst)
       throw new java.io.IOException(s"connection reset #${FlakyGdcServer.calls}")
-    new FakeGdcServer().fetch(endpoint, params)
+    new FakeGdcServer().get(endpoint, params)
   }
 }
 object FlakyGdcServer {
@@ -85,16 +86,13 @@ object FlakyGdcServer {
   def arm(n: Int): Unit = { calls = 0; failFirst = n }
 }
 
-/** An HttpTransport-implementing fixture: first fetch answers 502,
-  * then delegates — exercises the status-forcelist retry path that the
-  * plain GdcTransport contract cannot express. */
-class Flaky502Server extends graft.gdc.HttpTransport {
-  override def get(endpoint: String, params: Map[String, String]): graft.gdc.GdcResponse = {
+/** First fetch answers 502, then delegates — exercises the
+  * status-forcelist retry path. */
+class Flaky502Server extends HttpTransport {
+  override def get(endpoint: String, params: Map[String, String]): GdcResponse = {
     Flaky502Server.calls += 1
-    if (Flaky502Server.calls == 1)
-      graft.gdc.GdcResponse(502, "bad gateway".getBytes("UTF-8"))
-    else graft.gdc.GdcResponse(200,
-      new FakeGdcServer().fetch(endpoint, params).getBytes("UTF-8"))
+    if (Flaky502Server.calls == 1) GdcResponse(502, "bad gateway".getBytes("UTF-8"))
+    else new FakeGdcServer().get(endpoint, params)
   }
 }
 object Flaky502Server { @volatile var calls = 0 }

@@ -360,6 +360,24 @@ class CorpusStatsSpec extends SparkSpecBase {
     }
   }
 
+  test("CLI corpus-stats --mode pmi under disk staging leaves the persisted RDDs as it found them") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cli_stage").toString
+    val key = "spark.graft.stage.storage"
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      spark.conf.set(key, "disk")
+      assert(graft.Cli.run(Array("corpus-stats", "-i", s"$sfDir/documents.parquet",
+        "-o", s"$tmp/pmi", "--mode", "pmi", "--min-pair", "5", "-k", "20")) == 0)
+      assert(spark.read.parquet(s"$tmp/pmi").columns.toSeq == Seq("x", "y", "pair_cnt", "pmi"))
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"${left.size} RDD(s) staged by the verb outlived it")
+    } finally {
+      spark.conf.unset(key)
+      spark.catalog.clearCache()
+    }
+  }
+
   test("PostingStore.retrieve ignores an uncommitted batch (no stats file = invisible)") {
     // The visibility contract: a batch exists for readers exactly when
     // its stats file does (it commits LAST). Simulate a retrieve

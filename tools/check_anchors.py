@@ -5,7 +5,7 @@ Scans markdown files (default: COVERAGE.md) for backticked citations of
 the form `path/File.scala:NN` with optional bare `:NN` continuations
 that inherit the preceding file, e.g.:
 
-    `io/XenaTsv.scala:24` (`read`), `:40` (`readCols` positional projection)
+    `transform/GdcTransforms.scala:78` (`rawReadOptions`), `:111` (`readRaw`)
 
 For each citation:
   * ERROR if the file does not exist under src/{main,test}/scala/graft
@@ -61,7 +61,7 @@ def symbols_after(text, end):
     for chunk in re.findall(r"`([^`]+)`", group):
         if re.match(r"\d+$", chunk) or ".scala:" in chunk:
             break  # ran into the next citation
-        # `readCols positional` -> readCols; `fillFrom: join` -> fillFrom
+        # `readRaw positional` -> readRaw; `fillFrom: join` -> fillFrom
         tok = re.split(r"[^\w]", chunk.strip(), 1)[0]
         if tok and IDENT.match(tok):
             syms.append(tok)
