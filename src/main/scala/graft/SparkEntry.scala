@@ -200,8 +200,8 @@ object SparkEntry {
       col("l_returnflag").as("sample"),
       col("l_quantity").as("value"))
     // Replicate mean with order-independent exact arithmetic
-    // (semantics of XenaOps.replicateMean; decimal-sum form so the
-    // result is bit-identical to the oracle).
+    // (`concat(axis=1).mean(1)`; decimal-sum form so the result is
+    // bit-identical to the oracle).
     val averaged = long.groupBy(col("probe"), col("sample"))
       .agg((sum(col("value").cast("decimal(18,4)")).cast("double") / count(lit(1))).as("value"))
     val logged = averaged.withColumn("value", round(XenaOps.log2p1(col("value")), 6))

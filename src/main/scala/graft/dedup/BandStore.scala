@@ -218,7 +218,7 @@ object BandStore {
         f"candidate mass $perDoc%.2f pairs/doc <= $maxCandPairsPerDoc%.2f " +
           f"(max bucket $maxb): left untouched"
     val decision = RetuneDecision(perDoc, maxb, breached, reason)
-    StoreMeta.writeText(spark, s"$path/retune.json",
+    StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$path/retune.json",
       s"""{"cand_pairs_per_doc":$perDoc,"max_bucket":$maxb,""" +
         s""""max_cand_pairs_per_doc":$maxCandPairsPerDoc,""" +
         s""""capped_bucket_size":$cappedBucketSize,"retuned":$breached,""" +

@@ -55,10 +55,11 @@ object Dedup {
     * Jaccard verifier ([[minHashLshPairs]], the q19/q70 machinery):
     * candidate mass is bucket-collision volume, so the audit costs
     * what the dedup pass costs — never the inverted-index self-join's
-    * O(df²) constant ([[splitLeakageExact]] keeps that path as the
-    * small-scale truth; at the audit's ≥0.8 threshold the banding's
-    * per-pair miss probability is (1−j⁴)⁸ ≤ 1.5% at the boundary and
-    * vanishes for the near-identical twins leakage is about).
+    * O(df²) constant (the tests' `ParityOracles.splitLeakageExact`
+    * keeps that path as the small-scale truth; at the audit's ≥0.8
+    * threshold the banding's per-pair miss probability is
+    * (1−j⁴)⁸ ≤ 1.5% at the boundary and vanishes for the
+    * near-identical twins leakage is about).
     *
     * `splits` is the caller's (idCol, split) assignment — the q53
     * hash split, a time split, whatever the pipeline used — so the
@@ -83,27 +84,10 @@ object Dedup {
         maxBucketSize),
       splits, idCol)
 
-  /** [[splitLeakage]] with EXHAUSTIVE pair generation
-    * ([[ngramJaccardPairs]]'s inverted-index self-join, df-capped):
-    * recall 1.0 by construction, candidate mass O(cap × postings) —
-    * the truth the banded audit is spec-checked against, and the
-    * right tool below the scale where banding pays. */
-  def splitLeakageExact(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      splits: DataFrame,
-      n: Int = 2,
-      threshold: Double = 0.8,
-      maxDocFreq: Long = 100L): DataFrame =
-    labelPairsBySplit(
-      ngramJaccardPairs(docs, idCol, textCol, n, threshold, maxDocFreq),
-      splits, idCol)
-
   /** Label (doc_a, doc_b) pairs with their endpoints' split
     * assignments and count per unordered split pair — shared by both
     * leakage paths so they can only differ in pair generation. */
-  private def labelPairsBySplit(
+  private[graft] def labelPairsBySplit(
       pairs: DataFrame, splits: DataFrame, idCol: String): DataFrame = {
     val sp = splits.select(col(idCol), col("split"))
     pairs
@@ -263,25 +247,13 @@ object Dedup {
     * identically. Pass a materialized signature attribute.
     *
     * Computed by the native [[graft.functions.BandBuckets]] kernel —
-    * bit-equal to the declarative [[bandBucketsHof]] form
+    * bit-equal to the declarative `ParityOracles.bandBucketsHof` form
     * (ExpressionParitySpec), which at the q19 shape (64 hashes × 16
     * bands) was a ~170-node expression tree whose first-run codegen
     * compilation dominated the query's wall time.
     */
   def bandBuckets(sig: Column, numHashes: Int, bands: Int): Column =
     graft.functions.BandBuckets(sig, numHashes, bands)
-
-  /** The declarative twin of [[bandBuckets]], retained for the parity
-    * property test: the oracle SQL transcribes THIS arithmetic. */
-  private[graft] def bandBucketsHof(sig: Column, numHashes: Int, bands: Int): Column = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    array((0 until bands).map { bIdx =>
-      val comps = (bIdx * rowsPerBand until (bIdx + 1) * rowsPerBand)
-        .map(i => element_at(sig, i + 1))
-      struct(lit(bIdx).as("band"), md5(concat_ws("_", comps: _*)).as("bucket"))
-    }: _*)
-  }
 
   /** MinHash signature + banded LSH near-dup detection.
     *

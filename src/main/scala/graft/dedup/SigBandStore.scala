@@ -223,7 +223,7 @@ object SigBandStore {
         f"candidate mass $perItem%.2f pairs/item <= $maxCandPairsPerItem%.2f " +
           f"(max bucket $maxb): left untouched"
     val decision = RetuneDecision(perItem, maxb, breached, reason)
-    StoreMeta.writeText(spark, s"$path/retune.json",
+    StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$path/retune.json",
       s"""{"cand_pairs_per_item":$perItem,"max_bucket":$maxb,""" +
         s""""max_cand_pairs_per_item":$maxCandPairsPerItem,""" +
         s""""bands":$bands,"new_bands":$newBands,"retuned":$breached,""" +

@@ -96,7 +96,7 @@ object Md5Prefix64 {
   * the banded-LSH bucket table for a MinHash signature, one node.
   *
   * Bit-equal to the declarative form it replaces (kept as
-  * [[graft.dedup.Dedup.bandBucketsHof]], property-tested in
+  * `ParityOracles.bandBucketsHof` in the tests, property-tested in
   * ExpressionParitySpec):
   * `array(struct(b, md5(concat_ws("_", element_at(sig, b*r+1) .. element_at(sig, (b+1)*r)))) for b < bands)`
   * — `concat_ws` casts each long to its decimal string and SKIPS null

@@ -181,9 +181,6 @@ object HllSketchAgg {
       HllSketchAgg(ColumnBridge.expression(hash), p)
         .toAggregateExpression())
 
-  /** `hllDistinct(hashCol, p)` — the estimate directly. */
-  def hllDistinct(hash: Column, p: Int): Column =
-    ColumnBridge.column(HllEstimate(ColumnBridge.expression(hllSketch(hash, p))))
 }
 
 /** `hll_merge(binary, binary) -> binary`: register-wise max of two

@@ -83,18 +83,6 @@ final class KllSketch(val k: Int) extends Serializable {
     this
   }
 
-  /** estRank(v): estimated |{x : x ≤ v}|. */
-  def estRank(v: Double): Long = {
-    var r = 0L
-    var h = 0
-    while (h < levels.size) {
-      val w = 1L << h
-      levels(h).foreach(x => if (x <= v) r += w)
-      h += 1
-    }
-    r
-  }
-
   /** Worst-case rank displacement this sketch guarantees (doubled for
     * headroom): H·n/k, never below 1. */
   def rankSlack: Long = math.max(1L, levels.size.toLong * n / k)

@@ -70,7 +70,7 @@ object LangIdKernels {
 /** `padded_char_grams(array<string>) -> array<string>`: the langid
   * gram expansion fused into one codegen-friendly node — see
   * [[LangIdKernels.paddedCharGrams]] for the exact declarative form
-  * it matches ([[graft.ops.LangId.gramsHof]], parity-pinned).
+  * it matches (`ParityOracles.gramsHof`, parity-pinned).
   */
 case class PaddedCharGrams(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
@@ -104,7 +104,7 @@ object PaddedCharGrams {
   * distance of one document profile against EVERY trained language
   * profile, and the (distance, lang)-ascending argmin, in one node.
   *
-  * The declarative reference ([[graft.ops.LangId.classifyJoin]],
+  * The declarative reference (`ParityOracles.classifyJoin`,
   * parity-pinned) expands each document profile × |langs|, left-joins
   * the language profiles on (lang, gram) to get
   * `coalesce(abs(rank − lrank), topM)` per gram, sums per (doc,

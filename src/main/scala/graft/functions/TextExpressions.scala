@@ -143,7 +143,7 @@ object WordNgrams {
 
 /** `rolling_hashes(string, k) -> array<long>`: the 60-bit md5 hash of
   * every char k-shingle in one node. Matches
-  * `transform(charShingles(text, k), s => md5_prefix64(s))` — same
+  * `ParityOracles.rollingHashesHof` in the tests — same
   * substring boundaries (`Column.substr` counts UTF8 code points, so
   * shingling here walks UTF8String.substringSQL), same hash.
   */

@@ -17,15 +17,10 @@ object TextFunctions {
 
   /** Lowercased whitespace tokens, empty tokens removed — the native
     * fused [[RegexTokens]] kernel (one node, no interpreted `filter`
-    * lambda per token). Bit-equal to [[tokensHof]]
+    * lambda per token). Bit-equal to `ParityOracles.tokensHof`
     * (ExpressionParitySpec). */
   def tokens(text: Column): Column =
     RegexTokens(text, "\\s+", lowercase = true)
-
-  /** The declarative HOF form of [[tokens]] — the reference semantics
-    * the native kernel is property-tested against. */
-  private[graft] def tokensHof(text: Column): Column =
-    filter(split(lower(text), "\\s+"), t => length(t) > 0)
 
   /** PII patterns, deliberately inside the Java∩RE2 regex common
     * subset (no lookaround, no backrefs, explicit whitespace class)
@@ -77,28 +72,9 @@ object TextFunctions {
 
   /** Word n-grams over the token array (array of space-joined grams) —
     * the native fused [[WordNgrams]] kernel; per-row, no shuffle.
-    * Bit-equal to [[wordNgramsHof]] (ExpressionParitySpec). */
+    * Bit-equal to `ParityOracles.wordNgramsHof` (ExpressionParitySpec). */
   def wordNgrams(toks: Column, n: Int): Column =
     WordNgrams(toks, n)
-
-  /** The declarative HOF form of [[wordNgrams]] — reference semantics
-    * for the parity test. */
-  private[graft] def wordNgramsHof(toks: Column, n: Int): Column =
-    when(
-      size(toks) >= n,
-      transform(
-        sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-
-  /** Character k-shingles of a string (for MinHash). */
-  def charShingles(text: Column, k: Int): Column =
-    when(
-      length(text) >= k,
-      transform(
-        sequence(lit(0), length(text) - k),
-        i => text.substr(i + lit(1), lit(k))))
-      .otherwise(array().cast("array<string>"))
 
   /** Fraction of tokens that are stopwords (quality signal). */
   def stopwordRatio(toks: Column): Column = {
@@ -191,14 +167,10 @@ object TextFunctions {
   /** Per-shingle rolling hashes: 64-bit md5-derived hash of each char
     * k-shingle (first 15 hex digits as a long — engine-portable, the
     * same identity the dedup oracles validate). Native fused
-    * [[RollingHashes]] kernel; bit-equal to [[rollingHashesHof]]
+    * [[RollingHashes]] kernel; bit-equal to `ParityOracles.rollingHashesHof`
     * (ExpressionParitySpec). */
   def rollingHashes(text: Column, k: Int): Column =
     RollingHashes(text, k)
-
-  /** Declarative HOF form of [[rollingHashes]] (parity reference). */
-  private[graft] def rollingHashesHof(text: Column, k: Int): Column =
-    transform(charShingles(text, k), s => Md5Prefix64(s))
 
   /** Winnowing fingerprint (the MOSS scheme) over a rolling-hash
     * array: the distinct minima of every `w`-window. Guarantees any
@@ -222,16 +194,4 @@ object TextFunctions {
     */
   def winnowFromHashes(hashes: Column, w: Int): Column =
     WinnowMinima(hashes, w)
-
-  /** Declarative HOF form of [[winnowFromHashes]] — the parity
-    * reference, and the O(len·w) shape the native deque kernel
-    * replaces (the kernel also lifts the "materialize the hash array
-    * first" restriction, since it references its input once). */
-  private[graft] def winnowFromHashesHof(hashes: Column, w: Int): Column =
-    when(size(hashes) >= w,
-      array_distinct(transform(
-        sequence(lit(0), size(hashes) - w),
-        i => array_min(slice(hashes, i + 1, lit(w))))))
-      .when(size(hashes) > 0, array(array_min(hashes)))
-      .otherwise(array().cast("array<long>"))
 }

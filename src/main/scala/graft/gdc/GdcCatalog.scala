@@ -44,9 +44,6 @@ object GdcFilter {
     s"""{"op":"and","content":$body}"""
   }
 
-  /** Registry filter map → DSL conditions. */
-  def fromMap(in: Map[String, String]): Seq[Cond] =
-    in.toSeq.sortBy(_._1).map { case (f, v) => In(f, Seq(v)) }
 }
 
 /** A search request's wire parameters (`gdc.py:280-301`). */
@@ -161,83 +158,5 @@ class GdcCatalog(
       else Seq(In("projects.project_id", projects))
     search("projects", conds,
       fields = Seq("name", "primary_site", "project_id", "program.name"))
-  }
-
-  /** Field-to-field mapping (`gdc.py:655-729` `map_two_fields`):
-    * values of `inputField` → the set of `outputField` values that
-    * co-occur under the deepest SHARED dotted prefix — e.g. aliquot
-    * ids map to their own sample's submitter_id, not to every sample
-    * of the case. Absent `inputValues` still appear, mapped to empty
-    * (`gdc.py:725-727`). Result is driver-sized by contract (a
-    * metadata mapping table); output sets are returned SORTED for
-    * determinism where the reference's `list(set)` order is arbitrary.
-    */
-  def mapTwoFields(
-      endpoint: String,
-      inputField: String,
-      outputField: String,
-      inputValues: Seq[String] = Seq.empty): Map[String, Seq[String]] = {
-    import GdcDataSource.{parseHits, parseTotal, pathValues, pathNodes}
-    val conds =
-      if (inputValues.isEmpty) Seq.empty else Seq(In(inputField, inputValues))
-    val payload = basePayload(conds, Seq(inputField, outputField), Seq.empty)
-    val total = parseTotal(fetch(endpoint, payload + ("size" -> "1")))
-    val hits =
-      if (total == 0L) Seq.empty
-      else parseHits(fetch(endpoint, payload + ("size" -> total.toString)))
-    val inKeys = inputField.split('.')
-    val outKeys = outputField.split('.')
-    // Deepest shared prefix, never swallowing either leaf.
-    val sharedLen = math.min(
-      inKeys.zip(outKeys).takeWhile { case (a, b) => a == b }.length,
-      math.min(inKeys.length, outKeys.length) - 1)
-    val shared = inKeys.take(sharedLen).mkString(".")
-    val inSub = inKeys.drop(sharedLen).mkString(".")
-    val outSub = outKeys.drop(sharedLen).mkString(".")
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, scala.collection.mutable.SortedSet[String]]
-    val wanted = inputValues.toSet
-    hits.foreach { hit =>
-      val sharedObjs = if (shared.isEmpty) Seq(hit) else pathNodes(hit, shared)
-      sharedObjs.foreach { obj =>
-        val outs = pathValues(obj, outSub)
-        pathValues(obj, inSub).foreach { v =>
-          if (wanted.isEmpty || wanted.contains(v))
-            m.getOrElseUpdate(v, scala.collection.mutable.SortedSet.empty[String]) ++= outs
-        }
-      }
-    }
-    inputValues.foreach(v =>
-      m.getOrElseUpdate(v, scala.collection.mutable.SortedSet.empty[String]))
-    m.map { case (k, v) => k -> v.toSeq }.toMap
-  }
-
-  /** Runtime schema probe (`gdc.py:486-493`): `<endpoint>/_mapping`
-    * returns the catalog's full dotted field list. Schema-sized,
-    * collected driver-side — query plans stay per-run static (SURVEY
-    * §7 risk 4).
-    */
-  def mapping(endpoint: String): Seq[String] = {
-    import org.apache.spark.sql.functions._
-    jsonDf(fetch(s"$endpoint/_mapping", Map.empty))
-      .select(explode(col("fields")).as("f"))
-      .collect().map(_.getString(0)).toSeq
-  }
-
-  /** All-fields fetch via vertical partition + rejoin (J7,
-    * `gdc.py:495-514`): the `_mapping` field list is too wide for one
-    * request, so it splits into two half-field requests whose results
-    * full-outer join back on `id` — a column-family rejoin.
-    */
-  def searchAllFields(
-      endpoint: String,
-      inFilter: Seq[Cond] = Seq.empty): DataFrame = {
-    val fields = mapping(endpoint).filterNot(_ == "id")
-    val (half1, half2) = fields.splitAt((fields.length + 1) / 2)
-    val d1 = search(endpoint, inFilter, "id" +: half1)
-    val d2 = search(endpoint, inFilter, "id" +: half2)
-    // Zero matches: both halves are the columnless empty frame — the
-    // id rejoin has nothing to join on.
-    if (d1.columns.isEmpty) d1
-    else d1.join(d2, Seq("id"), "full_outer")
   }
 }

@@ -133,7 +133,8 @@ object CohortStore {
       val samples = cohorts.addObject().put("dir", c.dir).putArray("samples")
       c.samples.foreach(s => samples.add(s))
     }
-    StoreMeta.writeText(spark, root.manifest.toString, json.writeValueAsString(node))
+    StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, root.manifest.toString,
+      json.writeValueAsString(node))
   }
 
   /** The committed cohorts, in commit order, each read as

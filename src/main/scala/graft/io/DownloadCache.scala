@@ -75,8 +75,4 @@ object DownloadCache {
     * the remote catalog under any md5. Anti-join on name. */
   def toDelete(local: DataFrame, remote: DataFrame): DataFrame =
     local.join(remote.select("name"), Seq("name"), "left_anti")
-
-  /** Up-to-date files (the skip set): md5-exact matches. */
-  def upToDate(remote: DataFrame, local: DataFrame): DataFrame =
-    remote.join(local, Seq("name", "md5sum"), "left_semi")
 }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
@@ -13,7 +14,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 /** The one reader and writer of the frozen stores' JSON sidecars
   * (`_<kind>_store.json`, the posting store's `store.json` and
   * `stats/<tag>.json`, the curation stream's `_ledger` lines), and the
-  * engine's one commit point: every small file a store commits goes
+  * engine's one commit point: every small file the engine commits (a
+  * store's sidecars, the Xena metadata JSON, the data card) goes
   * through [[writeText]], and every store directory rewritten whole
   * goes through [[replaceDir]].
   *
@@ -59,10 +61,11 @@ object StoreMeta {
     * temp file beside it, then renamed over it (Spark's
     * `CheckpointFileManager.createAtomic`), so a reader sees the
     * previous content or the new one, never a torn file. A missing
-    * parent directory is created. */
-  private[graft] def writeText(spark: SparkSession, path: String, body: String): Unit = {
+    * parent directory is created. `conf` is the session's
+    * `hadoopConfiguration`, or [[LocalFs.hadoopConf]] without one. */
+  private[graft] def writeText(conf: Configuration, path: String, body: String): Unit = {
     val p = new Path(path)
-    val fm = CheckpointFileManager.create(p.getParent, spark.sparkContext.hadoopConfiguration)
+    val fm = CheckpointFileManager.create(p.getParent, conf)
     if (!fm.exists(p.getParent)) fm.mkdirs(p.getParent)
     val out = fm.createAtomic(p, overwriteIfPossible = true)
     try out.write(body.getBytes(StandardCharsets.UTF_8))
@@ -119,7 +122,7 @@ object StoreMeta {
       case (k, v: Seq[_]) => m.put(k, v.asJava)
       case (k, v) => m.put(k, v)
     }
-    writeText(spark, file, flat.writeValueAsString(m))
+    writeText(spark.sparkContext.hadoopConfiguration, file, flat.writeValueAsString(m))
   }
 
   def read(spark: SparkSession, file: String): Sidecar = {

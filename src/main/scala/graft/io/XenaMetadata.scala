@@ -150,10 +150,11 @@ object XenaMetadata {
   }
 
   /** Render + write next to a matrix path (`<matrix>.json`), the
-    * reference's sink contract (`xena_dataset.py:719-723`). Hadoop FS
-    * API: the metadata sink must accept every URI the matrix sink
-    * does (hdfs://, s3a://, file:) — a java.nio write would treat a
-    * remote URI as a local relative path.
+    * reference's sink contract (`xena_dataset.py:719-723`), committed
+    * whole through [[StoreMeta.writeText]]. Hadoop FS API: the
+    * metadata sink must accept every URI the matrix sink does (hdfs://,
+    * s3a://, file:) — a java.nio write would treat a remote URI as a
+    * local relative path.
     *
     * @param hadoopConf the session's Hadoop conf when there is a session
     *   (`spark.sessionState.newHadoopConf()`), so the sidecar sees the
@@ -167,11 +168,7 @@ object XenaMetadata {
       v: Vars,
       hadoopConf: org.apache.hadoop.conf.Configuration = LocalFs.hadoopConf()): String = {
     val out = matrixPath + ".json"
-    val p = new org.apache.hadoop.fs.Path(out)
-    val fs = p.getFileSystem(hadoopConf)
-    val os = fs.create(p, true)
-    try os.write(render(metadataKind, v).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
+    StoreMeta.writeText(hadoopConf, out, render(metadataKind, v))
     out
   }
 }

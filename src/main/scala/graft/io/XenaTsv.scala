@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Xena-matrix TSV I/O.
@@ -111,34 +110,5 @@ object XenaTsv {
       .option("emptyValue", "")
       .option("nullValue", "")
       .csv(path)
-  }
-
-  /** The 100-TB write path: range-partitioned headerless TSV shards,
-    * globally ordered by the row key. Each executor writes its own
-    * shard; shard k's keys all sort before shard k+1's
-    * (`repartitionByRange` + intra-partition sort), so the single-file
-    * Xena matrix is `header + cat part-*` in filename order — an
-    * O(bytes) driver-free concatenation instead of [[write]]'s
-    * `coalesce(1)` serialization. Returns the header line callers
-    * prepend (column order: row key first, as in [[write]]).
-    */
-  def writeSharded(
-      df: DataFrame,
-      path: String,
-      rowKey: String,
-      shards: Int): String = {
-    val rest = df.columns.filterNot(_ == rowKey)
-    val ordered = df.select((rowKey +: rest.toIndexedSeq).map(n => df.col(quoted(n))): _*)
-    ordered
-      .repartitionByRange(shards, col(quoted(rowKey)))
-      .sortWithinPartitions(col(quoted(rowKey)))
-      .write
-      .mode("overwrite")
-      .option("sep", "\t")
-      .option("header", "false")
-      .option("emptyValue", "")
-      .option("nullValue", "")
-      .csv(path)
-    ordered.columns.mkString("\t")
   }
 }

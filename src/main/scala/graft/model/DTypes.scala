@@ -218,12 +218,4 @@ object DTypes {
       case _ => None
     }
   }
-
-  /** Dtypes whose downloads need tumor/normal pairing logic
-    * (`constants.py:123-134` `duplicated_dtype`). */
-  val duplicatedDtypes: Set[String] = Set(
-    "segment_cnv_ascat-ngs", "segment_cnv_DNAcopy", "masked_cnv_DNAcopy",
-    "allele_cnv_ascat2", "allele_cnv_ascat3",
-    "gene-level_ascat-ngs", "gene-level_ascat2", "gene-level_ascat3",
-    "somaticmutation_wxs", "somaticmutation_targeted")
 }

@@ -79,20 +79,22 @@ object CmsStore {
 
   /** CMS estimate of the REFERENCE occurrence count for each row of
     * `tokens` (a (tok, …) frame): min over the d rows' counters,
-    * absent buckets 0. `counters` is d·w-sized by construction and
-    * rides a broadcast. */
+    * absent buckets 0. The frame's other columns ride through the
+    * group beside `tok`, so a caller needs no join back to its own
+    * rows. `counters` is d·w-sized by construction and rides a
+    * broadcast. Output: `tokens`' columns + `est_ref`. */
   private[graft] def estimateRef(
       tokens: DataFrame,
       counters: DataFrame,
       d: Int,
       w: Int): DataFrame = {
-    val probes = tokens
-      .select(col("tok"), explode(array((0 until d).map(r =>
-        struct(lit(r).as("row"), bucketOf(r, col("tok"), w).as("bucket"))): _*)).as("rb"))
-      .select(col("tok"), col("rb.row").as("row"), col("rb.bucket").as("bucket"))
-    probes
+    val keys = tokens.columns.toSeq.map(col)
+    tokens
+      .select(keys :+ explode(array((0 until d).map(r =>
+        struct(lit(r).as("row"), bucketOf(r, col("tok"), w).as("bucket"))): _*)).as("rb"): _*)
+      .select(keys :+ col("rb.row").as("row") :+ col("rb.bucket").as("bucket"): _*)
       .join(broadcast(counters), Seq("row", "bucket"), "left")
-      .groupBy("tok")
+      .groupBy(keys: _*)
       .agg(min(coalesce(col("cnt"), lit(0L))).cast("long").as("est_ref"))
   }
 
@@ -122,15 +124,7 @@ object CmsStore {
     // aggregate; this way the corpus-sized work has exactly one
     // consumer and the only join is the broadcast counter lookup
     // (PlanShapeSpec pins the shape).
-    topk
-      .select(col("tok"), col("n_batch"),
-        explode(array((0 until d).map(r =>
-          struct(lit(r).as("row"), bucketOf(r, col("tok"), w).as("bucket"))): _*)).as("rb"))
-      .select(col("tok"), col("n_batch"),
-        col("rb.row").as("row"), col("rb.bucket").as("bucket"))
-      .join(broadcast(counters), Seq("row", "bucket"), "left")
-      .groupBy("tok", "n_batch")
-      .agg(min(coalesce(col("cnt"), lit(0L))).cast("long").as("est_ref"))
+    estimateRef(topk, counters, d, w)
       .select(col("tok").as("token"), col("n_batch"), col("est_ref"),
         round(col("n_batch").cast("double") /
           (col("est_ref") + lit(1L)).cast("double"), 6).as("surge_ratio"))

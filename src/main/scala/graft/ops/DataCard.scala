@@ -180,10 +180,8 @@ object DataCard {
       drift: DriftStores = DriftStores()): String = {
     val json = build(spark, docs, budget = budget, maxEpochs = maxEpochs,
       drift = drift)
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/card.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write((json + "\n").getBytes("UTF-8")) finally out.close()
+    graft.io.StoreMeta.writeText(spark.sparkContext.hadoopConfiguration,
+      s"$outDir/card.json", json + "\n")
     json
   }
 }

@@ -40,18 +40,6 @@ import graft.functions.{CtBestLang, CtDocProfile, PaddedCharGrams, TextFunctions
   */
 object LangId {
 
-  /** All padded 2- and 3-grams of a token array — the declarative
-    * reference [[PaddedCharGrams]] is parity-pinned against
-    * (ExpressionParitySpec); kept as the oracle-transcribable form. */
-  private[graft] def gramsHof(tokens: Column): Column = {
-    def gramsOf(tok: Column, n: Int): Column = {
-      val padded = concat(lit("_"), tok, lit("_"))
-      transform(sequence(lit(1), length(padded) - (n - 1)),
-        i => padded.substr(i, lit(n)))
-    }
-    flatten(transform(tokens, t => concat(gramsOf(t, 2), gramsOf(t, 3))))
-  }
-
   /** Gram OCCURRENCE rows: (keyCol..., gram), one row per occurrence. */
   private def gramRows(docs: DataFrame, keyCols: Seq[String], textCol: String): DataFrame =
     docs
@@ -70,7 +58,7 @@ object LangId {
     * and the kernel's per-row boxed map only duplicated that work.
     * (TermCounts earns its keep only where it REMOVES an exchange —
     * the row-unique doc_id keys in Retrieval/Quality.) */
-  private def gramCounts(docs: DataFrame, keyCols: Seq[String], textCol: String): DataFrame =
+  private[graft] def gramCounts(docs: DataFrame, keyCols: Seq[String], textCol: String): DataFrame =
     gramRows(docs, keyCols, textCol)
       .groupBy(keyCols.map(col) :+ col("gram"): _*)
       .agg(count(lit(1)).as("cnt"))
@@ -79,7 +67,7 @@ object LangId {
     * asc), keep the top M: (key, gram, rank). The window partitions
     * by the profile key — languages, bounded — never a single global
     * partition. */
-  private def rankTop(counts: DataFrame, keyCol: String, topM: Int): DataFrame =
+  private[graft] def rankTop(counts: DataFrame, keyCol: String, topM: Int): DataFrame =
     counts
       .withColumn("rank", row_number().over(
         Window.partitionBy(col(keyCol)).orderBy(col("cnt").desc, col("gram"))))
@@ -159,36 +147,6 @@ object LangId {
         .select(col("doc_id"), col("best.pred_lang").as("pred_lang"),
           col("best.distance").as("distance"))
     }
-  }
-
-  /** The expand-join-window reference formulation of [[classify]] —
-    * what the DuckDB oracles transcribe; [[classify]] is
-    * parity-pinned against it (QualitySpec). Never on the hot path:
-    * it expands every document profile × |langs| and pays two more
-    * exchanges. */
-  private[graft] def classifyJoin(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      profiles: DataFrame,
-      topM: Int = 64): DataFrame = {
-    val docProf = rankTop(
-      gramCounts(docs.select(col(idCol).as("doc_id"), col(textCol)),
-        Seq("doc_id"), textCol), "doc_id", topM)
-    val langs = profiles.select(col("lang")).distinct()
-    val dist = docProf
-      .join(broadcast(langs))
-      .join(broadcast(profiles.select(col("lang"), col("gram"),
-        col("rank").as("lrank"))), Seq("lang", "gram"), "left")
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(sum(coalesce(abs(col("rank") - col("lrank")), lit(topM)))
-        .cast("long").as("distance"))
-    dist
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("doc_id"))
-          .orderBy(col("distance"), col("lang"))))
-      .filter(col("rk") === 1)
-      .select(col("doc_id"), col("lang").as("pred_lang"), col("distance"))
   }
 
   /** Fit-and-classify on the SAME corpus: (doc_id, pred_lang,

@@ -449,9 +449,10 @@ object Quality {
     * no shuffle, no UDF: the per-token merge fold is the native
     * [[graft.functions.BpePieces]] kernel (the merge table rides
     * inside the expression), bit-equal to the declarative
-    * fold-of-[[applyMerge]] form it replaced ([[bpeEncodeHof]],
-    * parity-pinned in ExpressionParitySpec). The kernel walks two
-    * primitive arrays per merge, so cost is O(chars · |merges|); a
+    * fold-of-[[applyMerge]] form it replaced
+    * (`ParityOracles.bpeEncodeHof` in the tests, parity-pinned in
+    * ExpressionParitySpec). The kernel walks two primitive arrays per
+    * merge, so cost is O(chars · |merges|); a
     * production 50k-merge tokenizer would compile the merge table
     * into one trie/priority-queue pass inside the same kernel shape.
     */
@@ -464,24 +465,6 @@ object Quality {
         size(col("tk")).cast("long").as("n_tokens"),
         aggregate(transform(col("tk"),
           t => graft.functions.BpePieces(t, pairs).cast("long")),
-          lit(0L), (acc, n) => acc + n).as("n_pieces"))
-  }
-
-  /** The declarative HOF reference for [[bpeEncode]]'s kernel — the
-    * oracle-transcribable fold [[graft.functions.BpePieces]] is
-    * parity-pinned against. Never on the hot path: the interpreted
-    * fold rebuilds an array per symbol per merge. */
-  private[graft] def bpeEncodeHof(docs: DataFrame, merges: Seq[BpeMerge]): DataFrame = {
-    val encodedTok = (t: Column) => {
-      val chars = filter(split(t, ""), s => s =!= "")
-      merges.foldLeft(chars)((syms, m) => applyMerge(syms, m.left, m.right))
-    }
-    docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
-      .select(col("doc_id"),
-        size(col("tk")).cast("long").as("n_tokens"),
-        aggregate(transform(col("tk"), t => size(encodedTok(t)).cast("long")),
           lit(0L), (acc, n) => acc + n).as("n_pieces"))
   }
 

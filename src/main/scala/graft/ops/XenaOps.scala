@@ -126,20 +126,6 @@ object XenaOps {
       valueCol)
   }
 
-  /** Cell-wise mean over same-sample replicate files before matrix entry
-    * (reference `xena_dataset.py:221-227`: `concat(axis=1).mean(1)`).
-    * In long form this is a plain hash aggregate — partial (map-side)
-    * combine comes for free.
-    */
-  def replicateMean(
-      long: DataFrame,
-      rowKey: String,
-      sampleCol: String,
-      valueCol: String): DataFrame =
-    long
-      .groupBy(col(rowKey), col(sampleCol))
-      .agg(avg(col(valueCol)).as(valueCol))
-
   /** `log2(x + 1)` transform toggled per-dtype in the reference
     * (`xena_dataset.py:240-241`). Codegen'd built-in, stays inside
     * whole-stage codegen.
@@ -165,20 +151,6 @@ object XenaOps {
   def mergeVertical(dfs: Seq[DataFrame]): DataFrame =
     dfs.reduce(_.unionByName(_, allowMissingColumns = true))
 
-  /** Drop columns whose every value is null (reference
-    * `dropna(axis=1, how='all')` at `gdc.py:167`,
-    * `xena_dataset.py:1102,1409`). One aggregate pass computes non-null
-    * counts for all columns simultaneously; the column drop itself is a
-    * driver-side projection decision.
-    */
-  def dropAllNullCols(df: DataFrame): DataFrame = {
-    val cols = df.columns
-    val aggs = cols.map(c => count(col(c)).as(c))
-    val counts = df.agg(aggs.head, aggs.tail: _*).head()
-    val keep = cols.filter(c => counts.getAs[Long](c) > 0L)
-    df.select(keep.map(col).toIndexedSeq: _*)
-  }
-
   /** Keep only rows whose key appears in `keys` (reference
     * `keep_samples` filter, `xena_dataset.py:264-305` build /
     * `:1405-1408` apply). Semi-join; Catalyst broadcasts the key set
@@ -193,13 +165,6 @@ object XenaOps {
   def dropSamples(df: DataFrame, keys: DataFrame, keyCol: String): DataFrame =
     df.join(keys, Seq(keyCol), "left_anti")
 
-  /** Reverse-dotted column rename: `a.b.c` → `c.b.a`, applied to every
-    * phenotype column in the reference (`xena_dataset.py:1397-1402`).
-    * Pure driver-side schema rewrite.
-    */
-  def reverseDottedRename(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(_.split('.').reverse.mkString(".")).toIndexedSeq: _*)
-
   /** Canonical matrix equality (reference `xge xena-eql`,
     * `main.py:26-42`: sort both axes, then compare). Implemented as a
     * bidirectional exceptAll — order-insensitive, multiset semantics.
@@ -208,27 +173,12 @@ object XenaOps {
     */
   def canonicalEqual(a: DataFrame, b: DataFrame): Boolean = {
     if (a.columns.sorted.toSeq != b.columns.sorted.toSeq) return false
-    // Backticked: phenotype columns are dotted (reverseDottedRename),
+    // Backticked: phenotype columns are dotted (Clinical.reverseDotted),
     // and a bare col("a.b") parses as a struct path, not the column.
     val cols = a.columns.sorted.toIndexedSeq.map(c => col(s"`$c`"))
     val ca = a.select(cols: _*)
     val cb = b.select(cols: _*)
     ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty
-  }
-
-  /** Column-wise fill from a second frame keyed on `keyCol` (reference
-    * `fillna(normalized_df)` at `xena_dataset.py:1120`): left join then
-    * per-column coalesce(primary, fallback).
-    */
-  def fillFrom(primary: DataFrame, fallback: DataFrame, keyCol: String): DataFrame = {
-    val fb = fallback.columns.filterNot(_ == keyCol)
-      .foldLeft(fallback)((d, c) => d.withColumnRenamed(c, s"__fb_$c"))
-    val joined = primary.join(fb, Seq(keyCol), "left")
-    val filled = primary.columns.filterNot(_ == keyCol).map { c =>
-      if (fallback.columns.contains(c)) coalesce(col(c), col(s"__fb_$c")).as(c)
-      else col(c)
-    }
-    joined.select(col(keyCol) +: filled.toIndexedSeq: _*)
   }
 
   /** Supported download extensions (reference `gdc.py:27-39`
@@ -269,39 +219,6 @@ object XenaOps {
       .drop(caseCol)
       .select(df.columns.map(col).toIndexedSeq: _*)
     remapped.dropDuplicates()
-  }
-
-  /** A6 duplicate-column elimination, keep-first (reference
-    * `postprocessing.py:86-88` `df.columns.duplicated()`): a
-    * driver-side projection decision on the (schema-sized) column
-    * list. */
-  def dedupColumns(df: DataFrame): DataFrame = {
-    // Positional rename to disambiguate, select keep-first, restore.
-    val tmp = df.toDF(df.columns.indices.map(i => s"__c$i"): _*)
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    val keep = df.columns.zipWithIndex.collect { case (c, i) if seen.add(c) => (c, i) }
-    tmp.select(keep.map { case (c, i) => col(s"__c$i").as(c) }.toIndexedSeq: _*)
-  }
-
-  /** S8 list-typed leaf detection (reference `utils.py:235-272`
-    * `get_to_drops`): dotted paths of every array-typed leaf in a
-    * schema. Pure schema introspection — driver-side, no job. The
-    * reference walks raw JSON values; with declared schemas the
-    * equivalent walk is over `StructType`.
-    */
-  def arrayLeafPaths(schema: org.apache.spark.sql.types.StructType): Seq[String] = {
-    import org.apache.spark.sql.types._
-    def walk(prefix: String, dt: DataType): Seq[String] = dt match {
-      case s: StructType =>
-        s.fields.toSeq.flatMap(f =>
-          walk(if (prefix.isEmpty) f.name else s"$prefix.${f.name}", f.dataType))
-      case ArrayType(el: StructType, _) =>
-        // array of struct: recurse (its leaves are reachable via explode)
-        walk(prefix, el)
-      case _: ArrayType => Seq(prefix)
-      case _ => Seq.empty
-    }
-    walk("", schema)
   }
 
   /** V3 small transpose (reference `xena_dataset.py:1122`

@@ -195,29 +195,10 @@ object Similarity {
     * embeds 28 signatures, ~11k literal nodes at 6 × 64, stalling
     * analysis + codegen), and the per-row dots run as a fused primitive
     * loop instead of interpreted lambdas. Bit-equal to
-    * [[lshSignatureHof]] (property-tested in ExpressionParitySpec).
+    * `ParityOracles.lshSignatureHof` (property-tested in ExpressionParitySpec).
     */
   def lshSignature(vec: Column, dim: Int, bits: Int, table: Int = 0): Column =
     graft.functions.HyperplaneSignature(asDouble(vec), dim, bits, table)
-
-  /** The declarative HOF form of [[lshSignature]] — the reference
-    * semantics the native expression is property-tested against, and
-    * the shape an engine without expression extensions would run.
-    */
-  private[graft] def lshSignatureHof(vec: Column, dim: Int, bits: Int, table: Int = 0): Column = {
-    val planes: Seq[Seq[Double]] =
-      (0 until bits).map(i =>
-        (0 until dim).map(j => graft.functions.AnnKernels.planeComponent(table, i, j)))
-    val planesLit = typedlit(planes)
-    val v = asDouble(vec)
-    val dots = transform(planesLit, p =>
-      aggregate(zip_with(v, p, (x, c) => x * c), lit(0.0), (acc, d) => acc + d))
-    aggregate(
-      zip_with(dots, sequence(lit(0), lit(bits - 1)), (d, i) =>
-        when(d >= 0, pow(lit(2.0), i).cast("long")).otherwise(lit(0L))),
-      lit(0L),
-      (acc, b) => acc.bitwiseOR(b))
-  }
 
   /** ANN top-k via multi-table hyperplane LSH: `tables` independent
     * signature tables (each its own deterministic plane matrix);
@@ -295,25 +276,6 @@ object Similarity {
     val norm = sqrt(dot(v, v))
     transform(v, x => floor(x / norm * scale + lit(0.5)).cast("long"))
   }
-
-  /** Squared L2 distance between two long arrays — pure integer
-    * arithmetic, exact in any engine. With grid scale 1e6 and
-    * unit-magnitude embeddings, per-dim squared diffs are ~1e12 and a
-    * 1024-dim sum stays far below 2^63.
-    */
-  private def intDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, d) => acc + d)
-
-  /** The declarative HOF form of the nearest-cell probe — reference
-    * semantics for [[graft.functions.IvfNearestCells]] (which replaces
-    * it in the live plans): lexicographic struct sort on (dist, cell),
-    * ties to the lower cell index. Kept for ExpressionParitySpec.
-    */
-  private[graft] def nearestCellsHof(qv: Column, centroidsLit: Column, nlist: Int): Column =
-    array_sort(zip_with(
-      centroidsLit,
-      sequence(lit(0), lit(nlist - 1)),
-      (c, i) => struct(intDist(qv, c).as("dist"), i.as("cell"))))
 
   /** Deterministic Lloyd k-means over the fixed-point grid.
     *
@@ -515,7 +477,7 @@ object Similarity {
     // parse (or silently mis-parses).
     val meta =
       s"""{"dim":$dim,"bits":$bits,"tables":$tables,"idCol":${graft.io.JsonUtil.quote(idCol)},"vecCol":${graft.io.JsonUtil.quote(vecCol)}}"""
-    graft.io.StoreMeta.writeText(spark, s"$path/index.json", meta)
+    graft.io.StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$path/index.json", meta)
   }
 
   /** ANN top-k against a persisted LSH index: per-table probe
@@ -793,7 +755,7 @@ object Similarity {
       breached.getOrElse(
         f"occupancy cv $occCv%.4f <= $maxOccupancyCv%.4f and " +
           f"mean sqerr $meanErr%.4f <= $maxMeanSqErr%.4f"))
-    graft.io.StoreMeta.writeText(spark, s"$path/reindex.json",
+    graft.io.StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$path/reindex.json",
       s"""{"occupancy_cv":$occCv,"mean_sqerr":$meanErr,""" +
         s""""max_occupancy_cv":$maxOccupancyCv,"max_mean_sqerr":$maxMeanSqErr,""" +
         s""""rebuilt":${decision.rebuilt},""" +
@@ -847,7 +809,8 @@ object Similarity {
     meta ++= s"""{"dim":$dim,"nlist":$nlist,"scale":$scale,"idCol":${graft.io.JsonUtil.quote(idCol)},"vecCol":${graft.io.JsonUtil.quote(vecCol)},"centroids":["""
     meta ++= centroids.map(_.mkString("[", ",", "]")).mkString(",")
     meta ++= "]}"
-    graft.io.StoreMeta.writeText(spark, s"$path/index.json", meta.toString)
+    graft.io.StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$path/index.json",
+      meta.toString)
   }
 
   /** Self-describing index metadata (`<path>/index.json`). */
@@ -1358,7 +1321,8 @@ object Similarity {
     meta ++= s""""vecCol":${graft.io.JsonUtil.quote(vecCol)},"codebooks":["""
     meta ++= cbs.map(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")).mkString(",")
     meta ++= "]}"
-    graft.io.StoreMeta.writeText(spark, s"$path/index.json", meta.toString)
+    graft.io.StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$path/index.json",
+      meta.toString)
   }
 
   private[graft] def readPqIndexMeta(
@@ -1477,17 +1441,6 @@ object Similarity {
     * sits between them with >0.15 margin on both sides. */
   private[graft] val ResidualAutoThreshold = 0.75
 
-  /** Residual-aware encode of a raw vector against FROZEN IVF-PQ
-    * quantizers: `cell` must be the [[graft.functions.IvfNearestCells]]
-    * assignment of the SAME vector. Shared by the batch writer's
-    * layout and the streaming maintainer, so streamed landings encode
-    * byte-identically to a batch rebuild. */
-  def pqEncodeForCell(vec: Column, cell: Column, meta: IvfPqIndexMeta): Column = {
-    val qv = quantize(vec, meta.scale)
-    val enc = if (meta.residual) residualOf(qv, cell, meta.centroids) else qv
-    pqCodes(enc, meta.codebooks, meta.codebooks.head.head.length)
-  }
-
   /** Persist an IVF-PQ index: the coarse quantizer prunes I/O (codes
     * partitioned by cell, like [[writeIvfIndex]]) and the codes
     * compress what's read (m small ints per vector, like
@@ -1558,7 +1511,8 @@ object Similarity {
     meta ++= """],"codebooks":["""
     meta ++= cbs.map(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")).mkString(",")
     meta ++= "]}"
-    graft.io.StoreMeta.writeText(spark, s"$path/index.json", meta.toString)
+    graft.io.StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$path/index.json",
+      meta.toString)
     IvfPqBuildResult(useResidual, gain)
   }
 

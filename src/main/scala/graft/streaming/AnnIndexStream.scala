@@ -74,49 +74,6 @@ object AnnIndexStream {
           Similarity.quantizeVec(col(meta.vecCol), meta.scale), meta.centroids, 1),
         1).as("cell"))
 
-  /** IVF-PQ twin of [[maintain]]: landing embeddings are cell-
-    * assigned against the frozen coarse quantizer AND encoded to PQ
-    * codes against the frozen codebooks (both from `index.json`),
-    * then appended into the `partitionBy(cell)` CODES store — the
-    * landing floats are never persisted. Same stateless narrow
-    * shape, same non-transactional-sink trade as [[maintain]]. */
-  def maintainIvfPq(
-      spark: SparkSession,
-      landingDir: String,
-      indexPath: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val meta = Similarity.readIvfPqIndexMeta(spark, indexPath)
-    // Landing schema contract: (idCol, vecCol) like the IVF
-    // maintainer — but the codes store holds no vector field to
-    // borrow a type from, so the vec type is the library-wide
-    // embedding contract, array<float>.
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(meta.idCol,
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(meta.vecCol,
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
-    LedgerStream.start(assignedPq(spark.readStream.schema(schema).parquet(landingDir), meta),
-        checkpointDir, trigger) { (batch, _) =>
-      batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/codes")
-    }
-  }
-
-  /** The shared (batch == stream) IVF-PQ assignment stage: coarse
-    * cell + PQ codes against the frozen quantizers. */
-  def assignedPq(embeddings: DataFrame, meta: Similarity.IvfPqIndexMeta): DataFrame = {
-    val cell = element_at(
-      graft.functions.IvfNearestCells(
-        Similarity.quantizeVec(col(meta.vecCol), meta.scale), meta.centroids, 1),
-      1)
-    embeddings.select(
-      col(meta.idCol),
-      // Residual-aware (reads meta.residual): landings encode exactly
-      // like the batch writer, codebooks and centroids frozen.
-      Similarity.pqEncodeForCell(col(meta.vecCol), cell, meta).as("codes"),
-      cell.as("cell"))
-  }
-
   /** Compact the vector store: drop duplicate ids (keep-one; a
     * crash-retried batch is the only source of dups and its copies
     * are identical rows) and rewrite clustered one-task-per-cell.

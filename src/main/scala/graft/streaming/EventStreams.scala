@@ -1,103 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Structured Streaming surface over the `events` table shape.
-  *
-  * Net-new relative to the reference (batch-only); expressed so the
-  * same transform runs identically in batch and streaming mode — the
-  * Spark-native way to keep one codepath for backfill and live data.
-  */
+/** Sessionization over the `events` table shape (q24). */
 object EventStreams {
-
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** Tumbling-window aggregate: count + value sum per (window,
-    * event_type). Works on either a batch or streaming DataFrame —
-    * watermarking is applied only when the input is streaming.
-    */
-  def windowedAgg(events: DataFrame, windowLen: String, watermark: Option[String] = None): DataFrame = {
-    val src = watermark match {
-      case Some(w) if events.isStreaming => events.withWatermark("ts", w)
-      case _                             => events
-    }
-    src
-      .groupBy(window(col("ts"), windowLen).as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-      .select(
-        col("win.start").as("win_start"),
-        col("event_type"),
-        col("n"),
-        col("total"))
-  }
-
-  /** Stream-stream interval join: purchases paired with the same
-    * user's clicks from the FOLLOWING `window` — the streaming twin of
-    * the batch range join ([[graft.ops.Joins.rangeJoinBinned]], q97's
-    * `[p_ts, p_ts + 1h)` semantics). Inner equi-join on user with an
-    * event-time range predicate; when both inputs are streams, both
-    * carry watermarks and the range bound lets Spark evict purchase
-    * state older than (watermark + window) and click state older than
-    * watermark — BOUNDED join state at any runtime, the requirement
-    * for a join that runs forever. On batch inputs the same code is a
-    * plain inner join (one-codepath contract; at batch scale prefer
-    * rangeJoinBinned's equi-bin plan — the inequality predicate here
-    * is what Structured Streaming's state manager wants, not what a
-    * 100 TB batch join wants).
-    *
-    * Output: (purchase_id, click_id, p_ts, c_ts).
-    */
-  def intervalJoin(
-      purchases: DataFrame,
-      clicks: DataFrame,
-      window: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame = {
-    def marked(df: DataFrame) =
-      if (df.isStreaming) df.withWatermark("ts", watermark) else df
-    val p = marked(purchases)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-    val c = marked(clicks)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-    p.join(c,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") &&
-          col("c_ts") < col("p_ts") + expr(s"INTERVAL $window"))
-      .select(col("purchase_id"), col("click_id"), col("p_ts"), col("c_ts"))
-  }
-
-  /** Run a streaming query over a parquet directory source and drain it
-    * synchronously into an in-memory table (local verification path;
-    * in production the sink would be kafka/delta/parquet).
-    */
-  def runStreamToMemory(
-      spark: SparkSession,
-      sourceDir: String,
-      transform: DataFrame => DataFrame,
-      queryName: String): DataFrame = {
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .parquet(sourceDir)
-    val q = transform(stream).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
 
   /** Sessionization: assign session ids by inactivity gap per user —
     * the batch gaps-and-islands formulation (lag + cumulative sum of
@@ -126,207 +33,4 @@ object EventStreams {
         count(lit(1)).as("n_events"),
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"))
-
-  /** Typed event row for the stateful-streaming path — event time in
-    * epoch MICROSECONDS (`java.sql.Timestamp.getTime` would truncate
-    * to millis and silently shift session bounds). */
-  case class Event(user_id: Long, ts_us: Long)
-
-  /** Open-session state carried between micro-batches. */
-  case class SessionState(sessionSeq: Long, lastTs: Long, nEvents: Long, startTs: Long)
-
-  /** Emitted closed/updated session row (micros; rendered back to
-    * timestamps in the surrounding select). */
-  case class SessionOut(user_id: Long, session_seq: Long, n_events: Long,
-      start_us: Long, end_us: Long)
-
-  /** Streaming sessionization with custom state
-    * (`flatMapGroupsWithState`): the per-user inactivity-gap logic of
-    * [[sessionize]] carried across micro-batches in typed state.
-    *
-    * ORDERING CONTRACT: events must arrive in event-time order ACROSS
-    * micro-batches per user (within a batch they are sorted here).
-    * That is the natural property of time-partitioned file drops and
-    * of any upstream with a watermark; under it, the output equals
-    * the batch gaps-and-islands result (asserted by the streaming
-    * spec, including a two-micro-batch time-split run). A late event
-    * inside the gap window merges into the open session without
-    * regressing its end; a late event older than that is counted into
-    * the open session conservatively rather than corrupting closed
-    * ones — full disorder tolerance would require watermark-delayed
-    * emission (buffer-until-watermark), which this operator trades
-    * away for immediate emission.
-    */
-  def sessionizeStateful(
-      spark: SparkSession, events: DataFrame, gapMinutes: Long): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val gapUs = gapMinutes * 60000000L
-
-    def flush(userId: Long, rows: Iterator[Event],
-        state: GroupState[SessionState]): Iterator[SessionOut] = {
-      // Sort within the group: micro-batch delivery order is not
-      // event-time order. At scale the sort is per-user-per-batch.
-      val sorted = rows.toSeq.sortBy(_.ts_us)
-      var out = List.empty[SessionOut]
-      var st = state.getOption.getOrElse(SessionState(0L, Long.MinValue, 0L, 0L))
-      sorted.foreach { e =>
-        val t = e.ts_us
-        if (st.lastTs == Long.MinValue || t > st.lastTs + gapUs) {
-          if (st.nEvents > 0)
-            out ::= SessionOut(userId, st.sessionSeq, st.nEvents, st.startTs, st.lastTs)
-          st = SessionState(st.sessionSeq + 1, t, 1L, t)
-        } else {
-          // In-gap (or late) event joins the open session; end never
-          // regresses, start absorbs a late-but-in-gap predecessor.
-          st = st.copy(
-            lastTs = math.max(st.lastTs, t),
-            startTs = math.min(st.startTs, t),
-            nEvents = st.nEvents + 1)
-        }
-      }
-      // Emit the still-open session too (complete-on-drain semantics
-      // for the bounded verification path; a production stream would
-      // hold it in state and use a timeout instead).
-      if (st.nEvents > 0)
-        out ::= SessionOut(userId, st.sessionSeq, st.nEvents, st.startTs, st.lastTs)
-      state.update(st)
-      out.reverseIterator
-    }
-
-    events
-      // cast: `unix_micros` rejects TIMESTAMP_NTZ (Spark 4 infers it
-      // from unadjusted parquet micros); the cast is lossless under
-      // the UTC session and a no-op on already-TIMESTAMP input.
-      .select(col("user_id"), expr("unix_micros(cast(ts as timestamp))").as("ts_us"))
-      .as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(flush)
-      .toDF()
-      .select(
-        col("user_id"), col("session_seq"), col("n_events"),
-        expr("timestamp_micros(start_us)").as("session_start"),
-        expr("timestamp_micros(end_us)").as("session_end"))
-  }
-
-  /** Buffered-session state: event times not yet part of a finalized
-    * session, plus the next session number. */
-  case class BufState(pending: Array[Long], sessionSeq: Long)
-
-  /** Typed row keeping the watermark-tagged timestamp column. */
-  case class TsEvent(user_id: Long, ts: java.time.Instant)
-
-  /** Disorder-tolerant streaming sessionization: events are buffered
-    * in per-user state and a session is emitted only once the event-
-    * time WATERMARK has passed its end by more than the gap — no
-    * earlier event can still join it, so arbitrary arrival disorder
-    * within the watermark delay is handled exactly (unlike
-    * [[sessionizeStateful]], which trades that for immediate
-    * emission). Late events beyond the watermark are dropped by Spark
-    * before reaching the state function — the standard contract.
-    *
-    * State is bounded PER USER: it holds only events newer than
-    * (watermark - gap). An event-time timeout fires when the
-    * watermark passes a buffered session's close point, so sessions
-    * finalize even for users with no further traffic. The ROW COUNT
-    * is one state row per user ever seen, kept forever by default —
-    * the row survives with an empty buffer because it carries
-    * `session_seq`, and dropping it would restart the user's
-    * numbering at 1, colliding with already-emitted
-    * (user_id, session_seq) keys.
-    *
-    * `idleStateExpiryMinutes` is the escape hatch for unbounded- or
-    * transient-key deployments (anonymous ids, IoT devices): a user's
-    * drained state row is removed once the watermark passes its last
-    * finalized session by the expiry. The documented trade: a user
-    * returning AFTER expiry restarts at session_seq 1 — downstream
-    * keys must then include a time component (or tolerate seq reuse).
-    *
-    * LIMITATION: the hatch arms the idle timeout when a row is
-    * TOUCHED (new traffic, or a timeout fire that drains it). Drained
-    * rows accumulated by a previous run WITHOUT the hatch carry no
-    * armed timeout, and a restart with the hatch set does not visit
-    * them — they expire only after their user next sends traffic (or
-    * via a state-store migration). The hatch bounds growth going
-    * forward; it does not retroactively reclaim old idle state.
-    */
-  def sessionizeWatermarked(
-      spark: SparkSession,
-      events: DataFrame,
-      gapMinutes: Long,
-      watermarkDelay: String,
-      idleStateExpiryMinutes: Option[Long] = None): DataFrame = {
-    // Fail at plan time: a zero/negative expiry would only surface
-    // inside the micro-batch when setTimeoutTimestamp rejects a
-    // timestamp at/before the watermark — killing the running query.
-    idleStateExpiryMinutes.foreach(m => require(m > 0,
-      s"idleStateExpiryMinutes must be positive, got $m"))
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val gapUs = gapMinutes * 60000000L
-
-    def flush(userId: Long, rows: Iterator[TsEvent],
-        state: GroupState[BufState]): Iterator[SessionOut] = {
-      val st = state.getOption.getOrElse(BufState(Array.empty, 0L))
-      val incoming = rows.map(e => e.ts.getEpochSecond * 1000000L + e.ts.getNano / 1000L)
-      val all = (st.pending ++ incoming).sorted
-      val wmUs = state.getCurrentWatermarkMs() * 1000L
-      var out = List.empty[SessionOut]
-      var seq = st.sessionSeq
-      var i = 0
-      var pendingFrom = 0
-      var open = false
-      while (i < all.length && !open) {
-        // find the end of the session starting at index i
-        var j = i
-        while (j + 1 < all.length && all(j + 1) <= all(j) + gapUs) j += 1
-        if (all(j) + gapUs < wmUs) {
-          // finalized: no event >= wm can join, and everything earlier
-          // than wm has arrived
-          seq += 1
-          out ::= SessionOut(userId, seq, j - i + 1, all(i), all(j))
-          pendingFrom = j + 1
-          i = j + 1
-        } else {
-          // still open — keep this and everything after buffered
-          open = true
-        }
-      }
-      val pending = all.drop(pendingFrom)
-      // The state survives a drained buffer BY DEFAULT: it carries
-      // sessionSeq, and dropping it would restart the user's numbering
-      // at 1 — colliding with already-emitted (user_id, session_seq)
-      // keys. An empty-buffer state is a single counter. With the
-      // idle-expiry hatch configured, a drained row instead arms an
-      // idle timeout and is removed when that fires with nothing new
-      // buffered (the seq-restart trade is documented on the method).
-      if (state.hasTimedOut && all.isEmpty && idleStateExpiryMinutes.isDefined) {
-        state.remove()
-      } else {
-        state.update(BufState(pending, seq))
-        if (pending.nonEmpty)
-          // wake when the watermark passes the open session's close
-          state.setTimeoutTimestamp((pending.last + gapUs) / 1000L + 1L)
-        else idleStateExpiryMinutes.foreach { mins =>
-          state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + mins * 60000L)
-        }
-      }
-      out.reverseIterator
-    }
-
-    // The watermark-carrying ts column must survive into the grouped
-    // Dataset (event-time timeout requires it); java.time.Instant
-    // keeps microsecond precision through the encoder.
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id"), col("ts"))
-      .as[TsEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(flush)
-      .toDF()
-      .select(
-        col("user_id"), col("session_seq"), col("n_events"),
-        expr("timestamp_micros(start_us)").as("session_start"),
-        expr("timestamp_micros(end_us)").as("session_end"))
-  }
 }

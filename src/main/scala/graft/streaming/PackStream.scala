@@ -93,7 +93,8 @@ object PackStream {
     val (assigned, total) = Packing.assignWithTotal(
       Packing.chunk(batch, window, stride), budget, start)
     assigned.write.mode("overwrite").parquet(s"$outDir/data/batch=$id")
-    StoreMeta.writeText(spark, s"$outDir/_offsets/$id", s"$start ${start + total}")
+    StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$outDir/_offsets/$id",
+      s"$start ${start + total}")
   }
 
   /** Highest batch id covered by the last [[compact]], if any. */
@@ -115,7 +116,8 @@ object PackStream {
         sys.error(s"pack store $outDir was built with --budget $b; running with " +
           s"--budget $budget would mix two pack geometries in one store")
       case Some(_) => ()
-      case None => StoreMeta.writeText(spark, s"$outDir/_budget", budget.toString)
+      case None =>
+        StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$outDir/_budget", budget.toString)
     }
 
   private def readSmallFile(f: FileSystem, p: Path): String = {
@@ -240,6 +242,6 @@ object PackStream {
     // lives inside the rewritten store; a crash-replay of one of them
     // would overwrite its partition with colliding arrival-order pack
     // ids. processBatch refuses ids <= this watermark.
-    StoreMeta.writeText(spark, s"$outDir/_compacted", ids.max.toString)
+    StoreMeta.writeText(spark.sparkContext.hadoopConfiguration, s"$outDir/_compacted", ids.max.toString)
   }
 }

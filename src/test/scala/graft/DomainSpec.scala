@@ -16,7 +16,6 @@ class DomainSpec extends SparkSpecBase {
 
   test("registry covers all 22 omic dtypes + clinical + survival") {
     assert(DTypes.registry.size == 24)
-    assert(DTypes.duplicatedDtypes.subsetOf(DTypes.registry.keySet))
     // every raw-file dtype dispatches without throwing strategy errors
     val rawBacked = DTypes.registry.values.count {
       case c => c.strategy match {
@@ -38,14 +37,6 @@ class DomainSpec extends SparkSpecBase {
     val out = rows.map(_._1).toDF("f")
       .select(XenaOps.getExt(col("f"))).as[String].collect()
     assert(out.toSeq == rows.map(_._2))
-  }
-
-  test("dedupColumns keeps first occurrence") {
-    import spark.implicits._
-    val df = Seq((1, 2, 3)).toDF("a", "b", "a")
-    val out = XenaOps.dedupColumns(df)
-    assert(out.columns.toSeq == Seq("a", "b"))
-    assert(out.head.getInt(0) == 1)
   }
 
   test("remapSamples maps known ids, keeps unknown, dedups") {
@@ -1956,39 +1947,6 @@ class DomainSpec extends SparkSpecBase {
       assert(got.count() == want.count() && got.count() > 0, path)
       assert(XenaOps.canonicalEqual(got, want), s"$path: row-local clinical matrix differs")
     }
-  }
-
-  test("writeSharded: globally-ordered shards cat-merge to the single-file matrix") {
-    import spark.implicits._
-    val df = (1 to 97)
-      .map(i => (f"probe_$i%03d", i * 1.5, s"s$i"))
-      .toDF("id", "v", "s")
-      .orderBy(rand(42)) // deliberately unsorted input
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shard").toString
-    graft.io.XenaTsv.write(df, s"$tmp/single", rowKey = Some("id"))
-    val header = graft.io.XenaTsv.writeSharded(df, s"$tmp/shards", "id", shards = 4)
-
-    def partLines(dir: String): Seq[String] = {
-      val parts = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
-      parts.flatMap { f =>
-        val src = scala.io.Source.fromFile(f)
-        try src.getLines().toList finally src.close()
-      }
-    }
-    val singleLines = partLines(s"$tmp/single")
-    assert(singleLines.head == header, "sharded header != single-file header")
-
-    val shardFiles = new java.io.File(s"$tmp/shards").listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.length() > 0)
-    assert(shardFiles.length > 1, "range partitioner produced a single shard")
-
-    // cat in filename order reproduces the single-file body, globally
-    // sorted by row key (key is the line prefix, so line order == key
-    // order for this fixture).
-    val catted = partLines(s"$tmp/shards")
-    assert(catted == singleLines.tail.sorted,
-      "concatenated shards != sorted single-file body")
   }
 
   test("CLI image-store: create originals, ingest twins links the planted pairs") {

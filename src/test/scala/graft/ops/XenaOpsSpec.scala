@@ -13,8 +13,18 @@ class XenaOpsSpec extends SparkSpecBase {
     ("g2", "s1", 8.0)
   ).toDF("probe", "sample", "value")
 
+  /** Cell-wise mean over same-(probe, sample) replicates (reference
+    * `xena_dataset.py:221-227`, `concat(axis=1).mean(1)`): the
+    * long-form fixture the pivot tests start from. */
+  private def replicateMean(
+      long: org.apache.spark.sql.DataFrame,
+      rowKey: String,
+      sampleCol: String,
+      valueCol: String) =
+    long.groupBy(col(rowKey), col(sampleCol)).agg(avg(col(valueCol)).as(valueCol))
+
   test("replicateMean averages same-(probe,sample) replicates") {
-    val m = XenaOps.replicateMean(longForm, "probe", "sample", "value")
+    val m = replicateMean(longForm, "probe", "sample", "value")
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
     assert(m(("g1", "s1")) == 2.0)
     assert(m(("g2", "s1")) == 8.0)
@@ -23,7 +33,7 @@ class XenaOpsSpec extends SparkSpecBase {
 
   test("pivotMatrix builds the wide matrix with nulls for absent cells") {
     val wide = XenaOps.pivotMatrix(
-      XenaOps.replicateMean(longForm, "probe", "sample", "value"),
+      replicateMean(longForm, "probe", "sample", "value"),
       "probe", "sample", "value", Seq("s1", "s2"))
     val rows = wide.collect().map(r => r.getString(0) -> r).toMap
     assert(rows("g1").getDouble(1) == 2.0 && rows("g1").getDouble(2) == 4.0)
@@ -31,7 +41,7 @@ class XenaOpsSpec extends SparkSpecBase {
   }
 
   test("melt is the inverse of pivotMatrix (modulo null cells)") {
-    val averaged = XenaOps.replicateMean(longForm, "probe", "sample", "value")
+    val averaged = replicateMean(longForm, "probe", "sample", "value")
     val wide = XenaOps.pivotMatrix(averaged, "probe", "sample", "value", Seq("s1", "s2"))
     val back = XenaOps.melt(wide, "probe", "sample", "value").na.drop()
     assert(XenaOps.canonicalEqual(back, averaged))
@@ -113,12 +123,6 @@ class XenaOpsSpec extends SparkSpecBase {
     assert(rows("r1") == ((false, true)) && rows("r2") == ((true, false)))
   }
 
-  test("dropAllNullCols removes only fully-null columns") {
-    val df = Seq((1, Option.empty[String], Some("a")), (2, None, None))
-      .toDF("id", "allnull", "partial")
-    assert(XenaOps.dropAllNullCols(df).columns.toSeq == Seq("id", "partial"))
-  }
-
   test("keepSamples/dropSamples partition the input") {
     val df = Seq(("s1", 1), ("s2", 2), ("s3", 3)).toDF("sample", "v")
     val keys = Seq("s1", "s3").toDF("sample")
@@ -128,7 +132,7 @@ class XenaOpsSpec extends SparkSpecBase {
 
   test("reverseDottedRename reverses dotted column paths") {
     val df = Seq((1, 2)).toDF("a.b.c", "plain")
-    assert(XenaOps.reverseDottedRename(df).columns.toSeq == Seq("c.b.a", "plain"))
+    assert(graft.transform.Clinical.reverseDotted(df).columns.toSeq == Seq("c.b.a", "plain"))
   }
 
   test("canonicalEqual is order-insensitive in rows and columns") {
@@ -136,14 +140,6 @@ class XenaOpsSpec extends SparkSpecBase {
     val b = Seq(("y", 2), ("x", 1)).toDF("v", "k").select("k", "v")
     assert(XenaOps.canonicalEqual(a, b))
     assert(!XenaOps.canonicalEqual(a, a.filter(col("k") === 1)))
-  }
-
-  test("fillFrom coalesces missing cells from the fallback frame") {
-    val primary = Seq(("s1", Option.empty[Double]), ("s2", Some(2.0))).toDF("id", "v")
-    val fallback = Seq(("s1", 10.0), ("s2", 20.0)).toDF("id", "v")
-    val m = XenaOps.fillFrom(primary, fallback, "id").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(m == Map("s1" -> 10.0, "s2" -> 2.0))
   }
 
   test("pivot∘melt identity holds on real data (lineitem sample)") {
@@ -170,7 +166,5 @@ class XenaOpsSpec extends SparkSpecBase {
     val back = graft.io.XenaTsv.read(spark, s"$tmp/m")
     assert(back.columns.toSeq == Seq("sample", "OS", "OS.time"))
     assert(back.count() == 2)
-    val hdr = graft.io.XenaTsv.writeSharded(df, s"$tmp/sharded", "sample", 2)
-    assert(hdr == "sample\tOS\tOS.time")
   }
 }
